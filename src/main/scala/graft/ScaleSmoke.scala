@@ -57,13 +57,14 @@ object ScaleSmoke {
     * `factor`-file staging through BOTH footer-harvest paths — the
     * serial driver loop (threshold forced above the file count) and
     * the r21 executor-side sweep (threshold at its default 16) — and
-    * report commit wall time per path, plus the two manifests' marker
-    * payloads compared field-for-field (rows/stats/cols must be
-    * byte-identical; SnapshotSpec asserts the same at 24 files, this
+    * report commit wall time per path, plus the two tables' decoded
+    * markers compared entry by entry (rows/stats/cols must be
+    * identical; SnapshotSpec asserts the same at 24 files, this
     * measures the latency claim at realistic backfill file counts).
+    * Zero markers compared reports `markers_identical=false`.
     * Usage: runMain graft.ScaleSmoke stats [files] [sfDir]. */
   private def statsSmoke(spark: SparkSession, sfDir: String, files: Int): Unit = {
-    import graft.sources.Snapshots
+    import graft.sources.{Marker, Snapshots}
     val scratch = s"${sys.props("java.io.tmpdir")}/graft_scale_stats"
     val rootLoop = s"$scratch/loop"; val rootSweep = s"$scratch/sweep"
     Fs.deleteDir(spark, rootLoop); Fs.deleteDir(spark, rootSweep)
@@ -83,23 +84,20 @@ object ScaleSmoke {
     try {
       val secLoop = timedCommit(rootLoop, files + 1) // forced driver loop
       val secSweep = timedCommit(rootSweep, 16)      // executor sweep engages
-      // marker payload identity: same rows/stats/cols recorded per file
-      def markers(root: String): Seq[String] = {
-        val dir = new java.io.File(s"$root/_commits")
-        dir.listFiles().filter(_.getName.endsWith(".json")).sortBy(_.getName)
-          .map { f =>
-            val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-            // strip volatile fields (uuid dir names, timestamps): keep
-            // the harvested stats/rows/cols payloads only
-            txt.split(",").filter(p =>
-              p.contains("\"rows\"") || p.contains("\"stats\"") || p.contains("\"cols\""))
-              .mkString(",")
-          }.toSeq
-      }
-      val same = markers(rootLoop) == markers(rootSweep)
+      // marker payload identity: the same rows/stats/cols recorded per
+      // entry (entry names are fresh uuids, so they are left out)
+      def markers(root: String) =
+        Snapshots.versions(spark, root).map { v =>
+          val text = new String(java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")
+          Marker.decode(text).get.entries.map(e => (e.rows, e.stats, e.cols))
+        }
+      val (loop, sweep) = (markers(rootLoop), markers(rootSweep))
+      val compared = math.min(loop.size, sweep.size)
+      val same = compared > 0 && loop == sweep
       println(f"SCALESMOKE_STATS files=$files rows=$n " +
         f"driver_loop_sec=$secLoop%.2f executor_sweep_sec=$secSweep%.2f " +
-        f"markers_identical=$same")
+        f"markers_compared=$compared markers_identical=$same")
     } finally prev match {
       case Some(p) => spark.conf.set(confKey, p)
       case None => spark.conf.unset(confKey)

@@ -1,0 +1,203 @@
+package graft.sources
+
+import scala.collection.immutable.ListMap
+
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonToken,
+  StreamReadConstraints}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+
+/** One decoded commit marker `_commits/<N>` of a snapshot table
+  * ([[Snapshots]]): the manifest with each entry's recorded row count,
+  * column ranges and column names, the parent version, and the
+  * exactly-once ledger. [[Marker.encode]] and [[Marker.decode]] are the
+  * only writer and reader of marker content.
+  *
+  * '''Format.''' A marker is one flat JSON object whose values are all
+  * strings, written in this field order:
+  * {{{
+  * {"data":"<e1> <e2> ..","rows":"<n1> <n2> ..","stats":"<s1> <s2> ..",
+  *  "cols":"<c1> <c2> ..","parent":"<P>","lb":"<L>"[,"batch":"<B>"]}
+  * }}}
+  * (on one line, no whitespace between tokens).
+  *   - `data`: the manifest entries relative to `data/`, space-joined —
+  *     `<uuid>` (a whole staged dir) or `<uuid>/__gp=<v>` (one partition
+  *     subdir of a partition-granular table).
+  *   - `rows`, `stats`, `cols`: one token per entry, space-joined and
+  *     aligned with `data`.
+  *     - rows: the entry's row count; `-1` = unknown.
+  *     - stats: `-` (no ranges) or comma-joined `col=kind:min:max`
+  *       triples. `kind` is `l` (signed integral, `Long.toString`
+  *       bounds), `d` (floating, `Double.toString` bounds) or `s`
+  *       (printable-ASCII string). A column without a triple has no
+  *       recorded range and is never pruned.
+  *     - cols: the entry's top-level column names, comma-joined; `-` =
+  *       no columns; `?` = unknown (inherited from a marker that had no
+  *       `cols` field).
+  *
+  *     Column names and min/max values are `%XX`-escaped (two upper-
+  *     case hex digits) for `%` `,` `:` `=` space `"` `\` and control
+  *     characters, so no token carries a delimiter and no JSON string
+  *     needs a backslash escape.
+  *   - `parent`: the version this commit was derived from (0 = none).
+  *   - `lb`: the exactly-once ledger — the largest streaming batch id
+  *     committed at or before this version, -1 when none.
+  *   - `batch`: present only on a streaming commit: its batch id.
+  *
+  * '''Own fields.''' Only the fields BEFORE `parent`, plus the
+  * contiguous run of `lb` and then `batch` right after it, belong to
+  * the format. Later fields are ignored: markers written before the
+  * format's keys were reserved carried caller metadata there, which
+  * must never be read as row counts or ledger values.
+  *
+  * '''Legacy shapes''' (markers older writers left, still decoded):
+  *   - `parent` as a bare number (`"parent":0`).
+  *   - no `lb`: [[lb]] is None and the ledger is found by walking the
+  *     older markers' `batch` fields.
+  *   - no `rows` / `stats` / `cols` field, or one whose token count
+  *     does not match `data`: every entry reads as unknown rows (-1),
+  *     no ranges, unknown columns.
+  *   - a `\` or control character written raw (not escaped) inside a
+  *     token: read literally.
+  *
+  * '''In flight.''' A marker can be visible before its content is
+  * (an HDFS file is listable at length 0 until close). Content that is
+  * empty, truncated or lacks `data` decodes to None — "not yet
+  * readable" — never to a partial manifest. */
+private[graft] final case class Marker(
+    entries: Seq[Marker.Entry], parent: Long, lb: Option[Long],
+    batch: Option[Long]) {
+
+  def names: Seq[String] = entries.map(_.name)
+
+  def byName: Map[String, Marker.Entry] = entries.map(e => e.name -> e).toMap
+}
+
+private[graft] object Marker {
+
+  /** A recorded `[min, max]` range of one column. */
+  final case class Stat(kind: Char, min: String, max: String)
+
+  /** One manifest entry and what the marker records about it. */
+  final case class Entry(name: String, rows: Long,
+      stats: ListMap[String, Stat], cols: Option[Seq[String]])
+
+  /** An entry nothing is known about (inherited from a parent that
+    * did not record it). */
+  def unknown(name: String): Entry = Entry(name, -1L, ListMap.empty, None)
+
+  // a `stats` value grows with the manifest: no cap on string length
+  private val json = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .streamReadConstraints(
+      StreamReadConstraints.builder().maxStringLength(Int.MaxValue).build())
+    .build()
+
+  def encode(m: Marker): String = {
+    val out = new java.io.StringWriter()
+    val g = json.createGenerator(out)
+    def field(k: String, tokens: Seq[String]): Unit =
+      g.writeStringField(k, tokens.mkString(" "))
+    g.writeStartObject()
+    field("data", m.names)
+    field("rows", m.entries.map(_.rows.toString))
+    field("stats", m.entries.map { e =>
+      if (e.stats.isEmpty) "-"
+      else e.stats.map { case (c, st) =>
+        s"${escape(c)}=${st.kind}:${escape(st.min)}:${escape(st.max)}"
+      }.mkString(",")
+    })
+    field("cols", m.entries.map(_.cols match {
+      case None => "?"
+      case Some(Seq()) => "-"
+      case Some(cs) => cs.map(escape).mkString(",")
+    }))
+    g.writeStringField("parent", m.parent.toString)
+    m.lb.foreach(x => g.writeStringField("lb", x.toString))
+    m.batch.foreach(x => g.writeStringField("batch", x.toString))
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
+
+  /** None = in flight (see the class doc). */
+  def decode(text: String): Option[Marker] =
+    // the encoder never emits a backslash, so one here is a legacy raw
+    // byte: doubling it makes the JSON parser read it literally
+    try {
+      val p = json.createParser(text.replace("\\", "\\\\"))
+      try fields(p) finally p.close()
+    } catch { case _: java.io.IOException => None }
+
+  private def fields(p: JsonParser): Option[Marker] = {
+    if (p.nextToken() != JsonToken.START_OBJECT) return None
+    val own = scala.collection.mutable.Map[String, String]()
+    var parent = Option.empty[Long]
+    var lb = Option.empty[Long]
+    var batch = Option.empty[Long]
+    var ledgerRun = true
+    while (p.nextToken() == JsonToken.FIELD_NAME) {
+      val key = p.currentName()
+      val t = p.nextToken()
+      val str = if (t == JsonToken.VALUE_STRING) Some(p.getText) else None
+      if (t.isStructStart) p.skipChildren(): Unit
+      if (parent.isEmpty) {
+        if (key == "parent")
+          parent = Some(
+            (if (t == JsonToken.VALUE_NUMBER_INT) Some(p.getText) else str)
+              .flatMap(_.toLongOption).getOrElse(-1L))
+        else str.foreach(own.getOrElseUpdate(key, _))
+      } else if (ledgerRun) (key, str.flatMap(_.toLongOption)) match {
+        case ("lb", Some(x)) if lb.isEmpty && batch.isEmpty => lb = Some(x)
+        case ("batch", Some(x)) if batch.isEmpty => batch = Some(x)
+        case _ => ledgerRun = false
+      }
+    }
+    if (p.currentToken() != JsonToken.END_OBJECT) return None
+    own.get("data").map { data =>
+      val names = data.split(" ").toSeq
+      def aligned(key: String): Option[Seq[String]] =
+        own.get(key).map(_.split(" ").toSeq).filter(_.length == names.length)
+      val rows = aligned("rows").filter(_.forall(_.toLongOption.isDefined))
+        .map(_.map(_.toLong)).getOrElse(names.map(_ => -1L))
+      val stats = aligned("stats").map(_.map(statsOf))
+        .getOrElse(names.map(_ => ListMap.empty[String, Stat]))
+      val cols = aligned("cols").map(_.map(colsOf))
+        .getOrElse(names.map(_ => None))
+      Marker(names.indices.map(i => Entry(names(i), rows(i), stats(i), cols(i))),
+        parent.getOrElse(-1L), lb, batch)
+    }
+  }
+
+  /** A stats token; a malformed triple is dropped (= no range). */
+  private def statsOf(tok: String): ListMap[String, Stat] =
+    if (tok == "-") ListMap.empty
+    else ListMap.from(tok.split(",").toSeq.flatMap { part =>
+      part.split("=") match {
+        case Array(c, rest) => rest.split(":", -1) match {
+          case Array(k, mn, mx) if k.length == 1 =>
+            Some(unescape(c) -> Stat(k.charAt(0), unescape(mn), unescape(mx)))
+          case _ => None
+        }
+        case _ => None
+      }
+    })
+
+  private def colsOf(tok: String): Option[Seq[String]] = tok match {
+    case "?" => None
+    case "-" => Some(Seq.empty)
+    case _ => Some(tok.split(",").toSeq.map(unescape))
+  }
+
+  private def escape(v: String): String =
+    v.flatMap(c =>
+      if (c < ' ' || "%,:= \"\\".indexOf(c) >= 0) f"%%${c.toInt}%02X" else c.toString)
+
+  private val Escaped = "%([0-9A-Fa-f]{2})".r
+
+  /** Decode `%XX` escapes — the marker's and the one Hive/Spark apply
+    * to special characters in a partition directory name. A `%` not
+    * followed by two hex digits passes through literally. */
+  private[sources] def unescape(v: String): String =
+    Escaped.replaceAllIn(v, m => scala.util.matching.Regex.quoteReplacement(
+      Integer.parseInt(m.group(1), 16).toChar.toString))
+}

@@ -76,11 +76,14 @@ import graft.Fs
   *     forward — `history` reports sizes and the streaming source
   *     rate-limits by volume ([[versionCapByRows]]) with zero data
   *     I/O.
+  *   - **One marker codec.** [[Marker]] documents the marker format
+  *     and is its only writer and reader; every verb decodes its
+  *     parent's marker once and hands it to [[claim]].
   *
   * At 100 TB nothing here touches data size: a commit is one
   * `listStatus` of `_commits` (O(#versions) names, bounded by
-  * [[expire]]), O(1) extra small reads of the parent's marker (the
-  * ledger fold + the row-count carry-forward), O(staged files)
+  * [[expire]]), ONE small read of the parent's marker (the
+  * ledger fold + the per-entry carry-forward), O(staged files)
   * parquet FOOTER reads for the per-entry row counts (metadata only,
   * never standing data), and one small file creation; the data write
   * itself is the same distributed parquet job any sink runs — and
@@ -184,15 +187,8 @@ object Snapshots {
   }
 
   private def readSmall(s: SparkSession, path: String): String = {
-    val f = Fs.fs(s, path)
-    val in = f.open(new Path(path))
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      bytes.toString("UTF-8")
-    } finally in.close()
+    val in = Fs.fs(s, path).open(new Path(path))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
 
   /** Commit `df` as the snapshot FOLLOWING `expectedParent` (0 = the
@@ -203,11 +199,15 @@ object Snapshots {
     * [[SnapshotConflictException]] is thrown; the caller re-reads the
     * new latest, re-derives, and retries (see [[commitTransform]]). */
   def commit(s: SparkSession, root: String, df: DataFrame,
-             expectedParent: Long,
-             extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+             expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
+    commitWith(s, root, df, expectedParent, parentMarker(s, root, expectedParent))
+  }
+
+  private def commitWith(s: SparkSession, root: String, df: DataFrame,
+      expectedParent: Long, parent: Option[Marker]): Long = {
     val uuid = stagePlain(s, root, df)
-    claim(s, root, expectedParent, Seq(uuid), Seq(uuid), extraMeta)
+    claim(s, root, expectedParent, parent, Seq(uuid), Seq(uuid))
   }
 
   /** APPEND commit: the new version's manifest = the parent's data
@@ -222,11 +222,10 @@ object Snapshots {
     * against an empty table it is rejected (seed an intentionally
     * empty table with [[commit]]). */
   def appendCommit(s: SparkSession, root: String, df: DataFrame,
-                   expectedParent: Long,
-                   extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
-    appendWith(s, root, df, expectedParent, extraMeta, batch = None,
-      partCol = None)
+                   expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
+    appendWith(s, root, df, expectedParent,
+      parentMarker(s, root, expectedParent), batch = None, partCol = None)
   }
 
   /** APPEND to a PARTITION-GRANULAR table: the batch is staged one
@@ -238,18 +237,17 @@ object Snapshots {
     * (its whole-dir entry would silently downgrade the manifest, the
     * same trap plain compact had — r19 #2). */
   def appendPartitioned(s: SparkSession, root: String, df: DataFrame,
-                        partCol: String, expectedParent: Long,
-                        extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
-    appendWith(s, root, df, expectedParent, extraMeta, batch = None,
+                        partCol: String, expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
+    appendWith(s, root, df, expectedParent,
+      parentMarker(s, root, expectedParent), batch = None,
       partCol = Some(partCol))
   }
 
   private def appendWith(s: SparkSession, root: String, df: DataFrame,
-      expectedParent: Long, extraMeta: Map[String, String],
+      expectedParent: Long, parent: Option[Marker],
       batch: Option[Long], partCol: Option[String]): Long = {
-    val inherit =
-      if (expectedParent == 0L) Seq.empty else entriesOf(s, root, expectedParent)
+    val inherit = parent.map(_.names).getOrElse(Seq.empty)
     val granular = inherit.exists(_.contains(s"/$PartDir="))
     require(!granular || partCol.isDefined,
       s"$root is partition-granular — a plain whole-dir append would " +
@@ -282,7 +280,7 @@ object Snapshots {
     def emptyStreamingAppend(uuid: String): Long = {
       Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
       if (inherit.nonEmpty)
-        claim(s, root, expectedParent, inherit, Seq.empty, extraMeta, batch)
+        claim(s, root, expectedParent, parent, inherit, Seq.empty, batch)
       else EmptyGenesisNoop
     }
     partCol match {
@@ -291,17 +289,16 @@ object Snapshots {
         // emptiness is a ROW-count question, not a file-count one: an
         // empty df still stages one schema-carrying 0-row parquet file
         // (footer read — handed into claim so the pass runs ONCE)
-        val (rows, stats, cols) = footerInfo(s, s"${dataRoot(root)}/$uuid")
-        if (rows == 0L && batch.isDefined) emptyStreamingAppend(uuid)
-        else if (rows == 0L && inherit.isEmpty) {
+        val staged = footerEntry(s, root, uuid)
+        if (staged.rows == 0L && batch.isDefined) emptyStreamingAppend(uuid)
+        else if (staged.rows == 0L && inherit.isEmpty) {
           Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
           throw new IllegalArgumentException(
             "append of an empty DataFrame into an empty table — an append " +
               "has nothing to add; seed an intentionally empty table with " +
               "commit()")
-        } else claim(s, root, expectedParent, inherit :+ uuid, Seq(uuid),
-          extraMeta, batch, knownRows = Map(uuid -> rows),
-          knownStats = Map(uuid -> stats), knownCols = Map(uuid -> cols))
+        } else claim(s, root, expectedParent, parent, inherit :+ uuid,
+          Seq(uuid), batch, known = Map(uuid -> staged))
       case Some(pc) =>
         require(inherit.isEmpty || granular,
           s"$root is a plain (whole-dir) table — appendPartitioned would mix " +
@@ -324,8 +321,8 @@ object Snapshots {
               "commits). An empty partitioned table is not representable — " +
               "seed with a non-empty commitPartitioned")
         } else
-          claim(s, root, expectedParent, inherit ++ subs.map(n => s"$uuid/$n"),
-            Seq(uuid), extraMeta, batch)
+          claim(s, root, expectedParent, parent,
+            inherit ++ subs.map(n => s"$uuid/$n"), Seq(uuid), batch)
     }
   }
 
@@ -336,9 +333,8 @@ object Snapshots {
     * key is a duplicate), so reads need no partition inference and
     * the schema is identical to a plain commit's. */
   def commitPartitioned(s: SparkSession, root: String, df: DataFrame,
-                        partCol: String, expectedParent: Long,
-                        extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+                        partCol: String, expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
     val (uuid, subs) = stagePartitioned(s, root, df, partCol)
     if (subs.isEmpty) {
       // an empty df stages no __gp dirs; claiming an empty manifest
@@ -349,7 +345,8 @@ object Snapshots {
         "commitPartitioned got an empty DataFrame — an empty manifest " +
           "is not representable; use commit() for an empty snapshot")
     }
-    claim(s, root, expectedParent, subs.map(n => s"$uuid/$n"), Seq(uuid), extraMeta)
+    claim(s, root, expectedParent, parentMarker(s, root, expectedParent),
+      subs.map(n => s"$uuid/$n"), Seq(uuid))
   }
 
   /** COPY-ON-WRITE commit (VERDICT r18 #2): replace ONLY the
@@ -370,12 +367,18 @@ object Snapshots {
     * `alsoDrop` is rejected — "replace nothing" is ambiguous. */
   def commitReplace(s: SparkSession, root: String, df: DataFrame,
                     partCol: String, expectedParent: Long,
-                    extraMeta: Map[String, String] = Map.empty,
                     alsoDrop: Seq[String] = Nil): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+    validateCommit(s, root, expectedParent)
     require(expectedParent >= 1L,
       "commitReplace needs an existing snapshot to inherit from")
-    val parentEntries = entriesOf(s, root, expectedParent)
+    replaceWith(s, root, df, partCol, expectedParent,
+      markerOf(s, root, expectedParent), alsoDrop)
+  }
+
+  private def replaceWith(s: SparkSession, root: String, df: DataFrame,
+      partCol: String, expectedParent: Long, parent: Marker,
+      alsoDrop: Seq[String]): Long = {
+    val parentEntries = parent.names
     require(parentEntries.forall(_.contains(s"/$PartDir=")),
       s"commitReplace requires a partition-granular manifest under $root " +
         "(seed the table with commitPartitioned)")
@@ -393,7 +396,7 @@ object Snapshots {
     // ignoring the caller's drop (r19 advice): fail loudly instead,
     // matching the method's ambiguity guards below
     val stagedValues =
-      subs.map(n => unescapePathValue(n.stripPrefix(s"$PartDir="))).toSet
+      subs.map(n => Marker.unescape(n.stripPrefix(s"$PartDir="))).toSet
     val contradicted = stagedValues.intersect(dropValues)
     if (contradicted.nonEmpty) {
       Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
@@ -404,7 +407,7 @@ object Snapshots {
     val kept = parentEntries.filterNot { e =>
       val n = e.substring(e.indexOf('/') + 1)
       replaced.contains(n) ||
-        dropValues.contains(unescapePathValue(n.stripPrefix(s"$PartDir=")))
+        dropValues.contains(Marker.unescape(n.stripPrefix(s"$PartDir=")))
     }
     val entries = kept ++ subs.map(n => s"$uuid/$n")
     if (entries.isEmpty) {
@@ -413,7 +416,7 @@ object Snapshots {
         "commitReplace would empty the manifest — an empty table state " +
           "is not representable; use commit() for a full rewrite")
     }
-    claim(s, root, expectedParent, entries, Seq(uuid), extraMeta)
+    claim(s, root, expectedParent, Some(parent), entries, Seq(uuid))
   }
 
   /** METADATA-ONLY partition drop (the retention sweep, transactional):
@@ -427,12 +430,12 @@ object Snapshots {
     * no-op). At 100 TB this is one marker write — the snapshot-table
     * form of `sink_drop_partition`'s zero-data-I/O contract. */
   def commitDropPartitions(s: SparkSession, root: String,
-      values: Seq[String], expectedParent: Long,
-      extraMeta: Map[String, String] = Map.empty): Long = {
-    validateCommit(s, root, expectedParent, extraMeta)
+      values: Seq[String], expectedParent: Long): Long = {
+    validateCommit(s, root, expectedParent)
     require(expectedParent >= 1L,
       "commitDropPartitions needs an existing snapshot")
-    val parentEntries = entriesOf(s, root, expectedParent)
+    val parent = markerOf(s, root, expectedParent)
+    val parentEntries = parent.names
     require(parentEntries.forall(_.contains(s"/$PartDir=")),
       s"commitDropPartitions requires a partition-granular manifest under $root")
     // match on the UNESCAPED partition value: the stager escapes
@@ -443,7 +446,7 @@ object Snapshots {
     val (dropped, kept) = parentEntries.partition { e =>
       val n = e.substring(e.indexOf('/') + 1)
       n.startsWith(s"$PartDir=") &&
-        wanted.contains(unescapePathValue(n.stripPrefix(s"$PartDir=")))
+        wanted.contains(Marker.unescape(n.stripPrefix(s"$PartDir=")))
     }
     require(dropped.nonEmpty,
       s"no partition of $root matches ${values.mkString(",")} — nothing to drop")
@@ -451,32 +454,13 @@ object Snapshots {
     // can resolve; an empty table state is out of the format's domain
     require(kept.nonEmpty,
       s"dropping ${values.mkString(",")} would empty $root — not expressible")
-    claim(s, root, expectedParent, kept, Seq.empty, extraMeta)
+    claim(s, root, expectedParent, Some(parent), kept, Seq.empty)
   }
 
   // ---- commit internals ----
 
-  /** Decode the Hive/Spark `%XX` path escaping a partitioned write
-    * applies to special characters in a directory-name value. A `%`
-    * not followed by two hex digits passes through literally. */
-  private def unescapePathValue(v: String): String = {
-    val sb = new StringBuilder(v.length)
-    var i = 0
-    while (i < v.length) {
-      val c = v.charAt(i)
-      if (c == '%' && i + 2 < v.length &&
-          Character.digit(v.charAt(i + 1), 16) >= 0 &&
-          Character.digit(v.charAt(i + 2), 16) >= 0) {
-        sb.append((Character.digit(v.charAt(i + 1), 16) * 16 +
-          Character.digit(v.charAt(i + 2), 16)).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   private def validateCommit(s: SparkSession, root: String,
-      expectedParent: Long, extraMeta: Map[String, String]): Unit = {
+      expectedParent: Long): Unit = {
     requireAtomicCommitScheme(s, root)
     // a STALE parent is caught atomically by the marker claim below;
     // a parent AHEAD of latest would silently claim past a gap, so
@@ -485,20 +469,6 @@ object Snapshots {
     if (expectedParent > cur)
       throw new IllegalArgumentException(
         s"expectedParent $expectedParent is ahead of latest $cur under $root")
-    // the marker is parsed by string-split, so meta entries must not
-    // smuggle quotes/braces, and the manifest's own fields are
-    // reserved (a crafted earlier "data" occurrence would win the
-    // first-match parse and redirect reads)
-    // "batch" is the exactly-once ledger's own field (txnAppend): a
-    // caller-supplied value would be folded into lb and could disable
-    // every future replay detection (review finding)
-    extraMeta.foreach { case (k, x) =>
-      require(k.matches("[A-Za-z0-9_-]+") &&
-        !Set("data", "rows", "stats", "cols", "parent", "lb", "batch")(k),
-        s"invalid or reserved extraMeta key: $k")
-      require(x.matches("[A-Za-z0-9_.: -]*"),
-        s"extraMeta value for $k must stay in the JSON-safe charset")
-    }
   }
 
   /** Stage `df` as one whole-dir entry; returns the dir's uuid name. */
@@ -546,18 +516,6 @@ object Snapshots {
     * truncated binary stats stay valid bounds, but a short marker is
     * the point of manifest-level skipping). */
   private val StatsStrCap = 64
-
-  /** %XX-escape the stat-token delimiters; [[unescapePathValue]] is
-    * the decoder (same escaping the partition dirs use). */
-  private def escapeStatValue(v: String): String = {
-    val sb = new StringBuilder(v.length)
-    v.foreach { c =>
-      if (c == '%' || c == ',' || c == ':' || c == '=' || c == ' ' || c == '"')
-        sb.append(f"%%${c.toInt}%02X")
-      else sb.append(c)
-    }
-    sb.toString
-  }
 
   /** Only strings whose byte order equals their Java string order can
     * back a recorded range (parquet binary stats compare unsigned
@@ -622,20 +580,6 @@ object Snapshots {
     }
   }
 
-  /** ONE driver pass over the parquet FOOTERS under `dir`: the total
-    * row count plus a compact min/max token for up to [[StatsColCap]]
-    * top-level columns — O(#files) metadata reads, zero data I/O.
-    * What a staged entry records into its commit marker. Token shape:
-    * `col=kind:min:max` triples comma-joined (`-` = none); kinds are
-    * `l` (integral), `d` (floating), `s` (ASCII string). A column with
-    * any unusable chunk stats records nothing (absent = unknown =
-    * never pruned), so recorded ranges are always true bounds.
-    *
-    * The third element is the entry's TOP-LEVEL COLUMN NAME list
-    * (comma-joined, escaped, union over the entry's files) — what
-    * [[readRange]] uses to decide WITHOUT I/O whether pruning crossed
-    * a schema-evolution boundary (review finding: the per-read
-    * sampled-schema probe belongs in the marker). */
   /** One column chunk's stat outcome as a SERIALIZABLE event: tag 'r'
     * = usable range (kind/min/max as strings — Long/Double toString
     * round-trips exactly), 'm' = unusable stats (poisons the column).
@@ -706,7 +650,17 @@ object Snapshots {
     s.conf.getOption("spark.graft.statsHarvestDistributeMinFiles")
       .map(_.toInt).getOrElse(16)
 
-  private def footerInfo(s: SparkSession, dir: String): (Long, String, String) = {
+  /** ONE driver pass over the parquet FOOTERS of staged entry `entry`
+    * — O(#files) metadata reads, zero data I/O: what its commit marker
+    * records. Row count; min/max for up to [[StatsColCap]] top-level
+    * columns, where a column with any unusable chunk stats records
+    * nothing (absent = unknown = never pruned), so recorded ranges are
+    * always true bounds; and the union of the files' top-level column
+    * names, which [[readRange]] uses to decide WITHOUT I/O whether
+    * pruning crossed a schema-evolution boundary. */
+  private def footerEntry(s: SparkSession, root: String,
+      entry: String): Marker.Entry = {
+    val dir = s"${dataRoot(root)}/$entry"
     // name-sorted so WHICH columns land under the cap is a pure
     // function of the staged data, not of listing order — markers
     // stay reproducible
@@ -765,16 +719,11 @@ object Snapshots {
         }
       }
     }
-    val tok =
-      if (acc.isEmpty) "-"
-      else acc.map { case (n, sr) =>
-        s"${escapeStatValue(n)}=${sr.kind}:${escapeStatValue(sr.mn.toString)}:" +
-          escapeStatValue(sr.mx.toString)
-      }.mkString(",")
-    val cols =
-      if (colNames.isEmpty) "-"
-      else colNames.map(escapeStatValue).mkString(",")
-    (rows, tok, cols)
+    Marker.Entry(entry, rows,
+      acc.to(scala.collection.immutable.ListMap).map { case (n, sr) =>
+        n -> Marker.Stat(sr.kind, sr.mn.toString, sr.mx.toString)
+      },
+      Some(colNames.toSeq))
   }
 
   private def statLt(kind: Char, a: Any, b: Any): Boolean = kind match {
@@ -783,148 +732,37 @@ object Snapshots {
     case _ => a.asInstanceOf[String].compareTo(b.asInstanceOf[String]) < 0
   }
 
-  /** entry → token of one of the marker's ALIGNED fields (the
-    * space-joined arrays written in step with `data`) — the one
-    * zip-and-validate implementation `rows`/`stats`/`cols` share
-    * (review finding: three near-identical parsers drift apart). */
-  private def alignedField(meta: String, key: String): Map[String, String] =
-    (metaField(meta, "data"), metaField(meta, key)) match {
-      case (Some(d), Some(t)) if ownField(meta, key) =>
-        val es = d.split(" "); val ts = t.split(" ")
-        if (ts.length == es.length) es.zip(ts).toMap else Map.empty
-      case _ => Map.empty
-    }
-
-  /** entry → stats token out of an already-read marker (empty for
-    * markers written before the `stats` field existed). */
-  private def statsOfMeta(meta: String): Map[String, String] =
-    alignedField(meta, "stats")
-
-  /** entry → top-level column-name token out of an already-read
-    * marker (empty for markers written before the `cols` field).
-    * `?` = inherited from a pre-cols parent (schema UNKNOWN — never
-    * to be confused with `-`, a file-less entry with no columns,
-    * review finding). */
-  private def colsOfMeta(meta: String): Map[String, String] =
-    alignedField(meta, "cols")
-
-  /** Decode one entry's stats token → column → (kind, min, max). */
-  private def parseStatsToken(tok: String): Map[String, (Char, String, String)] =
-    if (tok == "-") Map.empty
-    else tok.split(",").toSeq.flatMap { part =>
-      part.split("=") match {
-        case Array(n, rest) => rest.split(":", -1) match {
-          case Array(k, mn, mx) if k.length == 1 =>
-            Some(unescapePathValue(n) ->
-              (k.charAt(0), unescapePathValue(mn), unescapePathValue(mx)))
-          case _ => None
-        }
-        case _ => None
-      }
-    }.toMap
-
-  /** True when `key` occurs as one of the marker's OWN leading fields
-    * (the format writes data/rows/stats before parent) rather than as
-    * caller extraMeta: "rows"/"stats" were reservable extraMeta keys
-    * before r20, and a legacy marker carrying one must not have its
-    * caller metadata promoted to authoritative per-entry counts
-    * (review finding) — extras are always written AFTER parent/lb. */
-  private def ownField(meta: String, key: String): Boolean = {
-    val at = meta.indexOf(s""""$key":"""")
-    at >= 0 && at < meta.indexOf(""""parent":""")
-  }
-
-  /** entry → row count out of an already-read marker (empty for
-    * markers written before the `rows` field existed). */
-  private def rowsOfMeta(meta: String): Map[String, Long] = {
-    val toks = alignedField(meta, "rows")
-    if (toks.values.forall(_.toLongOption.isDefined))
-      toks.map { case (e, n) => e -> n.toLong }
-    else Map.empty
-  }
-
-  /** Build the marker (manifest entries + per-entry row counts +
-    * parent + folded ledger + caller meta) and claim
-    * `_commits/<parent+1>` atomically. On conflict deletes the staged
-    * dirs and throws.
+  /** Build the marker from the decoded `parent` (None at genesis —
+    * claim reads no marker itself) and claim `_commits/<parent+1>`
+    * atomically. On conflict deletes the staged dirs and throws.
     *
-    * PER-ENTRY ROW COUNTS (VERDICT r19 #6): each manifest entry's row
-    * count rides in the marker (`rows`, space-joined, aligned with
-    * `data`): freshly staged entries are counted ONCE from their
-    * parquet footers at commit time (O(staged files) driver metadata
-    * reads — never standing data), inherited entries copy their count
-    * forward from the parent's marker (`knownRows` lets metadata-only
-    * commits like restore carry the source version's counts). A
-    * pre-r20 parent contributes no counts — its inherited entries
-    * record -1 (unknown) rather than a lie.
-    *
-    * PER-ENTRY COLUMN MIN/MAX (the stats half of the same verdict
-    * item; [public: Delta per-file stats / Iceberg manifest column
-    * bounds]): the SAME footer pass records each staged entry's
-    * min/max for up to [[StatsColCap]] columns into the marker's
-    * `stats` field (aligned with `data`, `-` = none), inherited
-    * entries copy theirs forward — so [[readRange]] can prune a read
-    * to the intersecting entries from ONE marker read, before any
-    * file listing. */
+    * PER-ENTRY RECORDS (VERDICT r19 #6; [public: Delta per-file stats
+    * / Iceberg manifest column bounds]): staged entries are footer-read
+    * ONCE here (O(staged files) metadata reads, never standing data);
+    * inherited entries copy the parent's record forward; `known`
+    * hands in records a caller already holds (restore's source
+    * version, an emptiness-checked staged dir). An entry nobody
+    * recorded (a legacy parent) is written as unknown, not a lie. */
   private def claim(s: SparkSession, root: String, expectedParent: Long,
-      entries: Seq[String], stagedUuids: Seq[String],
-      extraMeta: Map[String, String], batch: Option[Long] = None,
-      knownRows: Map[String, Long] = Map.empty,
-      knownStats: Map[String, String] = Map.empty,
-      knownCols: Map[String, String] = Map.empty): Long = {
+      parent: Option[Marker], entries: Seq[String], stagedUuids: Seq[String],
+      batch: Option[Long] = None,
+      known: Map[String, Marker.Entry] = Map.empty): Long = {
     val v = expectedParent + 1
-    // ONE parent-marker read feeds both the ledger fold and the
-    // row-count carry-forward (review: don't read the same small
-    // remote file twice per commit)
-    val parentMeta =
-      if (expectedParent > 0L) Some(metaOf(s, root, expectedParent)) else None
     // fold the exactly-once ledger forward: lb(v) = max(lb(parent),
     // this commit's own batch id) — the newest marker ALWAYS carries
     // the full ledger, so expire can never lose it (r18 advice) and
-    // txnAppend never walks (the legacy walk below only runs for
-    // markers written before the lb field existed). The batch id is
-    // an INTERNAL parameter (txnAppend), never caller meta.
-    val parentLb = parentMeta
-      .map(m => lastBatchOfMeta(s, root, expectedParent, m)).getOrElse(-1L)
+    // txnAppend never walks.
+    val parentLb = parent.map(lastBatchOf(s, root, expectedParent, _)).getOrElse(-1L)
     val lb = math.max(parentLb, batch.getOrElse(-1L))
-    val dirs = entries.mkString(" ")
-    val parentRows = parentMeta.map(rowsOfMeta).getOrElse(Map.empty[String, Long])
-    val parentStats =
-      parentMeta.map(statsOfMeta).getOrElse(Map.empty[String, String])
-    val parentCols =
-      parentMeta.map(colsOfMeta).getOrElse(Map.empty[String, String])
+    val carried = parent.map(_.byName).getOrElse(Map.empty) ++ known
     val staged = stagedUuids.toSet
-    val infos = entries.map { e =>
-      // caller-supplied info wins even for staged entries — lets a
-      // path that already footer-read a staged dir (the genesis
-      // emptiness check) hand its result in instead of re-reading
-      if (knownRows.contains(e) && knownStats.contains(e) &&
-          knownCols.contains(e))
-        (knownRows(e), knownStats(e), knownCols(e))
-      else if (staged.contains(e.split("/")(0)))
-        footerInfo(s, s"${dataRoot(root)}/$e")
-      else (knownRows.getOrElse(e, parentRows.getOrElse(e, -1L)),
-        knownStats.getOrElse(e, parentStats.getOrElse(e, "-")),
-        // "?" = UNKNOWN (pre-cols parent), distinct from "-" (a
-        // file-less entry with no columns): readRange must treat an
-        // unknown-schema entry as a forced probe, never as
-        // provably-column-free (review finding)
-        knownCols.getOrElse(e, parentCols.getOrElse(e, "?")))
+    val recorded = entries.map { e =>
+      carried.getOrElse(e,
+        if (staged.contains(e.split("/")(0))) footerEntry(s, root, e)
+        else Marker.unknown(e))
     }
-    val counts = infos.map(_._1)
-    val statsToks = infos.map(_._2)
-    val colsToks = infos.map(_._3)
-    val batchField = batch.map(b => s""","batch":"$b"""").getOrElse("")
-    val extras = extraMeta.map { case (k, x) => s""","$k":"$x"""" }.mkString
-    // every field is written QUOTED so [[metaField]] is the single
-    // parser of the format; markers from before r20 carry a bare
-    // numeric parent — [[parentOf]] keeps the legacy-read fallback
-    val meta =
-      s"""{"data":"$dirs","rows":"${counts.mkString(" ")}",""" +
-        s""""stats":"${statsToks.mkString(" ")}",""" +
-        s""""cols":"${colsToks.mkString(" ")}",""" +
-        s""""parent":"$expectedParent","lb":"$lb"$batchField$extras}"""
-    if (!createExclusive(s, s"${commitsDir(root)}/$v", meta)) {
+    val marker = Marker.encode(Marker(recorded, expectedParent, Some(lb), batch))
+    if (!createExclusive(s, s"${commitsDir(root)}/$v", marker)) {
       stagedUuids.foreach(u => Fs.deleteDir(s, s"${dataRoot(root)}/$u"))
       throw new SnapshotConflictException(
         s"version $v already committed under $root " +
@@ -933,123 +771,69 @@ object Snapshots {
     v
   }
 
-  /** Marker content of version `v`. Tolerates an IN-FLIGHT marker
+  /** Decoded marker of version `v`. Tolerates an IN-FLIGHT marker
     * (claimed, content not yet visible — HDFS exposes a length-0 file
     * until close): retries briefly instead of crashing the reader
     * with a parse error (r18 advice), then names the marker in an
     * IllegalStateException if it never completes (a writer that died
     * between claim and write — surgically removable). */
-  private def metaOf(s: SparkSession, root: String, v: Long): String = {
-    val marker = s"${commitsDir(root)}/$v"
+  private def markerOf(s: SparkSession, root: String, v: Long): Marker = {
+    val path = s"${commitsDir(root)}/$v"
     val f = Fs.fs(s, root)
     var attempt = 0
     while (attempt < 50) {
       attempt += 1
-      if (!f.exists(new Path(marker)))
+      if (!f.exists(new Path(path)))
         throw new NoSuchElementException(
           s"snapshot version $v does not exist under $root " +
             s"(committed: ${versions(s, root).mkString(",")})")
-      val meta =
-        try Some(readSmall(s, marker))
+      val text =
+        try Some(readSmall(s, path))
         catch { case _: java.io.FileNotFoundException => None } // expired mid-read
-      // completeness = the closing brace is visible, not merely "data
-      // parses": a partially flushed marker could expose a TRUNCATED
-      // entry list that silently resolves to a subset of the manifest
-      // (review finding) — markers are single-line JSON, written whole
-      meta.filter(m => m.trim.endsWith("}") &&
-          metaField(m, "data").isDefined) match {
+      text.flatMap(Marker.decode) match {
         case Some(m) => return m
         case None => Thread.sleep(40) // in-flight: claimed, content pending
       }
     }
     throw new IllegalStateException(
-      s"commit marker $marker exists but its content never became readable " +
+      s"commit marker $path exists but its content never became readable " +
         "— a writer likely died between claim and content write")
   }
 
-  /** One string field out of the marker's (self-written, flat) JSON
-    * — the ONLY parser of the marker format. */
-  private def metaField(meta: String, key: String): Option[String] =
-    meta.split(s""""$key":"""").drop(1).headOption.map(_.split("\"")(0))
-
-  /** The parent version a marker declares. Markers written before r20
-    * carried `parent` as the one unquoted field — fall back to the
-    * bare-number read so old tables keep describing their history. */
-  private def parentOf(meta: String): Long =
-    metaField(meta, "parent").map(_.toLong).getOrElse(
-      meta.split(""""parent":""").drop(1).headOption
-        .map(_.takeWhile(c => c.isDigit || c == '-')).map(_.toLong)
-        .getOrElse(-1L))
-
-  /** Manifest entries out of an already-read marker. */
-  private def entriesOfMeta(meta: String): Seq[String] =
-    metaField(meta, "data").get.split(" ").toSeq
+  /** The marker of `expectedParent`, None at genesis (0). */
+  private def parentMarker(s: SparkSession, root: String,
+      expectedParent: Long): Option[Marker] =
+    if (expectedParent == 0L) None else Some(markerOf(s, root, expectedParent))
 
   /** Manifest entries of `v`, relative to `data/`. */
   private def entriesOf(s: SparkSession, root: String, v: Long): Seq[String] =
-    entriesOfMeta(metaOf(s, root, v))
+    markerOf(s, root, v).names
 
-  private def dataDirsOf(s: SparkSession, root: String, v: Long): Seq[String] =
-    entriesOf(s, root, v).map(u => s"${dataRoot(root)}/$u")
+  private def dataDirs(root: String, entries: Seq[String]): Seq[String] =
+    entries.map(u => s"${dataRoot(root)}/$u")
+
+  private def readEntries(s: SparkSession, root: String,
+      entries: Seq[String]): DataFrame =
+    readDirs(s, dataDirs(root, entries))
 
   /** Absolute data dirs of snapshot `v`, resolved once from its
     * immutable manifest — what the SQL surface ([[SnapshotSource]])
     * plans its file scan over. */
   def manifestDirs(s: SparkSession, root: String, v: Long): Seq[String] =
-    dataDirsOf(s, root, v)
+    dataDirs(root, entriesOf(s, root, v))
 
-  /** The value a commit recorded under `key` in its marker, if any —
-    * e.g. the streaming batch id a [[txnAppend]] commit carries. */
-  def commitMeta(s: SparkSession, root: String, v: Long,
-                 key: String): Option[String] =
-    metaField(metaOf(s, root, v), key)
-
-  /** The marker's OWN `lb`/`batch` value: these trailing ledger
-    * fields are written in one contiguous run after `parent`
-    * (`"parent":..,"lb":..[,"batch":..]`, or `"parent":..,"batch":..`
-    * in pre-lb markers), so only an occurrence inside that run is the
-    * format's own — caller extraMeta keyed "lb"/"batch" (possible
-    * before the keys were reserved) sits among the LATER extras and
-    * must never be promoted into the exactly-once ledger, where a
-    * large value would drop real micro-batches as replays and a
-    * non-numeric one would crash every commit (review finding). */
-  private val OwnLedgerRun = java.util.regex.Pattern.compile(
-    """"parent":"?-?\d+"?(?:,"lb":"(-?\d+)")?(?:,"batch":"(-?\d+)")?""")
-
-  private def ownLedger(meta: String, key: String): Option[Long] = {
-    // residual ambiguity, accepted: a PRE-RESERVATION marker whose
-    // caller extraMeta serialized "lb"/"batch" as the FIRST extra is
-    // byte-identical to an own-field run and is still promoted —
-    // physically indistinguishable in the bytes; the key reservation
-    // (r19/r20) closes the hole for every marker written since
-    val m = OwnLedgerRun.matcher(meta)
-    if (!m.find()) None
-    else key match {
-      case "lb" => Option(m.group(1)).map(_.toLong)
-      case _ => Option(m.group(2)).map(_.toLong)
-    }
-  }
-
-  /** `lb` out of version `v`'s ALREADY-READ marker, with the
-    * pre-ledger-era fallback walk — the one implementation the
-    * commit-time fold ([[claim]]) and replay detection
-    * ([[lastBatchUpTo]]) share, so the two can never disagree on the
-    * same table (review finding). */
-  private def lastBatchOfMeta(s: SparkSession, root: String, v: Long,
-                              meta: String): Long =
-    ownLedger(meta, "lb").getOrElse(
-      versions(s, root).filter(_ <= v).reverseIterator
-        .map(x => ownLedger(metaOf(s, root, x), "batch"))
+  /** Max streaming batch id at or before version `v`, given its
+    * marker `m` — shared by the commit-time fold ([[claim]]) and replay
+    * detection ([[txnAppend]]) so the two never disagree (review
+    * finding). Only a marker from before the `lb` field walks back
+    * through older markers' `batch` ids. */
+  private def lastBatchOf(s: SparkSession, root: String, v: Long,
+                          m: Marker): Long =
+    m.lb.orElse(m.batch).getOrElse(
+      versions(s, root).filter(_ < v).reverseIterator
+        .map(x => markerOf(s, root, x).batch)
         .collectFirst { case Some(b) => b }
         .getOrElse(-1L))
-
-  /** Max streaming batch id at or before version `v` — ONE marker
-    * read on any table written by this code (every marker folds `lb`
-    * forward); the fallback walk only ever runs for markers written
-    * before the ledger field existed. */
-  private def lastBatchUpTo(s: SparkSession, root: String, v: Long): Long =
-    if (v <= 0L) -1L
-    else lastBatchOfMeta(s, root, v, metaOf(s, root, v))
 
   /** Read snapshot `v` (time travel). The manifest is resolved NOW
     * and its entries are immutable — the returned DataFrame yields
@@ -1059,7 +843,7 @@ object Snapshots {
     * evolution), and old rows surface the new column as null — the
     * add-column semantics every public format ships. */
   def readAsOf(s: SparkSession, root: String, v: Long): DataFrame =
-    readDirs(s, dataDirsOf(s, root, v))
+    readEntries(s, root, entriesOf(s, root, v))
 
   private def readDirs(s: SparkSession, dirs: Seq[String]): DataFrame =
     s.read.option("mergeSchema", "true").parquet(dirs: _*)
@@ -1110,36 +894,30 @@ object Snapshots {
       s"asOf must be a committed version (>= 1) or -1 for latest, got $asOf")
     val v = if (asOf >= 1L) asOf else latest(s, root).getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    val meta = metaOf(s, root, v)
-    val entries = entriesOfMeta(meta)
-    val stats = statsOfMeta(meta)
-    val kept = entries.filter { e =>
-      stats.get(e).map(parseStatsToken).flatMap(_.get(column)) match {
-        case Some((kind, mn, mx)) => rangeOverlaps(kind, mn, mx, lo, hi)
+    val m = markerOf(s, root, v)
+    val entries = m.names
+    val kept = m.entries.filter { e =>
+      e.stats.get(column) match {
+        case Some(st) => rangeOverlaps(st.kind, st.min, st.max, lo, hi)
         case None => true // no recorded range — must read
       }
-    }
+    }.map(_.name)
     // all-pruned still plans over the full manifest: the predicate
     // yields the schema-stable empty result and row-group stats skip
     // every block — no special-cased empty relation
     val keptAll = kept.isEmpty || kept.size == entries.size
-    val base = readDirs(s,
-      (if (keptAll) entries else kept).map(u => s"${dataRoot(root)}/$u"))
+    val base = readEntries(s, root, if (keptAll) entries else kept)
     val aligned =
       if (keptAll) base
       else {
-        val cols = colsOfMeta(meta)
         // zero-I/O boundary test: pruning provably cannot change the
         // output schema ONLY when every entry records the IDENTICAL
         // ordered column list (order matters — mergeSchema's union
         // order depends on which entries survive, and positional
         // consumers must not see reordered columns; review finding).
-        // A legacy marker (no cols field) or an entry inherited from
-        // a pre-cols parent ("?") answers conservatively yes.
-        val boundary =
-          cols.size != entries.size ||
-            cols.values.exists(_ == "?") ||
-            entries.map(cols).distinct.size > 1
+        // An entry with unknown columns answers conservatively yes.
+        val cols = m.entries.map(_.cols)
+        val boundary = cols.contains(None) || cols.distinct.size > 1
         if (!boundary) base
         else {
           // evolution boundary (or legacy marker): one sampled file
@@ -1237,10 +1015,12 @@ object Snapshots {
     while (true) {
       attempt += 1
       val parent = latest(s, root).getOrElse(0L)
-      val cur = if (parent == 0L) None else Some(readAsOf(s, root, parent))
-      val next = f(cur)
-      try return commit(s, root, next, parent)
-      catch {
+      val pm = parentMarker(s, root, parent)
+      val next = f(pm.map(m => readEntries(s, root, m.names)))
+      try {
+        validateCommit(s, root, parent)
+        return commitWith(s, root, next, parent, pm)
+      } catch {
         case e: SnapshotConflictException =>
           if (attempt >= maxAttempts) throw e
       }
@@ -1262,9 +1042,12 @@ object Snapshots {
       attempt += 1
       val parent = latest(s, root).getOrElse(
         throw new NoSuchElementException(s"no committed snapshot under $root"))
-      val next = f(readAsOf(s, root, parent))
-      try return commitReplace(s, root, next, partCol, parent)
-      catch {
+      val pm = markerOf(s, root, parent)
+      val next = f(readEntries(s, root, pm.names))
+      try {
+        validateCommit(s, root, parent)
+        return replaceWith(s, root, next, partCol, parent, pm, alsoDrop = Nil)
+      } catch {
         case e: SnapshotConflictException =>
           if (attempt >= maxAttempts) throw e
       }
@@ -1373,7 +1156,7 @@ object Snapshots {
     * Also reclaims an AGED ZERO-LENGTH marker (r19 advice): a writer
     * that died between claiming `_commits/<N>` and writing its content
     * leaves a marker that bricks every read and commit (latest
-    * resolves to it, metaOf never completes). Once older than the
+    * resolves to it, markerOf never completes). Once older than the
     * grace window it is provably dead — deleting it restores
     * availability; the version number is re-claimable, safe because
     * no reader can ever have resolved a content-less marker.
@@ -1419,7 +1202,7 @@ object Snapshots {
     // — append/replace commits share their parents' entries, so
     // liveness is manifest-union, not per-version (the same
     // refcount-by-manifest rule public formats' VACUUM applies)
-    val liveDirs = live.flatMap(v => dataDirsOf(s, root, v)).toSet
+    val liveDirs = live.flatMap(v => manifestDirs(s, root, v)).toSet
     dead.foreach { v =>
       val entries = entriesOf(s, root, v)
       Fs.deleteDir(s, s"${commitsDir(root)}/$v")
@@ -1513,15 +1296,14 @@ object Snapshots {
     val toEntries = entriesOf(s, root, toV)
     val aOnly = fromEntries.filterNot(toEntries.toSet)
     val bOnly = toEntries.filterNot(fromEntries.toSet)
-    def sideRead(dirs: Seq[String]): Option[DataFrame] =
-      if (dirs.nonEmpty) Some(readDirs(s, dirs.map(u => s"${dataRoot(root)}/$u")))
-      else None
+    def sideRead(entries: Seq[String]): Option[DataFrame] =
+      if (entries.nonEmpty) Some(readEntries(s, root, entries)) else None
     val (aRead, bRead) = (sideRead(aOnly), sideRead(bOnly))
     if (aRead.isEmpty && bRead.isEmpty) {
       // identical manifests → no changes by construction; run the
       // pipeline over one empty slice of the snapshot (rare path, one
       // schema resolution) so the output schema matches the usual one
-      val empty = readAsOf(s, root, toV).limit(0)
+      val empty = readEntries(s, root, toEntries).limit(0)
       return cdcFrames(empty, empty, keys)
     }
     // the OUTPUT schema must stay stable across batches (r19 advice):
@@ -1533,7 +1315,7 @@ object Snapshots {
     // order leads, so every batch of the same table lines up; a column
     // dropped between the versions (present only in fromV's removed
     // entries) trails.
-    val fullSchema = readAsOf(s, root, toV).schema
+    val fullSchema = readEntries(s, root, toEntries).schema
     val aSchema = aRead.map(_.schema).getOrElse(bRead.get.schema)
     val bSchema = bRead.map(_.schema).getOrElse(aRead.get.schema)
     val unionFields = (fullSchema.fields ++ aSchema.fields ++ bSchema.fields)
@@ -1623,7 +1405,7 @@ object Snapshots {
           s"(${rewritten.take(3).mkString(", ")}…) — a replace/compact is " +
           "not representable as an append stream; restart from a fresh " +
           "checkpoint to re-read the full snapshot")
-    toEntries.filterNot(fromEntries.toSet).map(u => s"${dataRoot(root)}/$u")
+    dataDirs(root, toEntries.filterNot(fromEntries.toSet))
   }
 
   /** Entries of a stream's checkpointed version (`from <= 0` =
@@ -1668,10 +1450,8 @@ object Snapshots {
     var fits = true
     while (v < to && fits) {
       val nv = v + 1
-      val meta = metaOf(s, root, nv) // one read: entries AND counts
-      val es = entriesOfMeta(meta)
-      val counts = rowsOfMeta(meta)
-      val added = es.filterNot(prev).map(e => counts.getOrElse(e, -1L))
+      val m = markerOf(s, root, nv) // one read: entries AND counts
+      val added = m.entries.filterNot(e => prev(e.name)).map(_.rows)
       // unknown count (a pre-r20 marker) → treat as cap-exceeding so
       // it is delivered alone rather than hiding unbounded volume
       val n = if (added.exists(_ < 0L)) maxRows else added.sum
@@ -1685,7 +1465,7 @@ object Snapshots {
       // overflows negative and would admit everything (review finding)
       if (v == from || n <= maxRows - rows) {
         rows += n
-        prev = es.toSet
+        prev = m.names.toSet
         v = nv
         fits = rows < maxRows
       } else fits = false
@@ -1721,10 +1501,12 @@ object Snapshots {
     while (attempt < maxAttempts) {
       attempt += 1
       val parent = latest(s, root).getOrElse(0L)
-      if (batchId <= lastBatchUpTo(s, root, parent)) return false
+      val pm = parentMarker(s, root, parent)
+      if (batchId <= pm.map(lastBatchOf(s, root, parent, _)).getOrElse(-1L))
+        return false
       try {
-        validateCommit(s, root, parent, Map.empty)
-        appendWith(s, root, df, parent, Map.empty, batch = Some(batchId),
+        validateCommit(s, root, parent)
+        appendWith(s, root, df, parent, pm, batch = Some(batchId),
           partCol = partCol)
         return true
       } catch { case _: SnapshotConflictException => () }
@@ -1744,16 +1526,15 @@ object Snapshots {
     * OCC commit (a concurrent writer conflicts and retries). Throws
     * if `v`'s marker has already been expired. */
   def restore(s: SparkSession, root: String, v: Long): Long = {
-    validateCommit(s, root, 0L, Map.empty)
-    val meta = metaOf(s, root, v) // one read: entries AND counts; throws if expired
+    validateCommit(s, root, 0L)
+    val target = markerOf(s, root, v) // throws if expired
     val parent = latest(s, root).getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    // carry v's recorded row counts, column ranges, AND column names —
-    // the parent may not reference these entries, and a metadata-only
-    // commit must stay zero-I/O
-    claim(s, root, parent, entriesOfMeta(meta), Seq.empty, Map.empty,
-      knownRows = rowsOfMeta(meta), knownStats = statsOfMeta(meta),
-      knownCols = colsOfMeta(meta))
+    // carry v's per-entry records — the parent may not reference these
+    // entries, and a metadata-only commit must stay zero-I/O
+    claim(s, root, parent,
+      Some(if (parent == v) target else markerOf(s, root, parent)),
+      target.names, Seq.empty, known = target.byName)
   }
 
   /** The commit log as a DataFrame — DESCRIBE HISTORY: one row per
@@ -1768,23 +1549,20 @@ object Snapshots {
       // an unreadable (zero-length, dead-claim) marker must not take
       // the whole listing down (ADVICE r20 #3): DESCRIBE HISTORY is
       // exactly what an operator reaches for to diagnose the dead
-      // writer, and metaOf would spin its read-retry loop then throw.
+      // writer, and markerOf would spin its read-retry loop then throw.
       // Same readable() test as expire's; the placeholder row is
       // recognizable by parent = -1 (impossible for a real commit).
       if (Fs.len(s, s"${commitsDir(root)}/$v") == 0L)
         (v, 0, Option.empty[Long], -1L, -1L, Option.empty[Long])
       else {
-      val meta = metaOf(s, root, v)
-      val entryCounts = rowsOfMeta(meta).values.toSeq
-      val numEntries = metaField(meta, "data").map(_.split(" ").length).getOrElse(0)
+      val m = markerOf(s, root, v)
+      val rows = m.entries.map(_.rows)
       (v,
-        numEntries,
-        if (entryCounts.size == numEntries && entryCounts.forall(_ >= 0L))
-          Some(entryCounts.sum)
-        else None,
-        parentOf(meta),
-        ownLedger(meta, "lb").getOrElse(-1L),
-        ownLedger(meta, "batch"))
+        m.entries.size,
+        if (rows.forall(_ >= 0L)) Some(rows.sum) else None,
+        m.parent,
+        m.lb.getOrElse(-1L),
+        m.batch)
       }
     }.toDF("version", "num_entries", "num_rows", "parent", "last_batch", "batch")
   }
@@ -1810,11 +1588,14 @@ object Snapshots {
       // re-checked against each attempt's parent (review finding): a
       // concurrent commitPartitioned landing mid-retry must flip this
       // refusal, not get silently downgraded by the conflict retry
-      require(!entriesOf(s, root, parent).exists(_.contains(s"/$PartDir=")),
+      val pm = markerOf(s, root, parent)
+      require(!pm.names.exists(_.contains(s"/$PartDir=")),
         s"$root is partition-granular — plain compact would downgrade it " +
           "and break copy-on-write; use compactPartitioned")
-      try return commit(s, root, readAsOf(s, root, parent), parent)
-      catch {
+      try {
+        validateCommit(s, root, parent)
+        return commitWith(s, root, readEntries(s, root, pm.names), parent, Some(pm))
+      } catch {
         case e: SnapshotConflictException => if (attempt >= maxAttempts) throw e
       }
     }

@@ -1,0 +1,94 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.functions.{col, concat, lit}
+
+import graft.sources.Snapshots
+
+/** Each commit verb decodes its parent's commit marker exactly once:
+  * the marker is immutable, so a second read is pure remote-I/O cost
+  * on an object store. Counted with a `countfs:` filesystem that
+  * records every `open`. */
+class MarkerReadSpec extends SparkSpec {
+
+  test("every commit verb opens its parent marker exactly once") {
+    val s = spark
+    import s.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingMarkerFs].getName)
+    val dir = Files.createTempDirectory("graft_snap_count_").toString
+    val root = s"countfs:$dir/tbl"
+    def opens(v: Long): Int = CountingMarkerFs.opens(s"$dir/tbl/_commits/$v")
+    /** Runs one verb and returns how often it opened marker `parent`. */
+    def parentReads(parent: Long)(verb: => Any): Int = {
+      assert(Snapshots.latest(spark, root) === Some(parent))
+      CountingMarkerFs.reset()
+      verb
+      opens(parent)
+    }
+    spark.conf.set("spark.graft.snapshot.atomicCreateSchemes", "countfs")
+    try {
+      Snapshots.commitPartitioned(spark, root,
+        Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 3, "c")).toDF("k", "p", "v"),
+        "p", 0L)
+      val reads = Seq(
+        "appendPartitioned" -> parentReads(1L) {
+          Snapshots.appendPartitioned(spark, root,
+            Seq((4L, 4, "d")).toDF("k", "p", "v"), "p", 1L)
+        },
+        "replaceTransform" -> parentReads(2L) {
+          Snapshots.replaceTransform(spark, root, "p") { cur =>
+            cur.filter(col("p") === 2).withColumn("v", concat(col("v"), lit("!")))
+          }
+        },
+        "mergeTransform" -> parentReads(3L) {
+          Snapshots.mergeTransform(spark, root, "p",
+            Seq((1L, 1, "A"), (9L, 1, "i")).toDF("k", "p", "v"), Seq("k"))
+        },
+        "compactPartitioned" -> parentReads(4L) {
+          Snapshots.compactPartitioned(spark, root, "p")
+        },
+        "commitDropPartitions" -> parentReads(5L) {
+          Snapshots.commitDropPartitions(spark, root, Seq("4"), 5L)
+        },
+        "txnAppend" -> parentReads(6L) {
+          Snapshots.txnAppend(spark, root,
+            Seq((5L, 3, "e")).toDF("k", "p", "v"), 7L, partCol = Some("p"))
+        },
+        // restoring the latest version: the restored marker IS the parent
+        "restore" -> parentReads(7L) { Snapshots.restore(spark, root, 7L) })
+      assert(reads.filter(_._2 != 1) === Nil,
+        "each verb must read its parent marker once")
+      // restoring an older version reads that version's marker and the
+      // parent's, each once
+      assert(parentReads(8L) { Snapshots.restore(spark, root, 2L) } === 1 &&
+        opens(2L) === 1)
+      assert(Snapshots.read(spark, root).orderBy("k")
+        .as[(Long, Int, String)].collect().toSeq ===
+        Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 3, "c"), (4L, 4, "d")))
+    } finally spark.conf.unset("spark.graft.snapshot.atomicCreateSchemes")
+  }
+}
+
+/** A RawLocalFileSystem answering for the `countfs:` scheme that
+  * counts `open` calls per path. */
+class CountingMarkerFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingMarkerFs.counts
+      .computeIfAbsent(f.toUri.getPath, _ => new AtomicInteger())
+      .incrementAndGet(): Unit
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingMarkerFs {
+  private val counts = new ConcurrentHashMap[String, AtomicInteger]()
+  def reset(): Unit = counts.clear()
+  def opens(path: String): Int =
+    Option(counts.get(path)).map(_.get).getOrElse(0)
+}

@@ -833,12 +833,6 @@ class SnapshotSpec extends SparkSpec {
     }
     Snapshots.commitPartitioned(spark, root,
       Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 3, "c")).toDF("k", "p", "v"), "p", 0L)
-    // "batch" is the exactly-once ledger's field: caller meta must not
-    // be able to poison replay detection
-    intercept[IllegalArgumentException] {
-      Snapshots.commit(spark, root, Seq((9L, 9, "z")).toDF("k", "p", "v"), 1L,
-        extraMeta = Map("batch" -> "20260815"))
-    }
     // a DELETE that empties partition 2 rides in alsoDrop — the same
     // atomic commit replaces 1 and removes 2 entirely
     val v2 = Snapshots.commitReplace(spark, root,
@@ -1715,18 +1709,6 @@ class SnapshotSpec extends SparkSpec {
     Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
     intercept[IllegalArgumentException] {
       Snapshots.expire(spark, root, keepLast = 0)
-    }
-    intercept[IllegalArgumentException] { // quote would corrupt the marker
-      Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L,
-        extraMeta = Map("note" -> "say \"hi\""))
-    }
-    intercept[IllegalArgumentException] { // manifest fields are reserved
-      Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L,
-        extraMeta = Map("data" -> "evil"))
-    }
-    intercept[IllegalArgumentException] { // the folded ledger is reserved too
-      Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 1L,
-        extraMeta = Map("lb" -> "99"))
     }
     intercept[IllegalArgumentException] { // parent ahead of latest = gap
       Snapshots.commit(spark, root, Seq((2L, "b")).toDF("k", "v"), 5L)
