@@ -162,221 +162,6 @@ object Scans {
       .join(s.table(ordTbl), col("l_orderkey") === col("o_orderkey"))
   }
 
-  /** Small-file compaction — Hive's `ALTER TABLE ... [PARTITION ...]
-    * CONCATENATE` / merge-small-files: the routine operational rewrite
-    * every long-lived partitioned dataset runs after many small
-    * incremental writes fragment its partitions (VERDICT r16 #1).
-    *
-    * Policy: a partition is FRAGMENTED when it holds more files than
-    * `ceil(bytes / targetFileBytes)` — i.e. more files than its data
-    * needs at the target file size. Only fragmented partitions are
-    * rewritten (one dynamic-partition-overwrite job for all of them,
-    * `sink_partition_overwrite`'s mode); every other partition dir is
-    * NOT TOUCHED — ScanSpec asserts its files survive byte-identical.
-    * Within the job, rows are shuffled on (partition value, salt mod
-    * perPartitionTarget) so each rewritten partition lands in at most
-    * its own target file count, independent of the others'.
-    *
-    * Scale notes: per-partition sizing comes from a driver-side
-    * listing of the partition dirs — O(#partitions + #files) metadata,
-    * no data read (a 100 TB deployment reads the same numbers from
-    * its catalog/manifest instead of the filesystem). The rows being
-    * compacted are localCheckpoint-materialized before the overwrite:
-    * the rewrite reads the very files it replaces, and materializing
-    * first is what makes read-then-overwrite safe on a path-based
-    * table (a transactional table format would get this from MVCC
-    * snapshots instead — declared non-goal). The job's shuffle
-    * volume is exactly the fragmented partitions' bytes, never the
-    * table's.
-    *
-    * Returns (partitionDirName -> (filesBefore, targetFileCount)) for
-    * the partitions it rewrote. */
-  private[graft] def compactPartitions(s: SparkSession, root: String,
-      partCol: String, targetFileBytes: Long,
-      salt: org.apache.spark.sql.Column): Map[String, (Int, Int)] = {
-    // sizing via the Hadoop FS API (graft.Fs): scheme-agnostic —
-    // identical on file:/, hdfs:/ and s3a:/ table roots (r17 #1)
-    val plan = graft.Fs.partDirs(s, root, partCol).flatMap { dn =>
-      val files = graft.Fs.dataFiles(s, s"$root/$dn")
-      val bytes = files.map(_._2).sum
-      val target = math.max(1L,
-        (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      if (files.length > target)
-        Some(dn -> (files.length, target)) else None
-    }.toMap
-    if (plan.nonEmpty) {
-      // per-partition target file count as an expression, so ONE
-      // shuffle sizes every rewritten partition independently
-      // dir names carry Hive-style path escaping (`a:b` → `a%3Ab`) and
-      // the null partition is the DEFAULT_PARTITION sentinel dir; the
-      // COLUMN holds the unescaped value (or null), so compare against
-      // the decoded form / isNull or those partitions would fall back
-      // to a 1-file target regardless of size
-      val nExpr = plan.foldLeft(lit(1)) { case (acc, (dirName, (_, target))) =>
-        val raw = dirName.stripPrefix(s"$partCol=")
-        val pred =
-          if (raw == org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-            col(partCol).isNull
-          else col(partCol).cast(StringType) ===
-            lit(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .unescapePathName(raw))
-        when(pred, lit(target)).otherwise(acc)
-      }
-      val totalFiles = plan.values.map(_._2).sum
-      // read ONLY the fragmented partition dirs (file-listing-level
-      // pruning via basePath — keeps the partition column): a filter
-      // on the partition column would be string-vs-int coerced here
-      // (the dir names are strings) and could silently defeat pruning,
-      // making the rewrite job list every partition's files at 100 TB
-      val rows = s.read.option("basePath", root)
-        .parquet(plan.keys.map(d => s"$root/$d").toSeq: _*)
-        .localCheckpoint() // materialize BEFORE overwriting the source files
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try rows.repartition(totalFiles, col(partCol), pmod(hash(salt), nExpr))
-        .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(root)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    }
-    plan
-  }
-
-  /** Hive 3 ACID `UPDATE` / `DELETE` compiled to the partition-scoped
-    * copy-on-write they execute as on a non-transactional path table
-    * — the statement siblings of `sink_merge_upsert`'s MERGE,
-    * completing the ACID DML family [Hive:
-    * `ql.parse.UpdateDeleteSemanticAnalyzer`, which rewrites both
-    * statements into an INSERT over the affected rows exactly as
-    * here; the delta-file ACID variant is a transactional-format
-    * concern, declared out of scope with MERGE's].
-    *
-    * Dataflow (shared by both statements):
-    *   1. discover the partitions holding matched rows — ONE
-    *      predicate-pushed pass over the table projecting only the
-    *      partition column (O(#partitions) driver rows; when the
-    *      predicate constrains the partition column, partition
-    *      pruning keeps even the listing narrow);
-    *   2. read ONLY those partition dirs (file-listing-level pruning
-    *      via basePath, the compactor's discipline — a partition-
-    *      column filter could be string-coerced and silently defeat
-    *      pruning), localCheckpoint-materialize (read-then-overwrite
-    *      safety on a path table), apply the row transform;
-    *   3. rewrite just those partitions under dynamic overwrite.
-    * Every partition without a matched row is NOT TOUCHED — ScanSpec
-    * asserts its files survive byte-identical. At 100 TB the rewrite
-    * volume is the affected partitions' bytes, never the table's.
-    *
-    * NULL semantics are Hive/SQL's: a row matches only when the
-    * predicate is TRUE — `UPDATE ... WHERE p` leaves FALSE and NULL
-    * rows untouched, `DELETE ... WHERE p` keeps them.
-    *
-    * The resurrection trap (spec-asserted): a partition whose every
-    * row is deleted emits nothing, so dynamic overwrite never touches
-    * its dir and the "deleted" rows would silently RESURFACE on the
-    * next read. [[acidRewrite]] removes emptied partition dirs
-    * explicitly after the overwrite.
-    *
-    * Returns the affected partition dir names (empty → no row
-    * matched, nothing was rewritten). */
-  private[graft] def acidRewrite(s: SparkSession, root: String,
-      partCol: String, pred: org.apache.spark.sql.Column)(
-      apply: DataFrame => DataFrame): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val hit = coalesce(pred, lit(false))
-    def dirName(v: Option[String]): String = v match {
-      case Some(x) => s"$partCol=${ExternalCatalogUtils.escapePathName(x)}"
-      case None => s"$partCol=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-    }
-    val affected = s.read.parquet(root).filter(hit)
-      .select(col(partCol).cast(StringType)).distinct()
-      .collect().map(r => Option(r.getString(0))).toSeq
-    if (affected.isEmpty) return Nil
-    val dirs = affected.map(dirName)
-    val rows = s.read.option("basePath", root)
-      .parquet(dirs.map(dn => s"$root/$dn"): _*)
-      .localCheckpoint() // materialize BEFORE overwriting the source files
-    // NOT checkpointed: `rows` is already pinned, so re-evaluating
-    // `out` for the survivors pass below re-runs only the cheap row
-    // transform over the materialized pre-image — never the
-    // overwritten source files — where a second localCheckpoint paid a
-    // full extra materialization of the affected partitions (r21 opt)
-    val out = apply(rows)
-    val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(root)
-    finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    val survivors = out.select(col(partCol).cast(StringType)).distinct()
-      .collect().map(r => Option(r.getString(0))).toSet
-    affected.filterNot(survivors).foreach { v =>
-      graft.Fs.deleteDir(s, s"$root/${dirName(v)}")
-    }
-    dirs
-  }
-
-  /** `UPDATE t SET c1 = e1, ... WHERE pred` over a partitioned path
-    * table — see [[acidRewrite]] for the dataflow and contract.
-    * Each SET expression is coerced to its column's DECLARED type
-    * (SQL UPDATE semantics) — without the cast, an arithmetic SET
-    * (decimal(18,2) * 2 → decimal(29,2)) would silently widen the
-    * column in the rewritten partitions only, and the next
-    * whole-table read dies on the cross-partition footer mismatch. */
-  private[graft] def acidUpdate(s: SparkSession, root: String,
-      partCol: String, pred: org.apache.spark.sql.Column,
-      sets: Seq[(String, org.apache.spark.sql.Column)]): Seq[String] =
-    acidRewrite(s, root, partCol, pred) { df =>
-      val hit = coalesce(pred, lit(false))
-      sets.foldLeft(df) { case (acc, (c, e)) =>
-        acc.withColumn(c,
-          when(hit, e.cast(acc.schema(c).dataType)).otherwise(col(c)))
-      }
-    }
-
-  /** `DELETE FROM t WHERE pred` over a partitioned path table — see
-    * [[acidRewrite]] for the dataflow and contract. */
-  private[graft] def acidDelete(s: SparkSession, root: String,
-      partCol: String, pred: org.apache.spark.sql.Column): Seq[String] =
-    acidRewrite(s, root, partCol, pred)(_.filter(!coalesce(pred, lit(false))))
-
-  /** Hive's `ALTER TABLE ... DROP PARTITION (spec)` — the partition
-    * lifecycle / retention operation every long-lived partitioned
-    * dataset runs ("drop everything older than N") [Hive:
-    * `ql.ddl.table.partition.drop.AlterTableDropPartitionDesc`;
-    * comparators in the spec, e.g. `PARTITION (year < 1995)`, are
-    * supported exactly as here].
-    *
-    * METADATA-ONLY, like Hive's: the predicate is evaluated against
-    * the PARTITION VALUES (one local row per partition dir — dir
-    * names unescaped, the null-partition sentinel decoded to NULL),
-    * never against the data, and matching dirs are dropped whole. At
-    * 100 TB a retention sweep is O(#partitions) driver work with
-    * ZERO data I/O — routing it through [[acidDelete]] instead would
-    * rewrite-scan every expiring partition for nothing. TRUE-only
-    * match semantics: a NULL predicate (e.g. the null partition
-    * under a `< 1995` comparator) keeps the partition.
-    *
-    * Returns the dropped partition dir names. */
-  private[graft] def dropPartitions(s: SparkSession, root: String,
-      partCol: String, pred: org.apache.spark.sql.Column): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val dirs = graft.Fs.partDirs(s, root, partCol)
-    if (dirs.isEmpty) return Nil
-    val values = dirs.map { dn =>
-      val raw = dn.stripPrefix(s"$partCol=")
-      if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-      else ExternalCatalogUtils.unescapePathName(raw)
-    }
-    import scala.jdk.CollectionConverters._
-    val matched = s.createDataFrame(
-        values.map(v => org.apache.spark.sql.Row(v)).asJava,
-        StructType(Seq(StructField(partCol, StringType))))
-      .filter(coalesce(pred, lit(false)))
-      .collect().map(r => Option(r.getString(0))).toSet
-    val dropped = dirs.zip(values).collect {
-      case (dn, v) if matched(Option(v)) => dn
-    }
-    dropped.foreach(dn => graft.Fs.deleteDir(s, s"$root/$dn"))
-    dropped
-  }
-
   /** The RegexSerDe demo's declared table shape + line pattern,
     * shared by the DSv2 read (`scan_text_serde`) and the expression
     * cross-check. */
@@ -596,25 +381,27 @@ object Scans {
       hi.unionByName(lo).orderBy(col("sink"), col("pri"), col("k"))
     },
 
-    // Hive 3 ACID `MERGE INTO` expressed as the dataflow it compiles
-    // to on an engine without a transactional table format (the
-    // classic pre-Delta upsert): target FULL OUTER JOIN source on the
-    // merge key, WHEN MATCHED → take the source row (update), WHEN
-    // NOT MATCHED → insert it, unmatched target rows pass through;
-    // the merged state is rewritten and read back, and the oracle
-    // restates the final state row-for-row (updates doubled in
-    // DECIMAL so both engines stay exact, inserts key-shifted past
-    // the target's range). At 100 TB the rewrite narrows to the
-    // TOUCHED partitions via `sink_partition_overwrite`'s dynamic
-    // mode instead of a full-table rewrite.
+    // Hive 3 ACID `MERGE INTO` (WHEN MATCHED take the source row,
+    // WHEN NOT MATCHED insert it, unmatched target rows pass through)
+    // on the snapshot layer's keyed upsert, Snapshots.mergeTransform
+    // — Hive runs MERGE only on transactional tables. Seed a
+    // year-partitioned snapshot, merge the %10==3 updates and the
+    // key-shifted inserts in one OCC commit, read the latest state
+    // back. Source rows carry their order's o_year (a key never moves
+    // partitions) and the output drops it again. The doubled price is
+    // cast back to the column's DECIMAL(18,2) so every entry keeps one
+    // schema; it stays exact in both engines. The oracle restates the
+    // final state row-for-row.
     "sink_merge_upsert" -> { (s, d) =>
-      val out = ioDir("sink_merge_upsert", d)
-      Tables.t(s, d, "orders")
-        .select(col("o_orderkey"), lit("SEED").as("status"),
-          dec(col("o_totalprice")).as("price"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$out/target")
-      val target = s.read.parquet(s"$out/target")
+      import graft.sources.Snapshots
+      val root = s"${ioDir("sink_merge_upsert", d)}/tbl"
+      graft.Fs.deleteDir(s, root)
       val o = Tables.t(s, d, "orders")
+        .withColumn("o_year", year(col("o_orderdate")))
+      Snapshots.commitPartitioned(s, root,
+        o.select(col("o_orderkey"), lit("SEED").as("status"),
+          dec(col("o_totalprice")).as("price"), col("o_year")),
+        "o_year", expectedParent = 0L)
       // insert keys shift past the DATA's actual max (one bounded
       // 1-value collect), never a hardcoded constant — a constant
       // collides with real keys at a large enough scale factor and
@@ -624,69 +411,78 @@ object Scans {
       val maxKey = o.agg(max(col("o_orderkey"))).head.getLong(0) + 1
       val source = o.filter(col("o_orderkey") % 10 === 3)
         .select(col("o_orderkey"), lit("UPD").as("status"),
-          (dec(col("o_totalprice")) * 2).as("price"))
+          (dec(col("o_totalprice")) * 2).cast(DecimalType(18, 2)).as("price"),
+          col("o_year"))
         .unionByName(o.filter(col("o_orderkey") % 100 === 0)
           .select((col("o_orderkey") + lit(maxKey)).as("o_orderkey"),
-            lit("INS").as("status"), dec(col("o_totalprice")).as("price")))
-      val merged = target.as("t")
-        .join(source.as("s"), Seq("o_orderkey"), "full_outer")
-        .select(col("o_orderkey"),
-          coalesce(col("s.status"), col("t.status")).as("status"),
-          coalesce(col("s.price"), col("t.price")).as("price"))
-      merged.write.mode(SaveMode.Overwrite).parquet(s"$out/merged")
-      s.read.parquet(s"$out/merged")
+            lit("INS").as("status"), dec(col("o_totalprice")).as("price"),
+            col("o_year")))
+      Snapshots.mergeTransform(s, root, "o_year", source, Seq("o_orderkey")): Unit
+      Snapshots.read(s, root)
         .select(col("o_orderkey"), col("status"), money(col("price")).as("price"))
         .orderBy(col("o_orderkey"))
     },
 
-    // Hive 3 ACID `UPDATE` + `DELETE` as one keyed scenario (the
-    // MERGE siblings — see [[acidUpdate]]/[[acidDelete]]): seed a
-    // year-partitioned target, UPDATE the %10==3 rows of 1997+ (only
-    // those partitions rewrite), DELETE the %7==2 rows of ≤1996
-    // (only those partitions rewrite), read the final state back.
-    // The oracle restates it row-for-row against the base table
-    // (CASE for the update, NOT(...) for the delete; the doubled
-    // price stays in DECIMAL so both engines are exact). Partition
-    // selectivity, byte-identical untouched partitions, NULL-predicate
-    // semantics, and the emptied-partition resurrection trap are
-    // ScanSpec asserts.
+    // Hive 3 ACID `UPDATE` + `DELETE` as one keyed scenario (the MERGE
+    // siblings) on the snapshot copy-on-write verbs: seed a
+    // year-partitioned snapshot, UPDATE the %10==3 rows of 1997+
+    // (replaceTransform restages only the 1997+ partitions), DELETE
+    // the %7==2 rows of ≤1996 (Snapshots.deleteWhere restages only
+    // the partitions holding a matched row), read the final state
+    // back. The oracle restates it row-for-row against the base table
+    // (CASE for the update, NOT(...) for the delete; the doubled price
+    // stays in DECIMAL so both engines are exact). Partition scoping,
+    // NULL-predicate semantics and emptied partitions are SnapshotSpec
+    // asserts.
     "sink_acid_update_delete" -> { (s, d) =>
-      val out = ioDir("sink_acid_update_delete", d)
-      Tables.t(s, d, "orders")
-        .withColumn("o_year", year(col("o_orderdate")))
-        .select(col("o_orderkey"), lit("SEED").as("status"),
-          dec(col("o_totalprice")).as("price"), col("o_year"))
-        .repartition(col("o_year"))
-        .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
-      acidUpdate(s, out, "o_year",
-        col("o_orderkey") % 10 === 3 && col("o_year") >= 1997,
-        Seq("status" -> lit("UPD"), "price" -> (col("price") * 2)))
-      acidDelete(s, out, "o_year",
-        col("o_orderkey") % 7 === 2 && col("o_year") <= 1996)
-      s.read.parquet(out)
+      import graft.sources.Snapshots
+      val root = s"${ioDir("sink_acid_update_delete", d)}/tbl"
+      graft.Fs.deleteDir(s, root)
+      Snapshots.commitPartitioned(s, root,
+        Tables.t(s, d, "orders")
+          .withColumn("o_year", year(col("o_orderdate")))
+          .select(col("o_orderkey"), lit("SEED").as("status"),
+            dec(col("o_totalprice")).as("price"), col("o_year")),
+        "o_year", expectedParent = 0L)
+      // UPDATE SET status = 'UPD', price = price * 2. Each SET value
+      // is cast to its column's DECLARED type (SQL UPDATE semantics):
+      // uncast, price * 2 is a wider decimal, so the restaged entries
+      // would carry a wider column than the inherited ones and the
+      // UPDATE would change the table's schema.
+      val upd = col("o_orderkey") % 10 === 3
+      Snapshots.replaceTransform(s, root, "o_year") { cur =>
+        cur.filter(col("o_year") >= 1997)
+          .withColumn("status", when(upd, lit("UPD")).otherwise(col("status")))
+          .withColumn("price", when(upd, (col("price") * 2).cast(DecimalType(18, 2)))
+            .otherwise(col("price")))
+      }: Unit
+      Snapshots.deleteWhere(s, root, "o_year",
+        col("o_orderkey") % 7 === 2 && col("o_year") <= 1996): Unit
+      Snapshots.read(s, root)
         .select(col("o_orderkey"), col("status"), money(col("price")).as("price"),
           col("o_year").cast(IntegerType))
         .orderBy(col("o_orderkey"))
     },
 
     // Hive `ALTER TABLE ... DROP PARTITION (o_year < 1997)` — the
-    // retention sweep (see [[dropPartitions]]): seed a
-    // year-partitioned table, drop every pre-1997 partition by
-    // PARTITION VALUE (metadata-only, zero data I/O), read back.
+    // retention sweep, as Snapshots.commitDropPartitions: seed a
+    // year-partitioned snapshot, then commit a manifest without the
+    // pre-1997 years. The drop itself is metadata-only: one marker,
+    // zero data I/O, and readers of the seed version keep its files.
     // Oracle: the base table filtered to the surviving years.
-    // ScanSpec asserts the dropped-dir list, byte-identical survivors,
-    // idempotence, and the TRUE-only null-partition semantics.
     "sink_drop_partition" -> { (s, d) =>
-      val out = ioDir("sink_drop_partition", d)
-      Tables.t(s, d, "orders")
+      import graft.sources.Snapshots
+      val root = s"${ioDir("sink_drop_partition", d)}/tbl"
+      graft.Fs.deleteDir(s, root)
+      val base = Tables.t(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .select(col("o_orderkey"), col("o_orderstatus"),
           dec(col("o_totalprice")).as("o_price"), col("o_year"))
-        .repartition(col("o_year"))
-        .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
-      dropPartitions(s, out, "o_year",
-        col("o_year").cast(IntegerType) < 1997)
-      s.read.parquet(out)
+      Snapshots.commitPartitioned(s, root, base, "o_year", expectedParent = 0L)
+      val expiring = base.filter(col("o_year") < 1997).select(col("o_year"))
+        .distinct().collect().map(_.getInt(0).toString).toSeq
+      Snapshots.commitDropPartitions(s, root, expiring, expectedParent = 1L): Unit
+      Snapshots.read(s, root)
         .select(col("o_orderkey"), col("o_orderstatus"),
           money(col("o_price")).as("o_price"),
           col("o_year").cast(IntegerType))
@@ -1039,30 +835,32 @@ object Scans {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))),
 
-    // Small-file compaction as a keyed query (VERDICT r16 #1): seed a
-    // healthy one-file-per-year layout, fragment 1997 into 12 small
-    // files the way many incremental writes would, compact — only
-    // 1997 qualifies as fragmented, so only it is rewritten — and
-    // read the whole dataset back. The oracle restates the content
-    // against the base table (compaction is physical layout, not
-    // semantics: row loss OR duplication under the rewrite would
-    // hash-mismatch); the file-count drop and the untouched-partition
-    // byte-identity are ScanSpec plan/filesystem asserts.
+    // Small-file compaction as a keyed query (VERDICT r16 #1), on
+    // Snapshots.compactPartitioned: seed a year-partitioned snapshot
+    // holding one third of 1997, append the other two thirds the way
+    // incremental writes would (1997 now spans three entries),
+    // compact — every partition restages into one fresh entry, in one
+    // OCC commit — and read the whole table back. The oracle restates
+    // the content against the base table (compaction is physical
+    // layout, not semantics: row loss OR duplication under the
+    // rewrite would hash-mismatch); the collapse to one entry per
+    // partition is a SnapshotSpec assert.
     "sink_compact" -> { (s, d) =>
-      val out = ioDir("sink_compact", d)
+      import graft.sources.Snapshots
+      val root = s"${ioDir("sink_compact", d)}/tbl"
+      graft.Fs.deleteDir(s, root)
       val o = Tables.t(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .select(col("o_orderkey"), col("o_custkey"),
           dec(col("o_totalprice")).as("o_price"), col("o_year"))
-      o.repartition(col("o_year"))
-        .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try o.filter(col("o_year") === 1997).repartition(12)
-        .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-      compactPartitions(s, out, "o_year", 128L << 20, col("o_orderkey"))
-      s.read.parquet(out)
+      val slice1997 = (i: Int) => col("o_year") === 1997 && col("o_orderkey") % 3 === i
+      Snapshots.commitPartitioned(s, root,
+        o.filter(col("o_year") =!= 1997 || slice1997(0)), "o_year", expectedParent = 0L)
+      for (i <- 1 to 2)
+        Snapshots.appendPartitioned(s, root, o.filter(slice1997(i)), "o_year",
+          expectedParent = i.toLong)
+      Snapshots.compactPartitioned(s, root, "o_year"): Unit
+      Snapshots.read(s, root)
         .select(col("o_orderkey"), col("o_custkey"),
           money(col("o_price")).as("o_price"),
           col("o_year").cast(IntegerType))

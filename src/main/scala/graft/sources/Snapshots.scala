@@ -2,18 +2,23 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types.StringType
 
 import graft.Fs
 
-/** Snapshot-isolated versioned tables — the transactional seat the
-  * ACID dataflow family (`sink_merge_upsert`, `sink_acid_update_delete`,
-  * `sink_drop_partition`) deliberately left open: those rewrite
-  * partitions in place, correct for a single writer but giving a
-  * concurrent reader a torn view mid-rewrite. This object supplies
-  * the missing isolation with the commit-log protocol every public
-  * object-store table format converges on (Delta's `_delta_log`,
-  * Iceberg's metadata pointer, Hive ACID's base/delta + ValidTxnList):
+/** Snapshot-isolated versioned tables — the one ACID implementation.
+  * Hive runs UPDATE, DELETE and MERGE only on transactional tables;
+  * this object is that table, and every ACID key runs on its verbs:
+  * UPDATE/DELETE (`sink_acid_update_delete`), MERGE
+  * (`sink_merge_upsert`, `sink_snapshot_merge`), DROP PARTITION
+  * (`sink_drop_partition`), compaction (`sink_compact`) and the rest
+  * of the `sink_snapshot_*` family. No verb overwrites the files it
+  * read, so a lost executor or a concurrent reader never sees a torn
+  * table. The protocol is the commit log every public object-store
+  * table format converges on (Delta's `_delta_log`, Iceberg's metadata
+  * pointer, Hive ACID's base/delta + ValidTxnList):
   *
   *   - **Data is immutable.** Every commit stages its data under a
   *     fresh `data/<uuid>/` directory; nothing ever rewrites a
@@ -62,7 +67,7 @@ import graft.Fs
   *     checkpoint state for the same reason).
   *   - **The ACID verbs are all first-class** (r19 verdict): full
   *     rewrite ([[commitTransform]]), partition-scoped UPDATE/DELETE
-  *     ([[replaceTransform]]/[[commitReplace]]), DROP PARTITION
+  *     ([[replaceTransform]]/[[deleteWhere]]/[[commitReplace]]), DROP PARTITION
   *     ([[commitDropPartitions]]), APPEND ([[appendCommit]] /
   *     [[appendPartitioned]] / [[txnAppend]]), MERGE
   *     ([[mergeTransform]] — keyed upsert staging only the touched
@@ -363,7 +368,8 @@ object Snapshots {
     * (an empty partition stages no dir, so it would silently inherit
     * — review finding): name such partitions in `alsoDrop` (raw
     * partition values) and their entries are removed from the
-    * manifest in the same atomic commit. An empty `df` with no
+    * manifest in the same atomic commit ([[deleteWhere]] does this
+    * for a row predicate). An empty `df` with no
     * `alsoDrop` is rejected — "replace nothing" is ambiguous. */
   def commitReplace(s: SparkSession, root: String, df: DataFrame,
                     partCol: String, expectedParent: Long,
@@ -427,8 +433,8 @@ object Snapshots {
     * references them. `values` are the partition VALUES as staged
     * (their string form). Requires a partition-granular manifest and
     * at least one matching entry (a no-match drop is a typo, not a
-    * no-op). At 100 TB this is one marker write — the snapshot-table
-    * form of `sink_drop_partition`'s zero-data-I/O contract. */
+    * no-op). At 100 TB this is one marker write and zero data I/O —
+    * `sink_drop_partition`'s retention sweep. */
   def commitDropPartitions(s: SparkSession, root: String,
       values: Seq[String], expectedParent: Long): Long = {
     validateCommit(s, root, expectedParent)
@@ -1033,33 +1039,97 @@ object Snapshots {
     * it wants rewritten (and only those); everything else is
     * inherited by manifest reference. The transactional
     * UPDATE/DELETE-in-partition seat at scale — write volume is
-    * O(affected partitions), commit is one marker. */
+    * O(affected partitions), commit is one marker. A partition is
+    * replaced only if `f` returns at least one of its rows: a
+    * partition `f` filters down to nothing is INHERITED unchanged,
+    * not dropped. A delete that may empty a partition goes through
+    * [[deleteWhere]] (or [[commitReplace]]'s `alsoDrop`). */
   def replaceTransform(s: SparkSession, root: String, partCol: String,
                        maxAttempts: Int = 10)
-                      (f: DataFrame => DataFrame): Long = {
+                      (f: DataFrame => DataFrame): Long =
+    replaceLoop(s, root, partCol, maxAttempts)(cur => Some((f(cur), Nil)))
+
+  /** `DELETE FROM t WHERE pred` on a partition-granular table, in one
+    * OCC copy-on-write commit. One aggregate over `partCol` finds the
+    * partitions holding a matched row and, of those, the ones whose
+    * every row matches (max and min of the match flag). The partly
+    * matched partitions restage without their matched rows; the fully
+    * matched ones leave the manifest through `alsoDrop`, because an
+    * emptied partition stages no dir and [[replaceTransform]] would
+    * inherit its rows again. NULL semantics are SQL's: a row is
+    * deleted only where `pred` is TRUE, so NULL rows stay. A predicate
+    * that matches nothing commits nothing and returns the current
+    * version. Deleting every row of the table is refused, as in
+    * [[commitReplace]]. Returns the committed (or current) version. */
+  def deleteWhere(s: SparkSession, root: String, partCol: String,
+                  pred: Column): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit, max, min}
+    val hit = coalesce(pred, lit(false))
+    replaceLoop(s, root, partCol, maxAttempts = 10) { cur =>
+      val parts = cur.groupBy(col(partCol))
+        .agg(max(hit).as("__dw_any"), min(hit).as("__dw_all"))
+        .filter(col("__dw_any"))
+        .select(col(partCol), col(partCol).cast(StringType), col("__dw_all"))
+        .collect()
+      if (parts.isEmpty) None
+      else {
+        val (emptied, partial) = parts.partition(_.getBoolean(2))
+        // the stager keys a partition by its value cast to string, and
+        // the null partition by Hive's default-partition dir name
+        val dropped = emptied.map(r => Option(r.getString(1)).getOrElse(
+          ExternalCatalogUtils.DEFAULT_PARTITION_NAME)).toSeq
+        Some((cur.filter(partIn(partCol, partial.map(_.get(0)).toSeq) && !hit),
+          dropped))
+      }
+    }
+  }
+
+  /** The OCC loop behind [[replaceTransform]] and [[deleteWhere]]: `f`
+    * derives the restaged partitions and the partition values to drop
+    * from the current snapshot, or None to leave the table as it is
+    * (the current version is returned). On conflict it re-derives from
+    * the NEW latest — never blind-retries the stale result. */
+  private def replaceLoop(s: SparkSession, root: String, partCol: String,
+      maxAttempts: Int)(f: DataFrame => Option[(DataFrame, Seq[String])]): Long = {
     var attempt = 0
     while (true) {
       attempt += 1
       val parent = latest(s, root).getOrElse(
         throw new NoSuchElementException(s"no committed snapshot under $root"))
       val pm = markerOf(s, root, parent)
-      val next = f(readEntries(s, root, pm.names))
-      try {
-        validateCommit(s, root, parent)
-        return replaceWith(s, root, next, partCol, parent, pm, alsoDrop = Nil)
-      } catch {
-        case e: SnapshotConflictException =>
-          if (attempt >= maxAttempts) throw e
+      f(readEntries(s, root, pm.names)) match {
+        case None => return parent
+        case Some((next, alsoDrop)) =>
+          try {
+            validateCommit(s, root, parent)
+            return replaceWith(s, root, next, partCol, parent, pm, alsoDrop)
+          } catch {
+            case e: SnapshotConflictException =>
+              if (attempt >= maxAttempts) throw e
+          }
       }
     }
     -1L // unreachable
+  }
+
+  /** NULL-SAFE membership of `partCol` in `values`: an IN-list on the
+    * non-null values (it reaches the parquet row-group stats of the
+    * snapshot scan), OR'ed with `isNull` when a null value is present
+    * — the stager seats null values under the default-partition dir,
+    * so null is a partition like any other. */
+  private def partIn(partCol: String, values: Seq[Any]): Column = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val nonNull = values.filter(_ != null)
+    val inList =
+      if (nonNull.nonEmpty) col(partCol).isInCollection(nonNull) else lit(false)
+    if (values.contains(null)) inList || col(partCol).isNull else inList
   }
 
   /** MERGE (keyed upsert) into a partition-granular snapshot table —
     * the last ACID verb made first-class on the snapshot layer
     * (VERDICT r19 #5): WHEN MATCHED on `keys` take the source row,
     * WHEN NOT MATCHED insert it, standing rows pass through — the
-    * `sink_merge_upsert` dataflow composed with [[replaceTransform]],
+    * `sink_merge_upsert` statement composed with [[replaceTransform]],
     * so the commit STAGES ONLY THE PARTITIONS `source` TOUCHES and
     * inherits every other entry by manifest reference. At 100 TB a
     * micro-batch upsert into a date-partitioned table rewrites the
@@ -1101,17 +1171,8 @@ object Snapshots {
       // name — so a null-partition source row must pull the standing
       // null-partition rows into `affected`, or they are silently lost
       val affected =
-        if (touched.length <= partGate) {
-          // IN-list on the partition column: reaches the parquet
-          // row-group stats of the snapshot scan
-          val nonNull = touched.filter(_ != null).toSeq
-          val inList =
-            if (nonNull.nonEmpty) col(partCol).isInCollection(nonNull)
-            else org.apache.spark.sql.functions.lit(false)
-          cur.filter(
-            if (touched.contains(null)) inList || col(partCol).isNull
-            else inList)
-        } else // beyond the gate: distributed membership, no driver
+        if (touched.length <= partGate) cur.filter(partIn(partCol, touched.toSeq))
+        else // beyond the gate: distributed membership, no driver
           // list, and NO broadcast hint (ADVICE r20 #2): the gate
           // exists precisely because the touched set is large, so a
           // forced broadcast of an unbounded distinct set could OOM

@@ -59,12 +59,15 @@ class MarkerReadSpec extends SparkSpec {
             Seq((5L, 3, "e")).toDF("k", "p", "v"), 7L, partCol = Some("p"))
         },
         // restoring the latest version: the restored marker IS the parent
-        "restore" -> parentReads(7L) { Snapshots.restore(spark, root, 7L) })
+        "restore" -> parentReads(7L) { Snapshots.restore(spark, root, 7L) },
+        "deleteWhere" -> parentReads(8L) {
+          Snapshots.deleteWhere(spark, root, "p", col("k") === 5L)
+        })
       assert(reads.filter(_._2 != 1) === Nil,
         "each verb must read its parent marker once")
       // restoring an older version reads that version's marker and the
       // parent's, each once
-      assert(parentReads(8L) { Snapshots.restore(spark, root, 2L) } === 1 &&
+      assert(parentReads(9L) { Snapshots.restore(spark, root, 2L) } === 1 &&
         opens(2L) === 1)
       assert(Snapshots.read(spark, root).orderBy("k")
         .as[(Long, Int, String)].collect().toSeq ===

@@ -541,207 +541,6 @@ class ScanSpec extends SparkSpec {
     }
   }
 
-  test("sink_compact: only the fragmented partition is rewritten, to its target file count") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scanspec/compact"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val o = Tables.t(spark, sf, "orders")
-      .withColumn("o_year", year(col("o_orderdate")))
-      .select(col("o_orderkey"), col("o_year"))
-    o.repartition(col("o_year"))
-      .write.mode("overwrite").partitionBy("o_year").parquet(root)
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try o.filter(col("o_year") === 1997).repartition(12)
-      .write.mode("overwrite").partitionBy("o_year").parquet(root)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-    def sha(f: java.io.File): String = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      md.digest(java.nio.file.Files.readAllBytes(f.toPath))
-        .map("%02x".format(_)).mkString
-    }
-    def snapshot(): Map[String, Set[(String, Long, String)]] =
-      new java.io.File(root).listFiles()
-        .filter(d => d.isDirectory && d.getName.startsWith("o_year="))
-        .map(d => d.getName -> d.listFiles()
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.length, sha(f))).toSet).toMap
-
-    val before = snapshot()
-    val fragBefore = before("o_year=1997").size
-    assert(fragBefore > 1, s"seed must fragment 1997 (got $fragBefore files)")
-    val contentBefore = spark.read.parquet(root)
-      .groupBy().agg(count(lit(1)), sum(col("o_orderkey"))).collect().toSeq
-
-    val plan = operators.Scans.compactPartitions(
-      spark, root, "o_year", 128L << 20, col("o_orderkey"))
-
-    // selectivity: exactly the fragmented partition was rewritten
-    assert(plan.keySet === Set("o_year=1997"), plan.toString)
-    assert(plan("o_year=1997")._1 === fragBefore)
-    val after = snapshot()
-    // file count dropped to the target (1 at this data size)
-    assert(after("o_year=1997").size === plan("o_year=1997")._2)
-    assert(after("o_year=1997").size < fragBefore)
-    // every partition the compactor did not touch survives byte-identical
-    (before.keySet - "o_year=1997").foreach { dir =>
-      assert(after(dir) === before(dir), s"$dir was touched by the compactor")
-    }
-    // layout-only rewrite: content identical before/after
-    val contentAfter = spark.read.parquet(root)
-      .groupBy().agg(count(lit(1)), sum(col("o_orderkey"))).collect().toSeq
-    assert(contentAfter === contentBefore)
-    // re-running on a healthy layout is a no-op
-    assert(operators.Scans.compactPartitions(
-      spark, root, "o_year", 128L << 20, col("o_orderkey")).isEmpty)
-  }
-
-  test("sink_compact handles Hive-escaped partition values (colon in dir name)") {
-    val s = spark
-    import s.implicits._
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scanspec/compact_esc"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val df = (1 to 40).map(i => (i.toLong, if (i % 2 == 0) "a:b" else "plain"))
-      .toDF("id", "tag")
-    df.repartition(col("tag"))
-      .write.mode("overwrite").partitionBy("tag").parquet(root)
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.filter(col("tag") === "a:b").repartition(8)
-      .write.mode("overwrite").partitionBy("tag").parquet(root)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    val plan = operators.Scans.compactPartitions(
-      spark, root, "tag", 128L << 20, col("id"))
-    // the escaped dir (tag=a%3Ab) is detected AND its rows survive the
-    // rewrite — an unescaped compare would rewrite them to zero rows
-    assert(plan.keySet === Set("tag=a%3Ab"), plan.toString)
-    val back = spark.read.parquet(root)
-    assert(back.filter(col("tag") === "a:b").count() === 20)
-    assert(back.count() === 40)
-  }
-
-  private def partSnapshot(root: String, partCol: String)
-      : Map[String, Set[(String, Long, String)]] = {
-    def sha(f: java.io.File): String = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      md.digest(java.nio.file.Files.readAllBytes(f.toPath))
-        .map("%02x".format(_)).mkString
-    }
-    new java.io.File(root).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith(s"$partCol="))
-      .map(d => d.getName -> d.listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.length, sha(f))).toSet).toMap
-  }
-
-  test("acid update/delete rewrite only the partitions holding matched rows") {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scanspec/acid"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val o = Tables.t(spark, sf, "orders")
-      .withColumn("o_year", year(col("o_orderdate")))
-      .select(col("o_orderkey"), lit("SEED").as("status"), col("o_year"))
-    o.repartition(col("o_year"))
-      .write.mode("overwrite").partitionBy("o_year").parquet(root)
-
-    val updPred = col("o_orderkey") % 10 === 3 && col("o_year") >= 1997
-    val expectedUpdDirs = o.filter(updPred).select(col("o_year")).distinct()
-      .collect().map(r => s"o_year=${r.getInt(0)}").toSet
-    assert(expectedUpdDirs.nonEmpty && expectedUpdDirs.size < partSnapshot(root, "o_year").size,
-      "fixture must make the update partition-selective")
-
-    val before = partSnapshot(root, "o_year")
-    val updDirs = operators.Scans.acidUpdate(spark, root, "o_year", updPred,
-      Seq("status" -> lit("UPD")))
-    // selectivity: exactly the matched-row partitions were rewritten
-    assert(updDirs.toSet === expectedUpdDirs, updDirs.toString)
-    val afterUpd = partSnapshot(root, "o_year")
-    (before.keySet -- expectedUpdDirs).foreach { dir =>
-      assert(afterUpd(dir) === before(dir), s"$dir was touched by the update")
-    }
-    // row semantics: matched rows updated, everything else SEED
-    val back = spark.read.parquet(root)
-    assert(back.filter(col("status") === "UPD").count() ===
-      o.filter(updPred).count())
-    assert(back.count() === o.count())
-
-    val delPred = col("o_orderkey") % 7 === 2 && col("o_year") <= 1996
-    val delDirs = operators.Scans.acidDelete(spark, root, "o_year", delPred)
-    val expectedDelDirs = o.filter(delPred).select(col("o_year")).distinct()
-      .collect().map(r => s"o_year=${r.getInt(0)}").toSet
-    assert(delDirs.toSet === expectedDelDirs, delDirs.toString)
-    val afterDel = partSnapshot(root, "o_year")
-    (afterUpd.keySet -- expectedDelDirs).foreach { dir =>
-      assert(afterDel(dir) === afterUpd(dir), s"$dir was touched by the delete")
-    }
-    val finalDf = spark.read.parquet(root)
-    assert(finalDf.filter(delPred).count() === 0)
-    assert(finalDf.count() === o.count() - o.filter(delPred).count())
-
-    // a predicate matching nothing is a complete no-op
-    assert(operators.Scans.acidUpdate(spark, root, "o_year",
-      col("o_orderkey") < 0, Seq("status" -> lit("NOPE"))).isEmpty)
-    assert(partSnapshot(root, "o_year") === afterDel)
-  }
-
-  test("drop partition: metadata-only retention by partition value, null partition kept") {
-    val s = spark
-    import s.implicits._
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scanspec/droppart"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val df = Seq[(Long, java.lang.Integer)](
-      (1L, 1992), (2L, 1993), (3L, 1995), (4L, null), (5L, 1996))
-      .toDF("id", "yr")
-    df.repartition(col("yr")).write.mode("overwrite")
-      .partitionBy("yr").parquet(root)
-    val before = partSnapshot(root, "yr")
-    assert(before.keySet.contains("yr=__HIVE_DEFAULT_PARTITION__"))
-
-    val dropped = operators.Scans.dropPartitions(spark, root, "yr",
-      col("yr").cast("int") < 1995)
-    assert(dropped.toSet === Set("yr=1992", "yr=1993"), dropped.toString)
-    // the null partition's predicate is NULL, not TRUE → kept
-    assert(new java.io.File(s"$root/yr=__HIVE_DEFAULT_PARTITION__").exists())
-    // survivors untouched byte-identical; dropped dirs gone
-    val after = partSnapshot(root, "yr")
-    assert(after.keySet === before.keySet -- dropped)
-    after.keySet.foreach(dir => assert(after(dir) === before(dir)))
-    assert(spark.read.parquet(root).select(col("id"))
-      .collect().map(_.getLong(0)).toSet === Set(3L, 4L, 5L))
-    // a second sweep matches nothing
-    assert(operators.Scans.dropPartitions(spark, root, "yr",
-      col("yr").cast("int") < 1995).isEmpty)
-  }
-
-  test("acid delete removes an emptied partition dir and keeps NULL-predicate rows") {
-    val s = spark
-    import s.implicits._
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scanspec/acid_empty"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    // v is NULL on odd ids in partition b — a NULL predicate must KEEP
-    val df = Seq[(Long, String, java.lang.Long)](
-      (1L, "a", 10L), (2L, "a", 20L),
-      (3L, "b", null), (4L, "b", 5L), (5L, "b", 50L))
-      .toDF("id", "tag", "v")
-    df.repartition(col("tag"))
-      .write.mode("overwrite").partitionBy("tag").parquet(root)
-
-    // delete ALL of partition a: dynamic overwrite alone would emit no
-    // rows for it, leave the dir behind, and the rows would RESURFACE
-    val dirs = operators.Scans.acidDelete(spark, root, "tag", col("tag") === "a")
-    assert(dirs.toSet === Set("tag=a"))
-    assert(!new java.io.File(s"$root/tag=a").exists(),
-      "emptied partition dir must be removed, not left to resurrect its rows")
-    val back = spark.read.parquet(root)
-    assert(back.count() === 3)
-
-    // DELETE WHERE v > 10 on b: row 5 goes, row 4 (FALSE) and row 3
-    // (NULL) stay — SQL's TRUE-only match semantics
-    operators.Scans.acidDelete(spark, root, "tag", col("v") > 10)
-    val ids = spark.read.parquet(root).select(col("id"))
-      .collect().map(_.getLong(0)).toSet
-    assert(ids === Set(3L, 4L))
-  }
-
   test("sink_sorted_layout: a sorted layout's row groups are skipped, a scrambled one's are not") {
     val base = s"${sys.props("java.io.tmpdir")}/graft_scanspec/sorted_layout"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))

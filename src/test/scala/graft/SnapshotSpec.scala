@@ -388,6 +388,45 @@ class SnapshotSpec extends SparkSpec {
       === Seq((1L, 1, 10L), (2L, 2, 200L), (3L, 2, 300L)))
   }
 
+  test("deleteWhere restages partly matched partitions, drops emptied ones, keeps NULL-predicate rows") {
+    val root = freshRoot()
+    val s = spark
+    import s.implicits._
+    Snapshots.commitPartitioned(spark, root,
+      Seq[(Long, String, java.lang.Long)](
+        (1L, "a", 10L), (2L, "a", 20L),
+        (3L, "b", 5L), (4L, "b", 50L), (5L, "b", null),
+        (6L, "c", 60L)).toDF("k", "p", "v"), "p", 0L)
+    val v1Entries = manifestEntries(root, 1L)
+    // one call: every row of a matches (a is emptied), k=4 of b
+    // matches, k=5's predicate is NULL (kept), c is outside it
+    val pred = col("v") >= 10 && col("p") =!= "c"
+    assert(Snapshots.deleteWhere(spark, root, "p", pred) === 2L)
+    val v2Entries = manifestEntries(root, 2L)
+    assert(!v2Entries.exists(_.endsWith("__gp=a")),
+      s"the emptied partition must leave the manifest in the same commit: $v2Entries")
+    assert(v2Entries.filter(_.endsWith("__gp=c")) === v1Entries.filter(_.endsWith("__gp=c")),
+      "an unmatched partition is inherited by reference")
+    assert(v2Entries.count(_.endsWith("__gp=b")) === 1 &&
+      !v1Entries.contains(v2Entries.find(_.endsWith("__gp=b")).get),
+      "the partly matched partition is restaged")
+    assert(Snapshots.read(spark, root).orderBy("k")
+      .as[(Long, String, Option[Long])].collect().toSeq ===
+      Seq((3L, "b", Some(5L)), (5L, "b", None), (6L, "c", Some(60L))))
+    assert(Snapshots.readAsOf(spark, root, 1L).count() === 6L)
+    // a predicate that matches nothing commits nothing
+    assert(Snapshots.deleteWhere(spark, root, "p", col("v") > 1000) === 2L)
+    assert(Snapshots.versions(spark, root) === Seq(1L, 2L))
+    // emptying the NULL partition drops its default-partition entry
+    val root2 = freshRoot()
+    Snapshots.commitPartitioned(spark, root2,
+      Seq[(Long, String)]((1L, null), (2L, "x")).toDF("k", "p"), "p", 0L)
+    Snapshots.deleteWhere(spark, root2, "p", col("p").isNull): Unit
+    assert(manifestEntries(root2, 2L).map(_.split("/")(1)) === Seq("__gp=x"))
+    assert(Snapshots.read(spark, root2).as[(Long, String)].collect().toSeq
+      === Seq((2L, "x")))
+  }
+
   test("cdc aligns schema evolution: update rows expose null for the added column (r18 #4)") {
     val root = freshRoot()
     val s = spark
@@ -951,6 +990,18 @@ class SnapshotSpec extends SparkSpec {
     // and expire reclaims the pre-compact sprawl
     Snapshots.expire(spark, root, keepLast = 1, orphanGraceMs = 0L)
     assert(Snapshots.read(spark, root).count() === 3L)
+    // a Hive-escaped partition value ('a:b' stages as __gp=a%3Ab)
+    // spread over two entries collapses to one, its rows intact
+    val esc = freshRoot()
+    Snapshots.commitPartitioned(spark, esc,
+      Seq((1L, "a:b"), (2L, "plain")).toDF("k", "p"), "p", 0L)
+    Snapshots.appendPartitioned(spark, esc, Seq((3L, "a:b")).toDF("k", "p"), "p", 1L)
+    val escAfter = manifestEntries(esc, Snapshots.compactPartitioned(spark, esc, "p"))
+    assert(escAfter.map(_.split("/")(1)).sorted === Seq("__gp=a%3Ab", "__gp=plain") &&
+      escAfter.map(_.split("/")(0)).distinct.size === 1,
+      s"the escaped partition must collapse to one entry: $escAfter")
+    assert(Snapshots.read(spark, esc).orderBy("k").as[(Long, String)]
+      .collect().toSeq === Seq((1L, "a:b"), (2L, "plain"), (3L, "a:b")))
   }
 
   test("restore raced against expire never publishes a manifest naming deleted dirs (r19 #3)") {
@@ -1702,7 +1753,7 @@ class SnapshotSpec extends SparkSpec {
     assert(!Snapshots.txnAppend(spark, root, Seq((9L, "x")).toDF("k", "v"), 5L))
   }
 
-  test("guards: keepLast>=1, JSON-safe extraMeta, no commits ahead of latest") {
+  test("guards: keepLast>=1, no commits ahead of latest") {
     val root = freshRoot()
     val s = spark
     import s.implicits._
