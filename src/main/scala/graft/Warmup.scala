@@ -148,12 +148,12 @@ object Warmup {
     // 2.7 s charged in-suite where only the staging data work belongs).
     // Synthetic rows only — the real keys' staging, scans, and
     // aggregation all stay inside the measurements; the scratch
-    // registry entry is keyed by this temp path, which no measured key
-    // ever scans, and the opt-in conf is restored.
+    // registry entry is dropped with the scratch dir, and the opt-in
+    // conf is restored.
     val mvScratch = java.nio.file.Files.createTempDirectory("graft_warm_mv").toFile
+    val factPath = s"${mvScratch.getAbsolutePath}/fact"
     val prevMvConf = spark.conf.getOption(graft.plans.MvRewrite.EnabledKey)
     try {
-      val factPath = s"${mvScratch.getAbsolutePath}/fact"
       val fact = spark.range(16).selectExpr("cast(id % 3 as string) k",
         "cast(id as decimal(18,2)) m", "cast(id % 2 as int) p")
       fact.filter($"p" === 0).write.mode("overwrite").partitionBy("p").parquet(factPath)
@@ -172,6 +172,7 @@ object Warmup {
         case Some(v) => spark.conf.set(graft.plans.MvRewrite.EnabledKey, v)
         case None => spark.conf.unset(graft.plans.MvRewrite.EnabledKey)
       }
+      graft.plans.MvRewrite.unregister(spark, factPath)
       org.apache.commons.io.FileUtils.deleteQuietly(mvScratch)
     }
   }

@@ -47,7 +47,7 @@ import org.apache.spark.sql.types.StructType
   * `spark.readStream.format("graft-snapshot").option("path", root)`
   * tails the commit log, offsets ARE version numbers, and each
   * micro-batch is exactly the rows the offset range's commits ADDED
-  * ([[Snapshots.changesBetween]] — the manifest diff, so standing
+  * ([[Snapshots.addedDirsBetween]] — the manifest diff, so standing
   * data is never re-read; a 100 TB table streams out each commit's
   * bytes, not the table). Append-only contract: a replace/compact in
   * the tailed range fails the stream with a named error, the same

@@ -71,8 +71,12 @@ import graft.Fs
   *     ([[commitDropPartitions]]), APPEND ([[appendCommit]] /
   *     [[appendPartitioned]] / [[txnAppend]]), MERGE
   *     ([[mergeTransform]] — keyed upsert staging only the touched
-  *     partitions), OPTIMIZE ([[compact]]/[[compactPartitioned]] —
-  *     granularity-honest), RESTORE and DESCRIBE HISTORY — and they
+  *     partitions), OPTIMIZE ([[compact]] = [[commitTransform]] of the
+  *     identity, [[compactPartitioned]] = [[replaceTransform]] of the
+  *     identity — granularity-honest), RESTORE and DESCRIBE HISTORY.
+  *     Every read-modify-write verb runs its retries through ONE OCC
+  *     loop ([[occ]]: re-derive from the new latest on conflict, up to
+  *     a fixed attempt count) — and they
   *     COMPOSE: appends keep a copy-on-write table replaceable,
   *     compaction preserves granularity, restore survives a
   *     concurrent expire (dead dirs get the orphan grace window).
@@ -1007,32 +1011,48 @@ object Snapshots {
     }
   }
 
-  /** Read-modify-write with OCC retry: derive the next snapshot from
-    * the current latest via `f` (None input = empty table), commit
-    * against that parent, and on conflict re-derive from the NEW
-    * latest — never blind-retry the stale result. This is the
-    * full-rewrite transactional seat; partition-scoped UPDATEs should
-    * prefer [[replaceTransform]], whose write volume is the affected
-    * partitions only. */
-  def commitTransform(s: SparkSession, root: String,
-                      maxAttempts: Int = 10)
-                     (f: Option[DataFrame] => DataFrame): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+  /** Attempts an OCC verb makes before its last
+    * [[SnapshotConflictException]] propagates to the caller. */
+  private val OccAttempts = 10
+
+  /** The one optimistic-concurrency loop behind every read-modify-write
+    * verb. Each attempt resolves the latest version, decodes its marker
+    * once (None at genesis) and runs `step` against that parent; on
+    * [[SnapshotConflictException]] it re-derives from the NEW latest —
+    * never blind-retries a stale result — and after [[OccAttempts]]
+    * attempts the last conflict propagates. */
+  private def occ[T](s: SparkSession, root: String)(
+      step: (Long, Option[Marker]) => T): T = {
+    requireAtomicCommitScheme(s, root)
+    def attempt(n: Int): T = {
       val parent = latest(s, root).getOrElse(0L)
-      val pm = parentMarker(s, root, parent)
-      val next = f(pm.map(m => readEntries(s, root, m.names)))
-      try {
-        validateCommit(s, root, parent)
-        return commitWith(s, root, next, parent, pm)
-      } catch {
-        case e: SnapshotConflictException =>
-          if (attempt >= maxAttempts) throw e
-      }
+      try step(parent, parentMarker(s, root, parent))
+      catch { case _: SnapshotConflictException if n < OccAttempts => attempt(n + 1) }
     }
-    -1L // unreachable
+    attempt(1)
   }
+
+  /** Read-modify-write with OCC retry ([[occ]]): derive the next
+    * snapshot from the current latest via `f` (None input = empty
+    * table) and commit it as ONE whole-dir entry against that parent.
+    * This is the full-rewrite transactional seat; partition-scoped
+    * UPDATEs should prefer [[replaceTransform]], whose write volume is
+    * the affected partitions only. REFUSES a partition-granular table
+    * (before `f` runs or anything stages): its one whole-dir entry
+    * would silently downgrade the manifest, and the next
+    * [[replaceTransform]]/[[deleteWhere]]/[[mergeTransform]] would fail
+    * with a confusing seed error. Re-checked against each attempt's
+    * parent, so a concurrent [[commitPartitioned]] landing mid-retry
+    * flips the refusal instead of being downgraded by the retry. */
+  def commitTransform(s: SparkSession, root: String)
+                     (f: Option[DataFrame] => DataFrame): Long =
+    occ(s, root) { (parent, pm) =>
+      require(!pm.exists(_.names.exists(_.contains(s"/$PartDir="))),
+        s"$root is partition-granular — a whole-dir commitTransform or " +
+          "compact would downgrade it and break copy-on-write; use " +
+          "replaceTransform, or compactPartitioned to optimize it")
+      commitWith(s, root, f(pm.map(m => readEntries(s, root, m.names))), parent, pm)
+    }
 
   /** Copy-on-write read-modify-write with OCC retry: `f` maps the
     * current snapshot to the COMPLETE new content of the partitions
@@ -1044,10 +1064,9 @@ object Snapshots {
     * partition `f` filters down to nothing is INHERITED unchanged,
     * not dropped. A delete that may empty a partition goes through
     * [[deleteWhere]] (or [[commitReplace]]'s `alsoDrop`). */
-  def replaceTransform(s: SparkSession, root: String, partCol: String,
-                       maxAttempts: Int = 10)
+  def replaceTransform(s: SparkSession, root: String, partCol: String)
                       (f: DataFrame => DataFrame): Long =
-    replaceLoop(s, root, partCol, maxAttempts)(cur => Some((f(cur), Nil)))
+    replaceOcc(s, root, partCol)(cur => Some((f(cur), Nil)))
 
   /** `DELETE FROM t WHERE pred` on a partition-granular table, in one
     * OCC copy-on-write commit. One aggregate over `partCol` finds the
@@ -1065,7 +1084,7 @@ object Snapshots {
                   pred: Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, max, min}
     val hit = coalesce(pred, lit(false))
-    replaceLoop(s, root, partCol, maxAttempts = 10) { cur =>
+    replaceOcc(s, root, partCol) { cur =>
       val parts = cur.groupBy(col(partCol))
         .agg(max(hit).as("__dw_any"), min(hit).as("__dw_all"))
         .filter(col("__dw_any"))
@@ -1084,33 +1103,21 @@ object Snapshots {
     }
   }
 
-  /** The OCC loop behind [[replaceTransform]] and [[deleteWhere]]: `f`
-    * derives the restaged partitions and the partition values to drop
-    * from the current snapshot, or None to leave the table as it is
-    * (the current version is returned). On conflict it re-derives from
-    * the NEW latest — never blind-retries the stale result. */
-  private def replaceLoop(s: SparkSession, root: String, partCol: String,
-      maxAttempts: Int)(f: DataFrame => Option[(DataFrame, Seq[String])]): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val parent = latest(s, root).getOrElse(
+  /** The [[occ]] step behind [[replaceTransform]] and [[deleteWhere]]:
+    * `f` derives the restaged partitions and the partition values to
+    * drop from the current snapshot, or None to leave the table as it
+    * is (the current version is returned). */
+  private def replaceOcc(s: SparkSession, root: String, partCol: String)(
+      f: DataFrame => Option[(DataFrame, Seq[String])]): Long =
+    occ(s, root) { (parent, pm) =>
+      val m = pm.getOrElse(
         throw new NoSuchElementException(s"no committed snapshot under $root"))
-      val pm = markerOf(s, root, parent)
-      f(readEntries(s, root, pm.names)) match {
-        case None => return parent
+      f(readEntries(s, root, m.names)) match {
+        case None => parent
         case Some((next, alsoDrop)) =>
-          try {
-            validateCommit(s, root, parent)
-            return replaceWith(s, root, next, partCol, parent, pm, alsoDrop)
-          } catch {
-            case e: SnapshotConflictException =>
-              if (attempt >= maxAttempts) throw e
-          }
+          replaceWith(s, root, next, partCol, parent, m, alsoDrop)
       }
     }
-    -1L // unreachable
-  }
 
   /** NULL-SAFE membership of `partCol` in `values`: an IN-list on the
     * non-null values (it reaches the parquet row-group stats of the
@@ -1146,7 +1153,7 @@ object Snapshots {
     * table's columns (same shape the full-outer merge needs). */
   def mergeTransform(s: SparkSession, root: String, partCol: String,
                      source: DataFrame, keys: Seq[String],
-                     maxAttempts: Int = 10, partGate: Int = 10000): Long = {
+                     partGate: Int = 10000): Long = {
     import org.apache.spark.sql.functions.col
     require(keys.nonEmpty, "mergeTransform needs at least one key column")
     require(source.columns.contains(partCol),
@@ -1164,7 +1171,7 @@ object Snapshots {
       // confusing commitReplace empty-df error (review finding)
       return latest(s, root).getOrElse(throw new NoSuchElementException(
         s"no committed snapshot under $root"))
-    replaceTransform(s, root, partCol, maxAttempts) { cur =>
+    replaceTransform(s, root, partCol) { cur =>
       // membership must be NULL-SAFE (review finding): the stager
       // seats null partition values under the default-partition dir,
       // and commitReplace retires the standing null entry by subdir
@@ -1196,8 +1203,7 @@ object Snapshots {
     * commit references (a crashed or conflicted writer's orphan).
     * Commit markers are removed FIRST, then data dirs — a concurrent
     * reader that already resolved an old version keeps reading its
-    * immutable files until the dir deletion lands, the same
-    * in-flight-plan grace the MV version rotation gives. Orphans are
+    * immutable files until the dir deletion lands. Orphans are
     * only swept once older than `orphanGraceMs` — a writer that is
     * STILL STAGING (data written, marker not yet created) must never
     * lose its dir to a concurrent expire; this is the retention
@@ -1432,28 +1438,16 @@ object Snapshots {
       .drop("_old_present", "_new_present")
   }
 
-  /** Rows ADDED between two committed versions (`fromV` exclusive,
-    * `toV` inclusive; `fromV <= 0` = from genesis) — the streaming
-    * tail's micro-batch ([[SnapshotSource]]): the manifest entries
-    * `toV` carries that `fromV` did not, read as one DataFrame.
-    * Standing entries are never re-read, so a 100 TB table streams
-    * out exactly the bytes each commit appended. Requires an
-    * APPEND-ONLY history over the range: a commit that rewrote or
-    * dropped standing entries (replace / compact / full rewrite) is
-    * not representable as an append stream and throws — the same
-    * contract public formats' streaming sources enforce. */
-  def changesBetween(s: SparkSession, root: String, fromV: Long,
-                     toV: Long): DataFrame = {
-    val added = addedDirsBetween(s, root, fromV, toV)
-    if (added.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        readAsOf(s, root, toV).schema)
-    else readDirs(s, added)
-  }
-
-  /** Absolute dirs of the entries `toV` added over `fromV` (the
-    * micro-batch's scan roots), enforcing [[changesBetween]]'s
-    * append-only contract. */
+  /** Absolute dirs of the entries ADDED between two committed versions
+    * (`fromV` exclusive, `toV` inclusive; `fromV <= 0` = from genesis)
+    * — the streaming tail's micro-batch scan roots ([[SnapshotSource]]):
+    * the manifest entries `toV` carries that `fromV` did not. Standing
+    * entries are never re-read, so a 100 TB table streams out exactly
+    * the bytes each commit appended. Requires an APPEND-ONLY history
+    * over the range: a commit that rewrote or dropped standing entries
+    * (replace / compact / full rewrite) is not representable as an
+    * append stream and throws — the same contract public formats'
+    * streaming sources enforce. */
   def addedDirsBetween(s: SparkSession, root: String, fromV: Long,
                        toV: Long): Seq[String] = {
     val fromEntries = checkpointEntries(s, root, fromV)
@@ -1556,25 +1550,15 @@ object Snapshots {
     * partition-granular table copy-on-write capable (see
     * [[appendPartitioned]]). */
   def txnAppend(s: SparkSession, root: String, df: DataFrame,
-                batchId: Long, maxAttempts: Int = 10,
-                partCol: Option[String] = None): Boolean = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val parent = latest(s, root).getOrElse(0L)
-      val pm = parentMarker(s, root, parent)
-      if (batchId <= pm.map(lastBatchOf(s, root, parent, _)).getOrElse(-1L))
-        return false
-      try {
-        validateCommit(s, root, parent)
+                batchId: Long, partCol: Option[String] = None): Boolean =
+    occ(s, root) { (parent, pm) =>
+      if (batchId <= pm.map(lastBatchOf(s, root, parent, _)).getOrElse(-1L)) false
+      else {
         appendWith(s, root, df, parent, pm, batch = Some(batchId),
           partCol = partCol)
-        return true
-      } catch { case _: SnapshotConflictException => () }
+        true
+      }
     }
-    throw new SnapshotConflictException(
-      s"txnAppend gave up after $maxAttempts conflicts under $root")
-  }
 
   /** RESTORE: make an old version's state the NEW latest — the
     * "undo a bad write" seat public formats ship as RESTORE TABLE ...
@@ -1633,35 +1617,13 @@ object Snapshots {
     * accumulated small dirs (the many-small-files tax appends build
     * up). Readers are unaffected throughout (they hold immutable
     * resolved manifests); the superseded dirs die at the next
-    * [[expire]] once no live manifest references them. Semantics-
-    * preserving by construction — it is literally `commitTransform`
-    * of the identity. REFUSES a partition-granular table (VERDICT r19
-    * #2): collapsing one to a single plain dir would silently destroy
-    * its copy-on-write UPDATE path (the next [[replaceTransform]]
-    * fails with a confusing seed error) — use [[compactPartitioned]],
-    * which preserves the granularity. */
-  def compact(s: SparkSession, root: String, maxAttempts: Int = 10): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val parent = latest(s, root).getOrElse(throw new NoSuchElementException(
-        s"nothing to compact under $root"))
-      // re-checked against each attempt's parent (review finding): a
-      // concurrent commitPartitioned landing mid-retry must flip this
-      // refusal, not get silently downgraded by the conflict retry
-      val pm = markerOf(s, root, parent)
-      require(!pm.names.exists(_.contains(s"/$PartDir=")),
-        s"$root is partition-granular — plain compact would downgrade it " +
-          "and break copy-on-write; use compactPartitioned")
-      try {
-        validateCommit(s, root, parent)
-        return commitWith(s, root, readEntries(s, root, pm.names), parent, Some(pm))
-      } catch {
-        case e: SnapshotConflictException => if (attempt >= maxAttempts) throw e
-      }
-    }
-    -1L // unreachable
-  }
+    * [[expire]] once no live manifest references them. It is
+    * [[commitTransform]] of the identity, so it shares that verb's
+    * refusal of a partition-granular table (VERDICT r19 #2) — use
+    * [[compactPartitioned]], which preserves the granularity. */
+  def compact(s: SparkSession, root: String): Long =
+    commitTransform(s, root)(_.getOrElse(
+      throw new NoSuchElementException(s"nothing to compact under $root")))
 
   /** OPTIMIZE for a PARTITION-GRANULAR table (VERDICT r19 #2): rewrite
     * the current snapshot as ONE fresh staged uuid with one `__gp=`
@@ -1672,7 +1634,6 @@ object Snapshots {
     * it is literally [[replaceTransform]] of the identity (every
     * partition restages, nothing inherits). Same OCC/retention story
     * as [[compact]]. */
-  def compactPartitioned(s: SparkSession, root: String, partCol: String,
-                         maxAttempts: Int = 10): Long =
-    replaceTransform(s, root, partCol, maxAttempts)(identity)
+  def compactPartitioned(s: SparkSession, root: String, partCol: String): Long =
+    replaceTransform(s, root, partCol)(identity)
 }

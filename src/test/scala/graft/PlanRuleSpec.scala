@@ -316,20 +316,20 @@ class PlanRuleSpec extends SparkSpec {
         }
     }.flatten
 
-  /** The CURRENT summary data dir serving rewrites for a fact path
-    * (rebuilds rotate `v=<n>` dirs under the declared summary root and
-    * swap the registry pointer — r18). */
-  private def mvDataPath(factPath: String): String =
+  /** The data dirs of the summary version serving rewrites for a fact
+    * path (each rebuild commits a new version of the snapshot table at
+    * the declared summary root and swaps the registry pointer — r18). */
+  private def mvDataPath(factPath: String): Seq[String] =
     graft.plans.MvRewrite.registered(spark, factPath)
-      .getOrElse(fail(s"no MV registered for $factPath")).mvPath
+      .getOrElse(fail(s"no MV registered for $factPath")).dirs
 
   test("mv rewrite: the roll-up aggregate scans the summary, never the fact") {
     val (factPath, mvPath) = operators.Aggregates.mvDemo(spark, sf)
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
     val on = mvQuery(factPath)
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)),
+    assert(scanPaths(on) === mvDataPath(factPath),
       s"expected only the summary scan:\n${on.queryExecution.optimizedPlan}")
-    assert(mvDataPath(factPath).startsWith(mvPath),
+    assert(mvDataPath(factPath).forall(_.startsWith(mvPath)),
       "summary versions must live under the declared summary root")
 
     // row identity vs the unrewritten plan, bit-exact (decimal sums)
@@ -345,32 +345,34 @@ class PlanRuleSpec extends SparkSpec {
     val (factPath, _) = operators.Aggregates.mvDemo(spark, sf)
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
     val mvData = mvDataPath(factPath)
+    def servedByMv(df: org.apache.spark.sql.DataFrame) =
+      scanPaths(df).exists(mvData.contains)
     // a filtered fact scan must NOT be served from whole-table totals
     val filtered = spark.read.parquet(factPath)
       .filter(col("l_quantity") > 10)
       .groupBy(col("l_returnflag")).agg(sum(col("l_price")).as("s"))
-    assert(!scanPaths(filtered).contains(mvData))
+    assert(!servedByMv(filtered))
     // an aggregate outside the mergeable set declines: stddev needs a
     // Σm² partial the summary does not carry (avg, by contrast, IS
     // decomposable and rewrites — see the dedicated avg tests)
     val sd = spark.read.parquet(factPath)
       .groupBy(col("l_returnflag")).agg(stddev(col("l_quantity")).as("sd"))
-    assert(!scanPaths(sd).contains(mvData))
+    assert(!servedByMv(sd))
     // distinct aggregation declines (not derivable from partials)
     val dist = spark.read.parquet(factPath)
       .groupBy(col("l_returnflag")).agg(countDistinct(col("l_quantity")).as("d"))
-    assert(!scanPaths(dist).contains(mvData))
+    assert(!servedByMv(dist))
     // an unregistered parquet scan of the same shape is untouched
     val other = Tables.raw(spark, sf, "lineitem")
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
-    assert(!scanPaths(other).contains(mvData))
+    assert(!servedByMv(other))
     // non-LEGACY avg declines (r18 advice): try_avg's TRY evalMode
     // carries overflow semantics the Divide pipeline does not
     // reproduce — it must read the fact table, not the summary
     val tryAvg = spark.read.parquet(factPath)
       .groupBy(col("l_returnflag"))
       .agg(expr("try_avg(l_quantity)").as("ta"))
-    assert(!scanPaths(tryAvg).contains(mvData),
+    assert(!servedByMv(tryAvg),
       s"try_avg must decline the rewrite:\n${tryAvg.queryExecution.optimizedPlan}")
   }
 
@@ -383,7 +385,7 @@ class PlanRuleSpec extends SparkSpec {
       .agg(sum(col("l_price")).as("s"), count(lit(1)).as("n"))
       .orderBy(col("l_returnflag"))
     val on = dimFiltered()
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)),
+    assert(scanPaths(on) === mvDataPath(factPath),
       s"dim-only filter must move onto the summary:\n${on.queryExecution.optimizedPlan}")
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "false")
     try assert(on.collect().toSeq === dimFiltered().collect().toSeq)
@@ -415,8 +417,8 @@ class PlanRuleSpec extends SparkSpec {
         measures = Seq("l_price", "l_quantity"), mvPath)
       val fresh = q()
       // the rebuild rotated to a new version dir under the same root
-      assert(scanPaths(fresh) === Seq(mvDataPath(factPath)))
-      assert(mvDataPath(factPath).startsWith(mvPath))
+      assert(scanPaths(fresh) === mvDataPath(factPath))
+      assert(mvDataPath(factPath).forall(_.startsWith(mvPath)))
       val freshRows = fresh.collect().map(r => (r.getString(0), r.getLong(1))).toMap
       val beforeRows = before.map(r => (r.getString(0), r.getLong(1))).toMap
       assert(freshRows.values.sum === beforeRows.values.sum + 7,
@@ -461,8 +463,8 @@ class PlanRuleSpec extends SparkSpec {
     graft.plans.MvRewrite.materialize(spark, "mv_inc_spec_full",
       spark.read.parquet(factPath), s"$base/unscanned_fact_key",
       dims = Seq("o_orderstatus"), measures = Seq("o_price"), fullPath)
-    val inc = spark.read.parquet(mvDataPath(factPath))
-    val full = spark.read.parquet(mvDataPath(s"$base/unscanned_fact_key"))
+    val inc = spark.read.parquet(mvDataPath(factPath): _*)
+    val full = spark.read.parquet(mvDataPath(s"$base/unscanned_fact_key"): _*)
     assert(inc.schema.map(f => (f.name, f.dataType)) ===
       full.schema.map(f => (f.name, f.dataType)),
       "incremental rebuild must not drift the summary schema")
@@ -477,35 +479,60 @@ class PlanRuleSpec extends SparkSpec {
       .agg(sum(col("o_price")).as("s"), count(lit(1)).as("n"))
       .orderBy(col("o_orderstatus"))
     val on = q()
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)),
+    assert(scanPaths(on) === mvDataPath(factPath),
       s"post-rebuild query must scan only the summary:\n${on.queryExecution.optimizedPlan}")
-    assert(mvDataPath(factPath).startsWith(mvPath))
+    assert(mvDataPath(factPath).forall(_.startsWith(mvPath)))
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "false")
     try assert(on.collect().toSeq === q().collect().toSeq)
     finally spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
   }
 
-  test("version counter reseeds past on-disk v= dirs left by a previous process") {
-    // simulate a restart onto a persistent summary root: a prior
-    // process left v=9; the first materialize after restart must land
-    // ABOVE it, never overwrite v=1..9 in place (code-review finding)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_planrule/mvreseed"
+  test("materialize after a restart commits past the summary versions already on disk") {
+    // a restart onto a persistent summary root: a prior process left
+    // versions 1 and 2; the first materialize after restart must claim
+    // version 3 and leave version 2 readable, never overwrite it
+    val base = s"${sys.props("java.io.tmpdir")}/graft_planrule/mvrestart"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val factPath = s"$base/fact"
     val mvPath = s"$base/mv"
+    val s = spark
+    import s.implicits._
     Tables.t(spark, sf, "orders")
       .select(col("o_orderstatus"), Q.dec(col("o_totalprice")).as("o_price"))
       .write.mode("overwrite").parquet(factPath)
-    val stale = s"$mvPath/v=9/marker.txt"
-    new java.io.File(s"$mvPath/v=9").mkdirs()
-    java.nio.file.Files.write(java.nio.file.Paths.get(stale), "old".getBytes)
-    val mv = graft.plans.MvRewrite.materialize(spark, "mv_reseed_spec",
+    graft.sources.Snapshots.commit(spark, mvPath,
+      Seq(("old1", 1L)).toDF("o_orderstatus", "cnt_rows"), 0L)
+    graft.sources.Snapshots.commit(spark, mvPath,
+      Seq(("old2", 2L)).toDF("o_orderstatus", "cnt_rows"), 1L)
+    val mv = graft.plans.MvRewrite.materialize(spark, "mv_restart_spec",
       spark.read.parquet(factPath), factPath,
       dims = Seq("o_orderstatus"), measures = Seq("o_price"), mvPath)
-    assert(mv.version > 9L,
-      s"materialize after restart must reseed past on-disk v=9, got v=${mv.version}")
-    assert(new java.io.File(stale).exists(),
+    assert(mv.version === 3L,
+      s"materialize after restart must claim the next version, got v=${mv.version}")
+    assert(graft.sources.Snapshots.readAsOf(spark, mvPath, 2L)
+      .as[(String, Long)].collect().toSeq === Seq(("old2", 2L)),
       "the previous process's newest version must not be overwritten")
+  }
+
+  test("unregister drops the view: aggregates over the fact plan against the fact again") {
+    val base = s"${sys.props("java.io.tmpdir")}/graft_planrule/mvunreg"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    val factPath = s"$base/fact"
+    Tables.t(spark, sf, "orders")
+      .select(col("o_orderstatus"), Q.dec(col("o_totalprice")).as("o_price"))
+      .write.mode("overwrite").parquet(factPath)
+    graft.plans.MvRewrite.materialize(spark, "mv_unregister_spec",
+      spark.read.parquet(factPath), factPath,
+      dims = Seq("o_orderstatus"), measures = Seq("o_price"), s"$base/mv")
+    graft.plans.MvRewrite.install(spark)
+    spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
+    def q() = spark.read.parquet(factPath)
+      .groupBy(col("o_orderstatus")).agg(sum(col("o_price")).as("s"))
+    assert(scanPaths(q()) === mvDataPath(factPath), "precondition: the view serves")
+    graft.plans.MvRewrite.unregister(spark, factPath)
+    assert(graft.plans.MvRewrite.registered(spark, factPath).isEmpty)
+    assert(scanPaths(q()) === Seq(factPath),
+      s"an unregistered fact must be scanned itself:\n${q().queryExecution.optimizedPlan}")
   }
 
   test("mv rewrite serves the GLOBAL aggregate (empty group-by) from the summary too") {
@@ -514,7 +541,7 @@ class PlanRuleSpec extends SparkSpec {
     def global() = spark.read.parquet(factPath)
       .agg(sum(col("l_price")).as("total"), count(lit(1)).as("n"))
     val on = global()
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)))
+    assert(scanPaths(on) === mvDataPath(factPath))
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "false")
     try assert(on.collect().toSeq === global().collect().toSeq)
     finally spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
@@ -533,7 +560,7 @@ class PlanRuleSpec extends SparkSpec {
         sum(col("l_price")).as("s"))
       .orderBy(col("l_returnflag"))
     val on = q()
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)),
+    assert(scanPaths(on) === mvDataPath(factPath),
       s"avg must be served from the summary:\n${on.queryExecution.optimizedPlan}")
     // output types must be exactly the fact-side avg's declared types
     assert(on.schema("avg_price").dataType ===
@@ -558,7 +585,7 @@ class PlanRuleSpec extends SparkSpec {
       .agg(avg(col("l_price")).as("avg_price"),
         avg(col("l_quantity")).as("avg_qty"))
     val on = q()
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)))
+    assert(scanPaths(on) === mvDataPath(factPath))
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "false")
     try assert(on.collect().toSeq === q().collect().toSeq)
     finally spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
@@ -573,7 +600,7 @@ class PlanRuleSpec extends SparkSpec {
       .agg(avg(col("l_price")).as("avg_price"))
       .orderBy(col("l_returnflag"))
     val on = q()
-    assert(scanPaths(on) === Seq(mvDataPath(factPath)))
+    assert(scanPaths(on) === mvDataPath(factPath))
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "false")
     try assert(on.collect().toSeq === q().collect().toSeq)
     finally spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
@@ -615,7 +642,7 @@ class PlanRuleSpec extends SparkSpec {
         // any registered VERSION dir is a correct (complete) summary;
         // planning against the fact — or failing to plan — is a loss
         val ps = plannedScans()
-        if (!(ps.length == 1 && ps.head.startsWith(s"$mvPath/v="))) lost.incrementAndGet()
+        if (!(ps.length == 1 && ps.head.startsWith(s"$mvPath/data/"))) lost.incrementAndGet()
         passes.incrementAndGet()
       } catch { case t: Throwable => readerErr.set(t) }
     })
@@ -630,7 +657,7 @@ class PlanRuleSpec extends SparkSpec {
     // thread: the refreshed summary reflects the fact, not itself
     val served = spark.read.parquet(factPath)
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
-    assert(scanPaths(served) === Seq(mvDataPath(factPath)))
+    assert(scanPaths(served) === mvDataPath(factPath))
     val expected = Tables.t(spark, sf, "lineitem")
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap

@@ -153,7 +153,7 @@ class SnapshotSpec extends SparkSpec {
     // by 1; OCC retry must linearize all 4 on top of one another
     val threads = (1 to 4).map { i =>
       new Thread(() => {
-        Snapshots.commitTransform(spark, root, maxAttempts = 20) { cur =>
+        Snapshots.commitTransform(spark, root) { cur =>
           cur.get.select(col("k"), (col("n") + 1).as("n"))
             .unionByName(Seq((i.toLong, 0L)).toDF("k", "n"))
         }: Unit
@@ -1002,6 +1002,28 @@ class SnapshotSpec extends SparkSpec {
       s"the escaped partition must collapse to one entry: $escAfter")
     assert(Snapshots.read(spark, esc).orderBy("k").as[(Long, String)]
       .collect().toSeq === Seq((1L, "a:b"), (2L, "plain"), (3L, "a:b")))
+  }
+
+  test("commitTransform refuses a partition-granular table, staging and committing nothing") {
+    val root = freshRoot()
+    val s = spark
+    import s.implicits._
+    Snapshots.commitPartitioned(spark, root,
+      Seq((1L, 1, "a"), (2L, 2, "b")).toDF("k", "p", "v"), "p", 0L)
+    def dataDirs() = new java.io.File(s"$root/data").list().toSet
+    val before = dataDirs()
+    // a whole-dir rewrite would downgrade the manifest and break the
+    // copy-on-write verbs that follow
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.commitTransform(spark, root)(cur => cur.get.filter(col("k") === 1L))
+    }
+    assert(e.getMessage.contains("compactPartitioned"), e.getMessage)
+    assert(Snapshots.versions(spark, root) === Seq(1L), "no new commit")
+    assert(dataDirs() === before, "no staged dir left behind")
+    // the table stays copy-on-write capable
+    Snapshots.deleteWhere(spark, root, "p", col("k") === 2L): Unit
+    assert(Snapshots.read(spark, root).as[(Long, Int, String)].collect().toSeq
+      === Seq((1L, 1, "a")))
   }
 
   test("restore raced against expire never publishes a manifest naming deleted dirs (r19 #3)") {
