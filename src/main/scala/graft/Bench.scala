@@ -4,19 +4,10 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same pinned-UTC convention as Verify/SparkSpec: the stream
-      // path's NTZ→instant cast depends on it
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     // best-effort: a warmup failure must never cost the bench run
     // (but a fatal JVM error must still kill it — Harness policy)
-    try Warmup.run(spark) catch { case NonFatal(_) => }
+    Harness.guarded("warmup", scala.collection.mutable.Map.empty)(Warmup.run(spark))
     // Table-cache pre-materialization, timed OUTSIDE the per-query
     // readings: Tables.t caches the shared base tables, and the
     // one-time cache materialization (~2.5 s for lineitem at sf0.1)
@@ -33,37 +24,22 @@ object Bench {
       }
       (System.nanoTime() - t0) / 1e9
     }
-    // Machine-speed calibration: a fixed synthetic Spark job (range →
-    // project → shuffle agg) that touches the same machinery the
-    // measured queries do (task scheduling, codegen'd eval, one
-    // exchange) but none of the test data. The bench host was OBSERVED
-    // (r10, r11) oscillating between fast and ~10x-slow phases on
-    // identical binaries and an otherwise idle machine
-    // (llm_dedup_clusters warm: 6.5 s at 23:02, 92.7 s at 23:28, 9.3 s
-    // at 23:35 the same night; BENCH_r11's cal_start was 9.03 s vs a
-    // healthy 0.5-1.5 s with cal_end back at 0.73 s). Endpoint
-    // calibrations alone CANNOT bracket mid-run phase flips (r10:
-    // healthy endpoints around a 10.8x-slow middle), so a cheap probe
-    // now runs BEFORE EVERY MEASURED QUERY and each query is
-    // normalized by its own probe.
-    def calSpark(range: Long): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, range, 1L, 32)
-        .selectExpr("id % 97 AS k", "id * 2654435761L AS v")
-        .groupBy("k").sum("v").count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // endpoint probes keep the r10/r11-comparable 100M reading;
-    // per-query probes use 1/10 the range. MEASURED r12: the quick
-    // probe is job-overhead-dominated (32 tasks + one exchange ≈
-    // 0.30-0.66 s warm on a healthy phase where the 100M probe read
-    // 0.39-0.56 s) — which is the right probe shape, because the
-    // documented slow phase hits exactly that threaded scheduling /
-    // shuffle overhead (~30% kernel time), not raw arithmetic. The
-    // probes are OUTSIDE every query's measured time and outside
-    // `value`.
-    def calFull(): Double = calSpark(100000000L)
-    def calQuick(): Double = calSpark(10000000L)
+    // Machine-speed calibration (Harness.cal). Endpoint calibrations
+    // alone CANNOT bracket mid-run phase flips (r10: healthy endpoints
+    // around a 10.8x-slow middle; r11's cal_start read 9.03 s against
+    // a healthy 0.5-1.5 s with cal_end back at 0.73 s), so a cheap
+    // probe runs BEFORE EVERY MEASURED QUERY and each query is
+    // normalized by its own probe. The endpoint probes keep the
+    // r10/r11-comparable 100M reading; per-query probes use 1/10 the
+    // range. MEASURED r12: the quick probe is job-overhead-dominated
+    // (32 tasks + one exchange ≈ 0.30-0.66 s warm on a healthy phase
+    // where the 100M probe read 0.39-0.56 s) — which is the right
+    // probe shape, because the documented slow phase hits exactly that
+    // threaded scheduling / shuffle overhead (~30% kernel time), not
+    // raw arithmetic. The probes are OUTSIDE every query's measured
+    // time and outside `value`.
+    def calFull(): Double = Harness.cal(spark, 100000000L)
+    def calQuick(): Double = Harness.cal(spark, 10000000L)
     // healthy-phase MEDIAN of the quick probe on the bench host,
     // measured r12 over the 124 in-suite probes of a healthy run
     // (min 0.302 / median ~0.39 / max 0.664). Normalization only ever

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Profiling helper: time one declared query N times in one JVM.
   * Usage: runMain graft.BenchOne <key>[,key2,...] [sfDir] [repeats]
   * A comma-separated key list times the keys IN SEQUENCE within each
@@ -14,31 +12,14 @@ object BenchOne {
     val keys = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same pinned-UTC convention as Bench/Verify/SparkSpec
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try Warmup.run(spark) catch { case _: Throwable => }
-    // host-speed probe per rep (same job as Bench's cal_start/end_sec):
-    // the bench host oscillates between fast and ~10x-slow phases for
-    // threaded JVM work (observed r10), so a raw rep time is
-    // uninterpretable without the calibration printed next to it
-    def calSpark(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 100000000L, 1L, 32)
-        .selectExpr("id % 97 AS k", "id * 2654435761L AS v")
-        .groupBy("k").sum("v").count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calSpark() // compile/JIT the probe plan outside the readings
+    val spark = Harness.session(Harness.cpus)
+    Harness.guarded("warmup", scala.collection.mutable.Map.empty)(Warmup.run(spark))
+    // host-speed probe per rep (the same job as Bench's cal_start/end_sec)
+    val calRows = 100000000L
+    Harness.cal(spark, calRows) // compile/JIT the probe plan outside the readings
     (1 to reps).foreach { i =>
       keys.foreach { key =>
-        val cal = calSpark()
+        val cal = Harness.cal(spark, calRows)
         val t0 = System.nanoTime()
         val n = SparkEntry.queries(key)(spark, sfDir).count()
         println(f"BENCHONE $key run$i ${(System.nanoTime() - t0) / 1e9}%.2f s rows=$n cal=$cal%.2f s")
@@ -46,7 +27,7 @@ object BenchOne {
     }
     // closing bracket: a phase flip DURING the last rep shows up here,
     // not in any pre-rep cal (same lesson as Bench's per-query brackets)
-    println(f"BENCHONE ${keys.mkString(",")} cal_final=${calSpark()}%.2f s")
+    println(f"BENCHONE ${keys.mkString(",")} cal_final=${Harness.cal(spark, calRows)}%.2f s")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Optimization-round helper: write `.explain("formatted")` for declared
@@ -22,14 +21,7 @@ object PlanDump {
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(',').toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { key =>
       try {

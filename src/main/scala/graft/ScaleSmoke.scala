@@ -20,14 +20,8 @@ object ScaleSmoke {
     val mode = args.headOption.getOrElse("text")
     val factor = if (args.length > 1) args(1).toInt else 10
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
     if (mode == "vec") { vecSmoke(spark, sfDir, factor); spark.stop(); return }
     if (mode == "stream") { streamSmoke(spark, sfDir, factor); spark.stop(); return }
     if (mode == "stats") { statsSmoke(spark, sfDir, factor); spark.stop(); return }
@@ -38,7 +32,7 @@ object ScaleSmoke {
         (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
         concat(lit(s"r${i}_"),
           regexp_replace(col("text"), " ", s" r${i}_")).as("text"))
-    }.reduce(_ unionAll _).repartition(cpus.toInt).cache()
+    }.reduce(_ unionAll _).repartition(cpus).cache()
     val n = big.count() // materialize the synthetic corpus outside the timing
     val t0 = System.nanoTime()
     val pairs = api.TextOps.minhashNearDupPairs(big, "doc_id", "text", tau = 0.95).count()
@@ -53,55 +47,41 @@ object ScaleSmoke {
     spark.stop()
   }
 
-  /** Commit-time stats-harvest smoke (VERDICT r21 #7): commit the SAME
-    * `factor`-file staging through BOTH footer-harvest paths — the
-    * serial driver loop (threshold forced above the file count) and
-    * the r21 executor-side sweep (threshold at its default 16) — and
-    * report commit wall time per path, plus the two tables' decoded
-    * markers compared entry by entry (rows/stats/cols must be
-    * identical; SnapshotSpec asserts the same at 24 files, this
-    * measures the latency claim at realistic backfill file counts).
-    * Zero markers compared reports `markers_identical=false`.
+  /** Commit-time stats-harvest smoke (VERDICT r21 #7): commit a
+    * `factor`-file staging once, then time both footer-harvest paths
+    * over that committed entry — the serial driver loop and the
+    * executor-side sweep — and check each against the entry the
+    * commit's marker recorded (rows/stats/cols must be identical;
+    * SnapshotSpec asserts the same at 24 files, this measures the
+    * latency claim at realistic backfill file counts). Zero entries
+    * compared reports `markers_identical=false`.
     * Usage: runMain graft.ScaleSmoke stats [files] [sfDir]. */
   private def statsSmoke(spark: SparkSession, sfDir: String, files: Int): Unit = {
     import graft.sources.{Marker, Snapshots}
-    val scratch = s"${sys.props("java.io.tmpdir")}/graft_scale_stats"
-    val rootLoop = s"$scratch/loop"; val rootSweep = s"$scratch/sweep"
-    Fs.deleteDir(spark, rootLoop); Fs.deleteDir(spark, rootSweep)
+    val root = s"${sys.props("java.io.tmpdir")}/graft_scale_stats"
+    Fs.deleteDir(spark, root)
     val df = Tables.t(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
         col("l_extendedprice"), col("l_shipdate"))
       .repartition(files).cache()
     val n = df.count() // materialize outside the timings
-    val confKey = "spark.graft.statsHarvestDistributeMinFiles"
-    val prev = spark.conf.getOption(confKey)
-    def timedCommit(root: String, threshold: Int): Double = {
-      spark.conf.set(confKey, threshold.toString)
+    val v = Snapshots.commit(spark, root, df, expectedParent = 0L)
+    val recorded = Marker.decode(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")).get.entries
+    def timed(sweep: Boolean): (Double, Seq[Marker.Entry]) = {
       val t0 = System.nanoTime()
-      Snapshots.commit(spark, root, df, expectedParent = 0L)
-      (System.nanoTime() - t0) / 1e9
+      val got = recorded.map { e =>
+        Snapshots.harvest(spark, root, e.name,
+          Snapshots.entryFiles(spark, root, e.name), sweep)
+      }
+      ((System.nanoTime() - t0) / 1e9, got)
     }
-    try {
-      val secLoop = timedCommit(rootLoop, files + 1) // forced driver loop
-      val secSweep = timedCommit(rootSweep, 16)      // executor sweep engages
-      // marker payload identity: the same rows/stats/cols recorded per
-      // entry (entry names are fresh uuids, so they are left out)
-      def markers(root: String) =
-        Snapshots.versions(spark, root).map { v =>
-          val text = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")
-          Marker.decode(text).get.entries.map(e => (e.rows, e.stats, e.cols))
-        }
-      val (loop, sweep) = (markers(rootLoop), markers(rootSweep))
-      val compared = math.min(loop.size, sweep.size)
-      val same = compared > 0 && loop == sweep
-      println(f"SCALESMOKE_STATS files=$files rows=$n " +
-        f"driver_loop_sec=$secLoop%.2f executor_sweep_sec=$secSweep%.2f " +
-        f"markers_compared=$compared markers_identical=$same")
-    } finally prev match {
-      case Some(p) => spark.conf.set(confKey, p)
-      case None => spark.conf.unset(confKey)
-    }
+    val (secLoop, loop) = timed(sweep = false)
+    val (secSweep, sweep) = timed(sweep = true)
+    val same = recorded.nonEmpty && loop == recorded && sweep == recorded
+    println(f"SCALESMOKE_STATS files=$files rows=$n " +
+      f"driver_loop_sec=$secLoop%.2f executor_sweep_sec=$secSweep%.2f " +
+      f"markers_compared=${recorded.size} markers_identical=$same")
   }
 
   /** ANN scale smoke: replicate the embeddings corpus with a small

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   *   - dimension-class tables are always cached — that is exactly
   *     what a 100 TB job does before broadcasting them;
   *   - fact-class tables (lineitem/orders/events) are cached only
-  *     while their on-disk size stays under `spark.graft.factCacheMaxBytes`
-  *     (default 4 GiB). On this single-node bench all facts qualify
+  *     while their on-disk size stays under `FactCacheMaxBytes`
+  *     (4 GiB). On this single-node bench all facts qualify
   *     and ~114 queries share one scan; on a 100 TB cluster the facts
   *     exceed the bound and stream from parquet with pushdown/pruning
   *     intact (the `raw` path is what the pushdown-asserting keys use
@@ -29,12 +29,11 @@ object Tables {
 
   private val factTables = Set("lineitem", "orders", "events")
 
+  private val FactCacheMaxBytes = 4L << 30
+
   private def shouldCache(spark: SparkSession, dir: String, name: String): Boolean =
-    !factTables.contains(name) || {
-      val bound = spark.conf.getOption("spark.graft.factCacheMaxBytes")
-        .map(_.toLong).getOrElse(4L << 30)
-      Fs.len(spark, s"$dir/$name.parquet") < bound
-    }
+    !factTables.contains(name) ||
+      Fs.len(spark, s"$dir/$name.parquet") < FactCacheMaxBytes
 
   private val cache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]

@@ -1,23 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.io.File
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs parquet timestamps: DuckDB then reads our results with the
-      // same TIMESTAMP type the oracle produces (no INT96 ambiguity).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = Harness.session(Harness.cpus)
+    // µs parquet timestamps: DuckDB then reads our results with the
+    // same TIMESTAMP type the oracle produces (no INT96 ambiguity).
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    new File(outDir).mkdirs()
     // a key that throws writes NO parquet dir and silently vanishes
     // from the driver's correctness artifact (round 13: 15 crashed
     // keys left no trace); record failures explicitly so a crashed
@@ -41,24 +35,9 @@ object Verify {
       spark.stop()
     } catch { case t: Throwable => primary = t; throw t
     } finally try {
-      // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-      // — a tab or CR in builder-authored SQL would otherwise make the
-      // driver's json.load fail and silently zero the round's correctness.
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val json = SparkEntry.oracleSql
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-      val errJson = errors
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
+      val json = new ObjectMapper()
+      json.writeValue(new File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql.asJava)
+      json.writeValue(new File(s"$outDir/verify_errors.json"), errors.asJava)
     } catch { case w: Throwable =>
       if (primary == null) throw w
       primary.addSuppressed(w)

@@ -522,6 +522,14 @@ object Snapshots {
     * (the bounded-stats rule public formats apply — [public: Delta
     * records stats for the first 32 data-skipping columns]). */
   private val StatsColCap = 16
+  /** Entries of at least this many files harvest their footers in ONE
+    * Spark job (an executor-side sweep) instead of the driver loop: a
+    * compaction/backfill staging thousands of files must not pay
+    * thousands of SERIAL remote footer reads inside the commit
+    * (VERDICT r20 wrong #2). Below it, the driver loop avoids a job's
+    * fixed scheduling cost — the common partition-scoped commit
+    * stages a handful of files. */
+  private val StatsSweepMinFiles = 16
   /** String min/max longer than this are not recorded (parquet's own
     * truncated binary stats stay valid bounds, but a short marker is
     * the point of manifest-level skipping). */
@@ -648,35 +656,37 @@ object Snapshots {
     } finally r.close()
   }
 
-  /** Files at or past this count harvest their footers in ONE Spark
-    * job (an executor-side sweep) instead of the driver loop: a
-    * compaction/backfill staging thousands of files must not pay
-    * thousands of SERIAL remote footer reads inside the commit
-    * (VERDICT r20 wrong #2). Below it, the driver loop avoids a
-    * job's fixed scheduling cost — the common partition-scoped commit
-    * stages a handful of files. Conf-tunable so the byte-identity
-    * spec can force both paths over the same data. */
-  private def statsDistributeMinFiles(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.statsHarvestDistributeMinFiles")
-      .map(_.toInt).getOrElse(16)
+  /** ONE pass over the parquet FOOTERS of staged entry `entry` —
+    * O(#files) metadata reads, zero data I/O: what its commit marker
+    * records. Entries of [[StatsSweepMinFiles]] or more files take the
+    * executor-side sweep ([[harvest]] with `sweep = true`). */
+  private def footerEntry(s: SparkSession, root: String,
+      entry: String): Marker.Entry = {
+    val files = entryFiles(s, root, entry)
+    harvest(s, root, entry, files, sweep = files.length >= StatsSweepMinFiles)
+  }
 
-  /** ONE driver pass over the parquet FOOTERS of staged entry `entry`
-    * — O(#files) metadata reads, zero data I/O: what its commit marker
-    * records. Row count; min/max for up to [[StatsColCap]] top-level
+  /** The data files of entry `entry`, name-sorted so WHICH columns
+    * land under the stats cap is a pure function of the staged data,
+    * not of listing order — markers stay reproducible. */
+  private[graft] def entryFiles(s: SparkSession, root: String,
+      entry: String): Seq[String] =
+    Fs.dataFiles(s, s"${dataRoot(root)}/$entry").map(_._1).sorted
+
+  /** The marker record of entry `entry` from the footers of its
+    * `files`: row count; min/max for up to [[StatsColCap]] top-level
     * columns, where a column with any unusable chunk stats records
     * nothing (absent = unknown = never pruned), so recorded ranges are
     * always true bounds; and the union of the files' top-level column
     * names, which [[readRange]] uses to decide WITHOUT I/O whether
-    * pruning crossed a schema-evolution boundary. */
-  private def footerEntry(s: SparkSession, root: String,
-      entry: String): Marker.Entry = {
+    * pruning crossed a schema-evolution boundary. `sweep` reads the
+    * footers in ONE Spark job instead of a driver loop; both paths
+    * record the same entry. */
+  private[graft] def harvest(s: SparkSession, root: String, entry: String,
+      files: Seq[String], sweep: Boolean): Marker.Entry = {
     val dir = s"${dataRoot(root)}/$entry"
-    // name-sorted so WHICH columns land under the cap is a pure
-    // function of the staged data, not of listing order — markers
-    // stay reproducible
-    val files = Fs.dataFiles(s, dir).map(_._1).sorted
     val perFile: Seq[(Long, Seq[String], Seq[ChunkStatEvent])] =
-      if (files.length < statsDistributeMinFiles(s)) {
+      if (!sweep) {
         val conf = s.sessionState.newHadoopConf()
         files.map(n => fileFooterInfo(conf, s"$dir/$n"))
       } else {

@@ -1,12 +1,19 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+/** What the mains share: the session factory's settings, and the
+  * failure-isolation policy (VERDICT r15 #8): per-key isolation for
+  * ordinary failures, but a fatal JVM error must propagate — after
+  * being recorded — so a corrupted JVM cannot keep producing
+  * plausible-looking artifacts. */
+class HarnessSpec extends SparkSpec {
 
-/** Failure-isolation policy for the driver-facing mains
-  * (VERDICT r15 #8): per-key isolation for ordinary failures, but a
-  * fatal JVM error must propagate — after being recorded — so a
-  * corrupted JVM cannot keep producing plausible-looking artifacts. */
-class HarnessSpec extends AnyFunSuite {
+  test("the shared spark fixture is the factory's local[4] UTC session, UI off") {
+    assert(spark.sparkContext.master === "local[4]")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
 
   test("guarded records and swallows a NonFatal failure") {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Graft
 import graft.plans.LshBandRewrite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SURVEY §4.1's custom optimizer rule: brute-force jaccard joins
@@ -147,6 +148,21 @@ class PlanRuleSpec extends SparkSpec {
     LshBandRewrite.install(spark)
     val s = spark
     import s.implicits._
+    def pairs(q: DataFrame, banded: Boolean): Set[(Long, Long)] = {
+      spark.conf.set(LshBandRewrite.EnabledKey, banded.toString)
+      try q.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+      finally spark.conf.set(LshBandRewrite.EnabledKey, "false")
+    }
+    // the kept original predicate means NO false positives, ever;
+    // identical sets agree on every minhash -> collide in every band:
+    // J=1 pairs are structurally immune to LSH misses
+    def check(q: DataFrame, j1: Set[(Long, Long)]): Unit = {
+      val brute = pairs(q, banded = false)
+      val banded = pairs(q, banded = true)
+      assert(banded.subsetOf(brute), s"invented pairs: ${banded -- brute}")
+      assert(j1.nonEmpty, "corpus should contain set-equal pairs")
+      assert(j1.subsetOf(banded), s"missed J=1 pairs: ${j1 -- banded}")
+    }
     // random small-alphabet docs: plenty of set-equal (J=1) pairs plus
     // a band of partial overlaps around the tau=0.6 threshold
     val rnd = new scala.util.Random(7)
@@ -158,23 +174,23 @@ class PlanRuleSpec extends SparkSpec {
       array_sort(array_distinct(split(col("txt"), " "))).as("toks"))
     val l = sets.select(col("id").as("ida"), col("toks").as("ta"))
     val r = sets.select(col("id").as("idb"), col("toks").as("tb"))
-    def q = l.join(r, expr("sorted_jaccard_min(ta, tb, 0.6) >= 0.6") &&
-      col("ida") < col("idb")).select(col("ida"), col("idb"))
-    val brute = q.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-    spark.conf.set(LshBandRewrite.EnabledKey, "true")
-    val banded = try q.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
-      finally spark.conf.set(LshBandRewrite.EnabledKey, "false")
-    // the kept original predicate means NO false positives, ever
-    assert(banded.subsetOf(brute), s"invented pairs: ${banded -- brute}")
-    // identical sets agree on every minhash -> collide in every band:
-    // J=1 pairs are structurally immune to LSH misses
     val local = docs.map { case (id, t) => id -> t.split(" ").toSet }.toMap
-    val j1 = (for {
-      a <- local.keys; b <- local.keys
-      if a < b && local(a) == local(b)
-    } yield (a, b)).toSet
-    assert(j1.nonEmpty, "corpus should contain set-equal pairs")
-    assert(j1.subsetOf(banded), s"missed J=1 pairs: ${j1 -- banded}")
+    check(
+      l.join(r, expr("sorted_jaccard_min(ta, tb, 0.6) >= 0.6") &&
+        col("ida") < col("idb")).select(col("ida"), col("idb")),
+      (for {
+        a <- local.keys; b <- local.keys
+        if a < b && local(a) == local(b)
+      } yield (a, b)).toSet)
+    // the raw-text form a user writes over the real corpus: no equi
+    // key, token_jaccard filter; its J=1 pairs come from brute force
+    val corpus = Tables.t(spark, sf, "documents").select("doc_id", "text")
+    val la = corpus.select(col("doc_id").as("ida"), col("text").as("sa"))
+    val rb = corpus.select(col("doc_id").as("idb"), col("text").as("sb"))
+    def textJoin(tau: Double) = la.join(rb,
+      expr(s"token_jaccard(sa, sb) >= $tau") && col("ida") < col("idb"))
+      .select(col("ida"), col("idb"))
+    check(textJoin(0.95), pairs(textJoin(1.0), banded = false))
   }
 
   test("tau <= 0 (a vacuous predicate) is left alone even when enabled") {

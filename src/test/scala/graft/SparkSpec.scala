@@ -8,13 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf: String = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The mains' session factory at a fixed 4 cores, whatever
+    * `$SPARK_GRAFT_CPUS` says. */
+  lazy val spark: SparkSession = Harness.session(4)
 
   override def afterAll(): Unit = {
     // shared across suites in one JVM; do not stop
