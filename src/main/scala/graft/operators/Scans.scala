@@ -625,10 +625,10 @@ object Scans {
     // RelationProvider (sources/SnapshotSource.scala) — CREATE
     // TEMPORARY VIEW ... USING with versionAsOf '1' (time travel) and
     // without (latest), then a plain UNION ALL query over the views.
-    // The relation is a HadoopFsRelation over the resolved manifest's
-    // immutable dirs, so the plan is the NATIVE vectorized parquet
-    // FileScan with pushdown/pruning (plan-asserted in SnapshotSpec),
-    // not a row-converting shim. Oracle: identical to
+    // The relation is a HadoopFsRelation over a SnapshotFileIndex of
+    // the resolved manifest's immutable entries, so the plan is the
+    // NATIVE vectorized parquet FileScan with pushdown/pruning
+    // (plan-asserted in SnapshotSpec), not a row-converting shim. Oracle: identical to
     // sink_snapshot_isolation — the Scala API and the SQL surface
     // must agree bit-for-bit on both snapshots.
     "scan_snapshot_sql" -> { (s, d) =>
@@ -730,10 +730,11 @@ object Scans {
     // each entry's column min/max in the marker (same footer pass as
     // the row counts, zero extra I/O), and Snapshots.readRange prunes
     // a range read to the INTERSECTING entries from ONE marker read —
-    // before any file listing or footer fetch. Here orders committed
-    // partition-granular by year gets a 1995-1996 range scan: 2 of
-    // the driver data's 7 entries plan, 5 are skipped as pure
-    // metadata (entry-level skip is plan-asserted in SnapshotSpec,
+    // before any file listing or footer fetch — by the rule SQL scans
+    // and stream batches share (SnapshotFileIndex.prune). Here orders
+    // committed partition-granular by year gets a 1995-1996 range
+    // scan: 2 of the driver data's 7 entries plan, 5 are skipped as
+    // pure metadata (entry-level skip is plan-asserted in SnapshotSpec,
     // along with long/double/string kinds on non-partition columns).
     // At 100 TB this is the stats layer public formats put in their
     // manifests: a clustered range query never lists the table.

@@ -26,10 +26,12 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
   *     aligned with `data`.
   *     - rows: the entry's row count; `-1` = unknown.
   *     - stats: `-` (no ranges) or comma-joined `col=kind:min:max`
-  *       triples. `kind` is `l` (signed integral, `Long.toString`
+  *       triples. `kind` is `l` (a plain signed integral column — no
+  *       date, time, decimal or unsigned annotation; `Long.toString`
   *       bounds), `d` (floating, `Double.toString` bounds) or `s`
   *       (printable-ASCII string). A column without a triple has no
-  *       recorded range and is never pruned.
+  *       recorded range and is never pruned ([[SnapshotFileIndex.prune]]
+  *       is the one reader of these ranges).
   *     - cols: the entry's top-level column names, comma-joined; `-` =
   *       no columns; `?` = unknown (inherited from a marker that had no
   *       `cols` field).

@@ -1,9 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, StreamSourceProvider}
@@ -19,22 +16,22 @@ import org.apache.spark.sql.types.StructType
   *   SELECT ... FROM t;          -- or spark.read.format("graft-snapshot")
   * }}}
   *
-  * Resolution happens ONCE, at relation creation: the manifest of
-  * `versionAsOf` (default: latest) is resolved to its immutable data
-  * dirs and the relation is a [[HadoopFsRelation]] over exactly those
-  * dirs — the pattern public commit-log formats use on Spark (Delta's
-  * DeltaLog.createRelation builds a HadoopFsRelation over the files
-  * its log names). That buys the NATIVE parquet scan: vectorized
-  * reader, whole-stage codegen, column pruning and predicate pushdown
-  * all apply (the plan shows `FileScan parquet` with PushedFilters /
-  * ReadSchema — asserted in ScanSpec), instead of a row-converting
-  * V1 TableScan shim. Snapshot isolation carries over for free: the
-  * dirs are immutable and the file listing is pinned at creation, so
-  * the view keeps answering from its resolved version however many
-  * commits land after it.
+  * Resolution happens ONCE, at relation creation: the marker of
+  * `versionAsOf` (default: latest) is resolved to its immutable
+  * entries and the relation is the one snapshot scan,
+  * [[Snapshots.relation]] over a [[SnapshotFileIndex]] — the pattern
+  * public commit-log formats use on Spark (Delta's
+  * DeltaLog.createRelation builds a HadoopFsRelation over the files its
+  * log names). That buys the NATIVE parquet scan (`FileScan parquet`
+  * with PushedFilters / ReadSchema — asserted in SnapshotSpec) plus
+  * entry skipping by recorded min/max, instead of a row-converting V1
+  * TableScan shim. Snapshot isolation carries over for free: the
+  * entries are immutable and listed once at creation, so the view
+  * keeps answering from its resolved version however many commits
+  * land after it.
   *
   * Schema is the manifest's merged parquet schema (one footer-merge
-  * read at creation), so add-column evolution surfaces old rows with
+  * job at creation), so add-column evolution surfaces old rows with
   * nulls — same semantics as [[Snapshots.readAsOf]].
   *
   * Write paths stay with the Scala API ([[Snapshots.commit]] family):
@@ -65,29 +62,22 @@ class SnapshotSource extends RelationProvider with StreamSourceProvider
   with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
 
+  private def rootOf(parameters: Map[String, String]): String =
+    parameters.getOrElse("path", throw new IllegalArgumentException(
+      "graft-snapshot requires option 'path' (the table root)"))
+
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
-    val root = parameters.getOrElse("path",
-      throw new IllegalArgumentException(
-        "graft-snapshot requires option 'path' (the table root)"))
+    val root = rootOf(parameters)
     val version = parameters.get("versionAsOf").map(_.toLong).getOrElse(
       Snapshots.latest(spark, root).getOrElse(
         throw new NoSuchElementException(
           s"no committed snapshot under $root")))
-    val dirs = Snapshots.manifestDirs(spark, root, version)
-    // one metadata-only schema resolution over the manifest dirs
-    // (footer merge — the readAsOf evolution semantics)
-    val schema: StructType =
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema
-    SnapshotSource.relationOver(spark, dirs, schema)
+    Snapshots.relation(spark, root, Snapshots.markerOf(spark, root, version).entries, None)
   }
 
   // ---- streaming source (commit-log tail) ----
-
-  private def rootOf(parameters: Map[String, String]): String =
-    parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-snapshot requires option 'path' (the table root)"))
 
   override def sourceSchema(sqlContext: SQLContext,
       schema: Option[StructType], providerName: String,
@@ -121,17 +111,17 @@ class SnapshotSource extends RelationProvider with StreamSourceProvider
 object SnapshotSource {
   // one entry per root, replaced on version change — bounded by the
   // number of distinct tables a session streams from. The entry is
-  // fingerprinted by the RESOLVED MANIFEST DIRS, not the version
+  // fingerprinted by the RESOLVED MANIFEST ENTRIES, not the version
   // number alone (r19 advice): a table deleted and recreated at the
   // same path can reach the same version with a different schema, but
-  // its staged dirs carry fresh uuids, so the dir list disagrees and
+  // its staged dirs carry fresh uuids, so the entry list disagrees and
   // the stale entry is replaced.
   private val schemaCache =
     scala.collection.concurrent.TrieMap
       .empty[String, (Long, Seq[String], StructType)]
 
   /** Merged schema of `root`'s LATEST manifest, memoized per
-    * (version, manifest dirs) so the streaming provider's
+    * (version, manifest entries) so the streaming provider's
     * analysis-time and start-time resolutions pay the footer merge
     * once. */
   private[sources] def latestSchema(spark: SparkSession, root: String): StructType = {
@@ -139,39 +129,23 @@ object SnapshotSource {
       throw new NoSuchElementException(
         s"no committed snapshot under $root — a snapshot stream needs " +
           "an existing table (or an explicit .schema)"))
-    val dirs = Snapshots.manifestDirs(spark, root, v)
+    val entries = Snapshots.markerOf(spark, root, v).entries
+    val names = entries.map(_.name)
     schemaCache.get(root) match {
-      case Some((cv, cdirs, sch)) if cv == v && cdirs == dirs => sch
+      case Some((cv, cnames, sch)) if cv == v && cnames == names => sch
       case _ =>
-        val sch = spark.read.option("mergeSchema", "true")
-          .parquet(dirs: _*).schema
-        schemaCache.put(root, (v, dirs, sch))
+        val sch = Snapshots.relation(spark, root, entries, None).dataSchema
+        schemaCache.put(root, (v, names, sch))
         sch
     }
-  }
-
-  /** The shared relation builder: a HadoopFsRelation over exactly
-    * `dirs` with a caller-declared schema (the parquet reader
-    * null-fills columns missing in a file and ignores extras, so the
-    * declared schema doubles as evolution alignment). */
-  private[sources] def relationOver(spark: SparkSession, dirs: Seq[String],
-      schema: StructType): HadoopFsRelation = {
-    val index = new InMemoryFileIndex(
-      spark, dirs.map(new Path(_)), Map.empty, Some(schema))
-    HadoopFsRelation(
-      location = index,
-      partitionSchema = StructType(Nil), // the user column lives IN the files
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map("mergeSchema" -> "true"))(spark)
   }
 }
 
 /** V1 micro-batch source over the commit log. Offsets are VERSION
   * NUMBERS (`json` = the number): `getOffset` is one `_commits`
-  * listing, `getBatch(a, b)` is a file relation over the manifest
-  * diff's dirs (a, b] — standing entries never re-read. The relation
+  * listing, `getBatch(a, b)` is the snapshot scan over the manifest
+  * diff's entries (a, b] — standing entries never re-read, added ones
+  * skipped by `b`'s recorded stats like a SQL scan's. The relation
   * carries the DECLARED schema, so every batch is plan-compatible
   * with the first (columns added by later evolution are invisible
   * until a stream restart; columns missing in old files surface
@@ -225,9 +199,9 @@ class SnapshotStreamSource(spark: SparkSession, root: String,
     val fromV = start.map(versionOf).getOrElse(startingVersion)
     val endV = versionOf(end)
     deliveredV = math.max(deliveredV, endV)
-    val dirs = Snapshots.addedDirsBetween(spark, root, fromV, endV)
+    val added = Snapshots.addedDirsBetween(spark, root, fromV, endV)
     org.apache.spark.sql.graftbridge.RelationBridge.streamingFrame(
-      spark, SnapshotSource.relationOver(spark, dirs, declared))
+      spark, Snapshots.relation(spark, root, added, Some(declared)))
   }
 
   override def stop(): Unit = ()

@@ -4,7 +4,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual,
+  LessThanOrEqual, Literal}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.Fs
 
@@ -51,6 +55,9 @@ import graft.Fs
   *     entry list at DataFrame-construction time; concurrent commits
   *     create NEW entries, so the resolved DataFrame keeps returning
   *     the same rows however long the query runs — snapshot isolation.
+  *     Every read (API, SQL, stream batches, the OCC verbs' current
+  *     state) plans through one scan, [[relation]], whose
+  *     [[SnapshotFileIndex]] skips entries by their recorded min/max.
   *   - **Optimistic concurrency.** A writer declares the parent
   *     version its new snapshot was derived from and claims
   *     `parent+1`. If another writer won that number first, the
@@ -538,7 +545,7 @@ object Snapshots {
   /** Only strings whose byte order equals their Java string order can
     * back a recorded range (parquet binary stats compare unsigned
     * byte-wise; printable ASCII is the subset where that matches). */
-  private def asciiSafe(v: String): Boolean =
+  private[sources] def asciiSafe(v: String): Boolean =
     v.length <= StatsStrCap && v.forall(c => c >= 0x20 && c <= 0x7e)
 
   /** One column chunk's contribution to an entry's recorded range. */
@@ -678,8 +685,8 @@ object Snapshots {
     * columns, where a column with any unusable chunk stats records
     * nothing (absent = unknown = never pruned), so recorded ranges are
     * always true bounds; and the union of the files' top-level column
-    * names, which [[readRange]] uses to decide WITHOUT I/O whether
-    * pruning crossed a schema-evolution boundary. `sweep` reads the
+    * names, which [[readRange]] uses to decide WITHOUT I/O whether the
+    * kept entries alone carry the whole snapshot's schema. `sweep` reads the
     * footers in ONE Spark job instead of a driver loop; both paths
     * record the same entry. */
   private[graft] def harvest(s: SparkSession, root: String, entry: String,
@@ -797,7 +804,7 @@ object Snapshots {
     * with a parse error (r18 advice), then names the marker in an
     * IllegalStateException if it never completes (a writer that died
     * between claim and write — surgically removable). */
-  private def markerOf(s: SparkSession, root: String, v: Long): Marker = {
+  private[sources] def markerOf(s: SparkSession, root: String, v: Long): Marker = {
     val path = s"${commitsDir(root)}/$v"
     val f = Fs.fs(s, root)
     var attempt = 0
@@ -829,18 +836,32 @@ object Snapshots {
   private def entriesOf(s: SparkSession, root: String, v: Long): Seq[String] =
     markerOf(s, root, v).names
 
-  private def dataDirs(root: String, entries: Seq[String]): Seq[String] =
-    entries.map(u => s"${dataRoot(root)}/$u")
-
-  private def readEntries(s: SparkSession, root: String,
-      entries: Seq[String]): DataFrame =
-    readDirs(s, dataDirs(root, entries))
-
   /** Absolute data dirs of snapshot `v`, resolved once from its
-    * immutable manifest — what the SQL surface ([[SnapshotSource]])
-    * plans its file scan over. */
+    * immutable manifest. */
   def manifestDirs(s: SparkSession, root: String, v: Long): Seq[String] =
-    dataDirs(root, entriesOf(s, root, v))
+    entriesOf(s, root, v).map(u => s"${dataRoot(root)}/$u")
+
+  /** THE snapshot scan: a parquet relation over exactly `entries`
+    * through one [[SnapshotFileIndex]]. A declared `schema` doubles as
+    * evolution alignment (the parquet reader null-fills a column a file
+    * lacks); without one, every footer is merged in one job, so an
+    * appended column surfaces on old rows as null — the add-column
+    * semantics every public format ships. */
+  private[sources] def relation(s: SparkSession, root: String,
+      entries: Seq[Marker.Entry], schema: Option[StructType]): HadoopFsRelation = {
+    val index = new SnapshotFileIndex(s, dataRoot(root), entries)
+    val format = new ParquetFileFormat
+    val dataSchema = schema.getOrElse(
+      format.inferSchema(s, Map("mergeSchema" -> "true"), index.allFiles)
+        .getOrElse(throw new IllegalStateException(
+          s"no data file under $root to read a schema from"))
+        .toNullable)
+    HadoopFsRelation(index, StructType(Nil), dataSchema, None, format, Map.empty)(s)
+  }
+
+  /** [[relation]] with the merged schema, as a DataFrame. */
+  private def scan(s: SparkSession, root: String, entries: Seq[Marker.Entry]): DataFrame =
+    s.baseRelationToDataFrame(relation(s, root, entries, None))
 
   /** Max streaming batch id at or before version `v`, given its
     * marker `m` — shared by the commit-time fold ([[claim]]) and replay
@@ -858,15 +879,11 @@ object Snapshots {
   /** Read snapshot `v` (time travel). The manifest is resolved NOW
     * and its entries are immutable — the returned DataFrame yields
     * the same rows for its whole lifetime regardless of later
-    * commits. `mergeSchema` makes appended columns visible: an append
-    * commit may carry a WIDER schema than the standing dirs (schema
-    * evolution), and old rows surface the new column as null — the
-    * add-column semantics every public format ships. */
+    * commits. An append commit may carry a WIDER schema than the
+    * standing entries (schema evolution): old rows surface the new
+    * column as null. */
   def readAsOf(s: SparkSession, root: String, v: Long): DataFrame =
-    readEntries(s, root, entriesOf(s, root, v))
-
-  private def readDirs(s: SparkSession, dirs: Seq[String]): DataFrame =
-    s.read.option("mergeSchema", "true").parquet(dirs: _*)
+    scan(s, root, markerOf(s, root, v).entries)
 
   /** Read the latest committed snapshot. */
   def read(s: SparkSession, root: String): DataFrame = {
@@ -875,35 +892,15 @@ object Snapshots {
     readAsOf(s, root, v)
   }
 
-  /** MANIFEST-LEVEL DATA SKIPPING (the column-bounds half of per-entry
-    * statistics; [public: Delta per-file min/max stats, Iceberg
-    * manifest column bounds]): read snapshot `asOf` (latest when -1)
-    * filtered to `lo <= column <= hi`, planning the scan over ONLY the
-    * manifest entries whose RECORDED min/max intersects the range —
-    * decided from ONE marker read, before any file listing or footer
-    * I/O. At 100 TB a range query over a sorted/clustered layout plans
-    * the matching entries, not the table's worth of file metadata.
-    *
-    * Pruning is an optimization, never a correctness filter: entries
-    * with no recorded range for `column` (pre-stats markers, beyond
-    * the [[StatsColCap]] column cap, non-ASCII strings, unsupported
-    * types) are always read, and the real predicate is applied on top
-    * of the pruned scan (parquet row-group stats then skip within
-    * kept entries). Bounds are inclusive; pass values of the column's
-    * own family — integral/floating for `l`/`d` columns, String for
-    * `s` — a mismatched family just disables pruning.
-    *
-    * SCHEMA-STABLE like cdc (r19 advice's rule): when pruning drops
-    * entries, the output is aligned to the FULL snapshot's union
-    * schema (a column living only in pruned entries surfaces
-    * null-typed, never disappears — and RANGE-FILTERING on such a
-    * column returns the schema-stable empty result instead of a
-    * resolution error). Whether pruning crossed an evolution boundary
-    * is decided from the marker's per-entry column-name lists — zero
-    * I/O on the common never-evolved table; only an actual boundary
-    * (or a legacy marker without the `cols` field) pays a one-sampled-
-    * file-per-entry union-schema probe (O(manifest), entries are
-    * single-write uniform — never a table listing). */
+  /** Snapshot `asOf` (latest when -1) filtered to `lo <= column <= hi`
+    * (inclusive), planned over only the entries whose recorded min/max
+    * can hold a match — [[SnapshotFileIndex.prune]], the rule SQL and
+    * stream scans apply, decided from one marker read before any
+    * listing. An entry without a usable range for the bounds' family
+    * is always read, and the real filter runs on top. The output keeps
+    * the whole snapshot's schema: when the entries record different
+    * (or unknown) columns, the schema is merged over all of them, so a
+    * column living only in pruned entries surfaces as null. */
   def readRange(s: SparkSession, root: String, column: String,
                 lo: Any, hi: Any, asOf: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -914,50 +911,19 @@ object Snapshots {
       s"asOf must be a committed version (>= 1) or -1 for latest, got $asOf")
     val v = if (asOf >= 1L) asOf else latest(s, root).getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    val m = markerOf(s, root, v)
-    val entries = m.names
-    val kept = m.entries.filter { e =>
-      e.stats.get(column) match {
-        case Some(st) => rangeOverlaps(st.kind, st.min, st.max, lo, hi)
-        case None => true // no recorded range — must read
-      }
-    }.map(_.name)
-    // all-pruned still plans over the full manifest: the predicate
-    // yields the schema-stable empty result and row-group stats skip
-    // every block — no special-cased empty relation
-    val keptAll = kept.isEmpty || kept.size == entries.size
-    val base = readEntries(s, root, if (keptAll) entries else kept)
-    val aligned =
-      if (keptAll) base
-      else {
-        // zero-I/O boundary test: pruning provably cannot change the
-        // output schema ONLY when every entry records the IDENTICAL
-        // ordered column list (order matters — mergeSchema's union
-        // order depends on which entries survive, and positional
-        // consumers must not see reordered columns; review finding).
-        // An entry with unknown columns answers conservatively yes.
-        val cols = m.entries.map(_.cols)
-        val boundary = cols.contains(None) || cols.distinct.size > 1
-        if (!boundary) base
-        else {
-          // evolution boundary (or legacy marker): one sampled file
-          // per MANIFEST entry re-derives the full union schema
-          val samples = entries.flatMap { u =>
-            Fs.dataFiles(s, s"${dataRoot(root)}/$u").sortBy(_._1).headOption
-              .map { case (name, _) => s"${dataRoot(root)}/$u/$name" }
-          }
-          val full = readDirs(s, samples).schema
-          if (full.fieldNames.toSeq == base.columns.toSeq) base
-          else base.select(full.map { f =>
-            if (base.columns.contains(f.name)) qcol(f.name)
-            else lit(null).cast(f.dataType).as(f.name)
-          }.toSeq: _*)
-        }
-      }
-    // the real predicate goes on AFTER alignment (review finding): a
-    // range on a column living only in pruned entries must resolve
-    // against the null-filled seat, not crash analysis
-    aligned.filter(qcol(column) >= lit(lo) && qcol(column) <= lit(hi))
+    val entries = markerOf(s, root, v).entries
+    val (loL, hiL) = (Literal(lo), Literal(hi))
+    val at = AttributeReference(column, loL.dataType)()
+    val kept = SnapshotFileIndex.prune(entries,
+      Seq(GreaterThanOrEqual(at, loL), LessThanOrEqual(at, hiL)))
+    // pruning cannot change the merged schema (columns AND their order)
+    // when every entry records the same known column list
+    val sameCols = entries.map(_.cols).distinct.size == 1 && entries.head.cols.isDefined
+    val schema =
+      if (kept.size == entries.size || (kept.nonEmpty && sameCols)) None
+      else Some(relation(s, root, entries, None).dataSchema)
+    s.baseRelationToDataFrame(relation(s, root, kept, schema))
+      .filter(qcol(column) >= lit(lo) && qcol(column) <= lit(hi))
   }
 
   /** Column reference by EXACT top-level name — backquoted (with
@@ -967,59 +933,6 @@ object Snapshots {
   private def qcol(name: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.col(
       "`" + name.replace("`", "``") + "`")
-
-  /** Does the recorded `[mn,mx]` intersect `[lo,hi]`? Unknown kinds or
-    * a predicate-value family that does not match the recorded kind
-    * answer true (prune nothing) — mirroring the read-everything
-    * default for missing stats. */
-  private def rangeOverlaps(kind: Char, mn: String, mx: String,
-                            lo: Any, hi: Any): Boolean = {
-    // NaN and ±Infinity predicates disable pruning rather than crash
-    // BigDecimal's double constructor (review finding) — the real
-    // filter handles them fine
-    def num(a: Any): Option[BigDecimal] = a match {
-      case n: Byte => Some(BigDecimal(n.toInt))
-      case n: Short => Some(BigDecimal(n.toInt))
-      case n: Int => Some(BigDecimal(n))
-      case n: Long => Some(BigDecimal(n))
-      case n: Float =>
-        if (n.isNaN || n.isInfinity) None else Some(BigDecimal(n.toDouble))
-      case n: Double =>
-        if (n.isNaN || n.isInfinity) None else Some(BigDecimal(n))
-      case _ => None
-    }
-    // integral bounds only accept INTEGRAL predicate values: the real
-    // filter widens a long column to double against a double literal
-    // (precision loss above 2^53), while an exact BigDecimal test here
-    // could prune an entry whose widened rows WOULD match — a
-    // floating predicate on an 'l' column just disables pruning
-    // (review finding)
-    def intNum(a: Any): Option[BigDecimal] = a match {
-      case _: Byte | _: Short | _: Int | _: Long => num(a)
-      case _ => None
-    }
-    kind match {
-      case 'l' => (intNum(lo), intNum(hi)) match {
-        case (Some(l), Some(h)) => BigDecimal(mx) >= l && BigDecimal(mn) <= h
-        case _ => true
-      }
-      case 'd' => (num(lo), num(hi)) match {
-        // double bounds can be ±Infinity — parseDouble reads those;
-        // the comparison happens in double space, the same widening
-        // Spark applies to the real predicate
-        case (Some(l), Some(h)) =>
-          java.lang.Double.parseDouble(mx) >= l.toDouble &&
-            java.lang.Double.parseDouble(mn) <= h.toDouble
-        case _ => true
-      }
-      case 's' => (lo, hi) match {
-        case (l: String, h: String) if asciiSafe(l) && asciiSafe(h) =>
-          mx.compareTo(l) >= 0 && mn.compareTo(h) <= 0
-        case _ => true
-      }
-      case _ => true
-    }
-  }
 
   /** Attempts an OCC verb makes before its last
     * [[SnapshotConflictException]] propagates to the caller. */
@@ -1061,7 +974,7 @@ object Snapshots {
         s"$root is partition-granular — a whole-dir commitTransform or " +
           "compact would downgrade it and break copy-on-write; use " +
           "replaceTransform, or compactPartitioned to optimize it")
-      commitWith(s, root, f(pm.map(m => readEntries(s, root, m.names))), parent, pm)
+      commitWith(s, root, f(pm.map(m => scan(s, root, m.entries))), parent, pm)
     }
 
   /** Copy-on-write read-modify-write with OCC retry: `f` maps the
@@ -1122,7 +1035,7 @@ object Snapshots {
     occ(s, root) { (parent, pm) =>
       val m = pm.getOrElse(
         throw new NoSuchElementException(s"no committed snapshot under $root"))
-      f(readEntries(s, root, m.names)) match {
+      f(scan(s, root, m.entries)) match {
         case None => parent
         case Some((next, alsoDrop)) =>
           replaceWith(s, root, next, partCol, parent, m, alsoDrop)
@@ -1367,20 +1280,20 @@ object Snapshots {
     * One shuffle per side on the key — the row-level CDC plan. */
   def cdc(s: SparkSession, root: String, fromV: Long, toV: Long,
           keys: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "cdc needs at least one key column")
-    val fromEntries = entriesOf(s, root, fromV)
-    val toEntries = entriesOf(s, root, toV)
-    val aOnly = fromEntries.filterNot(toEntries.toSet)
-    val bOnly = toEntries.filterNot(fromEntries.toSet)
-    def sideRead(entries: Seq[String]): Option[DataFrame] =
-      if (entries.nonEmpty) Some(readEntries(s, root, entries)) else None
-    val (aRead, bRead) = (sideRead(aOnly), sideRead(bOnly))
-    if (aRead.isEmpty && bRead.isEmpty) {
+    val fromEntries = markerOf(s, root, fromV).entries
+    val toEntries = markerOf(s, root, toV).entries
+    val (fromNames, toNames) = (fromEntries.map(_.name).toSet, toEntries.map(_.name).toSet)
+    val aOnly = fromEntries.filterNot(e => toNames(e.name))
+    val bOnly = toEntries.filterNot(e => fromNames(e.name))
+    def side(entries: Seq[Marker.Entry]): Option[HadoopFsRelation] =
+      if (entries.nonEmpty) Some(relation(s, root, entries, None)) else None
+    val (aRel, bRel) = (side(aOnly), side(bOnly))
+    if (aRel.isEmpty && bRel.isEmpty) {
       // identical manifests → no changes by construction; run the
       // pipeline over one empty slice of the snapshot (rare path, one
       // schema resolution) so the output schema matches the usual one
-      val empty = readEntries(s, root, toEntries).limit(0)
+      val empty = scan(s, root, toEntries).limit(0)
       return cdcFrames(empty, empty, keys)
     }
     // the OUTPUT schema must stay stable across batches (r19 advice):
@@ -1392,14 +1305,13 @@ object Snapshots {
     // order leads, so every batch of the same table lines up; a column
     // dropped between the versions (present only in fromV's removed
     // entries) trails.
-    val fullSchema = readEntries(s, root, toEntries).schema
-    val aSchema = aRead.map(_.schema).getOrElse(bRead.get.schema)
-    val bSchema = bRead.map(_.schema).getOrElse(aRead.get.schema)
+    val fullSchema = relation(s, root, toEntries, None).dataSchema
+    val aSchema = aRel.getOrElse(bRel.get).dataSchema
+    val bSchema = bRel.getOrElse(aRel.get).dataSchema
     val unionFields = (fullSchema.fields ++ aSchema.fields ++ bSchema.fields)
       .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
         (acc, f) => if (acc.exists(_.name == f.name)) acc else acc :+ f
       }
-    val allCols = unionFields.map(_.name)
     // keys stay STRICT against the pruned sides (review: the union
     // schema alone would let an all-null key side cross-join every
     // row null-safely instead of failing fast) — a side with no
@@ -1407,17 +1319,14 @@ object Snapshots {
     keys.foreach(k => require(
       aSchema.fieldNames.contains(k) && bSchema.fieldNames.contains(k),
       s"cdc key $k must exist in both snapshots' changed entries"))
-    def aligned(read: Option[DataFrame],
-        ownSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-      val base = read.getOrElse(s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], ownSchema))
-      allCols.foldLeft(base) { (df, c) =>
-        if (df.columns.contains(c)) df
-        else df.withColumn(c,
-          lit(null).cast(unionFields.find(_.name == c).get.dataType))
-      }.select(allCols.map(col): _*)
+    // each side declares the union's columns, in its own types where it
+    // has them: the scan null-fills the columns a side's files lack
+    def aligned(rel: Option[HadoopFsRelation], own: StructType): DataFrame = {
+      val schema = StructType(unionFields.map(f => own.find(_.name == f.name).getOrElse(f)))
+      s.baseRelationToDataFrame(rel.map(_.copy(dataSchema = schema)(s))
+        .getOrElse(relation(s, root, Nil, Some(schema))))
     }
-    cdcFrames(aligned(aRead, aSchema), aligned(bRead, bSchema), keys)
+    cdcFrames(aligned(aRel, aSchema), aligned(bRel, bSchema), keys)
   }
 
   /** The classification join over two aligned (same-column) sides. */
@@ -1448,21 +1357,22 @@ object Snapshots {
       .drop("_old_present", "_new_present")
   }
 
-  /** Absolute dirs of the entries ADDED between two committed versions
-    * (`fromV` exclusive, `toV` inclusive; `fromV <= 0` = from genesis)
-    * — the streaming tail's micro-batch scan roots ([[SnapshotSource]]):
-    * the manifest entries `toV` carries that `fromV` did not. Standing
+  /** The dir entries ADDED between two committed versions (`fromV`
+    * exclusive, `toV` inclusive; `fromV <= 0` = from genesis), as `toV`'s
+    * marker records them — the streaming tail's micro-batch scan
+    * ([[SnapshotSource]]): the manifest entries `toV` carries that
+    * `fromV` did not. Standing
     * entries are never re-read, so a 100 TB table streams out exactly
     * the bytes each commit appended. Requires an APPEND-ONLY history
     * over the range: a commit that rewrote or dropped standing entries
     * (replace / compact / full rewrite) is not representable as an
     * append stream and throws — the same contract public formats'
     * streaming sources enforce. */
-  def addedDirsBetween(s: SparkSession, root: String, fromV: Long,
-                       toV: Long): Seq[String] = {
+  private[graft] def addedDirsBetween(s: SparkSession, root: String,
+      fromV: Long, toV: Long): Seq[Marker.Entry] = {
     val fromEntries = checkpointEntries(s, root, fromV)
-    val toEntries = entriesOf(s, root, toV)
-    val rewritten = fromEntries.filterNot(toEntries.toSet)
+    val toEntries = markerOf(s, root, toV).entries
+    val rewritten = fromEntries.filterNot(toEntries.map(_.name).toSet)
     if (rewritten.nonEmpty)
       throw new IllegalStateException(
         s"snapshot stream requires append-only commits, but the range " +
@@ -1470,7 +1380,8 @@ object Snapshots {
           s"(${rewritten.take(3).mkString(", ")}…) — a replace/compact is " +
           "not representable as an append stream; restart from a fresh " +
           "checkpoint to re-read the full snapshot")
-    dataDirs(root, toEntries.filterNot(fromEntries.toSet))
+    val standing = fromEntries.toSet
+    toEntries.filterNot(e => standing(e.name))
   }
 
   /** Entries of a stream's checkpointed version (`from <= 0` =

@@ -577,7 +577,7 @@ object Streams {
     // The READ side of the snapshot table's streaming story (r19; the
     // write side is stream_snapshot_sink): `graft-snapshot` is also a
     // STREAMING SOURCE that tails the commit log — offsets ARE
-    // version numbers, and each micro-batch is a file relation over
+    // version numbers, and each micro-batch is the snapshot scan over
     // exactly the manifest entries its offset range ADDED
     // (Snapshots.addedDirsBetween), so standing data is never re-read
     // and exactly-once composes end to end: txnAppend in, commit-log

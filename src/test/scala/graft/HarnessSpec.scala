@@ -11,6 +11,8 @@ class HarnessSpec extends SparkSpec {
     assert(spark.sparkContext.master === "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    // set by the factory, not defaulted from a host whose zone is UTC
+    assert(spark.sparkContext.getConf.get("spark.sql.session.timeZone") === "UTC")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }

@@ -1,8 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions.{col, concat, lit}
 
@@ -10,27 +8,24 @@ import graft.sources.Snapshots
 
 /** Each commit verb decodes its parent's commit marker exactly once:
   * the marker is immutable, so a second read is pure remote-I/O cost
-  * on an object store. Counted with a `countfs:` filesystem that
-  * records every `open`. */
+  * on an object store. Counted with [[FaultFs]], which records every
+  * `open`. */
 class MarkerReadSpec extends SparkSpec {
 
   test("every commit verb opens its parent marker exactly once") {
     val s = spark
     import s.implicits._
-    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
-      classOf[CountingMarkerFs].getName)
     val dir = Files.createTempDirectory("graft_snap_count_").toString
-    val root = s"countfs:$dir/tbl"
-    def opens(v: Long): Int = CountingMarkerFs.opens(s"$dir/tbl/_commits/$v")
+    val root = s"faultfs:$dir/tbl"
+    def opens(v: Long): Int = FaultFs.opens(s"$dir/tbl/_commits/$v")
     /** Runs one verb and returns how often it opened marker `parent`. */
     def parentReads(parent: Long)(verb: => Any): Int = {
       assert(Snapshots.latest(spark, root) === Some(parent))
-      CountingMarkerFs.reset()
+      FaultFs.reset()
       verb
       opens(parent)
     }
-    spark.conf.set("spark.graft.snapshot.atomicCreateSchemes", "countfs")
-    try {
+    FaultFs.using(spark) {
       Snapshots.commitPartitioned(spark, root,
         Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 3, "c")).toDF("k", "p", "v"),
         "p", 0L)
@@ -72,26 +67,6 @@ class MarkerReadSpec extends SparkSpec {
       assert(Snapshots.read(spark, root).orderBy("k")
         .as[(Long, Int, String)].collect().toSeq ===
         Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 3, "c"), (4L, 4, "d")))
-    } finally spark.conf.unset("spark.graft.snapshot.atomicCreateSchemes")
+    }
   }
-}
-
-/** A RawLocalFileSystem answering for the `countfs:` scheme that
-  * counts `open` calls per path. */
-class CountingMarkerFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
-  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
-      : org.apache.hadoop.fs.FSDataInputStream = {
-    CountingMarkerFs.counts
-      .computeIfAbsent(f.toUri.getPath, _ => new AtomicInteger())
-      .incrementAndGet(): Unit
-    super.open(f, bufferSize)
-  }
-}
-
-object CountingMarkerFs {
-  private val counts = new ConcurrentHashMap[String, AtomicInteger]()
-  def reset(): Unit = counts.clear()
-  def opens(path: String): Int =
-    Option(counts.get(path)).map(_.get).getOrElse(0)
 }

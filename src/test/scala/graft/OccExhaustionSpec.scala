@@ -1,33 +1,27 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path}
-import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.sources.Snapshots
 import graft.sources.Snapshots.SnapshotConflictException
 
 /** Every read-modify-write verb retries conflicts through one OCC loop
-  * and gives up after a fixed number of attempts. Driven by a
-  * `conflictfs:` filesystem whose marker creates always lose the race:
-  * each attempt stages, fails its claim and must clean up after itself. */
+  * and gives up after a fixed number of attempts. Driven by [[FaultFs]]
+  * with its marker creates set to always lose the race: each attempt
+  * stages, fails its claim and must clean up after itself. */
 class OccExhaustionSpec extends SparkSpec {
 
   test("every OCC verb gives up after 10 lost claims, leaving only the seed's data") {
     val s = spark
     import s.implicits._
-    spark.sparkContext.hadoopConfiguration.set("fs.conflictfs.impl",
-      classOf[ConflictingMarkerFs].getName)
     val dir = Files.createTempDirectory("graft_snap_conflict_").toString
     def dataDirs(tbl: String): Set[String] =
       new java.io.File(s"$dir/$tbl/data").list().toSet
-    spark.conf.set("spark.graft.snapshot.atomicCreateSchemes", "conflictfs")
-    try {
-      val plain = s"conflictfs:$dir/plain"
-      val parted = s"conflictfs:$dir/parted"
+    FaultFs.using(spark) {
+      val plain = s"faultfs:$dir/plain"
+      val parted = s"faultfs:$dir/parted"
       Snapshots.commit(spark, plain, Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 0L)
       Snapshots.commitPartitioned(spark, parted,
         Seq((1L, 1, "a"), (2L, 2, "b"), (3L, 1, "c")).toDF("k", "p", "v"), "p", 0L)
@@ -51,41 +45,19 @@ class OccExhaustionSpec extends SparkSpec {
           Snapshots.txnAppend(spark, parted,
             Seq((4L, 3, "d")).toDF("k", "p", "v"), 0L, partCol = Some("p"))))
       val outcomes = verbs.map { case (name, tbl, verb) =>
-        ConflictingMarkerFs.creates.set(0)
-        ConflictingMarkerFs.conflicting = true
+        FaultFs.creates.set(0)
+        FaultFs.conflicting = true
         val threw =
           try { verb(); false }
           catch { case _: SnapshotConflictException => true }
-          finally ConflictingMarkerFs.conflicting = false
-        (name, threw, ConflictingMarkerFs.creates.get,
+          finally FaultFs.conflicting = false
+        (name, threw, FaultFs.creates.get,
           dataDirs(tbl) == seeds(tbl),
-          Snapshots.versions(spark, s"conflictfs:$dir/$tbl") == Seq(1L))
+          Snapshots.versions(spark, s"faultfs:$dir/$tbl") == Seq(1L))
       }
       assert(outcomes.filterNot(o => o._2 && o._3 == 10 && o._4 && o._5) === Nil,
         "(verb, threw conflict, marker creates, data/ = seed, log = seed) " +
           "must be (_, true, 10, true, true) for every verb")
-    } finally spark.conf.unset("spark.graft.snapshot.atomicCreateSchemes")
-  }
-}
-
-/** A RawLocalFileSystem answering for the `conflictfs:` scheme. While
-  * `conflicting` is set, every create under a `_commits/` dir counts
-  * and fails as already existing — another writer always won. */
-class ConflictingMarkerFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("conflictfs:///")
-
-  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
-      replication: Short, blockSize: Long,
-      progress: Progressable): FSDataOutputStream = {
-    if (ConflictingMarkerFs.conflicting && f.getParent.getName == "_commits") {
-      ConflictingMarkerFs.creates.incrementAndGet(): Unit
-      throw new org.apache.hadoop.fs.FileAlreadyExistsException(f.toString)
     }
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
   }
-}
-
-object ConflictingMarkerFs {
-  @volatile var conflicting = false
-  val creates = new AtomicInteger()
 }
