@@ -105,7 +105,7 @@ case class MvRewrite(session: SparkSession) extends Rule[LogicalPlan] {
   private def tryRewrite(groups: Seq[Expression],
       aggExprs: Seq[NamedExpression], cond: Option[Expression],
       mv: Mv): Option[LogicalPlan] = {
-    val mvScan = session.read.parquet(mv.dirs: _*).queryExecution.analyzed
+    val mvScan = Snapshots.readAsOf(session, mv.mvPath, mv.version).queryExecution.analyzed
     val mvAttr = mvScan.output.map(a => a.name -> a).toMap
     // a fact-side filter is admissible only over dimensions (exactness
     // proof in scanPath's doc) and with no subquery to re-plan
@@ -229,9 +229,9 @@ object MvRewrite {
 
   /** One registered materialized view. `mvPath` is the user-declared
     * summary root, a snapshot table ([[graft.sources.Snapshots]]);
-    * `version` is the committed summary version serving rewrites and
-    * `dirs` that version's data dirs, resolved once from its manifest
-    * so the rule plans its scan without reading a commit marker. Per
+    * `version` is the committed summary version serving rewrites, which
+    * the rule reads through the snapshot scan, and `dirs` that
+    * version's data dirs (introspection). Per
     * `dims` group the summary holds `s_<m>`/`c_<m>`/`mn_<m>`/`mx_<m>`
     * for every measure plus `cnt_rows`. When the fact is partitioned
     * and was registered via [[materializePartitioned]], `partCol`

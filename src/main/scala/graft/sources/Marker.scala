@@ -5,18 +5,20 @@ import scala.collection.immutable.ListMap
 import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonToken,
   StreamReadConstraints}
 import com.fasterxml.jackson.core.json.JsonReadFeature
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One decoded commit marker `_commits/<N>` of a snapshot table
   * ([[Snapshots]]): the manifest with each entry's recorded row count,
-  * column ranges and column names, the parent version, and the
-  * exactly-once ledger. [[Marker.encode]] and [[Marker.decode]] are the
+  * column ranges, column names and Spark schema, the parent version,
+  * and the exactly-once ledger. [[Marker.encode]] and [[Marker.decode]] are the
   * only writer and reader of marker content.
   *
   * '''Format.''' A marker is one flat JSON object whose values are all
   * strings, written in this field order:
   * {{{
   * {"data":"<e1> <e2> ..","rows":"<n1> <n2> ..","stats":"<s1> <s2> ..",
-  *  "cols":"<c1> <c2> ..","parent":"<P>","lb":"<L>"[,"batch":"<B>"]}
+  *  "cols":"<c1> <c2> .."[,"schemas":"<j0> <j1> ..","schema":"<i1> <i2> .."],
+  *  "parent":"<P>","lb":"<L>"[,"batch":"<B>"]}
   * }}}
   * (on one line, no whitespace between tokens).
   *   - `data`: the manifest entries relative to `data/`, space-joined —
@@ -26,15 +28,33 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
   *     aligned with `data`.
   *     - rows: the entry's row count; `-1` = unknown.
   *     - stats: `-` (no ranges) or comma-joined `col=kind:min:max`
-  *       triples. `kind` is `l` (a plain signed integral column — no
-  *       date, time, decimal or unsigned annotation; `Long.toString`
-  *       bounds), `d` (floating, `Double.toString` bounds) or `s`
-  *       (printable-ASCII string). A column without a triple has no
-  *       recorded range and is never pruned ([[SnapshotFileIndex.prune]]
-  *       is the one reader of these ranges).
+  *       triples. Each `kind` is pruned only by a literal of the
+  *       Catalyst types listed beside it ([[SnapshotFileIndex.prune]]
+  *       is the one reader of these ranges):
+  *       - `l`: a plain signed integral column — no date, time, decimal
+  *         or unsigned annotation; `Long.toString` bounds. Integral
+  *         literals.
+  *       - `d`: floating, `Double.toString` bounds. Integral and
+  *         floating literals.
+  *       - `s`: printable-ASCII string. String literals.
+  *       - `e`: INT32 DATE, epoch days. `DateType` literals.
+  *       - `t`: INT64 TIMESTAMP adjusted to UTC, epoch micros (MILLIS
+  *         scaled up). `TimestampType` literals.
+  *       - `n`: INT64 TIMESTAMP not adjusted to UTC, epoch micros
+  *         (MILLIS scaled up). `TimestampNTZType` literals.
+  *
+  *       A column without a triple (INT96, NANOS and DECIMAL columns
+  *       among them) has no recorded range and is never pruned.
   *     - cols: the entry's top-level column names, comma-joined; `-` =
   *       no columns; `?` = unknown (inherited from a marker that had no
   *       `cols` field).
+  *   - `schemas` and `schema`: the entries' Spark schemas, written only
+  *     when at least one entry records one, so a marker without them
+  *     encodes as before. `schemas` lists the distinct schemas, each a
+  *     `%XX`-escaped `StructType.json`, space-joined in order of first
+  *     use; `schema` is aligned with `data` and holds each entry's index
+  *     into that list, `?` = unknown. [[Snapshots.relation]] reads its
+  *     data schema from these instead of merging footers.
   *
   *     Column names and min/max values are `%XX`-escaped (two upper-
   *     case hex digits) for `%` `,` `:` `=` space `"` `\` and control
@@ -55,9 +75,11 @@ import com.fasterxml.jackson.core.json.JsonReadFeature
   *   - `parent` as a bare number (`"parent":0`).
   *   - no `lb`: [[lb]] is None and the ledger is found by walking the
   *     older markers' `batch` fields.
-  *   - no `rows` / `stats` / `cols` field, or one whose token count
-  *     does not match `data`: every entry reads as unknown rows (-1),
-  *     no ranges, unknown columns.
+  *   - no `rows` / `stats` / `cols` / `schema` field, or one whose
+  *     token count does not match `data`: every entry reads as unknown
+  *     rows (-1), no ranges, unknown columns, unknown schema. A
+  *     `schemas` token that does not parse, or an index outside the
+  *     list, is an unknown schema.
   *   - a `\` or control character written raw (not escaped) inside a
   *     token: read literally.
   *
@@ -79,9 +101,11 @@ private[graft] object Marker {
   /** A recorded `[min, max]` range of one column. */
   final case class Stat(kind: Char, min: String, max: String)
 
-  /** One manifest entry and what the marker records about it. */
+  /** One manifest entry and what the marker records about it.
+    * `schema` is the merge of its files' Spark schemas, None = unknown. */
   final case class Entry(name: String, rows: Long,
-      stats: ListMap[String, Stat], cols: Option[Seq[String]])
+      stats: ListMap[String, Stat], cols: Option[Seq[String]],
+      schema: Option[StructType] = None)
 
   /** An entry nothing is known about (inherited from a parent that
     * did not record it). */
@@ -113,6 +137,11 @@ private[graft] object Marker {
       case Some(Seq()) => "-"
       case Some(cs) => cs.map(escape).mkString(",")
     }))
+    val schemas = m.entries.flatMap(_.schema).distinct
+    if (schemas.nonEmpty) {
+      field("schemas", schemas.map(sch => escape(sch.json)))
+      field("schema", m.entries.map(_.schema.map(schemas.indexOf(_).toString).getOrElse("?")))
+    }
     g.writeStringField("parent", m.parent.toString)
     m.lb.foreach(x => g.writeStringField("lb", x.toString))
     m.batch.foreach(x => g.writeStringField("batch", x.toString))
@@ -165,7 +194,13 @@ private[graft] object Marker {
         .getOrElse(names.map(_ => ListMap.empty[String, Stat]))
       val cols = aligned("cols").map(_.map(colsOf))
         .getOrElse(names.map(_ => None))
-      Marker(names.indices.map(i => Entry(names(i), rows(i), stats(i), cols(i))),
+      val schemas = own.get("schemas").toSeq.flatMap(_.split(" "))
+        .map(tok => structOf(unescape(tok)))
+      val schema = aligned("schema")
+        .map(_.map(_.toIntOption.flatMap(schemas.lift).flatten))
+        .getOrElse(names.map(_ => None))
+      Marker(names.indices.map(i =>
+        Entry(names(i), rows(i), stats(i), cols(i), schema(i))),
         parent.getOrElse(-1L), lb, batch)
     }
   }
@@ -189,6 +224,14 @@ private[graft] object Marker {
     case "-" => Some(Seq.empty)
     case _ => Some(tok.split(",").toSeq.map(unescape))
   }
+
+  /** A `StructType.json` string as a schema; None when it does not
+    * parse to a struct. */
+  private[sources] def structOf(json: String): Option[StructType] =
+    try DataType.fromJson(json) match {
+      case st: StructType => Some(st)
+      case _ => None
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   private def escape(v: String): String =
     v.flatMap(c =>

@@ -59,10 +59,11 @@ private[sources] object SnapshotFileIndex extends PredicateHelper {
     * entry's recorded `[min, max]` of that column. The literal's
     * Catalyst type picks the family: integral against `l`, floating or
     * integral against `d`, short printable-ASCII strings (the harvest's
-    * rule) against `s`. Any
-    * other case — a NaN, date, timestamp or decimal literal, a cast
-    * column, no stats — keeps the entry, so no row the filter would
-    * keep is ever dropped. */
+    * rule) against `s`, and exactly `DateType` against `e`,
+    * `TimestampType` against `t`, `TimestampNTZType` against `n`. Any
+    * other case — a NaN, a decimal literal, a date literal against a
+    * timestamp range, a cast column, no stats — keeps the entry, so no
+    * row the filter would keep is ever dropped. */
   def prune(entries: Seq[Marker.Entry], filters: Seq[Expression]): Seq[Marker.Entry] = {
     val flipped = Map("=" -> "=", "<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
     val bounds = filters.flatMap(splitConjunctivePredicates).flatMap {
@@ -88,7 +89,9 @@ private[sources] object SnapshotFileIndex extends PredicateHelper {
       case _ => o.lt(mx, v) // >=
     }
     (st.kind, l.dataType) match {
-      case ('l', ByteType | ShortType | IntegerType | LongType) =>
+      // dates are epoch days, timestamps epoch micros: both sides Long
+      case ('l', ByteType | ShortType | IntegerType | LongType) | ('e', DateType) |
+          ('t', TimestampType) | ('n', TimestampNTZType) =>
         (st.min.toLongOption, st.max.toLongOption) match {
           case (Some(mn), Some(mx)) => outside(mn, mx, l.value.asInstanceOf[Number].longValue)
           case _ => false

@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.StructType
   * keeps answering from its resolved version however many commits
   * land after it.
   *
-  * Schema is the manifest's merged parquet schema (one footer-merge
-  * job at creation), so add-column evolution surfaces old rows with
+  * Schema is the manifest's merged schema, read from the marker (a
+  * marker written before schemas were recorded costs one footer-merge
+  * job instead), so add-column evolution surfaces old rows with
   * nulls — same semantics as [[Snapshots.readAsOf]].
   *
   * Write paths stay with the Scala API ([[Snapshots.commit]] family):
@@ -92,9 +93,6 @@ class SnapshotSource extends RelationProvider with StreamSourceProvider
       parameters: Map[String, String]): Source = {
     val spark = sqlContext.sparkSession
     val root = rootOf(parameters)
-    // the engine already resolved sourceSchema at analysis time; the
-    // per-(root, version) cache makes this second resolution free
-    // instead of re-running the full-manifest footer merge
     val declared = schema.getOrElse(SnapshotSource.latestSchema(spark, root))
     val maxPerTrigger = parameters.get("maxVersionsPerTrigger").map(_.toLong)
     maxPerTrigger.foreach(m => require(m >= 1L,
@@ -109,35 +107,13 @@ class SnapshotSource extends RelationProvider with StreamSourceProvider
 }
 
 object SnapshotSource {
-  // one entry per root, replaced on version change — bounded by the
-  // number of distinct tables a session streams from. The entry is
-  // fingerprinted by the RESOLVED MANIFEST ENTRIES, not the version
-  // number alone (r19 advice): a table deleted and recreated at the
-  // same path can reach the same version with a different schema, but
-  // its staged dirs carry fresh uuids, so the entry list disagrees and
-  // the stale entry is replaced.
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, (Long, Seq[String], StructType)]
-
-  /** Merged schema of `root`'s LATEST manifest, memoized per
-    * (version, manifest entries) so the streaming provider's
-    * analysis-time and start-time resolutions pay the footer merge
-    * once. */
+  /** Merged schema of `root`'s LATEST manifest, read from its marker. */
   private[sources] def latestSchema(spark: SparkSession, root: String): StructType = {
     val v = Snapshots.latest(spark, root).getOrElse(
       throw new NoSuchElementException(
         s"no committed snapshot under $root — a snapshot stream needs " +
           "an existing table (or an explicit .schema)"))
-    val entries = Snapshots.markerOf(spark, root, v).entries
-    val names = entries.map(_.name)
-    schemaCache.get(root) match {
-      case Some((cv, cnames, sch)) if cv == v && cnames == names => sch
-      case _ =>
-        val sch = Snapshots.relation(spark, root, entries, None).dataSchema
-        schemaCache.put(root, (v, names, sch))
-        sch
-    }
+    Snapshots.schemaOf(spark, root, Snapshots.markerOf(spark, root, v).entries)
   }
 }
 

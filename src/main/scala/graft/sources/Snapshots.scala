@@ -87,11 +87,12 @@ import graft.Fs
   *     COMPOSE: appends keep a copy-on-write table replaceable,
   *     compaction preserves granularity, restore survives a
   *     concurrent expire (dead dirs get the orphan grace window).
-  *   - **Markers carry per-entry row counts** (r20): staged entries
-  *     are footer-counted once at commit, inherited entries copy
-  *     forward — `history` reports sizes and the streaming source
+  *   - **Markers carry per-entry row counts, ranges and schemas**:
+  *     staged entries are footer-read once at commit, inherited entries
+  *     copy forward — `history` reports sizes, the streaming source
   *     rate-limits by volume ([[versionCapByRows]]) with zero data
-  *     I/O.
+  *     I/O, and a read takes its schema from the marker, so planning it
+  *     runs no footer-merge job.
   *   - **One marker codec.** [[Marker]] documents the marker format
   *     and is its only writer and reader; every verb decodes its
   *     parent's marker once and hands it to [[claim]].
@@ -560,34 +561,41 @@ object Snapshots {
   private case object StatAllNull extends ChunkStat
   private case class StatRange(kind: Char, mn: Any, mx: Any) extends ChunkStat
 
-  private def chunkStat(
-      c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData): ChunkStat = {
+  /** `rebased`: the file's dates and timestamps were written in the
+    * legacy hybrid calendar, so its raw stats are not the values a
+    * read returns — its date/timestamp chunks record no range. */
+  private def chunkStat(c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData,
+      rebased: Boolean): ChunkStat = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
     val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
-    val ann = c.getPrimitiveType.getLogicalTypeAnnotation
-    // plain signed ints, floats, and UTF8 strings; date/time/decimal/
-    // unsigned read fine but record no range (absent = never pruned)
-    val eligible = c.getPrimitiveType.getPrimitiveTypeName match {
-      case INT32 | INT64 => ann == null ||
-        (ann match {
-          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-          case _ => false
-        })
-      case FLOAT | DOUBLE => ann == null
-      case BINARY =>
-        ann.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-      case _ => false
+    // the marker kind (see Marker) of plain signed ints, DATE, MICROS/
+    // MILLIS timestamps, floats and UTF8 strings; INT96, NANOS, decimal
+    // and unsigned columns read fine but record no range (absent =
+    // never pruned). `scale` turns a stored value into the kind's unit.
+    val (kind, scale) = (c.getPrimitiveType.getPrimitiveTypeName,
+        c.getPrimitiveType.getLogicalTypeAnnotation) match {
+      case (INT32 | INT64, null) => ('l', 1L)
+      case (INT32 | INT64, i: IntLogicalTypeAnnotation) if i.isSigned => ('l', 1L)
+      case (INT32, _: DateLogicalTypeAnnotation) => ('e', 1L)
+      case (INT64, t: TimestampLogicalTypeAnnotation) if t.getUnit != TimeUnit.NANOS =>
+        (if (t.isAdjustedToUTC) 't' else 'n', if (t.getUnit == TimeUnit.MILLIS) 1000L else 1L)
+      case (FLOAT | DOUBLE, null) => ('d', 1L)
+      case (BINARY, _: StringLogicalTypeAnnotation) => ('s', 1L)
+      case _ => (' ', 1L)
     }
-    if (!eligible) StatIneligible
+    if (kind == ' ') StatIneligible
     else if (st == null || st.isEmpty || !st.hasNonNullValue) {
       if (st != null && st.isNumNullsSet && st.getNumNulls == c.getValueCount)
         StatAllNull
       else StatMissing
     } else c.getPrimitiveType.getPrimitiveTypeName match {
+      case INT32 | INT64 if kind != 'l' && rebased => StatMissing
       case INT32 | INT64 =>
-        StatRange('l', st.genericGetMin.asInstanceOf[Number].longValue(),
-          st.genericGetMax.asInstanceOf[Number].longValue())
+        try StatRange(kind,
+          Math.multiplyExact(st.genericGetMin.asInstanceOf[Number].longValue(), scale),
+          Math.multiplyExact(st.genericGetMax.asInstanceOf[Number].longValue(), scale))
+        catch { case _: ArithmeticException => StatMissing }
       case FLOAT | DOUBLE =>
         val mn = st.genericGetMin.asInstanceOf[Number].doubleValue()
         val mx = st.genericGetMax.asInstanceOf[Number].doubleValue()
@@ -629,29 +637,37 @@ object Snapshots {
     }
   }
 
-  /** ONE file's footer, reduced to what the marker harvest needs:
-    * (row count, declared top-level field names in schema order, stat
-    * events in chunk order). Pure function of (conf, path) — runs on
-    * the driver for small commits and inside executor tasks for large
-    * ones. Field names come from the FOOTER SCHEMA, not the row-group
-    * chunks, so a 0-row schema-carrying entry (the empty-append
-    * schema-evolution vehicle) records its declared columns instead of
-    * the misleading '-' = provably-column-free (ADVICE r20 #1). */
-  private def fileFooterInfo(conf: Configuration, path: String)
-      : (Long, Seq[String], Seq[ChunkStatEvent]) = {
+  /** ONE file's footer, reduced to what the marker harvest needs. */
+  private case class FooterInfo(rows: Long, fields: Seq[String],
+      events: Seq[ChunkStatEvent], schema: Option[StructType])
+
+  /** [[FooterInfo]] of the file at `path`: row count, declared top-level
+    * field names in schema order, stat events in chunk order, and the
+    * Spark schema the writer stored under Spark's footer key (None when
+    * the key is absent or does not parse). Pure function of (conf,
+    * path) — runs on the driver for small commits and inside executor
+    * tasks for large ones. Field names come from the FOOTER SCHEMA, not
+    * the row-group chunks, so a 0-row schema-carrying entry (the
+    * empty-append schema-evolution vehicle) records its declared
+    * columns instead of the misleading '-' = provably-column-free
+    * (ADVICE r20 #1). */
+  private def fileFooterInfo(conf: Configuration, path: String): FooterInfo = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile
       .fromPath(new Path(path), conf)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
-      val rows = r.getRecordCount
+      val meta = r.getFooter.getFileMetaData
+      val kv = meta.getKeyValueMetaData
       val fields = scala.jdk.CollectionConverters
-        .ListHasAsScala(r.getFooter.getFileMetaData.getSchema.getFields)
-        .asScala.map(_.getName).toSeq
+        .ListHasAsScala(meta.getSchema.getFields).asScala.map(_.getName).toSeq
+      val schema = Option(kv.get("org.apache.spark.sql.parquet.row.metadata"))
+        .flatMap(Marker.structOf)
+      val rebased = kv.containsKey("org.apache.spark.legacyDateTime")
       val evs = Seq.newBuilder[ChunkStatEvent]
       r.getFooter.getBlocks.forEach { b =>
         b.getColumns.forEach { c =>
           val p = c.getPath.toArray
-          if (p.length == 1) chunkStat(c) match {
+          if (p.length == 1) chunkStat(c, rebased) match {
             case StatRange(kind, mn, mx) =>
               evs += ChunkStatEvent(p(0), 'r', kind, mn.toString, mx.toString)
             case StatMissing => evs += ChunkStatEvent(p(0), 'm', ' ', "", "")
@@ -659,7 +675,7 @@ object Snapshots {
           }
         }
       }
-      (rows, fields, evs.result())
+      FooterInfo(r.getRecordCount, fields, evs.result(), schema)
     } finally r.close()
   }
 
@@ -684,15 +700,16 @@ object Snapshots {
     * `files`: row count; min/max for up to [[StatsColCap]] top-level
     * columns, where a column with any unusable chunk stats records
     * nothing (absent = unknown = never pruned), so recorded ranges are
-    * always true bounds; and the union of the files' top-level column
-    * names, which [[readRange]] uses to decide WITHOUT I/O whether the
-    * kept entries alone carry the whole snapshot's schema. `sweep` reads the
-    * footers in ONE Spark job instead of a driver loop; both paths
-    * record the same entry. */
+    * always true bounds; the union of the files' top-level column
+    * names; and the merge of the files' Spark schemas in file-name
+    * order, which [[relation]] reads instead of merging footers (None
+    * when some file records none, or the files' schemas do not
+    * merge). `sweep` reads the footers in ONE Spark job instead of a
+    * driver loop; both paths record the same entry. */
   private[graft] def harvest(s: SparkSession, root: String, entry: String,
       files: Seq[String], sweep: Boolean): Marker.Entry = {
     val dir = s"${dataRoot(root)}/$entry"
-    val perFile: Seq[(Long, Seq[String], Seq[ChunkStatEvent])] =
+    val perFile: Seq[FooterInfo] =
       if (!sweep) {
         val conf = s.sessionState.newHadoopConf()
         files.map(n => fileFooterInfo(conf, s"$dir/$n"))
@@ -716,14 +733,14 @@ object Snapshots {
     val dropped = scala.collection.mutable.Set[String]()
     val colNames = scala.collection.mutable.LinkedHashSet[String]()
     def typed(kind: Char, v: String): Any = kind match {
-      case 'l' => v.toLong
+      case 'l' | 'e' | 't' | 'n' => v.toLong
       case 'd' => v.toDouble
       case _ => v
     }
-    perFile.foreach { case (fRows, fields, events) =>
-      rows += fRows
-      colNames ++= fields
-      events.foreach { ev =>
+    perFile.foreach { f =>
+      rows += f.rows
+      colNames ++= f.fields
+      f.events.foreach { ev =>
         if (!dropped.contains(ev.col)) ev.tag match {
           case 'r' =>
             val sr = StatRange(ev.kind, typed(ev.kind, ev.mn), typed(ev.kind, ev.mx))
@@ -746,15 +763,25 @@ object Snapshots {
         }
       }
     }
+    val schema =
+      if (perFile.isEmpty || perFile.exists(_.schema.isEmpty)) None
+      else try Some(merged(s, perFile.flatMap(_.schema)))
+      catch { case scala.util.control.NonFatal(_) => None }
     Marker.Entry(entry, rows,
       acc.to(scala.collection.immutable.ListMap).map { case (n, sr) =>
         n -> Marker.Stat(sr.kind, sr.mn.toString, sr.mx.toString)
       },
-      Some(colNames.toSeq))
+      Some(colNames.toSeq), schema)
   }
 
+  /** `schemas` merged left to right, the fold Spark's footer-merge
+    * inference runs, under the same case-sensitivity setting. */
+  private def merged(s: SparkSession, schemas: Seq[StructType]): StructType =
+    schemas.reduce(org.apache.spark.sql.graftbridge.SchemaBridge.merge(_, _,
+      s.sessionState.conf.caseSensitiveAnalysis))
+
   private def statLt(kind: Char, a: Any, b: Any): Boolean = kind match {
-    case 'l' => a.asInstanceOf[Long] < b.asInstanceOf[Long]
+    case 'l' | 'e' | 't' | 'n' => a.asInstanceOf[Long] < b.asInstanceOf[Long]
     case 'd' => a.asInstanceOf[Double] < b.asInstanceOf[Double]
     case _ => a.asInstanceOf[String].compareTo(b.asInstanceOf[String]) < 0
   }
@@ -844,20 +871,38 @@ object Snapshots {
   /** THE snapshot scan: a parquet relation over exactly `entries`
     * through one [[SnapshotFileIndex]]. A declared `schema` doubles as
     * evolution alignment (the parquet reader null-fills a column a file
-    * lacks); without one, every footer is merged in one job, so an
-    * appended column surfaces on old rows as null — the add-column
-    * semantics every public format ships. */
+    * lacks). Without one, the schema is the entries' merged schema, so
+    * an appended column surfaces on old rows as null — the add-column
+    * semantics every public format ships: [[recordedSchema]] when every
+    * entry records one, which runs no job, else every footer is merged
+    * in one job (markers written before schemas were recorded). */
   private[sources] def relation(s: SparkSession, root: String,
       entries: Seq[Marker.Entry], schema: Option[StructType]): HadoopFsRelation = {
     val index = new SnapshotFileIndex(s, dataRoot(root), entries)
     val format = new ParquetFileFormat
-    val dataSchema = schema.getOrElse(
+    val dataSchema = schema.orElse(recordedSchema(s, entries)).getOrElse(
       format.inferSchema(s, Map("mergeSchema" -> "true"), index.allFiles)
         .getOrElse(throw new IllegalStateException(
           s"no data file under $root to read a schema from"))
         .toNullable)
     HadoopFsRelation(index, StructType(Nil), dataSchema, None, format, Map.empty)(s)
   }
+
+  /** The schema the footer merge would infer for `entries`, from their
+    * recorded schemas, made nullable. None when some entry records
+    * none. The merge takes them in the footer merge's order: it sorts
+    * files by path, so entries go by `<name>/`. Merging a schema
+    * again changes nothing, so each distinct schema is merged once. */
+  private[graft] def recordedSchema(s: SparkSession,
+      entries: Seq[Marker.Entry]): Option[StructType] =
+    if (entries.isEmpty || entries.exists(_.schema.isEmpty)) None
+    else Some(merged(s, entries.sortBy(_.name + "/").flatMap(_.schema).distinct).toNullable)
+
+  /** The data schema of a read of `entries` — [[relation]]'s, with no
+    * listing when the marker records it. */
+  private[sources] def schemaOf(s: SparkSession, root: String,
+      entries: Seq[Marker.Entry]): StructType =
+    recordedSchema(s, entries).getOrElse(relation(s, root, entries, None).dataSchema)
 
   /** [[relation]] with the merged schema, as a DataFrame. */
   private def scan(s: SparkSession, root: String, entries: Seq[Marker.Entry]): DataFrame =
@@ -898,9 +943,8 @@ object Snapshots {
     * stream scans apply, decided from one marker read before any
     * listing. An entry without a usable range for the bounds' family
     * is always read, and the real filter runs on top. The output keeps
-    * the whole snapshot's schema: when the entries record different
-    * (or unknown) columns, the schema is merged over all of them, so a
-    * column living only in pruned entries surfaces as null. */
+    * the whole snapshot's schema, so a column living only in pruned
+    * entries surfaces as null. */
   def readRange(s: SparkSession, root: String, column: String,
                 lo: Any, hi: Any, asOf: Long = -1L): DataFrame = {
     import org.apache.spark.sql.functions.lit
@@ -916,13 +960,7 @@ object Snapshots {
     val at = AttributeReference(column, loL.dataType)()
     val kept = SnapshotFileIndex.prune(entries,
       Seq(GreaterThanOrEqual(at, loL), LessThanOrEqual(at, hiL)))
-    // pruning cannot change the merged schema (columns AND their order)
-    // when every entry records the same known column list
-    val sameCols = entries.map(_.cols).distinct.size == 1 && entries.head.cols.isDefined
-    val schema =
-      if (kept.size == entries.size || (kept.nonEmpty && sameCols)) None
-      else Some(relation(s, root, entries, None).dataSchema)
-    s.baseRelationToDataFrame(relation(s, root, kept, schema))
+    s.baseRelationToDataFrame(relation(s, root, kept, Some(schemaOf(s, root, entries))))
       .filter(qcol(column) >= lit(lo) && qcol(column) <= lit(hi))
   }
 
@@ -1301,11 +1339,11 @@ object Snapshots {
     // SHARED (unchanged) entries, so a consumer selecting it by name
     // would get AnalysisException on some batches and nulls on others.
     // Union the pruned-side schemas with toV's FULL snapshot schema —
-    // one footer merge of the manifest, still zero data I/O. toV's
+    // the marker's, or one footer merge of the manifest. toV's
     // order leads, so every batch of the same table lines up; a column
     // dropped between the versions (present only in fromV's removed
     // entries) trails.
-    val fullSchema = relation(s, root, toEntries, None).dataSchema
+    val fullSchema = schemaOf(s, root, toEntries)
     val aSchema = aRel.getOrElse(bRel.get).dataSchema
     val bSchema = bRel.getOrElse(aRel.get).dataSchema
     val unionFields = (fullSchema.fields ++ aSchema.fields ++ bSchema.fields)

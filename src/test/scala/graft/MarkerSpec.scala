@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.immutable.ListMap
 
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Marker
@@ -81,10 +82,25 @@ class MarkerSpec extends AnyFunSuite {
     val names = Seq("a,b", "c:d", "e=f", "g%h", "i j", "k\"l", "m\\n", "o\tp", "ü-ß", "%41")
     val m = Marker(Seq(Entry("u1", 3L,
       ListMap.from(names.map(n => n -> Stat('s', s" $n,:=%\"\\ ", n))),
-      Some(names))), 0L, Some(-1L), None)
+      Some(names), Some(StructType(names.map(StructField(_, StringType)))))),
+      0L, Some(-1L), None)
     val text = Marker.encode(m)
     assert(!text.contains("\\"), s"no JSON escape is ever needed: $text")
     assert(Marker.decode(text) === Some(m))
+  }
+
+  test("schemas: one token per distinct schema; unknown, unparseable or out-of-range is None") {
+    val sch = StructType(Seq(StructField("k", LongType)))
+    val m = Marker(Seq(gp1.copy(schema = Some(sch)), gp2, gp3.copy(schema = Some(sch))),
+      0L, Some(-1L), None)
+    val text = Marker.encode(m)
+    assert(text.contains(""""schema":"0 ? 0","parent":"0""""))
+    assert(text.split("\"schemas\":\"")(1).split("\"")(0).split(" ").length === 1)
+    assert(Marker.decode(text) === Some(m))
+    val bad = text.replaceFirst(""""schemas":"[^"]*"""", """"schemas":"nonsense"""")
+    assert(Marker.decode(bad).get.entries.map(_.schema) === Seq(None, None, None))
+    val outside = text.replace(""""schema":"0 ? 0"""", """"schema":"0 ? 1"""")
+    assert(Marker.decode(outside).get.entries.map(_.schema) === Seq(Some(sch), None, None))
   }
 
   test("legacy: a bare-number parent") {

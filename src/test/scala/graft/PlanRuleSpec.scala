@@ -357,6 +357,16 @@ class PlanRuleSpec extends SparkSpec {
     } finally spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
   }
 
+  test("mv rewrite: optimizing a rewritten query starts no Spark job") {
+    val (factPath, _) = operators.Aggregates.mvDemo(spark, sf)
+    spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
+    val q = mvQuery(factPath)
+    val (plan, jobs) = org.apache.spark.SparkJobs.count(spark.sparkContext)(
+      q.queryExecution.optimizedPlan)
+    assert(scanPaths(q) === mvDataPath(factPath), s"not rewritten:\n$plan")
+    assert(jobs === 0, s"planning the summary scan started $jobs jobs")
+  }
+
   test("mv rewrite declines out-of-scope queries: filters, unknown aggs, unregistered scans") {
     val (factPath, _) = operators.Aggregates.mvDemo(spark, sf)
     spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
