@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * banded-minhash join must scale linearly with it — this main
   * measures exactly that, the empirical "would the plan survive 10×"
   * datapoint the 100 TB story rests on.
-  * Usage: runMain graft.ScaleSmoke [factor] [sfDir]
+  * Usage: runMain graft.ScaleSmoke [text|vec|stream] [factor] [sfDir]
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
@@ -24,7 +24,6 @@ object ScaleSmoke {
     val spark = Harness.session(cpus)
     if (mode == "vec") { vecSmoke(spark, sfDir, factor); spark.stop(); return }
     if (mode == "stream") { streamSmoke(spark, sfDir, factor); spark.stop(); return }
-    if (mode == "stats") { statsSmoke(spark, sfDir, factor); spark.stop(); return }
     val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "text")
     val base = docs.count()
     val big = (0 until factor).map { i =>
@@ -45,43 +44,6 @@ object ScaleSmoke {
       f"sec=$sec%.2f | base docs=$base pairs=$basePairs sec=$baseSec%.2f | " +
       f"pair_ratio=${pairs.toDouble / basePairs}%.2f time_ratio=${sec / baseSec}%.2f")
     spark.stop()
-  }
-
-  /** Commit-time stats-harvest smoke (VERDICT r21 #7): commit a
-    * `factor`-file staging once, then time both footer-harvest paths
-    * over that committed entry — the serial driver loop and the
-    * executor-side sweep — and check each against the entry the
-    * commit's marker recorded (rows/stats/cols must be identical;
-    * SnapshotSpec asserts the same at 24 files, this measures the
-    * latency claim at realistic backfill file counts). Zero entries
-    * compared reports `markers_identical=false`.
-    * Usage: runMain graft.ScaleSmoke stats [files] [sfDir]. */
-  private def statsSmoke(spark: SparkSession, sfDir: String, files: Int): Unit = {
-    import graft.sources.{Marker, Snapshots}
-    val root = s"${sys.props("java.io.tmpdir")}/graft_scale_stats"
-    Fs.deleteDir(spark, root)
-    val df = Tables.t(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"),
-        col("l_extendedprice"), col("l_shipdate"))
-      .repartition(files).cache()
-    val n = df.count() // materialize outside the timings
-    val v = Snapshots.commit(spark, root, df, expectedParent = 0L)
-    val recorded = Marker.decode(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")).get.entries
-    def timed(sweep: Boolean): (Double, Seq[Marker.Entry]) = {
-      val t0 = System.nanoTime()
-      val got = recorded.map { e =>
-        Snapshots.harvest(spark, root, e.name,
-          Snapshots.entryFiles(spark, root, e.name), sweep)
-      }
-      ((System.nanoTime() - t0) / 1e9, got)
-    }
-    val (secLoop, loop) = timed(sweep = false)
-    val (secSweep, sweep) = timed(sweep = true)
-    val same = recorded.nonEmpty && loop == recorded && sweep == recorded
-    println(f"SCALESMOKE_STATS files=$files rows=$n " +
-      f"driver_loop_sec=$secLoop%.2f executor_sweep_sec=$secSweep%.2f " +
-      f"markers_compared=${recorded.size} markers_identical=$same")
   }
 
   /** ANN scale smoke: replicate the embeddings corpus with a small

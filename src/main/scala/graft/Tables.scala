@@ -146,12 +146,8 @@ object Tables {
     Fs.probeFile(spark, path).exists { case (p, plen, pmtime) =>
       nsFooterCache.getOrElseUpdate(s"$p|$plen|$pmtime",
         try {
-          import org.apache.parquet.hadoop.ParquetFileReader
-          import org.apache.parquet.hadoop.util.HadoopInputFile
           import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-          val in = HadoopInputFile.fromPath(p,
-            spark.sessionState.newHadoopConf())
-          val reader = ParquetFileReader.open(in)
+          val reader = Fs.parquetReader(spark.sessionState.newHadoopConf(), p)
           try reader.getFileMetaData.getSchema.getColumns.asScala.exists {
             _.getPrimitiveType.getLogicalTypeAnnotation match {
               case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS

@@ -9,22 +9,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One decoded commit marker `_commits/<N>` of a snapshot table
   * ([[Snapshots]]): the manifest with each entry's recorded row count,
-  * column ranges, column names and Spark schema, the parent version,
+  * column ranges and Spark schema, the parent version,
   * and the exactly-once ledger. [[Marker.encode]] and [[Marker.decode]] are the
   * only writer and reader of marker content.
   *
   * '''Format.''' A marker is one flat JSON object whose values are all
   * strings, written in this field order:
   * {{{
-  * {"data":"<e1> <e2> ..","rows":"<n1> <n2> ..","stats":"<s1> <s2> ..",
-  *  "cols":"<c1> <c2> .."[,"schemas":"<j0> <j1> ..","schema":"<i1> <i2> .."],
+  * {"data":"<e1> <e2> ..","rows":"<n1> <n2> ..","stats":"<s1> <s2> .."
+  *  [,"schemas":"<j0> <j1> ..","schema":"<i1> <i2> .."],
   *  "parent":"<P>","lb":"<L>"[,"batch":"<B>"]}
   * }}}
   * (on one line, no whitespace between tokens).
   *   - `data`: the manifest entries relative to `data/`, space-joined —
   *     `<uuid>` (a whole staged dir) or `<uuid>/__gp=<v>` (one partition
   *     subdir of a partition-granular table).
-  *   - `rows`, `stats`, `cols`: one token per entry, space-joined and
+  *   - `rows`, `stats`: one token per entry, space-joined and
   *     aligned with `data`.
   *     - rows: the entry's row count; `-1` = unknown.
   *     - stats: `-` (no ranges) or comma-joined `col=kind:min:max`
@@ -45,9 +45,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   *       A column without a triple (INT96, NANOS and DECIMAL columns
   *       among them) has no recorded range and is never pruned.
-  *     - cols: the entry's top-level column names, comma-joined; `-` =
-  *       no columns; `?` = unknown (inherited from a marker that had no
-  *       `cols` field).
   *   - `schemas` and `schema`: the entries' Spark schemas, written only
   *     when at least one entry records one, so a marker without them
   *     encodes as before. `schemas` lists the distinct schemas, each a
@@ -75,11 +72,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   - `parent` as a bare number (`"parent":0`).
   *   - no `lb`: [[lb]] is None and the ledger is found by walking the
   *     older markers' `batch` fields.
-  *   - no `rows` / `stats` / `cols` / `schema` field, or one whose
-  *     token count does not match `data`: every entry reads as unknown
-  *     rows (-1), no ranges, unknown columns, unknown schema. A
-  *     `schemas` token that does not parse, or an index outside the
-  *     list, is an unknown schema.
+  *   - no `rows` / `stats` / `schema` field, or one whose token count
+  *     does not match `data`: every entry reads as unknown rows (-1),
+  *     no ranges, unknown schema. A `schemas` token that does not
+  *     parse, or an index outside the list, is an unknown schema.
+  *   - a `cols` field (each entry's column names, which the recorded
+  *     schema also holds): ignored, like any field the format does not
+  *     name.
   *   - a `\` or control character written raw (not escaped) inside a
   *     token: read literally.
   *
@@ -92,8 +91,6 @@ private[graft] final case class Marker(
     batch: Option[Long]) {
 
   def names: Seq[String] = entries.map(_.name)
-
-  def byName: Map[String, Marker.Entry] = entries.map(e => e.name -> e).toMap
 }
 
 private[graft] object Marker {
@@ -104,12 +101,7 @@ private[graft] object Marker {
   /** One manifest entry and what the marker records about it.
     * `schema` is the merge of its files' Spark schemas, None = unknown. */
   final case class Entry(name: String, rows: Long,
-      stats: ListMap[String, Stat], cols: Option[Seq[String]],
-      schema: Option[StructType] = None)
-
-  /** An entry nothing is known about (inherited from a parent that
-    * did not record it). */
-  def unknown(name: String): Entry = Entry(name, -1L, ListMap.empty, None)
+      stats: ListMap[String, Stat], schema: Option[StructType] = None)
 
   // a `stats` value grows with the manifest: no cap on string length
   private val json = new JsonFactoryBuilder()
@@ -132,11 +124,6 @@ private[graft] object Marker {
         s"${escape(c)}=${st.kind}:${escape(st.min)}:${escape(st.max)}"
       }.mkString(",")
     })
-    field("cols", m.entries.map(_.cols match {
-      case None => "?"
-      case Some(Seq()) => "-"
-      case Some(cs) => cs.map(escape).mkString(",")
-    }))
     val schemas = m.entries.flatMap(_.schema).distinct
     if (schemas.nonEmpty) {
       field("schemas", schemas.map(sch => escape(sch.json)))
@@ -192,15 +179,13 @@ private[graft] object Marker {
         .map(_.map(_.toLong)).getOrElse(names.map(_ => -1L))
       val stats = aligned("stats").map(_.map(statsOf))
         .getOrElse(names.map(_ => ListMap.empty[String, Stat]))
-      val cols = aligned("cols").map(_.map(colsOf))
-        .getOrElse(names.map(_ => None))
       val schemas = own.get("schemas").toSeq.flatMap(_.split(" "))
         .map(tok => structOf(unescape(tok)))
       val schema = aligned("schema")
         .map(_.map(_.toIntOption.flatMap(schemas.lift).flatten))
         .getOrElse(names.map(_ => None))
       Marker(names.indices.map(i =>
-        Entry(names(i), rows(i), stats(i), cols(i), schema(i))),
+        Entry(names(i), rows(i), stats(i), schema(i))),
         parent.getOrElse(-1L), lb, batch)
     }
   }
@@ -218,12 +203,6 @@ private[graft] object Marker {
         case _ => None
       }
     })
-
-  private def colsOf(tok: String): Option[Seq[String]] = tok match {
-    case "?" => None
-    case "-" => Some(Seq.empty)
-    case _ => Some(tok.split(",").toSeq.map(unescape))
-  }
 
   /** A `StructType.json` string as a schema; None when it does not
     * parse to a struct. */

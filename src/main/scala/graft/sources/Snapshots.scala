@@ -88,11 +88,11 @@ import graft.Fs
   *     compaction preserves granularity, restore survives a
   *     concurrent expire (dead dirs get the orphan grace window).
   *   - **Markers carry per-entry row counts, ranges and schemas**:
-  *     staged entries are footer-read once at commit, inherited entries
-  *     copy forward — `history` reports sizes, the streaming source
-  *     rate-limits by volume ([[versionCapByRows]]) with zero data
-  *     I/O, and a read takes its schema from the marker, so planning it
-  *     runs no footer-merge job.
+  *     each staged file's footer is read once, on the driver, by the
+  *     stager that wrote it; inherited entries copy forward — `history`
+  *     reports sizes, the streaming source rate-limits by volume
+  *     ([[versionCapByRows]]) with zero data I/O, and a read takes its
+  *     schema from the marker, so planning it runs no footer-merge job.
   *   - **One marker codec.** [[Marker]] documents the marker format
   *     and is its only writer and reader; every verb decodes its
   *     parent's marker once and hands it to [[claim]].
@@ -100,12 +100,13 @@ import graft.Fs
   * At 100 TB nothing here touches data size: a commit is one
   * `listStatus` of `_commits` (O(#versions) names, bounded by
   * [[expire]]), ONE small read of the parent's marker (the
-  * ledger fold + the per-entry carry-forward), O(staged files)
-  * parquet FOOTER reads for the per-entry row counts (metadata only,
-  * never standing data), and one small file creation; the data write
-  * itself is the same distributed parquet job any sink runs — and
-  * with [[commitReplace]] a transactional UPDATE stages only the
-  * AFFECTED partitions' bytes, never the table.
+  * ledger fold + the per-entry carry-forward), one driver-side
+  * parquet FOOTER read per staged file (metadata only, never standing
+  * data; serial, so a commit staging thousands of files on a remote
+  * store pays thousands of round trips), and one small file creation;
+  * the data write itself is the same distributed parquet job any sink
+  * runs — and with [[commitReplace]] a transactional UPDATE stages
+  * only the AFFECTED partitions' bytes, never the table.
   */
 object Snapshots {
 
@@ -223,8 +224,8 @@ object Snapshots {
 
   private def commitWith(s: SparkSession, root: String, df: DataFrame,
       expectedParent: Long, parent: Option[Marker]): Long = {
-    val uuid = stagePlain(s, root, df)
-    claim(s, root, expectedParent, parent, Seq(uuid), Seq(uuid))
+    val staged = stagePlain(s, root, df)
+    claim(s, root, expectedParent, parent, Seq(staged), Seq(staged.name))
   }
 
   /** APPEND commit: the new version's manifest = the parent's data
@@ -264,8 +265,8 @@ object Snapshots {
   private def appendWith(s: SparkSession, root: String, df: DataFrame,
       expectedParent: Long, parent: Option[Marker],
       batch: Option[Long], partCol: Option[String]): Long = {
-    val inherit = parent.map(_.names).getOrElse(Seq.empty)
-    val granular = inherit.exists(_.contains(s"/$PartDir="))
+    val inherit = parent.map(_.entries).getOrElse(Seq.empty)
+    val granular = inherit.exists(_.name.contains(s"/$PartDir="))
     require(!granular || partCol.isDefined,
       s"$root is partition-granular — a plain whole-dir append would " +
         "downgrade its manifest and break copy-on-write; use " +
@@ -302,27 +303,25 @@ object Snapshots {
     }
     partCol match {
       case None =>
-        val uuid = stagePlain(s, root, df)
         // emptiness is a ROW-count question, not a file-count one: an
         // empty df still stages one schema-carrying 0-row parquet file
-        // (footer read — handed into claim so the pass runs ONCE)
-        val staged = footerEntry(s, root, uuid)
-        if (staged.rows == 0L && batch.isDefined) emptyStreamingAppend(uuid)
+        val staged = stagePlain(s, root, df)
+        if (staged.rows == 0L && batch.isDefined) emptyStreamingAppend(staged.name)
         else if (staged.rows == 0L && inherit.isEmpty) {
-          Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
+          Fs.deleteDir(s, s"${dataRoot(root)}/${staged.name}")
           throw new IllegalArgumentException(
             "append of an empty DataFrame into an empty table — an append " +
               "has nothing to add; seed an intentionally empty table with " +
               "commit()")
-        } else claim(s, root, expectedParent, parent, inherit :+ uuid,
-          Seq(uuid), batch, known = Map(uuid -> staged))
+        } else claim(s, root, expectedParent, parent, inherit :+ staged,
+          Seq(staged.name), batch)
       case Some(pc) =>
         require(inherit.isEmpty || granular,
           s"$root is a plain (whole-dir) table — appendPartitioned would mix " +
             "granularities; seed it with commitPartitioned first")
-        val (uuid, subs) = stagePartitioned(s, root, df, pc)
-        if (subs.isEmpty && batch.isDefined) emptyStreamingAppend(uuid)
-        else if (subs.isEmpty) {
+        val (uuid, staged) = stagePartitioned(s, root, df, pc)
+        if (staged.isEmpty && batch.isDefined) emptyStreamingAppend(uuid)
+        else if (staged.isEmpty) {
           // a BATCH-API empty partitioned append stages no subdirs, so
           // unlike the plain flavor there is no schema-carrying entry
           // to keep: committing metadata-only would return success
@@ -337,9 +336,7 @@ object Snapshots {
               "txnAppend treats empty micro-batches as metadata-only " +
               "commits). An empty partitioned table is not representable — " +
               "seed with a non-empty commitPartitioned")
-        } else
-          claim(s, root, expectedParent, parent,
-            inherit ++ subs.map(n => s"$uuid/$n"), Seq(uuid), batch)
+        } else claim(s, root, expectedParent, parent, inherit ++ staged, Seq(uuid), batch)
     }
   }
 
@@ -352,8 +349,8 @@ object Snapshots {
   def commitPartitioned(s: SparkSession, root: String, df: DataFrame,
                         partCol: String, expectedParent: Long): Long = {
     validateCommit(s, root, expectedParent)
-    val (uuid, subs) = stagePartitioned(s, root, df, partCol)
-    if (subs.isEmpty) {
+    val (uuid, staged) = stagePartitioned(s, root, df, partCol)
+    if (staged.isEmpty) {
       // an empty df stages no __gp dirs; claiming an empty manifest
       // would make readers resolve the data ROOT (review finding) —
       // reject loudly instead
@@ -363,7 +360,7 @@ object Snapshots {
           "is not representable; use commit() for an empty snapshot")
     }
     claim(s, root, expectedParent, parentMarker(s, root, expectedParent),
-      subs.map(n => s"$uuid/$n"), Seq(uuid))
+      staged, Seq(uuid))
   }
 
   /** COPY-ON-WRITE commit (VERDICT r18 #2): replace ONLY the
@@ -396,11 +393,11 @@ object Snapshots {
   private def replaceWith(s: SparkSession, root: String, df: DataFrame,
       partCol: String, expectedParent: Long, parent: Marker,
       alsoDrop: Seq[String]): Long = {
-    val parentEntries = parent.names
-    require(parentEntries.forall(_.contains(s"/$PartDir=")),
+    require(parent.names.forall(_.contains(s"/$PartDir=")),
       s"commitReplace requires a partition-granular manifest under $root " +
         "(seed the table with commitPartitioned)")
-    val (uuid, subs) = stagePartitioned(s, root, df, partCol)
+    val (uuid, staged) = stagePartitioned(s, root, df, partCol)
+    val subs = staged.map(_.name.stripPrefix(s"$uuid/"))
     if (subs.isEmpty && alsoDrop.isEmpty) {
       Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
       throw new IllegalArgumentException(
@@ -422,12 +419,12 @@ object Snapshots {
         s"partitions ${contradicted.mkString(",")} appear both in df and in " +
           "alsoDrop — replace-and-drop of the same partition is contradictory")
     }
-    val kept = parentEntries.filterNot { e =>
-      val n = e.substring(e.indexOf('/') + 1)
+    val kept = parent.entries.filterNot { e =>
+      val n = e.name.substring(e.name.indexOf('/') + 1)
       replaced.contains(n) ||
         dropValues.contains(Marker.unescape(n.stripPrefix(s"$PartDir=")))
     }
-    val entries = kept ++ subs.map(n => s"$uuid/$n")
+    val entries = kept ++ staged
     if (entries.isEmpty) {
       Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
       throw new IllegalArgumentException(
@@ -453,16 +450,15 @@ object Snapshots {
     require(expectedParent >= 1L,
       "commitDropPartitions needs an existing snapshot")
     val parent = markerOf(s, root, expectedParent)
-    val parentEntries = parent.names
-    require(parentEntries.forall(_.contains(s"/$PartDir=")),
+    require(parent.names.forall(_.contains(s"/$PartDir=")),
       s"commitDropPartitions requires a partition-granular manifest under $root")
     // match on the UNESCAPED partition value: the stager escapes
     // special chars into the dir name (Hive %XX path escaping), so a
     // raw-value comparison would make such partitions undroppable
     // (review finding)
     val wanted = values.toSet
-    val (dropped, kept) = parentEntries.partition { e =>
-      val n = e.substring(e.indexOf('/') + 1)
+    val (dropped, kept) = parent.entries.partition { e =>
+      val n = e.name.substring(e.name.indexOf('/') + 1)
       n.startsWith(s"$PartDir=") &&
         wanted.contains(Marker.unescape(n.stripPrefix(s"$PartDir=")))
     }
@@ -489,19 +485,21 @@ object Snapshots {
         s"expectedParent $expectedParent is ahead of latest $cur under $root")
   }
 
-  /** Stage `df` as one whole-dir entry; returns the dir's uuid name. */
-  private def stagePlain(s: SparkSession, root: String, df: DataFrame): String = {
+  /** Stage `df` as one whole-dir entry named by a fresh uuid; returns
+    * the entry as [[harvest]] records it. */
+  private def stagePlain(s: SparkSession, root: String, df: DataFrame): Marker.Entry = {
     val uuid = java.util.UUID.randomUUID().toString
     df.write.mode("errorifexists").parquet(s"${dataRoot(root)}/$uuid")
-    uuid
+    harvest(s, root, uuid)
   }
 
   /** Stage `df` one subdir per `partCol` value under a fresh uuid dir;
-    * returns (uuid, subdir names `__gp=<v>`). The duplicate string-
-    * typed dir key keeps the real column in the files. One distributed
-    * write clustered by the key, so each partition lands in few files. */
+    * returns (uuid, one [[harvest]]ed entry `<uuid>/__gp=<v>` per
+    * subdir). The duplicate string-typed dir key keeps the real column
+    * in the files. One distributed write clustered by the key, so each
+    * partition lands in few files. */
   private def stagePartitioned(s: SparkSession, root: String, df: DataFrame,
-      partCol: String): (String, Seq[String]) = {
+      partCol: String): (String, Seq[Marker.Entry]) = {
     import org.apache.spark.sql.functions.col
     require(df.columns.contains(partCol),
       s"partition column $partCol not in ${df.columns.mkString(",")}")
@@ -521,7 +519,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"partition values of $partCol produce manifest-unsafe dir names")
     }
-    (uuid, subs)
+    (uuid, subs.map(n => harvest(s, root, s"$uuid/$n")))
   }
 
   // ---- per-entry statistics (row counts + column min/max) ----
@@ -530,14 +528,6 @@ object Snapshots {
     * (the bounded-stats rule public formats apply — [public: Delta
     * records stats for the first 32 data-skipping columns]). */
   private val StatsColCap = 16
-  /** Entries of at least this many files harvest their footers in ONE
-    * Spark job (an executor-side sweep) instead of the driver loop: a
-    * compaction/backfill staging thousands of files must not pay
-    * thousands of SERIAL remote footer reads inside the commit
-    * (VERDICT r20 wrong #2). Below it, the driver loop avoids a job's
-    * fixed scheduling cost — the common partition-scoped commit
-    * stages a handful of files. */
-  private val StatsSweepMinFiles = 16
   /** String min/max longer than this are not recorded (parquet's own
     * truncated binary stats stay valid bounds, but a short marker is
     * the point of manifest-level skipping). */
@@ -613,80 +603,30 @@ object Snapshots {
     }
   }
 
-  /** One column chunk's stat outcome as a SERIALIZABLE event: tag 'r'
-    * = usable range (kind/min/max as strings — Long/Double toString
-    * round-trips exactly), 'm' = unusable stats (poisons the column).
-    * All-null/ineligible chunks emit nothing (they contributed nothing
-    * to the old sequential fold either). The driver replays events in
-    * (file-name, chunk) order, so the distributed harvest below is
-    * byte-identical to the old in-place fold by construction. */
-  private case class ChunkStatEvent(col: String, tag: Char, kind: Char,
-      mn: String, mx: String)
-
-  /** Hadoop Configuration is not java-serializable; this is the
-    * standard write()/readFields() wrapper (same shape as Spark's
-    * internal SerializableConfiguration, which is private[spark]). */
-  private class SerHadoopConf(@transient var conf: Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new Configuration(false); conf.readFields(in)
-    }
-  }
-
   /** ONE file's footer, reduced to what the marker harvest needs. */
-  private case class FooterInfo(rows: Long, fields: Seq[String],
-      events: Seq[ChunkStatEvent], schema: Option[StructType])
+  private case class FooterInfo(rows: Long, chunks: Seq[(String, ChunkStat)],
+      schema: Option[StructType])
 
-  /** [[FooterInfo]] of the file at `path`: row count, declared top-level
-    * field names in schema order, stat events in chunk order, and the
-    * Spark schema the writer stored under Spark's footer key (None when
-    * the key is absent or does not parse). Pure function of (conf,
-    * path) — runs on the driver for small commits and inside executor
-    * tasks for large ones. Field names come from the FOOTER SCHEMA, not
-    * the row-group chunks, so a 0-row schema-carrying entry (the
-    * empty-append schema-evolution vehicle) records its declared
-    * columns instead of the misleading '-' = provably-column-free
-    * (ADVICE r20 #1). */
+  /** [[FooterInfo]] of the file at `path`: row count, each top-level
+    * column chunk's stat in chunk order, and the Spark schema the
+    * writer stored under Spark's footer key (None when the key is
+    * absent or does not parse). */
   private def fileFooterInfo(conf: Configuration, path: String): FooterInfo = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new Path(path), conf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = Fs.parquetReader(conf, new Path(path))
     try {
-      val meta = r.getFooter.getFileMetaData
-      val kv = meta.getKeyValueMetaData
-      val fields = scala.jdk.CollectionConverters
-        .ListHasAsScala(meta.getSchema.getFields).asScala.map(_.getName).toSeq
+      val kv = r.getFooter.getFileMetaData.getKeyValueMetaData
       val schema = Option(kv.get("org.apache.spark.sql.parquet.row.metadata"))
         .flatMap(Marker.structOf)
       val rebased = kv.containsKey("org.apache.spark.legacyDateTime")
-      val evs = Seq.newBuilder[ChunkStatEvent]
+      val chunks = Seq.newBuilder[(String, ChunkStat)]
       r.getFooter.getBlocks.forEach { b =>
         b.getColumns.forEach { c =>
           val p = c.getPath.toArray
-          if (p.length == 1) chunkStat(c, rebased) match {
-            case StatRange(kind, mn, mx) =>
-              evs += ChunkStatEvent(p(0), 'r', kind, mn.toString, mx.toString)
-            case StatMissing => evs += ChunkStatEvent(p(0), 'm', ' ', "", "")
-            case StatAllNull | StatIneligible => ()
-          }
+          if (p.length == 1) chunks += p(0) -> chunkStat(c, rebased)
         }
       }
-      FooterInfo(r.getRecordCount, fields, evs.result(), schema)
+      FooterInfo(r.getRecordCount, chunks.result(), schema)
     } finally r.close()
-  }
-
-  /** ONE pass over the parquet FOOTERS of staged entry `entry` —
-    * O(#files) metadata reads, zero data I/O: what its commit marker
-    * records. Entries of [[StatsSweepMinFiles]] or more files take the
-    * executor-side sweep ([[harvest]] with `sweep = true`). */
-  private def footerEntry(s: SparkSession, root: String,
-      entry: String): Marker.Entry = {
-    val files = entryFiles(s, root, entry)
-    harvest(s, root, entry, files, sweep = files.length >= StatsSweepMinFiles)
   }
 
   /** The data files of entry `entry`, name-sorted so WHICH columns
@@ -696,70 +636,46 @@ object Snapshots {
       entry: String): Seq[String] =
     Fs.dataFiles(s, s"${dataRoot(root)}/$entry").map(_._1).sorted
 
-  /** The marker record of entry `entry` from the footers of its
-    * `files`: row count; min/max for up to [[StatsColCap]] top-level
+  /** The marker record of staged entry `entry` from ONE driver-side
+    * pass over the parquet FOOTERS of its [[entryFiles]] (metadata
+    * reads, zero data I/O; each file is opened once, by the stager that
+    * wrote it): row count; min/max for up to [[StatsColCap]] top-level
     * columns, where a column with any unusable chunk stats records
     * nothing (absent = unknown = never pruned), so recorded ranges are
-    * always true bounds; the union of the files' top-level column
-    * names; and the merge of the files' Spark schemas in file-name
-    * order, which [[relation]] reads instead of merging footers (None
-    * when some file records none, or the files' schemas do not
-    * merge). `sweep` reads the footers in ONE Spark job instead of a
-    * driver loop; both paths record the same entry. */
-  private[graft] def harvest(s: SparkSession, root: String, entry: String,
-      files: Seq[String], sweep: Boolean): Marker.Entry = {
+    * always true bounds; and the merge of the files' Spark schemas in
+    * file-name order, which [[relation]] reads instead of merging
+    * footers (None when some file records none, or the files' schemas
+    * do not merge). */
+  private def harvest(s: SparkSession, root: String, entry: String): Marker.Entry = {
     val dir = s"${dataRoot(root)}/$entry"
-    val perFile: Seq[FooterInfo] =
-      if (!sweep) {
-        val conf = s.sessionState.newHadoopConf()
-        files.map(n => fileFooterInfo(conf, s"$dir/$n"))
-      } else {
-        val confB = s.sparkContext.broadcast(
-          new SerHadoopConf(s.sessionState.newHadoopConf()))
-        try s.sparkContext
-          .parallelize(files.zipWithIndex.map { case (n, i) => (i, s"$dir/$n") },
-            math.min(files.length, s.sparkContext.defaultParallelism))
-          .map { case (i, p) => (i, fileFooterInfo(confB.value.conf, p)) }
-          .collect().sortBy(_._1).map(_._2).toSeq
-        // release the per-commit conf broadcast eagerly (ADVICE r21):
-        // a long-lived session doing many large commits would
-        // otherwise accumulate broadcasts until ContextCleaner GC
-        finally confB.destroy()
-      }
-    // driver replay of the per-file summaries, in file-name order —
-    // the same fold the old sequential loop ran chunk by chunk
+    val conf = s.sessionState.newHadoopConf()
+    val perFile = entryFiles(s, root, entry).map(n => fileFooterInfo(conf, s"$dir/$n"))
+    // fold the per-file summaries in file-name order, chunk by chunk
     var rows = 0L
     val acc = scala.collection.mutable.LinkedHashMap[String, StatRange]()
     val dropped = scala.collection.mutable.Set[String]()
-    val colNames = scala.collection.mutable.LinkedHashSet[String]()
-    def typed(kind: Char, v: String): Any = kind match {
-      case 'l' | 'e' | 't' | 'n' => v.toLong
-      case 'd' => v.toDouble
-      case _ => v
-    }
     perFile.foreach { f =>
       rows += f.rows
-      colNames ++= f.fields
-      f.events.foreach { ev =>
-        if (!dropped.contains(ev.col)) ev.tag match {
-          case 'r' =>
-            val sr = StatRange(ev.kind, typed(ev.kind, ev.mn), typed(ev.kind, ev.mx))
-            acc.get(ev.col) match {
+      f.chunks.foreach { case (col, cs) =>
+        if (!dropped.contains(col)) cs match {
+          case sr: StatRange =>
+            acc.get(col) match {
               case None =>
                 // a capped-out column is DROPPED, not merely
                 // skipped: were it allowed in once another drop
                 // frees a slot, its earlier chunks' values would
                 // be missing from the recorded bounds — a partial
                 // range is not a bound (review finding)
-                if (acc.size < StatsColCap) acc(ev.col) = sr
-                else dropped += ev.col
+                if (acc.size < StatsColCap) acc(col) = sr
+                else dropped += col
               case Some(prev) if prev.kind == sr.kind =>
-                acc(ev.col) = StatRange(sr.kind,
+                acc(col) = StatRange(sr.kind,
                   if (statLt(sr.kind, sr.mn, prev.mn)) sr.mn else prev.mn,
                   if (statLt(sr.kind, prev.mx, sr.mx)) sr.mx else prev.mx)
-              case Some(_) => dropped += ev.col; acc.remove(ev.col): Unit
+              case Some(_) => dropped += col; acc.remove(col): Unit
             }
-          case _ => dropped += ev.col; acc.remove(ev.col): Unit
+          case StatMissing => dropped += col; acc.remove(col): Unit
+          case StatAllNull | StatIneligible => ()
         }
       }
     }
@@ -771,7 +687,7 @@ object Snapshots {
       acc.to(scala.collection.immutable.ListMap).map { case (n, sr) =>
         n -> Marker.Stat(sr.kind, sr.mn.toString, sr.mx.toString)
       },
-      Some(colNames.toSeq), schema)
+      schema)
   }
 
   /** `schemas` merged left to right, the fold Spark's footer-merge
@@ -786,21 +702,20 @@ object Snapshots {
     case _ => a.asInstanceOf[String].compareTo(b.asInstanceOf[String]) < 0
   }
 
-  /** Build the marker from the decoded `parent` (None at genesis —
-    * claim reads no marker itself) and claim `_commits/<parent+1>`
-    * atomically. On conflict deletes the staged dirs and throws.
+  /** Write the marker of `entries` on top of the decoded `parent` (None
+    * at genesis — claim reads no marker itself) and claim
+    * `_commits/<parent+1>` atomically. On conflict deletes the
+    * `stagedUuids` dirs and throws.
     *
     * PER-ENTRY RECORDS (VERDICT r19 #6; [public: Delta per-file stats
-    * / Iceberg manifest column bounds]): staged entries are footer-read
-    * ONCE here (O(staged files) metadata reads, never standing data);
-    * inherited entries copy the parent's record forward; `known`
-    * hands in records a caller already holds (restore's source
-    * version, an emptiness-checked staged dir). An entry nobody
-    * recorded (a legacy parent) is written as unknown, not a lie. */
+    * / Iceberg manifest column bounds]): each verb hands in its
+    * manifest as records — the entries it staged, as their stager
+    * [[harvest]]ed them, and the entries it keeps from its parent (or,
+    * for [[restore]], from the restored version), copied forward as
+    * that marker recorded them, unknown fields included. */
   private def claim(s: SparkSession, root: String, expectedParent: Long,
-      parent: Option[Marker], entries: Seq[String], stagedUuids: Seq[String],
-      batch: Option[Long] = None,
-      known: Map[String, Marker.Entry] = Map.empty): Long = {
+      parent: Option[Marker], entries: Seq[Marker.Entry], stagedUuids: Seq[String],
+      batch: Option[Long] = None): Long = {
     val v = expectedParent + 1
     // fold the exactly-once ledger forward: lb(v) = max(lb(parent),
     // this commit's own batch id) — the newest marker ALWAYS carries
@@ -808,14 +723,7 @@ object Snapshots {
     // txnAppend never walks.
     val parentLb = parent.map(lastBatchOf(s, root, expectedParent, _)).getOrElse(-1L)
     val lb = math.max(parentLb, batch.getOrElse(-1L))
-    val carried = parent.map(_.byName).getOrElse(Map.empty) ++ known
-    val staged = stagedUuids.toSet
-    val recorded = entries.map { e =>
-      carried.getOrElse(e,
-        if (staged.contains(e.split("/")(0))) footerEntry(s, root, e)
-        else Marker.unknown(e))
-    }
-    val marker = Marker.encode(Marker(recorded, expectedParent, Some(lb), batch))
+    val marker = Marker.encode(Marker(entries, expectedParent, Some(lb), batch))
     if (!createExclusive(s, s"${commitsDir(root)}/$v", marker)) {
       stagedUuids.foreach(u => Fs.deleteDir(s, s"${dataRoot(root)}/$u"))
       throw new SnapshotConflictException(
@@ -1141,11 +1049,11 @@ object Snapshots {
       val affected =
         if (touched.length <= partGate) cur.filter(partIn(partCol, touched.toSeq))
         else // beyond the gate: distributed membership, no driver
-          // list, and NO broadcast hint (ADVICE r20 #2): the gate
-          // exists precisely because the touched set is large, so a
-          // forced broadcast of an unbounded distinct set could OOM
-          // the driver — a plain left_semi lets the planner/AQE pick
-          // broadcast only when the measured size fits
+          // list, and NO join hint (ADVICE r20 #2): the gate exists
+          // precisely because the touched set is large, so shipping an
+          // unbounded distinct set to every task could OOM the driver
+          // — a plain left_semi lets the planner/AQE pick a hash-
+          // relation join only when the measured size fits
           cur.join(touchedDf.withColumnRenamed(partCol, "__gm_p"),
             col(partCol) <=> col("__gm_p"), "left_semi")
       // key matching is NULL-SAFE like cdc's (review finding): a
@@ -1538,7 +1446,7 @@ object Snapshots {
     // entries, and a metadata-only commit must stay zero-I/O
     claim(s, root, parent,
       Some(if (parent == v) target else markerOf(s, root, parent)),
-      target.names, Seq.empty, known = target.byName)
+      target.entries, Seq.empty)
   }
 
   /** The commit log as a DataFrame — DESCRIBE HISTORY: one row per

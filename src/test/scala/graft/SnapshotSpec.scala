@@ -23,31 +23,60 @@ class SnapshotSpec extends SparkSpec {
     txt.split("\"data\":\"")(1).split("\"")(0).split(" ").toSeq
   }
 
-  test("distributed footer harvest writes byte-identical markers (r21 opt)") {
-    // The commit-time stats harvest runs executor-side past a file-
-    // count threshold (VERDICT r20 wrong #2: the serial driver loop
-    // pays thousands of serial footer reads on a big compaction).
-    // Both paths, run over the SAME committed entry, must produce the
-    // rows/stats/cols the marker recorded — the distributed sweep is a
-    // pure relocation of the per-file footer reads.
+  /** The decoded marker of version `v`. */
+  private def marker(root: String, v: Long): Marker =
+    Marker.decode(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$root/_commits/$v")), "UTF-8")).get
+
+  test("a 24-file commit records its row count and every column's exact min/max") {
+    // the harvest folds the footers of all 24 files into one entry:
+    // each column's recorded range spans every file's chunks
     val s = spark
     import s.implicits._
     val df = (1 to 1000).map(i => (i.toLong, i % 7, s"v$i", i * 1.5))
       .toDF("k", "p", "v", "x")
-      .repartition(24) // enough files to cross the sweep threshold
+      .repartition(24)
     val root = freshRoot()
     Snapshots.commit(spark, root, df, 0L)
-    val recorded = Marker.decode(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/1")), "UTF-8")).get.entries
-    assert(recorded.size === 1)
-    val e = recorded.head
-    val files = Snapshots.entryFiles(spark, root, e.name)
-    assert(files.size === 24)
-    assert(e.rows === 1000L && e.stats.nonEmpty && e.cols.nonEmpty)
-    for (sweep <- Seq(false, true))
-      assert(Snapshots.harvest(spark, root, e.name, files, sweep) === e,
-        s"the sweep=$sweep footer harvest must record the committed " +
-          "rows/stats/cols")
+    val Seq(e) = marker(root, 1L).entries
+    assert(Snapshots.entryFiles(spark, root, e.name).size === 24)
+    assert(e.rows === 1000L)
+    assert(e.stats.toSeq === Seq(
+      "k" -> Marker.Stat('l', "1", "1000"), "p" -> Marker.Stat('l', "0", "6"),
+      "v" -> Marker.Stat('s', "v1", "v999"), "x" -> Marker.Stat('d', "1.5", "1500.0")))
+  }
+
+  test("a commit opens each staged data file once and no inherited one") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_snap_opens_").toString
+    /** Opens since the last reset of each data file under table `tbl`. */
+    def dataOpens(tbl: String): Map[String, Int] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(s"$dir/$tbl/data"))
+      try walk.iterator().asScala.map(_.toString)
+        .filter(p => p.endsWith(".parquet") && !p.split("/").last.startsWith("."))
+        .map(p => p -> FaultFs.opens(p)).toMap
+      finally walk.close()
+    }
+    FaultFs.using(spark) {
+      FaultFs.reset()
+      Snapshots.commit(spark, s"faultfs:$dir/plain",
+        (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("k", "v").repartition(24), 0L)
+      val plain = dataOpens("plain")
+      assert(plain.size === 24 && plain.values.forall(_ == 1), plain)
+      val part = s"faultfs:$dir/part"
+      FaultFs.reset()
+      Snapshots.commitPartitioned(spark, part,
+        (1 to 30).map(i => (i.toLong, i % 3)).toDF("k", "p"), "p", 0L)
+      val seeded = dataOpens("part")
+      assert(seeded.size === 3 && seeded.values.forall(_ == 1), seeded)
+      FaultFs.reset()
+      Snapshots.appendPartitioned(spark, part, Seq((31L, 3)).toDF("k", "p"), "p", 1L)
+      val appended = dataOpens("part")
+      assert(appended.size === 4 && appended.values.sum === 1, appended)
+      assert(appended.filter(_._2 == 1).keys.forall(_.contains("/__gp=3/")), appended)
+    }
   }
 
   test("a 0-row schema-carrying entry records its declared columns (ADVICE r20 #1)") {
@@ -56,17 +85,14 @@ class SnapshotSpec extends SparkSpec {
     import s.implicits._
     Snapshots.commit(spark, root, Seq((1L, "a")).toDF("k", "v"), 0L)
     // the widened-empty-append schema-evolution vehicle: 0 rows, but
-    // the footer schema carries the new column w — the marker's cols
-    // token must record (k, v, w), not '-' (provably column-free)
+    // the footer schema carries the new column w — the entry's
+    // recorded schema must name (k, v, w)
     Snapshots.appendCommit(spark, root,
       Seq.empty[(Long, String, Option[Long])].toDF("k", "v", "w"), 1L)
-    val txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/2")), "UTF-8")
-    val colsField = txt.split("\"cols\":\"")(1).split("\"")(0)
-    assert(colsField.split(" ").exists { tok =>
-      val cs = tok.split(",").toSet
-      cs.contains("w") && cs.contains("k") && cs.contains("v")
-    }, s"the 0-row entry must record its footer schema's columns: $colsField")
+    val Seq(_, empty) = marker(root, 2L).entries
+    assert(empty.rows === 0L)
+    assert(empty.schema.map(_.fieldNames.toSeq) === Some(Seq("k", "v", "w")),
+      s"the 0-row entry must record its footer schema's columns: ${empty.schema}")
   }
 
   test("history survives a dead zero-length claim with a placeholder row (ADVICE r20 #3)") {
@@ -1698,21 +1724,19 @@ class SnapshotSpec extends SparkSpec {
     assert(wOut.columns.toSeq === Seq("k", "p", "v", "w") &&
       wOut.count() === 0L,
       "a range on a column living only in pruned entries is empty, not an error")
-    // markers record per-entry COLUMN NAMES (zero-I/O boundary test):
-    // assert against the cols FIELD's value, not the whole marker
-    // (every marker contains the letter w via "rows" — review finding)
-    val m2txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/2")), "UTF-8")
-    val colsField = m2txt.split("\"cols\":\"")(1).split("\"")(0)
-    assert(colsField.split(" ").exists(_.split(",").contains("w")),
-      s"the appended entry's cols token must name w: $colsField")
-    assert(colsField.split(" ").forall(_.split(",").contains("k")),
-      s"every entry's cols token must name k: $colsField")
-    // a LEGACY marker without the cols field degrades to the sampled
-    // probe — same answers, just not zero-I/O
+    // markers record per-entry schemas (zero-I/O boundary test): the
+    // appended entry's names w, and every entry's names k
+    val names = marker(root, 2L).entries.map(_.schema.map(_.fieldNames.toSeq))
+    assert(names.exists(_.exists(_.contains("w"))),
+      s"the appended entry's schema must name w: $names")
+    assert(names.forall(_.exists(_.contains("k"))),
+      s"every entry's schema must name k: $names")
+    // a LEGACY marker without the schema fields infers the schema from
+    // the footers — same answers, just not zero-I/O
     val m2 = java.nio.file.Paths.get(s"$root/_commits/2")
-    java.nio.file.Files.write(m2,
-      m2txt.replaceFirst(""""cols":"[^"]*",""", "").getBytes("UTF-8"))
+    java.nio.file.Files.write(m2, new String(java.nio.file.Files.readAllBytes(m2), "UTF-8")
+      .replaceFirst(""""schemas":"[^"]*","schema":"[^"]*",""", "").getBytes("UTF-8"))
+    assert(marker(root, 2L).entries.forall(_.schema.isEmpty))
     val lowLegacy = Snapshots.readRange(spark, root, "k", 1L, 5L)
     assert(lowLegacy.columns.toSeq === Seq("k", "p", "v", "w") &&
       lowLegacy.count() === 5L)
@@ -1722,28 +1746,25 @@ class SnapshotSpec extends SparkSpec {
     val root = freshRoot()
     val s = spark
     import s.implicits._
-    // seed carries w; simulate a PRE-cols writer by stripping the
-    // field from its marker — the table's history now spans the
-    // cols-field introduction
+    // seed carries w; simulate a writer from before per-entry columns
+    // were recorded by stripping the schema fields from its marker —
+    // the table's history now spans their introduction
     Snapshots.commitPartitioned(spark, root,
       (1 to 10).map(i => (i.toLong, 1, s"v$i", i * 10L))
         .toDF("k", "p", "v", "w"), "p", 0L)
     val m1 = java.nio.file.Paths.get(s"$root/_commits/1")
-    val noCols = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
-      .replaceFirst(""""cols":"[^"]*",""", "")
-    java.nio.file.Files.write(m1, noCols.getBytes("UTF-8"))
+    val legacy = new String(java.nio.file.Files.readAllBytes(m1), "UTF-8")
+      .replaceFirst(""""schemas":"[^"]*","schema":"[^"]*",""", "")
+    java.nio.file.Files.write(m1, legacy.getBytes("UTF-8"))
     // the NEW writer appends a narrower entry: its marker records the
-    // staged entry's cols but must mark the inherited one UNKNOWN
+    // staged entry's schema but must keep the inherited one UNKNOWN
     Snapshots.appendPartitioned(spark, root,
       (11 to 20).map(i => (i.toLong, 2, s"v$i")).toDF("k", "p", "v"), "p", 1L)
-    val m2txt = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$root/_commits/2")), "UTF-8")
-    assert(m2txt.split("\"cols\":\"")(1).split("\"")(0).split(" ")
-      .contains("?"),
-      "an entry inherited from a pre-cols parent must record '?', not a " +
-        s"claim of column-freeness: $m2txt")
+    assert(marker(root, 2L).entries.map(_.schema.isDefined) === Seq(false, true),
+      "an entry inherited from a pre-schema parent must stay unknown, not " +
+        "claim the staged entry's columns")
     // pruning away the (unknown-schema) w-bearing entry must still
-    // surface w null-typed — '?' forces the sampled probe
+    // surface w null-typed — the unknown schema forces footer inference
     val hi = Snapshots.readRange(spark, root, "k", 11L, 15L)
     assert(hi.columns.toSeq === Seq("k", "p", "v", "w") && hi.count() === 5L,
       s"unknown-schema entries must force alignment: ${hi.columns.toSeq}")
