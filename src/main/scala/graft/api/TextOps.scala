@@ -4,8 +4,10 @@ import graft.functions.{Graft, NgramSet}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.graftbridge.{BlockBridge, ColumnBridge}
 import org.apache.spark.util.sketch.{BloomFilter => SketchBloom}
 
 /** Public text-pipeline API over arbitrary DataFrames — the
@@ -86,17 +88,48 @@ object TextOps {
     *
     * Exact dups never reach the pairwise stages — per-set work is
     * bounded. Empty sets are dropped: J(∅,∅) is 0/0, undefined, and
-    * the brute-force formulation never emits such pairs either. */
-  private[graft] class Collapsed(val groups: DataFrame, val membership: DataFrame) {
-    def cached(): this.type = { groups.cache(); membership.cache(); this }
+    * the brute-force formulation never emits such pairs either.
+    *
+    * What is pinned: a registered instance holds `groups`,
+    * `membership` (joined against the pinned `groups`) and every
+    * [[bandedSignatures]] / [[cachedConfirmedPairs]] relation as a
+    * LOCAL CHECKPOINT (`localCheckpoint(eager = false)`): the rows
+    * are kept, the lineage that built them is cut the first time a
+    * job materializes them, so the build plan's broadcasts and
+    * shuffles become garbage and downstream plans see a one-line
+    * `LogicalRDD` leaf. (A `.cache()`d plan keeps its whole executed
+    * plan — every broadcast hash relation in it, a whole Tungsten
+    * page each — and prints the nested `InMemoryRelation` into every
+    * plan that reads it.) `source` is the unpinned groups plan: the
+    * registry verifies a hit against it, since a pinned leaf equals
+    * nothing but itself.
+    *
+    * Who releases the pins: nobody explicitly. Eviction ([[evict]])
+    * only drops the registry's references; Spark's ContextCleaner
+    * unpersists each pin once no DataFrame references it any more, so
+    * a frame a caller still holds keeps its pins alive and evaluates
+    * correctly after eviction.
+    *
+    * Lost blocks: a local checkpoint has no lineage once
+    * materialized, so a lost executor loses its blocks for good. The
+    * registry checks a hit's blocks before returning it
+    * ([[pinsStored]]) and rebuilds when any is gone; a frame already
+    * built over lost blocks fails with Spark's
+    * `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND` error. The engine's other
+    * `localCheckpoint` pins ([[exactNgramContamination]],
+    * [[loopComponents]], the LlmText and Functions pins) have the same
+    * exposure. */
+  private[graft] class Collapsed(val source: LogicalPlan, val groups: DataFrame,
+      val membership: DataFrame) {
 
     /** Set once the registry drops this instance. A caller may still
-      * hold a reference (lazy frames recompute fine), but nothing will
-      * ever unpersist caches created AFTER eviction — so
-      * [[bandedSignatures]] must stop caching from that point. */
+      * hold a reference, but a pin made from now on would live only as
+      * long as the caller's frames — and a fresh entry for the same
+      * corpus pins its own — so [[bandedSignatures]] and
+      * [[cachedConfirmedPairs]] return unpinned plans from this point. */
     @volatile private[graft] var evicted = false
 
-    /** Banded minhash signatures of `groups`, cached per (numHashes,
+    /** Banded minhash signatures of `groups`, pinned per (numHashes,
       * bands): (doc_id = rep, sz, bkey) with one row per (rep, band).
       * The signature computation is the per-row interpreted-HOF pass —
       * the priciest narrow stage of the dedup pipeline — and is
@@ -128,70 +161,82 @@ object TextOps {
           explode(transform(sequence(lit(0), lit(bands - 1)),
             b => hash(b, slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))).as("bkey"))
       }
-      // post-eviction: return the plan UNCACHED — a cache created now
-      // has no owner left to unpersist it (the instance is out of the
-      // registry), so it would pin executor memory for the session
       if (evicted) build()
-      else bandsCache.getOrElseUpdate((numHashes, bands), build().cache())
+      else bandsCache.getOrElseUpdate((numHashes, bands), pin(build()))
     }
 
-    /** Confirmed rep pairs cached per (tau, numHashes, bands) — the
+    /** Confirmed rep pairs pinned per (tau, numHashes, bands) — the
       * band self-join + exact-confirm output, shared verbatim by every
       * flavor that asks for the same parameters (the pair and cluster
       * output forms both use tau with the default 32×8 banding, so the
       * whole candidate+confirm stage runs ONCE per collapse, not once
       * per output form). Same lifecycle rules as [[bandedSignatures]]:
-      * no caching after eviction. */
+      * no pinning after eviction. */
     private val repPairsCache =
       scala.collection.mutable.Map.empty[(Double, Int, Int), DataFrame]
 
     def cachedConfirmedPairs(tau: Double, numHashes: Int, bands: Int)
         (build: => DataFrame): DataFrame = synchronized {
       if (evicted) build
-      else repPairsCache.getOrElseUpdate((tau, numHashes, bands), build.cache())
+      else repPairsCache.getOrElseUpdate((tau, numHashes, bands), pin(build))
     }
 
-    def unpersist(): Unit = synchronized {
+    /** The pinned relations this instance owns. */
+    private[graft] def pins: Seq[DataFrame] =
+      synchronized(Seq(groups, membership) ++ bandsCache.values ++ repPairsCache.values)
+
+    /** Whether every pin still has all its blocks: one driver-side
+      * block-location lookup (see [[BlockBridge.allStored]]). */
+    def pinsStored: Boolean =
+      BlockBridge.allStored(pins.flatMap(_.queryExecution.logical match {
+        case r: LogicalRDD => Some(r.rdd)
+        case _ => None
+      }))
+
+    /** Drop the registry's references; unpersist nothing (see the
+      * class doc: an explicit unpersist would fail a frame a caller
+      * still holds with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`). */
+    def evict(): Unit = synchronized {
       evicted = true
-      groups.unpersist(blocking = false); membership.unpersist(blocking = false)
-      bandsCache.values.foreach(_.unpersist(blocking = false))
       bandsCache.clear()
-      repPairsCache.values.foreach(_.unpersist(blocking = false))
       repPairsCache.clear()
     }
   }
 
-  /** Bounded lifecycle for the per-invocation collapse caches. A bare
-    * `.cache()` here is a session-lifetime leak: every dedup call (4
-    * bench keys + 3 warmup calls) would pin TWO DataFrames forever.
-    * Instead, live Collapsed caches are registered per canonical
-    * groups-plan: a same-plan call reuses the registered entry (the
-    * cross-key reuse the bench relies on — minhash/simhash/clusters
-    * share one token-set collapse), and the registry evicts
-    * least-recently-used entries beyond 4 (token-set + shingle-set of
-    * the current corpus, plus the two sides of a cross-corpus
-    * decontamination call — sized so one [[crossNearDupPairs]] cannot
-    * evict the full-corpus collapse the dedup flavors share; a new
-    * corpus/SF evicts the old one). */
+  /** A registry pin: the rows, lineage cut on first materialization. */
+  private def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+
+  /** Bounded lifecycle for the per-invocation collapse pins: live
+    * Collapsed instances are registered per canonical groups-plan, so
+    * a same-plan call reuses the registered entry (the cross-key reuse
+    * the bench relies on — minhash/simhash/clusters/decontam share one
+    * token-set collapse), and the registry evicts least-recently-used
+    * entries beyond 4 (token-set + shingle-set of the current corpus,
+    * plus the two sides of a cross-corpus decontamination call — sized
+    * so one [[crossNearDupPairs]] cannot evict the full-corpus
+    * collapse the dedup flavors share; a new corpus/SF evicts the old
+    * one). The registry owns at most 4 instances' pins; an evicted
+    * instance's pins are released by the ContextCleaner once its last
+    * frame is garbage, so a long session holds a bounded number of
+    * them (pinned by RegistrySoakSpec). */
   private val liveCollapsed =
     new java.util.LinkedHashMap[String, Collapsed](8, 0.75f, true)
   private val maxLiveCollapsed = 4
 
-  /** Eviction is best-effort cleanup: an entry may be bound to a
-    * SparkSession that has since been stopped, and its unpersist can
-    * throw — that must never fail the unrelated live `collapse()`
-    * call that triggered the eviction. */
-  private def safeUnpersist(c: Collapsed): Unit =
-    try c.unpersist() catch { case scala.util.control.NonFatal(_) => () }
+  /** Eviction never fails the unrelated live `collapse()` call that
+    * triggered it, whatever state the evicted entry is in. */
+  private def safeEvict(c: Collapsed): Unit =
+    try c.evict() catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Register under `key`, evicting LRU entries beyond capacity.
-    * Caller must hold `liveCollapsed`'s monitor (or be a test). */
+  /** Register under `key`, evicting the entry it replaces and LRU
+    * entries beyond capacity. */
   private[graft] def registerCollapsed(key: String, c: Collapsed): Unit =
     liveCollapsed.synchronized {
-      liveCollapsed.put(key, c)
+      val replaced = liveCollapsed.put(key, c)
+      if (replaced != null && (replaced ne c)) safeEvict(replaced)
       val it = liveCollapsed.entrySet().iterator()
       while (liveCollapsed.size() > maxLiveCollapsed && it.hasNext) {
-        safeUnpersist(it.next().getValue); it.remove()
+        safeEvict(it.next().getValue); it.remove()
       }
     }
 
@@ -216,25 +261,26 @@ object TextOps {
   }
 
   /** Registry lookup with the hit VERIFIED by full canonicalized-plan
-    * equality (`sameResult`), mirroring Spark's own CacheManager: the
-    * 32-bit key alone could collide across two different corpus plans
-    * and silently return the wrong collapse — a wrong dedup answer. A
-    * collided or stale entry is unpersisted (best-effort) and replaced
-    * by a fresh build. */
+    * equality (`sameResult`) against the entry's `source`, mirroring
+    * Spark's own CacheManager: the 32-bit key alone could collide
+    * across two different corpus plans and silently return the wrong
+    * collapse — a wrong dedup answer. A hit whose pins lost blocks
+    * ([[Collapsed.pinsStored]]) would fail every frame built on it,
+    * so it is rebuilt too. A collided, stale or broken entry is
+    * replaced by a fresh build, which evicts it. The build runs outside
+    * the registry lock: pinning runs a plan's shuffle stages, which
+    * must not serialize unrelated collapses. */
   private[graft] def collapseKeyed(key: String, base: DataFrame,
       groups: DataFrame): Collapsed = {
-    val membership = base.join(groups, "toks").select(col("doc_id"), col("rep"))
-    liveCollapsed.synchronized {
-      val hit = liveCollapsed.get(key)
-      if (hit != null &&
-          hit.groups.queryExecution.analyzed.sameResult(groups.queryExecution.analyzed))
-        hit
-      else {
-        if (hit != null) { safeUnpersist(hit); liveCollapsed.remove(key) }
-        val c = new Collapsed(groups, membership).cached()
-        registerCollapsed(key, c)
-        c
-      }
+    val source = groups.queryExecution.analyzed
+    val hit = liveCollapsed.synchronized(liveCollapsed.get(key))
+    if (hit != null && hit.source.sameResult(source) && hit.pinsStored) hit
+    else {
+      val pinnedGroups = pin(groups)
+      val membership = base.join(pinnedGroups, "toks").select(col("doc_id"), col("rep"))
+      val c = new Collapsed(source, pinnedGroups, pin(membership))
+      registerCollapsed(key, c)
+      c
     }
   }
 
@@ -279,7 +325,7 @@ object TextOps {
 
   private def bandCandidates(c: Collapsed, numHashes: Int, bands: Int,
       tau: Double): DataFrame = {
-    // the banded-signature relation is cached on the Collapsed (see
+    // the banded-signature relation is pinned on the Collapsed (see
     // bandedSignatures): both sides of the self-join read one
     // materialization instead of re-running the interpreted signature
     // pass per side, and same-parameter dedup flavors share it
@@ -343,7 +389,7 @@ object TextOps {
     * eval/benchmark set. Same machinery as the self-join dedup, but
     * the band equi-join runs BETWEEN the two corpora: each side is
     * exact-set collapsed and banded independently (both relations
-    * cached on the registry, so repeated probes against the same
+    * pinned on the registry, so repeated probes against the same
     * train corpus reuse its signatures), candidates share a band key
     * and pass the lossless τ-length filter, the codegen'd early-
     * abandon kernel confirms, and both memberships fan out. Identical
@@ -696,7 +742,7 @@ object TextOps {
     * collapse re-ran tokenize + signatures + band join + confirm every
     * invocation (~2 s of its 3 s at sf0.1), even though every one of
     * those stages is a pure function of the token SETS, which the
-    * corpus-level collapse already holds cached (and shares with the
+    * corpus-level collapse already holds pinned (and shares with the
     * dedup keys).
     *
     * Equivalence to `setNearDupClusters(corpus ∩ surviving)` — the
@@ -731,7 +777,7 @@ object TextOps {
     // surviving id (what a fresh collapse over the subset computes)
     val sMem = c.membership.join(sIds, "doc_id")
     val sGroups = sMem.groupBy(col("rep")).agg(min(col("doc_id")).as("srep"))
-    // corpus-level confirmed pairs (cached, shared with the dedup
+    // corpus-level confirmed pairs (pinned, shared with the dedup
     // keys) restricted to surviving sets and re-repped; least/greatest
     // restores the a<b convention the CC solvers expect — two distinct
     // sets never share a surviving rep (each doc has exactly one set)

@@ -1,8 +1,9 @@
 package graft.api
 
-import graft.functions.Graft
+import graft.functions.{Centroids, Graft, IvfCells}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Public embedding-similarity API over arbitrary DataFrames with an
   * `array<float>`/`array<double>` vector column. The cosine kernel is
@@ -152,20 +153,17 @@ object VectorOps {
     * quantizer and re-assigning the corpus per call (which rescans
     * everything). Storing the ranking at build time means multi-probe
     * consumers ([[ivfThresholdPairs]]) slice a column instead of
-    * re-scoring all centroids per row and re-embedding the k×dim
-    * centroid literals into every probe plan. */
+    * re-scoring all centroids per row. */
   final case class IvfIndex(centroids: Array[Array[Double]], assigned: DataFrame)
 
   /** Rank all cells for the row's `v` by exact distance:
     * d²(v, c) = |v|² − 2·v·c + |c|²; |v|² is constant per row for the
-    * argmin, so rank by (−2·v·c + |c|², cell-id).
-    * D suffix: bare SQL numeric literals with many digits parse as
-    * DECIMAL(19,19), which vec_dot rejects. */
-  private def cellRank(cent: Array[Array[Double]]): Column =
-    array_sort(array(cent.zipWithIndex.map { case (c, i) =>
-      val dot = expr(s"vec_dot(v, ${c.mkString("array(", "D,", "D)")})")
-      struct((lit(-2) * dot + lit(c.map(x => x * x).sum)).as("d"), lit(i).as("i"))
-    }: _*))
+    * argmin, so rank by (−2·v·c + |c|², cell-id). One codegen'd
+    * `ivf_cells` expression over the quantizer as one plan value (see
+    * [[graft.functions.Centroids]]): nothing is parsed per call, and
+    * the plan prints one short token instead of k×dim numbers. */
+  private def cellRank(cent: Array[Array[Double]], v: Column): Column =
+    ColumnBridge.column(IvfCells(ColumnBridge.expression(v), new Centroids(cent)))
 
   /** Train the coarse quantizer and assign every corpus vector to its
     * distance-ranked cell list (one narrow map — the head cell becomes
@@ -176,7 +174,7 @@ object VectorOps {
     val e = prepared(corpus, idCol, vecCol)
     val cent = trainCentroids(e, numCells, sampleSize)
     val assigned = e
-      .withColumn("cells", transform(cellRank(cent), s => s.getField("i")))
+      .withColumn("cells", cellRank(cent, col("v")))
       .withColumn("cell", element_at(col("cells"), 1))
     IvfIndex(cent, assigned)
   }
@@ -217,8 +215,7 @@ object VectorOps {
     val cent = index.centroids
     val p = prepared(probes, idCol, vecCol)
       .withColumn("probe_cell",
-        explode(slice(transform(cellRank(cent), s => s.getField("i")), 1,
-          math.min(nprobe, cent.length))))
+        explode(slice(cellRank(cent, col("v")), 1, math.min(nprobe, cent.length))))
       .select(col("vec_id").as("pid"), col("v").as("pv"), col("nrm").as("pnrm"),
         col("probe_cell"))
     val scored = p.join(index.assigned,
@@ -247,9 +244,9 @@ object VectorOps {
   def ivfThresholdPairs(index: IvfIndex, tau: Double, nprobe: Int = 5): DataFrame = {
     // ONE exploded probe-cell relation, self-joined under aliases: the
     // ranked `cells` column was materialized at index-build time, so
-    // neither join side re-scores the centroids (no k×dim literals in
-    // the plan) and the two sides are the identical subtree — the
-    // pcell shuffle is planned once and reused for both inputs
+    // neither join side re-scores the centroids and the two sides are
+    // the identical subtree — the pcell shuffle is planned once and
+    // reused for both inputs
     val multi = index.assigned
       .select(col("vec_id"), col("v"), col("nrm"),
         explode(slice(col("cells"), 1,

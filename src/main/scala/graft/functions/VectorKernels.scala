@@ -1,10 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
 
 /** Hot-loop kernels for the §2.12 pipelines, kept as static-forwarder
   * objects callable from generated Java. These exist because the
@@ -134,4 +136,69 @@ case class SortedJaccardMin(left: Expression, right: Expression, tau: Double)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedJaccardMin =
     copy(left = l, right = r)
+}
+
+/** An IVF coarse quantizer as ONE plan value: the k centroid vectors
+  * and their squared norms. It prints as its shape, so a plan that
+  * ranks cells carries one short token instead of k×dim literals. */
+final class Centroids(val rows: Array[Array[Double]]) extends Serializable {
+  /** |c|² per cell, the same left-to-right sum the ranking always used. */
+  val normSq: Array[Double] = rows.map(c => c.map(x => x * x).sum)
+  @transient private lazy val data: Array[ArrayData] =
+    rows.map(c => UnsafeArrayData.fromPrimitiveArray(c))
+
+  /** Every cell id ranked by (−2·v·c + |c|², cell id), ascending, with
+    * Spark's double order (−0.0 = 0.0, NaN last). A null `v` leaves
+    * every score null, which ranks the cells by id alone. */
+  def rank(v: ArrayData): ArrayData = {
+    val ids = Array.tabulate(rows.length)(identity)
+    if (v != null) {
+      val d = Array.tabulate(rows.length)(c =>
+        -2.0 * VectorKernelUtil.dot(v, data(c)) + normSq(c))
+      // insertion sort of the ids by score: k is small, and moving an
+      // id only past strictly greater scores keeps ties in id order
+      var i = 1
+      while (i < ids.length) {
+        val id = ids(i)
+        var j = i - 1
+        while (j >= 0 && SQLOrderingUtil.compareDoubles(d(ids(j)), d(id)) > 0) {
+          ids(j + 1) = ids(j); j -= 1
+        }
+        ids(j + 1) = id
+        i += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(ids)
+  }
+
+  override def toString: String =
+    s"centroids[${rows.length}x${rows.headOption.map(_.length).getOrElse(0)}]"
+}
+
+/** `ivf_cells(v, centroids) -> array<int>`: every cell id of the
+  * quantizer, nearest first (see [[Centroids.rank]]). Never null. */
+case class IvfCells(child: Expression, centroids: Centroids) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"ivf_cells requires array<double>, got $other")
+  }
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "ivf_cells"
+
+  override def eval(input: InternalRow): Any =
+    centroids.rank(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cent = ctx.addReferenceObj("centroids", centroids, classOf[Centroids].getName)
+    val v = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        $cent.rank(${v.isNull} ? null : ${v.value});""", isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): IvfCells =
+    copy(child = newChild)
 }

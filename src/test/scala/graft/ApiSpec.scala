@@ -136,35 +136,50 @@ class ApiSpec extends SparkSpec {
     assert(TextOps.collapseKeyed("forced-collision", by, gy) eq cy)
   }
 
+  /** The RDD a frame reads when it plans over a local-checkpoint pin. */
+  private def pinnedRdd(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE => Some(r.rdd)
+      case _ => None
+    }
+
   test("bandedSignatures after eviction never creates an unowned cache") {
     val s = spark
     import s.implicits._
     val corpus = Seq((1L, "h i j"), (2L, "h i j"), (3L, "k l m")).toDF("id", "txt")
     val (b, g) = TextOps.collapseParts(corpus, "id", TextOps.tokenSet(col("txt")))
     val c = TextOps.collapseKeyed("evict-target", b, g)
-    assert(c.bandedSignatures(32, 8).storageLevel.useMemory,
-      "live collapse should cache its banded signatures")
+    assert(pinnedRdd(c.groups).isDefined && pinnedRdd(c.membership).isDefined,
+      "live collapse should pin its groups and membership")
+    assert(pinnedRdd(c.bandedSignatures(32, 8)).isDefined,
+      "live collapse should pin its banded signatures")
     def fakeConfirm() = c.cachedConfirmedPairs(0.9, 32, 8) {
       c.groups.select(col("rep").as("a"), col("rep").as("b"),
         org.apache.spark.sql.functions.lit(1.0).as("j"))
     }
-    assert(fakeConfirm().storageLevel.useMemory,
-      "live collapse should cache its confirmed rep pairs")
-    c.unpersist() // what registry eviction calls
+    assert(pinnedRdd(fakeConfirm()).isDefined,
+      "live collapse should pin its confirmed rep pairs")
+    c.evict() // what registry eviction calls
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val sig = c.bandedSignatures(32, 8)
-    assert(sig.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "evicted collapse cached a frame nothing will ever unpersist")
+    assert(pinnedRdd(sig).isEmpty, "evicted collapse pinned a frame nothing owns")
     assert(sig.count() === 16) // 2 reps x 8 bands, recomputed correctly
-    assert(fakeConfirm().storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "evicted collapse cached a confirmed-pairs frame nothing will ever unpersist")
+    val conf = fakeConfirm()
+    assert(pinnedRdd(conf).isEmpty,
+      "evicted collapse pinned a confirmed-pairs frame nothing owns")
+    assert(conf.count() === 2)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "a frame built after eviction persisted an RDD")
   }
 
   test("eviction of a poisoned entry (e.g. stopped session) never fails a live collapse") {
     val s = spark
     import s.implicits._
     val (b, g) = TextOps.collapseParts(docs, "my_id", TextOps.tokenSet(col("my_text")))
-    def poisoned() = new TextOps.Collapsed(g, b) {
-      override def unpersist(): Unit =
+    def poisoned() = new TextOps.Collapsed(g.queryExecution.analyzed, g, b) {
+      override def evict(): Unit =
         throw new IllegalStateException("SparkSession already stopped")
     }
     // fill the bounded registry with entries whose cleanup throws
@@ -174,6 +189,45 @@ class ApiSpec extends SparkSpec {
     val corpusB = Seq((1L, "u v w"), (2L, "u v w"), (3L, "x y z")).toDF("id", "txt")
     assert(TextOps.minhashNearDupPairs(corpusB, "id", "txt", tau = 0.95).count() === 1)
     assert(TextOps.ngramJaccardPairs(corpusB, "id", "txt", n = 2, tau = 0.5).count() === 1)
+  }
+
+  test("a frame held across its collapse's eviction gives the rows of a fresh run") {
+    val s = spark
+    import s.implicits._
+    def corpus(seed: Int) = (1 to 6).map(i => (i.toLong,
+      if (i <= 3) s"s$seed a b c d" else s"s$seed e$i f$i g$i")).toDF("id", "txt")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val a = corpus(0)
+    val held = TextOps.minhashNearDupPairs(a, "id", "txt", tau = 0.95)
+    val first = pairs(held) // materializes A's pins
+    val ca = TextOps.collapse(a, "id", TextOps.tokenSet(col("txt")))
+    (1 to 4).foreach(i => TextOps.minhashNearDupPairs(corpus(i), "id", "txt", tau = 0.95).count())
+    assert(ca.evicted, "four other corpora should evict A from the 4-slot registry")
+    assert(first === Set((1L, 2L, 1.0), (1L, 3L, 1.0), (2L, 3L, 1.0)))
+    assert(pairs(held) === first)
+    assert(pairs(TextOps.minhashNearDupPairs(corpus(0), "id", "txt", tau = 0.95)) === first)
+  }
+
+  test("a registry hit whose pins lost their blocks rebuilds and returns the right rows") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    // groups, membership, banded signatures, confirmed pairs: on a
+    // fresh corpus each, drop one pin behind the registry's back
+    (0 until 4).foreach { i =>
+      val d = Seq((1L, s"p$i q r s"), (2L, s"p$i q r s"), (3L, "t u v w"), (4L, s"p$i q r s"))
+        .toDF("id", "txt")
+      def run() = Seq(TextOps.minhashNearDupPairs(d, "id", "txt", tau = 0.95),
+          TextOps.simhashNearDupPairs(d, "id", "txt", tau = 0.95, maxHamming = 8))
+        .map(_.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      val fresh = run()
+      assert(fresh === Seq.fill(2)(Set((1L, 2L), (1L, 4L), (2L, 4L))))
+      val pins = TextOps.collapse(d, "id", TextOps.tokenSet(col("txt"))).pins.flatMap(pinnedRdd)
+      assert(pins.size === 4, "the entry should own four pins after a minhash run")
+      sc.getPersistentRDDs(pins(i).id).unpersist(blocking = true)
+      assert(run() === fresh, s"after unpersisting pin $i")
+    }
   }
 
   test("cosine ops on a caller-shaped vector frame") {

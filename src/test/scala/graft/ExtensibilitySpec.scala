@@ -173,6 +173,57 @@ class ExtensibilitySpec extends SparkSpec {
       s"simhash_sig diverges from HOF reference: ${mismatch.take(3).mkString(", ")}")
   }
 
+  test("ivf_cells ranks cells as a driver loop of the same arithmetic and as the SQL form it replaced") {
+    import graft.functions.{Centroids, IvfCells}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    Graft.registerAll(spark)
+    val emb = Tables.t(spark, sf, "embeddings")
+    val idx = graft.api.VectorOps.buildIvfIndex(emb, "vec_id", "embedding")
+    // two identical centroids force score ties, broken by cell id
+    val cent = idx.centroids :+ idx.centroids(3).clone()
+    val ivf = new Centroids(cent)
+    val s = spark
+    import s.implicits._
+    val vecs = emb.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .unionByName(Seq((-1L, Option.empty[Seq[Double]])).toDF("vec_id", "v"))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+    val fast = ranked(vecs.select(col("vec_id"),
+      ColumnBridge.column(IvfCells(ColumnBridge.expression(col("v")), ivf))))
+    // the driver loop: −2·dot + |c|², left-to-right sums, (score, id)
+    val vs = vecs.collect().map(r => r.getLong(0) -> Option(r.getSeq[Double](1)))
+    val loop = vs.map { case (id, v) =>
+      val ids: Seq[Int] = cent.indices
+      id -> v.fold(ids) { x =>
+        val d = cent.map { c =>
+          var dot = 0.0; var i = 0
+          while (i < math.min(x.length, c.length)) { dot += x(i) * c(i); i += 1 }
+          -2.0 * dot + c.map(y => y * y).sum
+        }
+        ids.sortWith((a, b) => if (d(a) != d(b)) d(a) < d(b) else a < b)
+      }
+    }.toMap
+    assert(vs.length === 501 && fast.keySet === loop.keySet)
+    assert(fast(-1L) === cent.indices, "a null vector ranks cells by id")
+    fast.foreach { case (id, r) => assert(r === loop(id), s"vec $id") }
+    // the interpreted path agrees with codegen
+    val interp = IvfCells(org.apache.spark.sql.catalyst.expressions.Literal(null,
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)), ivf)
+      .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toIntArray()
+    assert(interp.toSeq === cent.indices)
+    // and with the array_sort-over-vec_dot-literals form it replaced
+    val sqlForm = array_sort(array(cent.zipWithIndex.map { case (c, i) =>
+      val dot = expr(s"vec_dot(v, ${c.mkString("array(", "D,", "D)")})")
+      struct((lit(-2) * dot + lit(c.map(x => x * x).sum)).as("d"), lit(i).as("i"))
+    }: _*))
+    val old = ranked(vecs.select(col("vec_id"), transform(sqlForm, x => x.getField("i"))))
+    fast.foreach { case (id, r) => assert(r === old(id), s"vec $id vs SQL form") }
+    // the plan carries the quantizer as one short value
+    val plan = idx.assigned.queryExecution.analyzed.toString
+    assert(plan.contains(s"centroids[${idx.centroids.length}x") && !plan.contains("vec_dot(v, array("))
+  }
+
   test("token_jaccard through codegen equals interpreted kernel") {
     Graft.registerAll(spark)
     Tables.views(spark, sf)
