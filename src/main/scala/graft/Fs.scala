@@ -1,34 +1,32 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side table-layout metadata I/O, routed through the Hadoop
-  * `FileSystem` API (VERDICT r17 "What's wrong" #1): every
-  * partition-dir listing, data-file sizing, and directory deletion
-  * the operational DML family performs (compaction sizing, DROP
-  * PARTITION, ACID emptied-dir removal, incremental-MV coverage,
-  * footer probing) goes through here, never `java.io.File`.
+  * `FileSystem` API (VERDICT r17 "What's wrong" #1): partition-dir
+  * listing (incremental-MV coverage, snapshot staging), data-file
+  * listing (the snapshot footer harvest, footer probing), output-dir
+  * deletion and file sizing go through here, never `java.io.File`.
   *
   * Why it matters at 100 TB: on the sandbox a table root is a local
   * path, where `java.io.File` happens to work — but a production
   * table root is `hdfs://` or `s3a://`, where `java.io.File` silently
-  * sees ZERO partitions (listFiles returns null) and a retention
-  * sweep quietly drops nothing, a compactor sizes nothing, an
-  * incremental rebuild absorbs nothing. `Path.getFileSystem(conf)`
-  * resolves whatever scheme the path carries — the same resolution
-  * Spark's own `InMemoryFileIndex` uses — so these helpers behave
-  * identically on file:/, hdfs:/ and s3a:/ roots. The DSv2 source
-  * (sources/RegexTextSource.scala) adopted this idiom in r17; this
-  * object extends it to every remaining driver-side site.
+  * sees ZERO partitions (listFiles returns null) and an incremental
+  * rebuild absorbs nothing. `Path.getFileSystem(conf)` resolves
+  * whatever scheme the path carries — the same resolution Spark's own
+  * `InMemoryFileIndex` uses — so these helpers behave identically on
+  * file:/, hdfs:/ and s3a:/ roots.
   *
   * Cost model stays metadata-only: one `listStatus` per directory —
   * O(#children) RPCs, zero data reads — exactly the calls a real
-  * deployment's catalog/manifest would answer instead.
+  * deployment's catalog/manifest would answer instead. [[fs]] copies
+  * the session's Hadoop conf on every call, so a caller making many
+  * calls resolves the `FileSystem` once and passes it in.
   */
 object Fs {
 
@@ -39,8 +37,7 @@ object Fs {
     * (Hive partition-dir layout), sorted by name. Empty when `root`
     * does not exist — callers treat a missing table root as "no
     * partitions", matching the old listFiles-null behavior. */
-  def partDirs(s: SparkSession, root: String, partCol: String): Seq[String] = {
-    val f = fs(s, root)
+  def partDirs(f: FileSystem, root: String, partCol: String): Seq[String] = {
     val p = new Path(root)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq
@@ -48,28 +45,25 @@ object Fs {
       .map(_.getPath.getName).sorted
   }
 
-  /** Non-hidden `.parquet` data files directly under `dir` as
-    * (fileName, byteLength) — the compactor's sizing input. Hidden
-    * (`_`/`.`-prefixed) names are commit metadata, never data. */
-  def dataFiles(s: SparkSession, dir: String): Seq[(String, Long)] = {
-    val f = fs(s, dir)
-    val p = new Path(dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.filter { st =>
+  /** The data files directly under the existing dir `dir`: non-hidden
+    * `.parquet` files. Hidden (`_`/`.`-prefixed) names are commit or
+    * writer metadata, never data. */
+  def dataFiles(f: FileSystem, dir: String): Seq[FileStatus] =
+    f.listStatus(new Path(dir)).toSeq.filter { st =>
       val n = st.getPath.getName
-      st.isFile && n.endsWith(".parquet") &&
-        !n.startsWith("_") && !n.startsWith(".")
-    }.map(st => st.getPath.getName -> st.getLen)
-  }
+      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }
 
-  /** Recursive delete of a directory (DROP PARTITION / emptied-dir
-    * removal). Idempotent: deleting a missing path is a no-op. */
+  /** Recursive delete of an output dir (a sink's or a warehouse
+    * table's, before it is rewritten). Idempotent: deleting a missing
+    * path is a no-op. */
   def deleteDir(s: SparkSession, path: String): Unit = {
     val f = fs(s, path)
     f.delete(new Path(path), true): Unit
   }
 
-  /** Byte length of a path (0 when missing) — cache-sizing input. */
+  /** Byte length of a path (0 when missing) — the fact-table cache
+    * bound's input. */
   def len(s: SparkSession, path: String): Long = {
     val f = fs(s, path)
     val p = new Path(path)
@@ -97,11 +91,7 @@ object Fs {
     else {
       val st = f.getFileStatus(p)
       if (st.isFile) Some((p, st.getLen, st.getModificationTime))
-      else f.listStatus(p).toSeq.filter { c =>
-        val n = c.getPath.getName
-        c.isFile && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }.sortBy(_.getPath.getName).headOption
+      else dataFiles(f, path).sortBy(_.getPath.getName).headOption
         .map(c => (c.getPath, c.getLen, c.getModificationTime))
     }
   }

@@ -854,10 +854,6 @@ object TextOps {
       converged = next.filter(col("lab") =!= col("old_lab")).isEmpty
       labels = next.select(col("node"), col("lab"))
       i += 1
-      // profiling aid: -Dgraft.cc.debug=1 prints the superstep count
-      // (the loop's cost model is supersteps × fixed job overhead)
-      if (sys.props.contains("graft.cc.debug"))
-        println(s"GRAFT_CC superstep=$i converged=$converged")
     }
     edges.unpersist()
     labels

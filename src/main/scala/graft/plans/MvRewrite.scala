@@ -331,7 +331,7 @@ object MvRewrite {
     * scheme-agnostic, so an hdfs:/s3a: fact root reports its real
     * dirs instead of java.io.File's silent empty set (r17 #1). */
   private def partDirs(s: SparkSession, root: String, partCol: String): Set[String] =
-    graft.Fs.partDirs(s, root, partCol).toSet
+    graft.Fs.partDirs(graft.Fs.fs(s, root), root, partCol).toSet
 
   /** [[materialize]] over a PARTITIONED fact root, recording which
     * partition dirs the summary covers so later inserts can be

@@ -23,10 +23,6 @@ private[sources] final class SnapshotFileIndex(spark: SparkSession, dataRoot: St
   private val files = new InMemoryFileIndex(
     spark, entries.map(e => new Path(s"$dataRoot/${e.name}")), Map.empty, None)
 
-  // qualified like the listed files, so a relative root still matches
-  private val dataRootPath =
-    graft.Fs.fs(spark, dataRoot).makeQualified(new Path(dataRoot)).toUri.getPath
-
   def allFiles: Seq[FileStatus] = files.allFiles()
 
   override def rootPaths: Seq[Path] = files.rootPaths
@@ -35,9 +31,12 @@ private[sources] final class SnapshotFileIndex(spark: SparkSession, dataRoot: St
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val dropped = entries.map(_.name).toSet --
       SnapshotFileIndex.prune(entries, dataFilters).map(_.name)
-    // a file's entry is its dir relative to the data root
-    def kept(f: Path) =
-      !dropped(f.getParent.toUri.getPath.stripPrefix(dataRootPath).stripPrefix("/"))
+    // a file's entry is its dir: `<uuid>`, or `<uuid>/__gp=<v>` on a
+    // partition-granular table
+    def kept(f: Path) = {
+      val d = f.getParent
+      !dropped(d.getName) && !dropped(s"${d.getParent.getName}/${d.getName}")
+    }
     files.listFiles(partitionFilters, Nil)
       .map(d => if (dropped.isEmpty) d else d.copy(files = d.files.filter(f => kept(f.getPath))))
   }

@@ -69,13 +69,12 @@ class SnapshotSource extends RelationProvider with StreamSourceProvider
 
   override def createRelation(sqlContext: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    val root = rootOf(parameters)
+    val r = new Snapshots.Root(sqlContext.sparkSession, rootOf(parameters))
     val version = parameters.get("versionAsOf").map(_.toLong).getOrElse(
-      Snapshots.latest(spark, root).getOrElse(
+      r.latest.getOrElse(
         throw new NoSuchElementException(
-          s"no committed snapshot under $root")))
-    Snapshots.relation(spark, root, Snapshots.markerOf(spark, root, version).entries, None)
+          s"no committed snapshot under ${r.root}")))
+    Snapshots.relation(r, r.marker(version).entries, None)
   }
 
   // ---- streaming source (commit-log tail) ----
@@ -109,11 +108,12 @@ class SnapshotSource extends RelationProvider with StreamSourceProvider
 object SnapshotSource {
   /** Merged schema of `root`'s LATEST manifest, read from its marker. */
   private[sources] def latestSchema(spark: SparkSession, root: String): StructType = {
-    val v = Snapshots.latest(spark, root).getOrElse(
+    val r = new Snapshots.Root(spark, root)
+    val v = r.latest.getOrElse(
       throw new NoSuchElementException(
         s"no committed snapshot under $root — a snapshot stream needs " +
           "an existing table (or an explicit .schema)"))
-    Snapshots.schemaOf(spark, root, Snapshots.markerOf(spark, root, v).entries)
+    Snapshots.schemaOf(r, r.marker(v).entries)
   }
 }
 
@@ -177,7 +177,7 @@ class SnapshotStreamSource(spark: SparkSession, root: String,
     deliveredV = math.max(deliveredV, endV)
     val added = Snapshots.addedDirsBetween(spark, root, fromV, endV)
     org.apache.spark.sql.graftbridge.RelationBridge.streamingFrame(
-      spark, Snapshots.relation(spark, root, added, Some(declared)))
+      spark, Snapshots.relation(new Snapshots.Root(spark, root), added, Some(declared)))
   }
 
   override def stop(): Unit = ()

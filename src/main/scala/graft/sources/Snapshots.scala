@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual,
@@ -37,6 +37,9 @@ import graft.Fs
   *     on namenode-arbitrated schemes); its content names the data
   *     entries. The create either fully succeeds or fully fails —
   *     there is no pointer rename and therefore no half-swap window.
+  *     Every verb stages through one lifecycle ([[Root.stage]]): its
+  *     `data/<uuid>` dir is deleted on every exit unless the claimed
+  *     manifest names it.
   *     Content visibility is NOT atomic everywhere (an HDFS marker is
   *     listable at length 0 until close), so readers TOLERATE an
   *     in-flight marker: a claimed-but-content-pending marker is
@@ -117,9 +120,6 @@ object Snapshots {
     * skipped — nothing committed, nothing to commit, replay-safe. */
   private val EmptyGenesisNoop = -1L
 
-  private def commitsDir(root: String) = s"$root/_commits"
-  private def dataRoot(root: String) = s"$root/data"
-
   /** Partition-dir prefix for partition-granular manifests. The
     * staged layout duplicates the user's partition column into this
     * directory key (`__gp=<value>`), so the data FILES keep the
@@ -128,22 +128,6 @@ object Snapshots {
     * dir-granular replace). */
   private[sources] val PartDir = "__gp"
 
-  /** All committed versions under `root`, ascending. One metadata
-    * listing — never touches data files. */
-  def versions(s: SparkSession, root: String): Seq[Long] = {
-    val f = Fs.fs(s, root)
-    val p = new Path(commitsDir(root))
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq
-      .filter(_.isFile)
-      .flatMap(st => st.getPath.getName.toLongOption)
-      .sorted
-  }
-
-  /** Latest committed version, if any commit exists. */
-  def latest(s: SparkSession, root: String): Option[Long] =
-    versions(s, root).lastOption
-
   /** Schemes where `FileSystem.create(p, overwrite=false)` (or the
     * java.nio CREATE_NEW path) is arbitrated by the store itself and
     * therefore safe as a commit claim. Everything else fails fast —
@@ -151,63 +135,210 @@ object Snapshots {
     * via `spark.graft.snapshot.atomicCreateSchemes` (comma-separated). */
   private val builtinAtomicSchemes = Set("file", "hdfs", "viewfs", "webhdfs")
 
-  private def requireAtomicCommitScheme(s: SparkSession, root: String): Unit = {
-    val scheme = Option(Fs.fs(s, root).getUri.getScheme).getOrElse("file")
-    val extra = s.conf.get("spark.graft.snapshot.atomicCreateSchemes", "")
-      .split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
-    if (!builtinAtomicSchemes.contains(scheme) && !extra.contains(scheme))
-      throw new UnsupportedOperationException(
-        s"snapshot commits need atomic create-exclusive, which scheme '$scheme' " +
-          "does not guarantee (stock S3A create(overwrite=false) is " +
-          "HEAD-then-PUT — two racing committers can both succeed). If this " +
-          "store really supports conditional create, opt in via " +
-          "spark.graft.snapshot.atomicCreateSchemes")
-  }
+  /** One table as one verb sees it: the Hadoop conf and the
+    * `FileSystem` of `root`, resolved once when the handle is built, and
+    * the `_commits/` and `data/` paths. Every metadata step of the verb
+    * — listing the log, reading and claiming markers, harvesting
+    * footers, deleting staged dirs — goes through them. A handle lives
+    * for one call, so a later call sees a later conf. */
+  private[sources] final class Root(val s: SparkSession, val root: String) {
+    val conf: Configuration = s.sessionState.newHadoopConf()
+    val fs: FileSystem = new Path(root).getFileSystem(conf)
+    val commits = s"$root/_commits"
+    val data = s"$root/data"
 
-  /** Atomically create `path` with `content`, failing if it already
-    * exists. `java.nio.Files.createFile` gives true O_CREAT|O_EXCL on
-    * local paths (the Hadoop LocalFileSystem emulates the check
-    * non-atomically); remote schemes go through the FileSystem API,
-    * where HDFS's namenode makes the create atomic — and
-    * [[requireAtomicCommitScheme]] has already rejected schemes where
-    * it would not be. */
-  private def createExclusive(
-      s: SparkSession, path: String, content: String): Boolean = {
-    val p = new Path(path)
-    val f = Fs.fs(s, path)
-    val uri = f.getUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val local = java.nio.file.Paths.get(p.toUri.getPath)
-      java.nio.file.Files.createDirectories(local.getParent)
-      try {
-        java.nio.file.Files.write(local, content.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else {
-      // only an already-exists failure is a CONFLICT; any other
-      // IOException (write/close failing AFTER the namenode created
-      // the marker) would otherwise leave an empty marker bricking
-      // every later latest() — best-effort-remove it and rethrow so
-      // the caller sees an error, not a phantom conflict
-      try {
-        val out = f.create(p, false)
-        try out.write(content.getBytes("UTF-8")) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case e: java.io.IOException =>
-          try f.delete(p, false) catch { case _: java.io.IOException => () }
-          throw e
+    /** The dir of manifest entry (or staged uuid) `entry`. */
+    def dir(entry: String): String = s"$data/$entry"
+
+    /** All committed versions, ascending. One metadata listing — never
+      * touches data files. */
+    def versions: Seq[Long] = {
+      val p = new Path(commits)
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq
+        .filter(_.isFile)
+        .flatMap(st => st.getPath.getName.toLongOption)
+        .sorted
+    }
+
+    def latest: Option[Long] = versions.lastOption
+
+    /** Whether the marker of `v` has content: a zero-length one is a
+      * claim whose writer has not written (or never will write) it. */
+    def readable(v: Long): Boolean =
+      try fs.getFileStatus(new Path(s"$commits/$v")).getLen > 0L
+      catch { case _: java.io.FileNotFoundException => false }
+
+    def requireAtomicScheme(): Unit = {
+      val scheme = Option(fs.getUri.getScheme).getOrElse("file")
+      val extra = s.conf.get("spark.graft.snapshot.atomicCreateSchemes", "")
+        .split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet
+      if (!builtinAtomicSchemes.contains(scheme) && !extra.contains(scheme))
+        throw new UnsupportedOperationException(
+          s"snapshot commits need atomic create-exclusive, which scheme '$scheme' " +
+            "does not guarantee (stock S3A create(overwrite=false) is " +
+            "HEAD-then-PUT — two racing committers can both succeed). If this " +
+            "store really supports conditional create, opt in via " +
+            "spark.graft.snapshot.atomicCreateSchemes")
+    }
+
+    /** Atomically create `path` with `content`, failing if it already
+      * exists. `java.nio.Files.createFile` gives true O_CREAT|O_EXCL on
+      * local paths (the Hadoop LocalFileSystem emulates the check
+      * non-atomically); remote schemes go through the FileSystem API,
+      * where HDFS's namenode makes the create atomic — and
+      * [[requireAtomicScheme]] has already rejected schemes where it
+      * would not be. */
+    private def createExclusive(path: String, content: String): Boolean = {
+      val p = new Path(path)
+      val scheme = fs.getUri.getScheme
+      if (scheme == null || scheme == "file") {
+        val local = java.nio.file.Paths.get(p.toUri.getPath)
+        java.nio.file.Files.createDirectories(local.getParent)
+        try {
+          java.nio.file.Files.write(local, content.getBytes("UTF-8"),
+            java.nio.file.StandardOpenOption.CREATE_NEW)
+          true
+        } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } else {
+        // only an already-exists failure is a CONFLICT; any other
+        // IOException (write/close failing AFTER the namenode created
+        // the marker) would otherwise leave an empty marker bricking
+        // every later latest() — best-effort-remove it and rethrow so
+        // the caller sees an error, not a phantom conflict
+        try {
+          val out = fs.create(p, false)
+          try out.write(content.getBytes("UTF-8")) finally out.close()
+          true
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+          case _: java.nio.file.FileAlreadyExistsException => false
+          case e: java.io.IOException =>
+            try fs.delete(p, false) catch { case _: java.io.IOException => () }
+            throw e
+        }
       }
+    }
+
+    /** Decoded marker of version `v`. Tolerates an IN-FLIGHT marker
+      * (claimed, content not yet visible — HDFS exposes a length-0 file
+      * until close): retries briefly instead of crashing the reader
+      * with a parse error (r18 advice), then names the marker in an
+      * IllegalStateException if it never completes (a writer that died
+      * between claim and write — surgically removable). */
+    def marker(v: Long): Marker = {
+      val path = new Path(s"$commits/$v")
+      var attempt = 0
+      while (attempt < 50) {
+        attempt += 1
+        if (!fs.exists(path))
+          throw new NoSuchElementException(
+            s"snapshot version $v does not exist under $root " +
+              s"(committed: ${versions.mkString(",")})")
+        val text =
+          try {
+            val in = fs.open(path)
+            try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+          } catch { case _: java.io.FileNotFoundException => None } // expired mid-read
+        text.flatMap(Marker.decode) match {
+          case Some(m) => return m
+          case None => Thread.sleep(40) // in-flight: claimed, content pending
+        }
+      }
+      throw new IllegalStateException(
+        s"commit marker $path exists but its content never became readable " +
+          "— a writer likely died between claim and content write")
+    }
+
+    /** The marker a verb commits on top of: `expected`'s (None at
+      * genesis, 0). A STALE parent is caught atomically by [[claim]]; a
+      * parent AHEAD of latest would silently claim past a gap, so it is
+      * refused here (racy read is fine — the claim is the gate). */
+    def parent(expected: Long): Option[Marker] = {
+      requireAtomicScheme()
+      val cur = latest.getOrElse(0L)
+      require(expected <= cur,
+        s"expectedParent $expected is ahead of latest $cur under $root")
+      Option.when(expected > 0L)(marker(expected))
+    }
+
+    /** Max streaming batch id at or before version `v`, given its
+      * marker `m` — shared by the commit-time fold ([[claim]]) and
+      * replay detection ([[txnAppend]]) so the two never disagree
+      * (review finding). Only a marker from before the `lb` field walks
+      * back through older markers' `batch` ids. */
+    def lastBatchOf(v: Long, m: Marker): Long =
+      m.lb.orElse(m.batch).getOrElse(
+        versions.filter(_ < v).reverseIterator
+          .map(x => marker(x).batch)
+          .collectFirst { case Some(b) => b }
+          .getOrElse(-1L))
+
+    /** The data files of entry `entry`, name-sorted so WHICH columns
+      * land under the stats cap is a pure function of the staged data,
+      * not of listing order — markers stay reproducible. */
+    def entryFiles(entry: String): Seq[String] =
+      Fs.dataFiles(fs, dir(entry)).map(_.getPath.getName).sorted
+
+    /** Whether a staged uuid's dir outlives its verb, set by [[claim]]:
+      * always while its create runs, else when its marker names an
+      * entry under the uuid. */
+    private var keeps: String => Boolean = _ => false
+
+    /** THE staged-dir lifecycle of every staging verb: `body` stages
+      * under `data/<uuid>` for a fresh uuid, and that dir is deleted on
+      * every exit — a refusal, a failed write or harvest, a conflict, an
+      * empty streaming batch's metadata-only commit or genesis no-op —
+      * unless a [[claim]] committed a manifest naming it, or its create
+      * failed with a non-conflict I/O error (the marker's state is then
+      * unknown, so [[expire]]'s orphan sweep decides). */
+    def stage[T](body: String => T): T = {
+      val uuid = java.util.UUID.randomUUID().toString
+      keeps = _ => false
+      try body(uuid)
+      finally if (!keeps(uuid)) fs.delete(new Path(dir(uuid)), true): Unit
+    }
+
+    /** Write the marker of `entries` on top of the decoded `parent`
+      * (None at genesis — claim reads no marker itself) and claim
+      * `_commits/<parent+1>` atomically; on conflict throw
+      * [[SnapshotConflictException]], and [[stage]] deletes the staged
+      * dir.
+      *
+      * PER-ENTRY RECORDS (VERDICT r19 #6; [public: Delta per-file stats
+      * / Iceberg manifest column bounds]): each verb hands in its
+      * manifest as records — the entries it staged, as their stager
+      * [[harvest]]ed them, and the entries it keeps from its parent
+      * (or, for [[restore]], from the restored version), copied forward
+      * as that marker recorded them, unknown fields included. */
+    def claim(expectedParent: Long, parent: Option[Marker],
+        entries: Seq[Marker.Entry], batch: Option[Long] = None): Long = {
+      val v = expectedParent + 1
+      // fold the exactly-once ledger forward: lb(v) = max(lb(parent),
+      // this commit's own batch id) — the newest marker ALWAYS carries
+      // the full ledger, so expire can never lose it (r18 advice) and
+      // txnAppend never walks.
+      val parentLb = parent.map(lastBatchOf(expectedParent, _)).getOrElse(-1L)
+      val lb = math.max(parentLb, batch.getOrElse(-1L))
+      val marker = Marker.encode(Marker(entries, expectedParent, Some(lb), batch))
+      keeps = _ => true
+      if (!createExclusive(s"$commits/$v", marker)) {
+        keeps = _ => false
+        throw new SnapshotConflictException(
+          s"version $v already committed under $root " +
+            s"(expected parent $expectedParent is no longer latest)")
+      }
+      val names = entries.map(_.name)
+      keeps = u => names.exists(n => n == u || n.startsWith(s"$u/"))
+      v
     }
   }
 
-  private def readSmall(s: SparkSession, path: String): String = {
-    val in = Fs.fs(s, path).open(new Path(path))
-    try new String(in.readAllBytes(), "UTF-8") finally in.close()
-  }
+  /** All committed versions under `root`, ascending. */
+  def versions(s: SparkSession, root: String): Seq[Long] = new Root(s, root).versions
+
+  /** Latest committed version, if any commit exists. */
+  def latest(s: SparkSession, root: String): Option[Long] = new Root(s, root).latest
 
   /** Commit `df` as the snapshot FOLLOWING `expectedParent` (0 = the
     * table must be empty). Returns the committed version number.
@@ -218,14 +349,9 @@ object Snapshots {
     * new latest, re-derives, and retries (see [[commitTransform]]). */
   def commit(s: SparkSession, root: String, df: DataFrame,
              expectedParent: Long): Long = {
-    validateCommit(s, root, expectedParent)
-    commitWith(s, root, df, expectedParent, parentMarker(s, root, expectedParent))
-  }
-
-  private def commitWith(s: SparkSession, root: String, df: DataFrame,
-      expectedParent: Long, parent: Option[Marker]): Long = {
-    val staged = stagePlain(s, root, df)
-    claim(s, root, expectedParent, parent, Seq(staged), Seq(staged.name))
+    val r = new Root(s, root)
+    val parent = r.parent(expectedParent)
+    r.stage(uuid => r.claim(expectedParent, parent, Seq(stagePlain(r, uuid, df))))
   }
 
   /** APPEND commit: the new version's manifest = the parent's data
@@ -241,9 +367,8 @@ object Snapshots {
     * empty table with [[commit]]). */
   def appendCommit(s: SparkSession, root: String, df: DataFrame,
                    expectedParent: Long): Long = {
-    validateCommit(s, root, expectedParent)
-    appendWith(s, root, df, expectedParent,
-      parentMarker(s, root, expectedParent), batch = None, partCol = None)
+    val r = new Root(s, root)
+    appendWith(r, df, expectedParent, r.parent(expectedParent), batch = None, partCol = None)
   }
 
   /** APPEND to a PARTITION-GRANULAR table: the batch is staged one
@@ -256,25 +381,26 @@ object Snapshots {
     * same trap plain compact had — r19 #2). */
   def appendPartitioned(s: SparkSession, root: String, df: DataFrame,
                         partCol: String, expectedParent: Long): Long = {
-    validateCommit(s, root, expectedParent)
-    appendWith(s, root, df, expectedParent,
-      parentMarker(s, root, expectedParent), batch = None,
+    val r = new Root(s, root)
+    appendWith(r, df, expectedParent, r.parent(expectedParent), batch = None,
       partCol = Some(partCol))
   }
 
-  private def appendWith(s: SparkSession, root: String, df: DataFrame,
+  private def appendWith(r: Root, df: DataFrame,
       expectedParent: Long, parent: Option[Marker],
       batch: Option[Long], partCol: Option[String]): Long = {
     val inherit = parent.map(_.entries).getOrElse(Seq.empty)
     val granular = inherit.exists(_.name.contains(s"/$PartDir="))
     require(!granular || partCol.isDefined,
-      s"$root is partition-granular — a plain whole-dir append would " +
+      s"${r.root} is partition-granular — a plain whole-dir append would " +
         "downgrade its manifest and break copy-on-write; use " +
         "appendPartitioned (or txnAppend's partCol) instead")
-    // empty-batch dispatch (the staged dir is deleted in every taken
-    // branch). Only STREAMING appends (batch defined) get the
-    // special-casing — a stream's schema is constant across batches,
-    // so an empty micro-batch carries no information:
+    require(partCol.isEmpty || inherit.isEmpty || granular,
+      s"${r.root} is a plain (whole-dir) table — appendPartitioned would mix " +
+        "granularities; seed it with commitPartitioned first")
+    // empty-batch dispatch. Only STREAMING appends (batch defined) get
+    // the special-casing — a stream's schema is constant across
+    // batches, so an empty micro-batch carries no information:
     //  - streaming + GENESIS: a replay-safe no-op — a sink's first
     //    executed micro-batch can carry zero rows and crashing would
     //    loop forever on checkpoint replay (review finding).
@@ -295,48 +421,35 @@ object Snapshots {
     // (which accepts an empty seed), the partitioned flavor at a
     // non-empty commitPartitioned (an empty partitioned manifest is
     // unrepresentable — readers would resolve the raw data/ root).
-    def emptyStreamingAppend(uuid: String): Long = {
-      Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
-      if (inherit.nonEmpty)
-        claim(s, root, expectedParent, parent, inherit, Seq.empty, batch)
-      else EmptyGenesisNoop
-    }
-    partCol match {
-      case None =>
-        // emptiness is a ROW-count question, not a file-count one: an
-        // empty df still stages one schema-carrying 0-row parquet file
-        val staged = stagePlain(s, root, df)
-        if (staged.rows == 0L && batch.isDefined) emptyStreamingAppend(staged.name)
-        else if (staged.rows == 0L && inherit.isEmpty) {
-          Fs.deleteDir(s, s"${dataRoot(root)}/${staged.name}")
-          throw new IllegalArgumentException(
-            "append of an empty DataFrame into an empty table — an append " +
-              "has nothing to add; seed an intentionally empty table with " +
-              "commit()")
-        } else claim(s, root, expectedParent, parent, inherit :+ staged,
-          Seq(staged.name), batch)
-      case Some(pc) =>
-        require(inherit.isEmpty || granular,
-          s"$root is a plain (whole-dir) table — appendPartitioned would mix " +
-            "granularities; seed it with commitPartitioned first")
-        val (uuid, staged) = stagePartitioned(s, root, df, pc)
-        if (staged.isEmpty && batch.isDefined) emptyStreamingAppend(uuid)
-        else if (staged.isEmpty) {
-          // a BATCH-API empty partitioned append stages no subdirs, so
-          // unlike the plain flavor there is no schema-carrying entry
-          // to keep: committing metadata-only would return success
-          // while silently discarding a widened schema (the exact trap
-          // the plain path's kept entry avoids — review finding).
-          // Reject loudly instead, at genesis AND after.
-          Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
-          throw new IllegalArgumentException(
-            "partitioned append of an empty DataFrame — an empty batch " +
-              "stages no partition entries, so it can neither add rows nor " +
-              "evolve the schema; stage at least one row (streaming " +
-              "txnAppend treats empty micro-batches as metadata-only " +
-              "commits). An empty partitioned table is not representable — " +
-              "seed with a non-empty commitPartitioned")
-        } else claim(s, root, expectedParent, parent, inherit ++ staged, Seq(uuid), batch)
+    r.stage { uuid =>
+      val staged = partCol.fold(Seq(stagePlain(r, uuid, df)))(stagePartitioned(r, uuid, df, _))
+      // emptiness is a ROW-count question, not a file-count one: an
+      // empty df still stages one schema-carrying 0-row plain entry
+      // (and no partition entry)
+      val empty = staged.forall(_.rows == 0L)
+      if (empty && batch.isDefined) {
+        if (inherit.nonEmpty) r.claim(expectedParent, parent, inherit, batch)
+        else EmptyGenesisNoop
+      } else {
+        // a BATCH-API empty partitioned append stages no subdirs, so
+        // unlike the plain flavor there is no schema-carrying entry
+        // to keep: committing metadata-only would return success
+        // while silently discarding a widened schema (the exact trap
+        // the plain path's kept entry avoids — review finding).
+        // Reject loudly instead, at genesis AND after.
+        require(!empty || partCol.isEmpty,
+          "partitioned append of an empty DataFrame — an empty batch " +
+            "stages no partition entries, so it can neither add rows nor " +
+            "evolve the schema; stage at least one row (streaming " +
+            "txnAppend treats empty micro-batches as metadata-only " +
+            "commits). An empty partitioned table is not representable — " +
+            "seed with a non-empty commitPartitioned")
+        require(!empty || inherit.nonEmpty,
+          "append of an empty DataFrame into an empty table — an append " +
+            "has nothing to add; seed an intentionally empty table with " +
+            "commit()")
+        r.claim(expectedParent, parent, inherit ++ staged, batch)
+      }
     }
   }
 
@@ -348,19 +461,17 @@ object Snapshots {
     * the schema is identical to a plain commit's. */
   def commitPartitioned(s: SparkSession, root: String, df: DataFrame,
                         partCol: String, expectedParent: Long): Long = {
-    validateCommit(s, root, expectedParent)
-    val (uuid, staged) = stagePartitioned(s, root, df, partCol)
-    if (staged.isEmpty) {
+    val r = new Root(s, root)
+    val parent = r.parent(expectedParent)
+    r.stage { uuid =>
+      val staged = stagePartitioned(r, uuid, df, partCol)
       // an empty df stages no __gp dirs; claiming an empty manifest
-      // would make readers resolve the data ROOT (review finding) —
-      // reject loudly instead
-      Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
-      throw new IllegalArgumentException(
+      // would make readers resolve the data ROOT (review finding)
+      require(staged.nonEmpty,
         "commitPartitioned got an empty DataFrame — an empty manifest " +
           "is not representable; use commit() for an empty snapshot")
+      r.claim(expectedParent, parent, staged)
     }
-    claim(s, root, expectedParent, parentMarker(s, root, expectedParent),
-      staged, Seq(uuid))
   }
 
   /** COPY-ON-WRITE commit (VERDICT r18 #2): replace ONLY the
@@ -383,55 +494,45 @@ object Snapshots {
   def commitReplace(s: SparkSession, root: String, df: DataFrame,
                     partCol: String, expectedParent: Long,
                     alsoDrop: Seq[String] = Nil): Long = {
-    validateCommit(s, root, expectedParent)
-    require(expectedParent >= 1L,
-      "commitReplace needs an existing snapshot to inherit from")
-    replaceWith(s, root, df, partCol, expectedParent,
-      markerOf(s, root, expectedParent), alsoDrop)
+    val r = new Root(s, root)
+    val parent = r.parent(expectedParent).getOrElse(throw new IllegalArgumentException(
+      "commitReplace needs an existing snapshot to inherit from"))
+    replaceWith(r, df, partCol, expectedParent, parent, alsoDrop)
   }
 
-  private def replaceWith(s: SparkSession, root: String, df: DataFrame,
-      partCol: String, expectedParent: Long, parent: Marker,
-      alsoDrop: Seq[String]): Long = {
+  private def replaceWith(r: Root, df: DataFrame, partCol: String,
+      expectedParent: Long, parent: Marker, alsoDrop: Seq[String]): Long = {
     require(parent.names.forall(_.contains(s"/$PartDir=")),
-      s"commitReplace requires a partition-granular manifest under $root " +
+      s"commitReplace requires a partition-granular manifest under ${r.root} " +
         "(seed the table with commitPartitioned)")
-    val (uuid, staged) = stagePartitioned(s, root, df, partCol)
-    val subs = staged.map(_.name.stripPrefix(s"$uuid/"))
-    if (subs.isEmpty && alsoDrop.isEmpty) {
-      Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
-      throw new IllegalArgumentException(
+    r.stage { uuid =>
+      val staged = stagePartitioned(r, uuid, df, partCol)
+      val subs = staged.map(_.name.stripPrefix(s"$uuid/"))
+      require(subs.nonEmpty || alsoDrop.nonEmpty,
         "commitReplace got an empty DataFrame and no alsoDrop — " +
           "no partition to replace")
-    }
-    val replaced = subs.toSet
-    val dropValues = alsoDrop.toSet
-    // a partition in BOTH df and alsoDrop is contradictory — kept
-    // would remove it, then subs would re-add the new entry, silently
-    // ignoring the caller's drop (r19 advice): fail loudly instead,
-    // matching the method's ambiguity guards below
-    val stagedValues =
-      subs.map(n => Marker.unescape(n.stripPrefix(s"$PartDir="))).toSet
-    val contradicted = stagedValues.intersect(dropValues)
-    if (contradicted.nonEmpty) {
-      Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
-      throw new IllegalArgumentException(
+      val replaced = subs.toSet
+      val dropValues = alsoDrop.toSet
+      // a partition in BOTH df and alsoDrop is contradictory — kept
+      // would remove it, then subs would re-add the new entry, silently
+      // ignoring the caller's drop (r19 advice): fail loudly instead,
+      // matching the method's ambiguity guards
+      val contradicted = subs.map(n => Marker.unescape(n.stripPrefix(s"$PartDir=")))
+        .toSet.intersect(dropValues)
+      require(contradicted.isEmpty,
         s"partitions ${contradicted.mkString(",")} appear both in df and in " +
           "alsoDrop — replace-and-drop of the same partition is contradictory")
-    }
-    val kept = parent.entries.filterNot { e =>
-      val n = e.name.substring(e.name.indexOf('/') + 1)
-      replaced.contains(n) ||
-        dropValues.contains(Marker.unescape(n.stripPrefix(s"$PartDir=")))
-    }
-    val entries = kept ++ staged
-    if (entries.isEmpty) {
-      Fs.deleteDir(s, s"${dataRoot(root)}/$uuid")
-      throw new IllegalArgumentException(
+      val kept = parent.entries.filterNot { e =>
+        val n = e.name.substring(e.name.indexOf('/') + 1)
+        replaced.contains(n) ||
+          dropValues.contains(Marker.unescape(n.stripPrefix(s"$PartDir=")))
+      }
+      val entries = kept ++ staged
+      require(entries.nonEmpty,
         "commitReplace would empty the manifest — an empty table state " +
           "is not representable; use commit() for a full rewrite")
+      r.claim(expectedParent, Some(parent), entries)
     }
-    claim(s, root, expectedParent, Some(parent), entries, Seq(uuid))
   }
 
   /** METADATA-ONLY partition drop (the retention sweep, transactional):
@@ -446,10 +547,9 @@ object Snapshots {
     * `sink_drop_partition`'s retention sweep. */
   def commitDropPartitions(s: SparkSession, root: String,
       values: Seq[String], expectedParent: Long): Long = {
-    validateCommit(s, root, expectedParent)
-    require(expectedParent >= 1L,
-      "commitDropPartitions needs an existing snapshot")
-    val parent = markerOf(s, root, expectedParent)
+    val r = new Root(s, root)
+    val parent = r.parent(expectedParent).getOrElse(throw new IllegalArgumentException(
+      "commitDropPartitions needs an existing snapshot"))
     require(parent.names.forall(_.contains(s"/$PartDir=")),
       s"commitDropPartitions requires a partition-granular manifest under $root")
     // match on the UNESCAPED partition value: the stager escapes
@@ -468,58 +568,39 @@ object Snapshots {
     // can resolve; an empty table state is out of the format's domain
     require(kept.nonEmpty,
       s"dropping ${values.mkString(",")} would empty $root — not expressible")
-    claim(s, root, expectedParent, Some(parent), kept, Seq.empty)
+    r.claim(expectedParent, Some(parent), kept)
   }
 
   // ---- commit internals ----
 
-  private def validateCommit(s: SparkSession, root: String,
-      expectedParent: Long): Unit = {
-    requireAtomicCommitScheme(s, root)
-    // a STALE parent is caught atomically by the marker claim below;
-    // a parent AHEAD of latest would silently claim past a gap, so
-    // reject it up front (racy-read is fine — the claim is the gate)
-    val cur = latest(s, root).getOrElse(0L)
-    if (expectedParent > cur)
-      throw new IllegalArgumentException(
-        s"expectedParent $expectedParent is ahead of latest $cur under $root")
+  /** Stage `df` as one whole-dir entry `uuid`; returns the entry as
+    * [[harvest]] records it. */
+  private def stagePlain(r: Root, uuid: String, df: DataFrame): Marker.Entry = {
+    df.write.mode("errorifexists").parquet(r.dir(uuid))
+    harvest(r, uuid)
   }
 
-  /** Stage `df` as one whole-dir entry named by a fresh uuid; returns
-    * the entry as [[harvest]] records it. */
-  private def stagePlain(s: SparkSession, root: String, df: DataFrame): Marker.Entry = {
-    val uuid = java.util.UUID.randomUUID().toString
-    df.write.mode("errorifexists").parquet(s"${dataRoot(root)}/$uuid")
-    harvest(s, root, uuid)
-  }
-
-  /** Stage `df` one subdir per `partCol` value under a fresh uuid dir;
-    * returns (uuid, one [[harvest]]ed entry `<uuid>/__gp=<v>` per
-    * subdir). The duplicate string-typed dir key keeps the real column
-    * in the files. One distributed write clustered by the key, so each
-    * partition lands in few files. */
-  private def stagePartitioned(s: SparkSession, root: String, df: DataFrame,
-      partCol: String): (String, Seq[Marker.Entry]) = {
+  /** Stage `df` one subdir per `partCol` value under dir `uuid`;
+    * returns one [[harvest]]ed entry `<uuid>/__gp=<v>` per subdir. The
+    * duplicate string-typed dir key keeps the real column in the files.
+    * One distributed write clustered by the key, so each partition
+    * lands in few files. */
+  private def stagePartitioned(r: Root, uuid: String, df: DataFrame,
+      partCol: String): Seq[Marker.Entry] = {
     import org.apache.spark.sql.functions.col
     require(df.columns.contains(partCol),
       s"partition column $partCol not in ${df.columns.mkString(",")}")
-    val uuid = java.util.UUID.randomUUID().toString
-    val dataDir = s"${dataRoot(root)}/$uuid"
-    df.withColumn(PartDir,
-        col(partCol).cast(org.apache.spark.sql.types.StringType))
+    df.withColumn(PartDir, col(partCol).cast(StringType))
       .repartition(col(PartDir))
-      .write.mode("errorifexists").partitionBy(PartDir).parquet(dataDir)
-    val subs = Fs.partDirs(s, dataDir, PartDir)
+      .write.mode("errorifexists").partitionBy(PartDir).parquet(r.dir(uuid))
+    val subs = Fs.partDirs(r.fs, r.dir(uuid), PartDir)
     // manifest entries are space-joined inside the marker, so a value
     // whose ESCAPED dir name still carries a space/quote cannot be
     // addressed; Spark/Hive path escaping covers control chars but a
     // plain space survives — reject it rather than corrupt the marker
-    if (!subs.forall(n => !n.contains(" ") && !n.contains("\""))) {
-      Fs.deleteDir(s, dataDir)
-      throw new IllegalArgumentException(
-        s"partition values of $partCol produce manifest-unsafe dir names")
-    }
-    (uuid, subs.map(n => harvest(s, root, s"$uuid/$n")))
+    require(subs.forall(n => !n.contains(" ") && !n.contains("\"")),
+      s"partition values of $partCol produce manifest-unsafe dir names")
+    subs.map(n => harvest(r, s"$uuid/$n"))
   }
 
   // ---- per-entry statistics (row counts + column min/max) ----
@@ -629,15 +710,14 @@ object Snapshots {
     } finally r.close()
   }
 
-  /** The data files of entry `entry`, name-sorted so WHICH columns
-    * land under the stats cap is a pure function of the staged data,
-    * not of listing order — markers stay reproducible. */
+  /** The data files of entry `entry` under `root`, name-sorted
+    * ([[Root.entryFiles]]). */
   private[graft] def entryFiles(s: SparkSession, root: String,
       entry: String): Seq[String] =
-    Fs.dataFiles(s, s"${dataRoot(root)}/$entry").map(_._1).sorted
+    new Root(s, root).entryFiles(entry)
 
   /** The marker record of staged entry `entry` from ONE driver-side
-    * pass over the parquet FOOTERS of its [[entryFiles]] (metadata
+    * pass over the parquet FOOTERS of its [[Root.entryFiles]] (metadata
     * reads, zero data I/O; each file is opened once, by the stager that
     * wrote it): row count; min/max for up to [[StatsColCap]] top-level
     * columns, where a column with any unusable chunk stats records
@@ -646,10 +726,8 @@ object Snapshots {
     * file-name order, which [[relation]] reads instead of merging
     * footers (None when some file records none, or the files' schemas
     * do not merge). */
-  private def harvest(s: SparkSession, root: String, entry: String): Marker.Entry = {
-    val dir = s"${dataRoot(root)}/$entry"
-    val conf = s.sessionState.newHadoopConf()
-    val perFile = entryFiles(s, root, entry).map(n => fileFooterInfo(conf, s"$dir/$n"))
+  private def harvest(r: Root, entry: String): Marker.Entry = {
+    val perFile = r.entryFiles(entry).map(n => fileFooterInfo(r.conf, s"${r.dir(entry)}/$n"))
     // fold the per-file summaries in file-name order, chunk by chunk
     var rows = 0L
     val acc = scala.collection.mutable.LinkedHashMap[String, StatRange]()
@@ -681,7 +759,7 @@ object Snapshots {
     }
     val schema =
       if (perFile.isEmpty || perFile.exists(_.schema.isEmpty)) None
-      else try Some(merged(s, perFile.flatMap(_.schema)))
+      else try Some(merged(r.s, perFile.flatMap(_.schema)))
       catch { case scala.util.control.NonFatal(_) => None }
     Marker.Entry(entry, rows,
       acc.to(scala.collection.immutable.ListMap).map { case (n, sr) =>
@@ -702,79 +780,12 @@ object Snapshots {
     case _ => a.asInstanceOf[String].compareTo(b.asInstanceOf[String]) < 0
   }
 
-  /** Write the marker of `entries` on top of the decoded `parent` (None
-    * at genesis — claim reads no marker itself) and claim
-    * `_commits/<parent+1>` atomically. On conflict deletes the
-    * `stagedUuids` dirs and throws.
-    *
-    * PER-ENTRY RECORDS (VERDICT r19 #6; [public: Delta per-file stats
-    * / Iceberg manifest column bounds]): each verb hands in its
-    * manifest as records — the entries it staged, as their stager
-    * [[harvest]]ed them, and the entries it keeps from its parent (or,
-    * for [[restore]], from the restored version), copied forward as
-    * that marker recorded them, unknown fields included. */
-  private def claim(s: SparkSession, root: String, expectedParent: Long,
-      parent: Option[Marker], entries: Seq[Marker.Entry], stagedUuids: Seq[String],
-      batch: Option[Long] = None): Long = {
-    val v = expectedParent + 1
-    // fold the exactly-once ledger forward: lb(v) = max(lb(parent),
-    // this commit's own batch id) — the newest marker ALWAYS carries
-    // the full ledger, so expire can never lose it (r18 advice) and
-    // txnAppend never walks.
-    val parentLb = parent.map(lastBatchOf(s, root, expectedParent, _)).getOrElse(-1L)
-    val lb = math.max(parentLb, batch.getOrElse(-1L))
-    val marker = Marker.encode(Marker(entries, expectedParent, Some(lb), batch))
-    if (!createExclusive(s, s"${commitsDir(root)}/$v", marker)) {
-      stagedUuids.foreach(u => Fs.deleteDir(s, s"${dataRoot(root)}/$u"))
-      throw new SnapshotConflictException(
-        s"version $v already committed under $root " +
-          s"(expected parent $expectedParent is no longer latest)")
-    }
-    v
-  }
-
-  /** Decoded marker of version `v`. Tolerates an IN-FLIGHT marker
-    * (claimed, content not yet visible — HDFS exposes a length-0 file
-    * until close): retries briefly instead of crashing the reader
-    * with a parse error (r18 advice), then names the marker in an
-    * IllegalStateException if it never completes (a writer that died
-    * between claim and write — surgically removable). */
-  private[sources] def markerOf(s: SparkSession, root: String, v: Long): Marker = {
-    val path = s"${commitsDir(root)}/$v"
-    val f = Fs.fs(s, root)
-    var attempt = 0
-    while (attempt < 50) {
-      attempt += 1
-      if (!f.exists(new Path(path)))
-        throw new NoSuchElementException(
-          s"snapshot version $v does not exist under $root " +
-            s"(committed: ${versions(s, root).mkString(",")})")
-      val text =
-        try Some(readSmall(s, path))
-        catch { case _: java.io.FileNotFoundException => None } // expired mid-read
-      text.flatMap(Marker.decode) match {
-        case Some(m) => return m
-        case None => Thread.sleep(40) // in-flight: claimed, content pending
-      }
-    }
-    throw new IllegalStateException(
-      s"commit marker $path exists but its content never became readable " +
-        "— a writer likely died between claim and content write")
-  }
-
-  /** The marker of `expectedParent`, None at genesis (0). */
-  private def parentMarker(s: SparkSession, root: String,
-      expectedParent: Long): Option[Marker] =
-    if (expectedParent == 0L) None else Some(markerOf(s, root, expectedParent))
-
-  /** Manifest entries of `v`, relative to `data/`. */
-  private def entriesOf(s: SparkSession, root: String, v: Long): Seq[String] =
-    markerOf(s, root, v).names
-
   /** Absolute data dirs of snapshot `v`, resolved once from its
     * immutable manifest. */
-  def manifestDirs(s: SparkSession, root: String, v: Long): Seq[String] =
-    entriesOf(s, root, v).map(u => s"${dataRoot(root)}/$u")
+  def manifestDirs(s: SparkSession, root: String, v: Long): Seq[String] = {
+    val r = new Root(s, root)
+    r.marker(v).names.map(r.dir)
+  }
 
   /** THE snapshot scan: a parquet relation over exactly `entries`
     * through one [[SnapshotFileIndex]]. A declared `schema` doubles as
@@ -784,16 +795,16 @@ object Snapshots {
     * semantics every public format ships: [[recordedSchema]] when every
     * entry records one, which runs no job, else every footer is merged
     * in one job (markers written before schemas were recorded). */
-  private[sources] def relation(s: SparkSession, root: String,
-      entries: Seq[Marker.Entry], schema: Option[StructType]): HadoopFsRelation = {
-    val index = new SnapshotFileIndex(s, dataRoot(root), entries)
+  private[sources] def relation(r: Root, entries: Seq[Marker.Entry],
+      schema: Option[StructType]): HadoopFsRelation = {
+    val index = new SnapshotFileIndex(r.s, r.data, entries)
     val format = new ParquetFileFormat
-    val dataSchema = schema.orElse(recordedSchema(s, entries)).getOrElse(
-      format.inferSchema(s, Map("mergeSchema" -> "true"), index.allFiles)
+    val dataSchema = schema.orElse(recordedSchema(r.s, entries)).getOrElse(
+      format.inferSchema(r.s, Map("mergeSchema" -> "true"), index.allFiles)
         .getOrElse(throw new IllegalStateException(
-          s"no data file under $root to read a schema from"))
+          s"no data file under ${r.root} to read a schema from"))
         .toNullable)
-    HadoopFsRelation(index, StructType(Nil), dataSchema, None, format, Map.empty)(s)
+    HadoopFsRelation(index, StructType(Nil), dataSchema, None, format, Map.empty)(r.s)
   }
 
   /** The schema the footer merge would infer for `entries`, from their
@@ -808,26 +819,12 @@ object Snapshots {
 
   /** The data schema of a read of `entries` — [[relation]]'s, with no
     * listing when the marker records it. */
-  private[sources] def schemaOf(s: SparkSession, root: String,
-      entries: Seq[Marker.Entry]): StructType =
-    recordedSchema(s, entries).getOrElse(relation(s, root, entries, None).dataSchema)
+  private[sources] def schemaOf(r: Root, entries: Seq[Marker.Entry]): StructType =
+    recordedSchema(r.s, entries).getOrElse(relation(r, entries, None).dataSchema)
 
   /** [[relation]] with the merged schema, as a DataFrame. */
-  private def scan(s: SparkSession, root: String, entries: Seq[Marker.Entry]): DataFrame =
-    s.baseRelationToDataFrame(relation(s, root, entries, None))
-
-  /** Max streaming batch id at or before version `v`, given its
-    * marker `m` — shared by the commit-time fold ([[claim]]) and replay
-    * detection ([[txnAppend]]) so the two never disagree (review
-    * finding). Only a marker from before the `lb` field walks back
-    * through older markers' `batch` ids. */
-  private def lastBatchOf(s: SparkSession, root: String, v: Long,
-                          m: Marker): Long =
-    m.lb.orElse(m.batch).getOrElse(
-      versions(s, root).filter(_ < v).reverseIterator
-        .map(x => markerOf(s, root, x).batch)
-        .collectFirst { case Some(b) => b }
-        .getOrElse(-1L))
+  private def scan(r: Root, entries: Seq[Marker.Entry]): DataFrame =
+    r.s.baseRelationToDataFrame(relation(r, entries, None))
 
   /** Read snapshot `v` (time travel). The manifest is resolved NOW
     * and its entries are immutable — the returned DataFrame yields
@@ -835,14 +832,17 @@ object Snapshots {
     * commits. An append commit may carry a WIDER schema than the
     * standing entries (schema evolution): old rows surface the new
     * column as null. */
-  def readAsOf(s: SparkSession, root: String, v: Long): DataFrame =
-    scan(s, root, markerOf(s, root, v).entries)
+  def readAsOf(s: SparkSession, root: String, v: Long): DataFrame = {
+    val r = new Root(s, root)
+    scan(r, r.marker(v).entries)
+  }
 
   /** Read the latest committed snapshot. */
   def read(s: SparkSession, root: String): DataFrame = {
-    val v = latest(s, root).getOrElse(
+    val r = new Root(s, root)
+    val v = r.latest.getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    readAsOf(s, root, v)
+    scan(r, r.marker(v).entries)
   }
 
   /** Snapshot `asOf` (latest when -1) filtered to `lo <= column <= hi`
@@ -861,14 +861,15 @@ object Snapshots {
     // current state (review finding)
     require(asOf == -1L || asOf >= 1L,
       s"asOf must be a committed version (>= 1) or -1 for latest, got $asOf")
-    val v = if (asOf >= 1L) asOf else latest(s, root).getOrElse(
+    val r = new Root(s, root)
+    val v = if (asOf >= 1L) asOf else r.latest.getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
-    val entries = markerOf(s, root, v).entries
+    val entries = r.marker(v).entries
     val (loL, hiL) = (Literal(lo), Literal(hi))
     val at = AttributeReference(column, loL.dataType)()
     val kept = SnapshotFileIndex.prune(entries,
       Seq(GreaterThanOrEqual(at, loL), LessThanOrEqual(at, hiL)))
-    s.baseRelationToDataFrame(relation(s, root, kept, Some(schemaOf(s, root, entries))))
+    s.baseRelationToDataFrame(relation(r, kept, Some(schemaOf(r, entries))))
       .filter(qcol(column) >= lit(lo) && qcol(column) <= lit(hi))
   }
 
@@ -890,12 +891,11 @@ object Snapshots {
     * [[SnapshotConflictException]] it re-derives from the NEW latest —
     * never blind-retries a stale result — and after [[OccAttempts]]
     * attempts the last conflict propagates. */
-  private def occ[T](s: SparkSession, root: String)(
-      step: (Long, Option[Marker]) => T): T = {
-    requireAtomicCommitScheme(s, root)
+  private def occ[T](r: Root)(step: (Long, Option[Marker]) => T): T = {
+    r.requireAtomicScheme()
     def attempt(n: Int): T = {
-      val parent = latest(s, root).getOrElse(0L)
-      try step(parent, parentMarker(s, root, parent))
+      val parent = r.latest.getOrElse(0L)
+      try step(parent, Option.when(parent > 0L)(r.marker(parent)))
       catch { case _: SnapshotConflictException if n < OccAttempts => attempt(n + 1) }
     }
     attempt(1)
@@ -914,14 +914,17 @@ object Snapshots {
     * parent, so a concurrent [[commitPartitioned]] landing mid-retry
     * flips the refusal instead of being downgraded by the retry. */
   def commitTransform(s: SparkSession, root: String)
-                     (f: Option[DataFrame] => DataFrame): Long =
-    occ(s, root) { (parent, pm) =>
+                     (f: Option[DataFrame] => DataFrame): Long = {
+    val r = new Root(s, root)
+    occ(r) { (parent, pm) =>
       require(!pm.exists(_.names.exists(_.contains(s"/$PartDir="))),
         s"$root is partition-granular — a whole-dir commitTransform or " +
           "compact would downgrade it and break copy-on-write; use " +
           "replaceTransform, or compactPartitioned to optimize it")
-      commitWith(s, root, f(pm.map(m => scan(s, root, m.entries))), parent, pm)
+      val next = f(pm.map(m => scan(r, m.entries)))
+      r.stage(uuid => r.claim(parent, pm, Seq(stagePlain(r, uuid, next))))
     }
+  }
 
   /** Copy-on-write read-modify-write with OCC retry: `f` maps the
     * current snapshot to the COMPLETE new content of the partitions
@@ -977,16 +980,17 @@ object Snapshots {
     * drop from the current snapshot, or None to leave the table as it
     * is (the current version is returned). */
   private def replaceOcc(s: SparkSession, root: String, partCol: String)(
-      f: DataFrame => Option[(DataFrame, Seq[String])]): Long =
-    occ(s, root) { (parent, pm) =>
+      f: DataFrame => Option[(DataFrame, Seq[String])]): Long = {
+    val r = new Root(s, root)
+    occ(r) { (parent, pm) =>
       val m = pm.getOrElse(
         throw new NoSuchElementException(s"no committed snapshot under $root"))
-      f(scan(s, root, m.entries)) match {
+      f(scan(r, m.entries)) match {
         case None => parent
-        case Some((next, alsoDrop)) =>
-          replaceWith(s, root, next, partCol, parent, m, alsoDrop)
+        case Some((next, alsoDrop)) => replaceWith(r, next, partCol, parent, m, alsoDrop)
       }
     }
+  }
 
   /** NULL-SAFE membership of `partCol` in `values`: an IN-list on the
     * non-null values (it reaches the parquet row-group stats of the
@@ -1092,7 +1096,7 @@ object Snapshots {
     * Also reclaims an AGED ZERO-LENGTH marker (r19 advice): a writer
     * that died between claiming `_commits/<N>` and writing its content
     * leaves a marker that bricks every read and commit (latest
-    * resolves to it, markerOf never completes). Once older than the
+    * resolves to it, its marker read never completes). Once older than the
     * grace window it is provably dead — deleting it restores
     * availability; the version number is re-claimable, safe because
     * no reader can ever have resolved a content-less marker.
@@ -1106,19 +1110,18 @@ object Snapshots {
     // reused by the next commit — stale references would silently
     // resolve to unrelated data
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val f = Fs.fs(s, root)
+    val r = new Root(s, root)
+    val f = r.fs
     val now = System.currentTimeMillis()
     // dead-claim reclamation first: an unreadable marker would
     // otherwise fail this very sweep's own manifest resolution
-    val cp = new Path(commitsDir(root))
+    val cp = new Path(r.commits)
     if (f.exists(cp)) f.listStatus(cp).toSeq
       .filter(st => st.isFile && st.getPath.getName.toLongOption.isDefined &&
         st.getLen == 0L && now - st.getModificationTime > orphanGraceMs)
       .foreach(st => f.delete(st.getPath, false))
-    val vs = versions(s, root)
+    val vs = r.versions
     if (vs.isEmpty) return Seq.empty
-    def readable(v: Long): Boolean =
-      Fs.len(s, s"${commitsDir(root)}/$v") > 0L
     // the retention window is computed over READABLE versions only
     // (review finding): an in-grace zero-length claim at the top of
     // the log must not push the last READABLE version below the
@@ -1130,7 +1133,7 @@ object Snapshots {
     // inherited entries come from a readable parent — a successor can
     // only be claimed after its parent's content resolved — and its
     // freshly staged dirs sit inside the orphan grace window.)
-    val readableVs = vs.filter(readable)
+    val readableVs = vs.filter(r.readable)
     if (readableVs.isEmpty) return Seq.empty
     val cutoff = readableVs.last - keepLast + 1
     val (dead, live) = readableVs.partition(_ < cutoff)
@@ -1138,20 +1141,20 @@ object Snapshots {
     // — append/replace commits share their parents' entries, so
     // liveness is manifest-union, not per-version (the same
     // refcount-by-manifest rule public formats' VACUUM applies)
-    val liveDirs = live.flatMap(v => manifestDirs(s, root, v)).toSet
+    val liveDirs = live.flatMap(v => r.marker(v).names.map(r.dir)).toSet
     dead.foreach { v =>
-      val entries = entriesOf(s, root, v)
-      Fs.deleteDir(s, s"${commitsDir(root)}/$v")
-      val unref = entries.filterNot(u => liveDirs.contains(s"${dataRoot(root)}/$u"))
+      val entries = r.marker(v).names
+      f.delete(new Path(s"${r.commits}/$v"), true)
+      val unref = entries.filterNot(u => liveDirs.contains(r.dir(u)))
       if (orphanGraceMs <= 0L)
-        unref.foreach(u => Fs.deleteDir(s, s"${dataRoot(root)}/$u"))
+        unref.foreach(u => f.delete(new Path(r.dir(u)), true))
       else {
         // start the grace clock on the entry dir ITSELF (the subdir
         // sweep's age key — a dead __gp= subdir inside a partially
         // live uuid must still be reclaimable, review finding) AND on
         // its top-level uuid dir (the whole-dir sweep's age key)
         unref.flatMap(u => Seq(u, u.split("/")(0))).distinct.foreach { u =>
-          val p = new Path(s"${dataRoot(root)}/$u")
+          val p = new Path(r.dir(u))
           if (f.exists(p)) f.setTimes(p, now, -1L)
         }
       }
@@ -1160,7 +1163,7 @@ object Snapshots {
     // aged past the grace window (never an in-flight staging dir,
     // never a freshly-retired dir a racing restore might still
     // re-publish)
-    val dr = new Path(dataRoot(root))
+    val dr = new Path(r.data)
     // compare fully-qualified URIs: listStatus returns scheme-
     // qualified paths (file:/...), the live set holds raw strings.
     // A partition-granular manifest references SUBDIRS of a staged
@@ -1176,7 +1179,7 @@ object Snapshots {
         .map(_.getPath.toString)
         .filterNot(cand => liveQualified.exists(l =>
           l == cand || l.startsWith(cand + "/")))
-        .foreach(Fs.deleteDir(s, _))
+        .foreach(d => f.delete(new Path(d), true))
       // subdir sweep (review finding): a PARTIALLY-LIVE uuid dir —
       // some partitions still referenced, a retired one not — keeps
       // its whole dir above, so its dead `__gp=` subdirs must be
@@ -1194,7 +1197,7 @@ object Snapshots {
               now - st.getModificationTime > orphanGraceMs)
             .map(_.getPath.toString)
             .filterNot(liveQualified.contains)
-            .foreach(Fs.deleteDir(s, _))
+            .foreach(d => f.delete(new Path(d), true))
         }
     }
     dead
@@ -1227,19 +1230,20 @@ object Snapshots {
   def cdc(s: SparkSession, root: String, fromV: Long, toV: Long,
           keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "cdc needs at least one key column")
-    val fromEntries = markerOf(s, root, fromV).entries
-    val toEntries = markerOf(s, root, toV).entries
+    val r = new Root(s, root)
+    val fromEntries = r.marker(fromV).entries
+    val toEntries = r.marker(toV).entries
     val (fromNames, toNames) = (fromEntries.map(_.name).toSet, toEntries.map(_.name).toSet)
     val aOnly = fromEntries.filterNot(e => toNames(e.name))
     val bOnly = toEntries.filterNot(e => fromNames(e.name))
     def side(entries: Seq[Marker.Entry]): Option[HadoopFsRelation] =
-      if (entries.nonEmpty) Some(relation(s, root, entries, None)) else None
+      if (entries.nonEmpty) Some(relation(r, entries, None)) else None
     val (aRel, bRel) = (side(aOnly), side(bOnly))
     if (aRel.isEmpty && bRel.isEmpty) {
       // identical manifests → no changes by construction; run the
       // pipeline over one empty slice of the snapshot (rare path, one
       // schema resolution) so the output schema matches the usual one
-      val empty = scan(s, root, toEntries).limit(0)
+      val empty = scan(r, toEntries).limit(0)
       return cdcFrames(empty, empty, keys)
     }
     // the OUTPUT schema must stay stable across batches (r19 advice):
@@ -1251,7 +1255,7 @@ object Snapshots {
     // order leads, so every batch of the same table lines up; a column
     // dropped between the versions (present only in fromV's removed
     // entries) trails.
-    val fullSchema = schemaOf(s, root, toEntries)
+    val fullSchema = schemaOf(r, toEntries)
     val aSchema = aRel.getOrElse(bRel.get).dataSchema
     val bSchema = bRel.getOrElse(aRel.get).dataSchema
     val unionFields = (fullSchema.fields ++ aSchema.fields ++ bSchema.fields)
@@ -1270,7 +1274,7 @@ object Snapshots {
     def aligned(rel: Option[HadoopFsRelation], own: StructType): DataFrame = {
       val schema = StructType(unionFields.map(f => own.find(_.name == f.name).getOrElse(f)))
       s.baseRelationToDataFrame(rel.map(_.copy(dataSchema = schema)(s))
-        .getOrElse(relation(s, root, Nil, Some(schema))))
+        .getOrElse(relation(r, Nil, Some(schema))))
     }
     cdcFrames(aligned(aRel, aSchema), aligned(bRel, bSchema), keys)
   }
@@ -1316,8 +1320,9 @@ object Snapshots {
     * streaming sources enforce. */
   private[graft] def addedDirsBetween(s: SparkSession, root: String,
       fromV: Long, toV: Long): Seq[Marker.Entry] = {
-    val fromEntries = checkpointEntries(s, root, fromV)
-    val toEntries = markerOf(s, root, toV).entries
+    val r = new Root(s, root)
+    val fromEntries = checkpointEntries(r, fromV)
+    val toEntries = r.marker(toV).entries
     val rewritten = fromEntries.filterNot(toEntries.map(_.name).toSet)
     if (rewritten.nonEmpty)
       throw new IllegalStateException(
@@ -1334,11 +1339,10 @@ object Snapshots {
     * genesis, no entries), turning an expired offset into the named
     * retention error instead of a bare missing-version crash — shared
     * by [[addedDirsBetween]] and [[versionCapByRows]]. */
-  private def checkpointEntries(s: SparkSession, root: String,
-                                from: Long): Seq[String] =
+  private def checkpointEntries(r: Root, from: Long): Seq[String] =
     if (from <= 0L) Seq.empty[String]
     else
-      try entriesOf(s, root, from)
+      try r.marker(from).names
       catch {
         case e: NoSuchElementException =>
           // the consumer's checkpointed version was expired while it
@@ -1347,7 +1351,7 @@ object Snapshots {
           // error on every trigger (review finding)
           throw new IllegalStateException(
             s"version $from (a stream's checkpointed offset) has been " +
-              s"expired from $root — keep the retention window (expire " +
+              s"expired from ${r.root} — keep the retention window (expire " +
               "keepLast) longer than consumer downtime, or restart the " +
               "stream from a fresh checkpoint to re-read the snapshot", e)
       }
@@ -1366,13 +1370,14 @@ object Snapshots {
   def versionCapByRows(s: SparkSession, root: String, from: Long,
                        to: Long, maxRows: Long): Long = {
     require(maxRows >= 1L, s"maxRows must be >= 1, got $maxRows")
-    var prev = checkpointEntries(s, root, from).toSet
+    val r = new Root(s, root)
+    var prev = checkpointEntries(r, from).toSet
     var v = from
     var rows = 0L
     var fits = true
     while (v < to && fits) {
       val nv = v + 1
-      val m = markerOf(s, root, nv) // one read: entries AND counts
+      val m = r.marker(nv) // one read: entries AND counts
       val added = m.entries.filterNot(e => prev(e.name)).map(_.rows)
       // unknown count (a pre-r20 marker) → treat as cap-exceeding so
       // it is delivered alone rather than hiding unbounded volume
@@ -1417,15 +1422,16 @@ object Snapshots {
     * partition-granular table copy-on-write capable (see
     * [[appendPartitioned]]). */
   def txnAppend(s: SparkSession, root: String, df: DataFrame,
-                batchId: Long, partCol: Option[String] = None): Boolean =
-    occ(s, root) { (parent, pm) =>
-      if (batchId <= pm.map(lastBatchOf(s, root, parent, _)).getOrElse(-1L)) false
+                batchId: Long, partCol: Option[String] = None): Boolean = {
+    val r = new Root(s, root)
+    occ(r) { (parent, pm) =>
+      if (batchId <= pm.map(r.lastBatchOf(parent, _)).getOrElse(-1L)) false
       else {
-        appendWith(s, root, df, parent, pm, batch = Some(batchId),
-          partCol = partCol)
+        appendWith(r, df, parent, pm, batch = Some(batchId), partCol = partCol)
         true
       }
     }
+  }
 
   /** RESTORE: make an old version's state the NEW latest — the
     * "undo a bad write" seat public formats ship as RESTORE TABLE ...
@@ -1438,15 +1444,14 @@ object Snapshots {
     * OCC commit (a concurrent writer conflicts and retries). Throws
     * if `v`'s marker has already been expired. */
   def restore(s: SparkSession, root: String, v: Long): Long = {
-    validateCommit(s, root, 0L)
-    val target = markerOf(s, root, v) // throws if expired
-    val parent = latest(s, root).getOrElse(
+    val r = new Root(s, root)
+    val parent = r.latest.getOrElse(
       throw new NoSuchElementException(s"no committed snapshot under $root"))
+    val pm = r.parent(parent)
     // carry v's per-entry records — the parent may not reference these
     // entries, and a metadata-only commit must stay zero-I/O
-    claim(s, root, parent,
-      Some(if (parent == v) target else markerOf(s, root, parent)),
-      target.entries, Seq.empty)
+    val target = if (parent == v) pm.get else r.marker(v) // throws if expired
+    r.claim(parent, pm, target.entries)
   }
 
   /** The commit log as a DataFrame — DESCRIBE HISTORY: one row per
@@ -1457,17 +1462,18 @@ object Snapshots {
     * reads, zero data I/O. */
   def history(s: SparkSession, root: String): DataFrame = {
     import s.implicits._
-    versions(s, root).map { v =>
+    val r = new Root(s, root)
+    r.versions.map { v =>
       // an unreadable (zero-length, dead-claim) marker must not take
       // the whole listing down (ADVICE r20 #3): DESCRIBE HISTORY is
       // exactly what an operator reaches for to diagnose the dead
-      // writer, and markerOf would spin its read-retry loop then throw.
-      // Same readable() test as expire's; the placeholder row is
+      // writer, and its marker read would spin its retry loop then
+      // throw. Same readable() test as expire's; the placeholder row is
       // recognizable by parent = -1 (impossible for a real commit).
-      if (Fs.len(s, s"${commitsDir(root)}/$v") == 0L)
+      if (!r.readable(v))
         (v, 0, Option.empty[Long], -1L, -1L, Option.empty[Long])
       else {
-      val m = markerOf(s, root, v)
+      val m = r.marker(v)
       val rows = m.entries.map(_.rows)
       (v,
         m.entries.size,

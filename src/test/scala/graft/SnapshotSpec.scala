@@ -1805,6 +1805,99 @@ class SnapshotSpec extends SparkSpec {
     assert(Snapshots.versions(spark, root) === Seq(1L),
       "every rejected commit must leave the log untouched")
   }
+
+  test("one staged-dir lifecycle: every exit leaves exactly the dirs committed manifests name") {
+    val s = spark
+    import s.implicits._
+    val (gen, plain, parted) = (freshRoot(), freshRoot(), freshRoot())
+    Snapshots.commit(spark, plain, Seq((1L, "a")).toDF("k", "v"), 0L)
+    Snapshots.commitPartitioned(spark, parted,
+      Seq((1L, 1, "a"), (2L, 2, "b")).toDF("k", "p", "v"), "p", 0L)
+    def uuidDirs(tbl: String): Set[String] =
+      Option(new java.io.File(s"$tbl/data").list()).map(_.toSet).getOrElse(Set.empty)
+    def named(tbl: String): Set[String] = Snapshots.versions(spark, tbl)
+      .flatMap(manifestEntries(tbl, _)).map(_.split("/")(0)).toSet
+    def latest(tbl: String): Long = Snapshots.latest(spark, tbl).getOrElse(0L)
+    val emptyPlain = Seq.empty[(Long, String)].toDF("k", "v")
+    val emptyParted = Seq.empty[(Long, Int, String)].toDF("k", "p", "v")
+    // a staging write whose tasks fail: over a range, not a local
+    // relation, so the optimizer cannot raise the error while planning
+    def boom(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("v", when(col("k") >= 0L, raise_error(lit("boom"))).otherwise(col("v")))
+    def rangeOf(k: Long) = spark.range(k, k + 1).select(col("id").as("k"),
+      col("id").cast("int").as("p"), lit("c").as("v"))
+    // with AQE on, the partitioned stager's shuffle stage runs, and
+    // fails, before the write job creates the dir; with AQE off the
+    // same failure lands inside the write job
+    def noAqe(verb: () => Any): () => Any = () => {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try verb() finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+    val appendBoom = () => Snapshots.appendPartitioned(spark, parted, boom(rangeOf(3L)), "p",
+      latest(parted))
+    val replaceBoom = () => Snapshots.replaceTransform(spark, parted, "p")(boom)
+    val refused = classOf[IllegalArgumentException]
+    val conflict = classOf[Snapshots.SnapshotConflictException]
+    val anyFailure = classOf[Throwable]
+    // (exit, table, verb, the exception it must throw — None = it returns)
+    val exits: Seq[(String, String, () => Any, Option[Class[_]])] = Seq(
+      ("empty commitPartitioned", gen, () =>
+        Snapshots.commitPartitioned(spark, gen, emptyParted, "p", 0L), Some(refused)),
+      ("empty batch-API partitioned append", parted, () =>
+        Snapshots.appendPartitioned(spark, parted, emptyParted, "p", latest(parted)),
+        Some(refused)),
+      ("empty plain append at genesis", gen, () =>
+        Snapshots.appendCommit(spark, gen, emptyPlain, 0L), Some(refused)),
+      ("empty commitReplace without alsoDrop", parted, () =>
+        Snapshots.commitReplace(spark, parted, emptyParted, "p", latest(parted)),
+        Some(refused)),
+      ("partition both in df and alsoDrop", parted, () =>
+        Snapshots.commitReplace(spark, parted, Seq((1L, 1, "x")).toDF("k", "p", "v"), "p",
+          latest(parted), alsoDrop = Seq("1")), Some(refused)),
+      ("replace emptying the manifest", parted, () =>
+        Snapshots.commitReplace(spark, parted, emptyParted, "p", latest(parted),
+          alsoDrop = Seq("1", "2")), Some(refused)),
+      ("manifest-unsafe partition value", gen, () =>
+        Snapshots.commitPartitioned(spark, gen, Seq((1L, "a b")).toDF("k", "p"), "p", 0L),
+        Some(refused)),
+      ("write-write conflict", plain, () =>
+        Snapshots.commit(spark, plain, Seq((2L, "b")).toDF("k", "v"), latest(plain) - 1L),
+        Some(conflict)),
+      ("failed write through commit", plain, () =>
+        Snapshots.commit(spark, plain, boom(rangeOf(3L).drop("p")), latest(plain)),
+        Some(anyFailure)),
+      ("failed write through appendPartitioned", parted, appendBoom, Some(anyFailure)),
+      ("failed write through appendPartitioned, AQE off", parted, noAqe(appendBoom),
+        Some(anyFailure)),
+      ("failed write through replaceTransform", parted, replaceBoom, Some(anyFailure)),
+      ("failed write through replaceTransform, AQE off", parted, noAqe(replaceBoom),
+        Some(anyFailure)),
+      ("empty streaming txnAppend at genesis", gen, () =>
+        Snapshots.txnAppend(spark, gen, emptyPlain, 0L), None),
+      ("empty streaming txnAppend on a plain table", plain, () =>
+        Snapshots.txnAppend(spark, plain, emptyPlain, 0L), None),
+      ("empty streaming txnAppend on a partitioned table", parted, () =>
+        Snapshots.txnAppend(spark, parted, emptyParted, 0L, partCol = Some("p")), None))
+    // one committed version before the conflict, so its parent is stale
+    Snapshots.commit(spark, plain, Seq((2L, "b")).toDF("k", "v"), 1L)
+    val wrong = exits.flatMap { case (exit, tbl, verb, expected) =>
+      val thrown =
+        try { verb(); None }
+        catch { case scala.util.control.NonFatal(e) => Some(e) }
+      val outcomeOk = (thrown, expected) match {
+        case (None, None) => true
+        case (Some(e), Some(c)) => c.isInstance(e)
+        case _ => false
+      }
+      val (dirs, names) = (uuidDirs(tbl), named(tbl))
+      if (outcomeOk && dirs == names) None
+      else Some(s"$exit: thrown=$thrown, stray=${dirs -- names}, missing=${names -- dirs}")
+    }
+    assert(wrong === Nil)
+    assert(Snapshots.versions(spark, gen).isEmpty && uuidDirs(gen).isEmpty)
+    assert(Snapshots.versions(spark, plain) === Seq(1L, 2L, 3L))
+    assert(Snapshots.versions(spark, parted) === Seq(1L, 2L))
+  }
 }
 
 /** A RawLocalFileSystem answering for the `mock:` scheme — the

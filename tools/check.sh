@@ -1,7 +1,7 @@
 #!/bin/bash
 # Local t2 mirror: run Verify at a scale factor, then DuckDB parity.
 # Usage: tools/check.sh [sf0.001|sf0.01] [keyFilter...]
-set -e
+set -eo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-sf0.001}"; shift 2>/dev/null || true
 OUT="/tmp/graft_verify_$SF"
