@@ -65,6 +65,22 @@ object Q {
   def sessionToken(s: SparkSession): String =
     sessionTokens.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
 
+  /** Run `body` with each `key -> value` set on the session, then
+    * restore every key: its earlier value, or unset if it was not set
+    * before (a `get`-then-`set` restore would pin the default as an
+    * explicit value). */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.sessionState.conf
+    val prev: Seq[(String, Option[String])] = kvs.map { case (k, _) =>
+      k -> Option.when(conf.contains(k))(conf.getConfString(k)) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Collision-free scratch-dir key for an input path: hashCode-keyed
     * dirs can collide across scale factors (and abs(MinValue) is
     * negative), silently serving one SF's staged data to another —

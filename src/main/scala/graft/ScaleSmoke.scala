@@ -84,8 +84,8 @@ object ScaleSmoke {
     * key cardinality ALSO grows 10×) into a scratch sfDir shaped like
     * the testdata layout, then drive two declared stream keys — the
     * watermarked tumbling agg and the transformWithState running
-    * count — through the normal staging + footer-probe path at 1× and
-    * `factor`×. The claim under test: micro-batch wall time scales
+    * count — through the same in-place `Tables.stream` read as the
+    * declared keys, at 1× and `factor`×. The claim under test: micro-batch wall time scales
     * ~linearly with input while watermark-bounded state never
     * explodes (output rows ≈ factor × base for both topologies). */
   private def streamSmoke(spark: SparkSession, sfDir: String, factor: Int): Unit = {
@@ -104,16 +104,14 @@ object ScaleSmoke {
         col("event_type"), col("value"), col("props"))
     }.reduce(_ unionAll _)
     val tmpOut = new java.io.File(scratch, "write_tmp")
-    val prevTs = spark.conf.getOption("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try big.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpOut.getAbsolutePath)
-    finally prevTs match {
-      case Some(p) => spark.conf.set("spark.sql.parquet.outputTimestampType", p)
-      case None => spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    Q.withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      big.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmpOut.getAbsolutePath)
     }
     val part = tmpOut.listFiles().find(_.getName.endsWith(".parquet")).get
     org.apache.commons.io.FileUtils.copyFile(
       part, new java.io.File(scratch, "events.parquet"))
+    // the stream lists the scratch dir: leave only table files there
+    org.apache.commons.io.FileUtils.deleteQuietly(tmpOut)
     def run(dir: String, label: String): Unit = {
       for (key <- Seq("stream_tumbling", "stream_stateful_count")) {
         val t0 = System.nanoTime()

@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Cached loaders for the 10 driver-generated parquet tables
@@ -84,10 +85,10 @@ object Tables {
     * isAdjustedToUTC=false) from round 13, and a real 100 TB pipeline
     * reads whatever footer a producer happened to write (ns vs µs
     * timestamps, DECIMAL vs DOUBLE money, int32 vs int64 keys).
-    * `read` probes the footer and normalizes any drifted column back
-    * to this schema; a MISSING canonical column is a named failure
-    * (surfaced per-key in verify_errors.json), never a silent crash
-    * nine queries downstream. */
+    * `read` and `stream` probe the footer and normalize any drifted
+    * column back to this schema; a MISSING canonical column is a
+    * named failure (surfaced per-key in verify_errors.json), never a
+    * silent crash nine queries downstream. */
   private[graft] val canonical: Map[String, Seq[(String, DataType)]] = Map(
     "region" -> Seq(
       "r_regionkey" -> IntegerType, "r_name" -> StringType),
@@ -127,39 +128,57 @@ object Tables {
       "vec_id" -> LongType, "embedding" -> ArrayType(FloatType),
       "label" -> IntegerType))
 
-  /** Footer probe, cached per file version (path+length+mtime): does
-    * the parquet schema carry any TIMESTAMP(NANOS) column? Spark 4
-    * rejects ns files outright ([PARQUET_TYPE_ILLEGAL]) unless the
-    * legacy `nanosAsLong` flag surfaces them as LongType — but that
-    * flag is SESSION-WIDE, so it is set ONLY when a footer actually
-    * needs it (and must then stay set: the scan re-converts footers at
-    * execution time, long after this probe). On the µs testdata no
-    * session conf is ever touched (VERDICT r14 "What's wrong" #2).
-    * A probe failure (garbage file) reports false and lets the real
-    * read throw the real error. */
-  private val nsFooterCache =
-    scala.collection.concurrent.TrieMap.empty[String, Boolean]
+  /** Footer probe, cached per file version (path+length+mtime): the
+    * file's read schema (Spark's own footer-to-schema conversion) and
+    * whether any column is TIMESTAMP(NANOS). Spark 4 rejects ns files
+    * outright ([PARQUET_TYPE_ILLEGAL]) unless the legacy `nanosAsLong`
+    * flag surfaces them as LongType — but that flag is SESSION-WIDE,
+    * so it is set ONLY when a footer actually needs it (and must then
+    * stay set: the scan re-converts footers at execution time, long
+    * after this probe). On the µs testdata no session conf is ever
+    * touched (VERDICT r14 "What's wrong" #2). A probe failure (garbage
+    * file) records no footer and lets Spark's own inference throw the
+    * real error. */
+  private final case class Footer(nanos: Boolean, schema: StructType)
 
-  private[graft] def footerHasNanos(spark: SparkSession, path: String): Boolean =
+  private val footerCache =
+    scala.collection.concurrent.TrieMap.empty[String, Option[Footer]]
+
+  private def footer(spark: SparkSession, path: String): Option[Footer] =
     // probe selection via graft.Fs (scheme-agnostic — a 100 TB table
     // root is hdfs:/s3a:, where java.io.File sees nothing; r17 #1)
-    Fs.probeFile(spark, path).exists { case (p, plen, pmtime) =>
-      nsFooterCache.getOrElseUpdate(s"$p|$plen|$pmtime",
+    Fs.probeFile(spark, path).flatMap { case (p, plen, pmtime) =>
+      footerCache.getOrElseUpdate(s"$p|$plen|$pmtime",
         try {
           import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+          import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
           val reader = Fs.parquetReader(spark.sessionState.newHadoopConf(), p)
-          try reader.getFileMetaData.getSchema.getColumns.asScala.exists {
-            _.getPrimitiveType.getLogicalTypeAnnotation match {
-              case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
-              case _ => false
+          try {
+            val meta = reader.getFooter
+            val nanos = meta.getFileMetaData.getSchema.getColumns.asScala.exists {
+              _.getPrimitiveType.getLogicalTypeAnnotation match {
+                case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+                case _ => false
+              }
             }
+            val conf = spark.sessionState.conf.clone()
+            conf.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, nanos)
+            Some(Footer(nanos, ParquetFileFormat.readSchemaFromFooter(
+              new org.apache.parquet.hadoop.Footer(p, meta),
+              new ParquetToSparkSchemaConverter(conf))))
           } finally reader.close()
-        } catch { case NonFatal(_) => false })
+        } catch { case NonFatal(_) => None })
     }
 
-  private[graft] def ensureNanosFlagIfNeeded(spark: SparkSession, path: String): Unit =
-    if (footerHasNanos(spark, path))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** The schema a read of `path` declares: the probed footer's, with
+    * the legacy ns flag set when the footer needs it. */
+  private def readSchema(spark: SparkSession, path: String): StructType =
+    footer(spark, path) match {
+      case Some(f) =>
+        if (f.nanos) spark.conf.set(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, "true")
+        f.schema
+      case None => spark.read.parquet(path).schema
+    }
 
   /** Normalize a footer-inferred frame back to the canonical schema:
     *  - matching columns pass through UNTOUCHED (no cast node → scan
@@ -192,8 +211,23 @@ object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    ensureNanosFlagIfNeeded(spark, path)
-    normalize(name, spark.read.parquet(path))
+    normalize(name, spark.read.schema(readSchema(spark, path)).parquet(path))
+  }
+
+  /** The one streaming read of a base table, declaring the probed
+    * footer schema and normalized exactly as the batch read is. The
+    * table is read in place; drained with Trigger.AvailableNow it is
+    * one micro-batch. A file source cannot stream a single file, so a
+    * one-file table streams `dir` listing only `<name>.parquet`; a
+    * table Spark wrote (a directory of part files) streams as is —
+    * filtering `dir` would list no file inside it and stream 0 rows. */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val reader = spark.readStream.schema(readSchema(spark, path))
+    normalize(name,
+      if (Fs.fs(spark, path).getFileStatus(new org.apache.hadoop.fs.Path(path)).isDirectory)
+        reader.parquet(path)
+      else reader.option("pathGlobFilter", s"$name.parquet").parquet(dir))
   }
 
   /** Register all base tables as temp views (for spark.sql queries).

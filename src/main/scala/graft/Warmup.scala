@@ -94,10 +94,7 @@ object Warmup {
       .select($"user_id", timestamp_seconds($"secs").as("ts"))
       .withWatermark("ts", "10 minutes")
       .as[(Long, java.sql.Timestamp)]
-    val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Q.withConf(spark, graft.streaming.Streams.RocksDbProvider) {
       val tq = twsDs.groupByKey(_._1)
         .transformWithState(
           new graft.streaming.Streams.SessionTimers(30L * 60 * 1000000L),
@@ -106,9 +103,6 @@ object Warmup {
         .toDF("user_id", "sstart", "send", "n")
         .writeStream.outputMode("append").format("noop").start()
       tq.processAllAvailable(); tq.stop()
-    } finally prevProv match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
     // the dedup/similarity pipelines on a 3-row SYNTHETIC corpus: the
     // interpreted HOF signature path, band join, sorted-merge kernel,
@@ -152,7 +146,6 @@ object Warmup {
     // conf is restored.
     val mvScratch = java.nio.file.Files.createTempDirectory("graft_warm_mv").toFile
     val factPath = s"${mvScratch.getAbsolutePath}/fact"
-    val prevMvConf = spark.conf.getOption(graft.plans.MvRewrite.EnabledKey)
     try {
       val fact = spark.range(16).selectExpr("cast(id % 3 as string) k",
         "cast(id as decimal(18,2)) m", "cast(id % 2 as int) p")
@@ -163,15 +156,12 @@ object Warmup {
       fact.filter($"p" === 1).write.mode("append").partitionBy("p").parquet(factPath)
       graft.plans.MvRewrite.rebuildIncremental(spark, mv)
       graft.plans.MvRewrite.install(spark)
-      spark.conf.set(graft.plans.MvRewrite.EnabledKey, "true")
-      spark.read.parquet(factPath).groupBy($"k")
-        .agg(expr("sum(m)"), expr("count(1)"), expr("min(m)"),
-          expr("max(m)"), expr("avg(m)")).count()
-    } finally {
-      prevMvConf match {
-        case Some(v) => spark.conf.set(graft.plans.MvRewrite.EnabledKey, v)
-        case None => spark.conf.unset(graft.plans.MvRewrite.EnabledKey)
+      Q.withConf(spark, graft.plans.MvRewrite.EnabledKey -> "true") {
+        spark.read.parquet(factPath).groupBy($"k")
+          .agg(expr("sum(m)"), expr("count(1)"), expr("min(m)"),
+            expr("max(m)"), expr("avg(m)")).count()
       }
+    } finally {
       graft.plans.MvRewrite.unregister(spark, factPath)
       org.apache.commons.io.FileUtils.deleteQuietly(mvScratch)
     }

@@ -337,13 +337,12 @@ object Scans {
         .withColumn("o_year", year(col("o_orderdate")))
       o.select(col("o_orderkey"), lit("SEED").as("tag"), col("o_year"))
         .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
-      val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       // .write is eager, so the scoped conf really governs this write
-      try o.filter(col("o_year") === 1997)
-        .select(col("o_orderkey"), lit("NEW").as("tag"), col("o_year"))
-        .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
-      finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      Q.withConf(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        o.filter(col("o_year") === 1997)
+          .select(col("o_orderkey"), lit("NEW").as("tag"), col("o_year"))
+          .write.mode(SaveMode.Overwrite).partitionBy("o_year").parquet(out)
+      }
       s.read.parquet(out)
         .select(col("o_orderkey"), col("tag"), col("o_year").cast(IntegerType))
         .orderBy(col("o_orderkey"), col("tag"))

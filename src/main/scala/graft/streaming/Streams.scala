@@ -26,119 +26,56 @@ import org.apache.spark.sql.types._
   */
 object Streams {
 
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, StructType]
-
-  /** events.parquet's ts encoding is not fixed (TIMESTAMP(NANOS)
-    * through round 12, TIMESTAMP(MICROS) since round 13 — see
-    * Tables.read). A file stream needs an EXPLICIT schema, so probe
-    * the staged file's footer with a one-off batch read and build the
-    * schema + conversion to match:
-    *  - ns footer → nanos-as-long LongType column, truncate to µs;
-    *  - µs footer → the footer's own timestamp type, no arithmetic.
-    * Guessing instead of probing is exactly how round 13's silent
-    * wrong answers happened: a LongType schema over a µs file reads
-    * the raw int64 and a later ÷1000 compresses the timeline 1000×. */
-  /** Stage `$d/$table.parquet` into a scratch dir a file-source
-    * stream can list, with drift detection. Layout (ADVICE r14):
-    * <base>/data/ holds ONLY the staged parquet — the directory the
-    * stream lists — while the in-progress tmp copy and the provenance
-    * marker live in <base>/, so a crashed or concurrent partial copy
-    * can never be listed as a second input file (which would double
-    * every row). A staged copy survives across runs; if the source
-    * was regenerated in between (round 13 did exactly that, changing
-    * both content and encoding) the stale copy would silently answer
-    * for the new data. Drift is detected via a marker RECORDING the
-    * source's version — not by comparing the copy's own mtime,
-    * because copyFile's date preservation is best-effort/filesystem-
-    * granularity-dependent and a spurious mismatch would re-stage +
-    * re-probe on every call (ADVICE r14).
-    * Returns (dataDir, staged file, source version stamp). */
-  private def stagedTable(d: String, table: String): (java.io.File, java.io.File, String) = {
-    val base = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_stream/${Q.pathKey(d)}/$table")
-    val dataDir = new java.io.File(base, "data")
-    val staged = new java.io.File(dataDir, s"$table.parquet")
-    val marker = new java.io.File(base, "staged_src")
-    val src = new java.io.File(s"$d/$table.parquet")
-    val srcStamp = s"${src.length()}|${src.lastModified()}"
-    val stagedStamp =
-      if (marker.exists() && staged.exists())
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-      else ""
-    if (stagedStamp != srcStamp) {
-      marker.delete() // invalidate FIRST: a crash mid-copy must re-stage
-      dataDir.mkdirs()
-      val tmp = java.io.File.createTempFile(table, ".tmp", base)
-      org.apache.commons.io.FileUtils.copyFile(src, tmp)
-      // atomic REPLACE: a stream that already opened the old inode
-      // keeps reading it; there is no window where data/ is empty,
-      // half-written, or holds two files
-      java.nio.file.Files.move(tmp.toPath, staged.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.write(marker.toPath, srcStamp.getBytes("UTF-8"))
-    }
-    (dataDir, staged, srcStamp)
-  }
-
-  /** One footer probe per staged file VERSION (the marker stamp — the
-    * same drift signal the restage check uses): the probe is a batch
-    * read whose schema inference costs ~100-300 ms, and keys like
-    * stream_dedup_watermark build the stream twice per query.
-    * The stream adopts the probed schema WHOLESALE — declaring any
-    * column type by assumption is the r13 failure mode (a LongType
-    * ts over a µs file read the raw int64 silently). */
-  private def probedSchema(s: SparkSession, dataDir: java.io.File,
-      srcStamp: String): StructType =
-    schemaCache.getOrElseUpdate(
-      s"${dataDir.getAbsolutePath}|$srcStamp",
-      s.read.parquet(dataDir.getAbsolutePath).schema)
-
-  private[graft] def eventsStream(s: SparkSession, d: String): DataFrame = {
-    val (dataDir, staged, srcStamp) = stagedTable(d, "events")
-    // legacy ns flag only when the staged footer actually needs it
-    // (Tables.footerHasNanos; no session conf touched on µs data)
-    Tables.ensureNanosFlagIfNeeded(s, staged.getAbsolutePath)
-    val schema = probedSchema(s, dataDir, srcStamp)
-    val fileTsType = schema("ts").dataType
-    // watermarks use instant TimestampType; under the pinned UTC
-    // session it carries the same wall clock as the NTZ convention —
-    // output boundaries cast back to NTZ (dateOut)
-    val raw = s.readStream.schema(schema).parquet(dataDir.getAbsolutePath)
-    fileTsType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _        => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
-  }
+  /** The events table as a file-source stream: [[Tables.stream]]'s
+    * in-place, drift-normalized read, with `ts` as the instant
+    * TimestampType the watermarks use. Under the pinned UTC session it
+    * carries the same wall clock as the NTZ convention — output
+    * boundaries cast back to NTZ (dateOut). */
+  private[graft] def eventsStream(s: SparkSession, d: String): DataFrame =
+    Tables.stream(s, d, "events").withColumn("ts", col("ts").cast(TimestampType))
 
   /** The documents corpus as a file-source stream (the continuous-
-    * ingest form of the §2.12 pipeline inputs). Same staging + probed
-    * schema discipline as [[eventsStream]]; no timestamp column, so
-    * no encoding branch. */
-  private[graft] def documentsStream(s: SparkSession, d: String): DataFrame = {
-    val (dataDir, _, srcStamp) = stagedTable(d, "documents")
-    s.readStream.schema(probedSchema(s, dataDir, srcStamp))
-      .parquet(dataDir.getAbsolutePath)
-  }
+    * ingest form of the §2.12 pipeline inputs). */
+  private[graft] def documentsStream(s: SparkSession, d: String): DataFrame =
+    Tables.stream(s, d, "documents")
 
-  /** Run to completion on the memory sink, return the sink table.
-    * Stateful operators instantiate one StateStore per shuffle
-    * partition per micro-batch; with the tiny events volume the
-    * per-partition fixed cost dominates, so the stream runs with 4
+  /** transformWithState requires the RocksDB state store provider. */
+  private[graft] val RocksDbProvider =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run to completion on the memory sink under `conf`, return the
+    * sink table. Stateful operators instantiate one StateStore per
+    * shuffle partition per micro-batch; with the tiny events volume
+    * the per-partition fixed cost dominates, so the stream runs with 4
     * state partitions (a local-mode sizing — on a cluster this knob
     * is sized to executor count × state volume, exactly as
     * spark.sql.shuffle.partitions itself is). */
-  private def drain(df: DataFrame, mode: String, name: String): DataFrame = {
+  private[graft] def drain(df: DataFrame, mode: String, name: String,
+      conf: (String, String)*): DataFrame = {
     val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    Q.withConf(spark, ("spark.sql.shuffle.partitions" -> "4") +: conf: _*) {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.table(name)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+  }
+
+  /** The stream-stream joins' shared shape: watermarked purchase and
+    * click sides of the events stream, joined `how` on the same user
+    * within ±10 minutes. */
+  private def purchaseClickJoin(s: SparkSession, d: String, how: String): DataFrame = {
+    def side(kind: String, pre: String) =
+      eventsStream(s, d).filter(col("event_type") === kind)
+        .select(col("event_id").as(s"${pre}_id"), col("user_id").as(s"${pre}_user"),
+          col("ts").as(s"${pre}_ts"))
+        .withWatermark(s"${pre}_ts", "1 hour")
+    side("purchase", "p").join(side("click", "c"),
+      col("p_user") === col("c_user")
+        && col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES")
+        && col("c_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"),
+      how)
   }
 
   /** Exact cents: round half-away on positive doubles agrees across
@@ -327,18 +264,8 @@ object Streams {
       val sessions = ds.groupByKey(_._1)
         .transformWithState(new SessionTimers(gapUs),
           TimeMode.EventTime(), OutputMode.Append())
-      val prev = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val drained =
-        try drain(sessions.toDF("user_id", "sstart", "send", "n"),
-          "append", "g_session_timers")
-        finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      drained
+      drain(sessions.toDF("user_id", "sstart", "send", "n"), "append",
+        "g_session_timers", RocksDbProvider)
         .select(col("user_id"), dateOut(col("sstart")).as("sstart"),
           dateOut(col("send")).as("send"), col("n"))
         .orderBy(col("user_id"), col("sstart"))
@@ -389,18 +316,8 @@ object Streams {
         .as[(Long, Long)]
       val updated = ds.groupByKey(_._1)
         .transformWithState(new RunningUserAgg, TimeMode.None(), OutputMode.Update())
-      // transformWithState requires the RocksDB state store provider
-      val prev = s.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val drained =
-        try drain(updated.toDF("user_id", "n_events", "sum_cents"), "update", "g_stateful")
-        finally prev match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      drained
+      drain(updated.toDF("user_id", "n_events", "sum_cents"), "update",
+        "g_stateful", RocksDbProvider)
         .select(col("user_id"), col("n_events"),
           (col("sum_cents").cast(DoubleType) / 100).as("sum_value"))
         .orderBy(col("user_id"))
@@ -429,9 +346,7 @@ object Streams {
         .groupBy(window(col("ts"), "10 minutes"))
         .agg(count(lit(1)).as("n"))
         .select(dateOut(col("window.start")).as("wstart"), col("n"))
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      Q.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = windowed.writeStream.format("memory").queryName("g_late")
           .outputMode("append").start()
         def feed(secs: Long*): Unit = { mem.addData(secs); q.processAllAvailable() }
@@ -439,21 +354,12 @@ object Streams {
         feed(120, 2100)      // 10:02 LATE (dropped), 10:35 -> watermark 10:25
         feed(3000)           // 10:50 -> watermark 10:40, flushes 10:20/10:30
         q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       s.table("g_late").orderBy(col("wstart"))
     },
 
     "stream_stream_join" -> { (s, d) =>
-      val p = eventsStream(s, d).filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val c = eventsStream(s, d).filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = p.join(c,
-        col("p_user") === col("c_user")
-          && col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES")
-          && col("c_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"))
+      val joined = purchaseClickJoin(s, d, "inner")
       drain(joined.select(col("p_id"), col("c_id"), col("p_user")), "append", "g_ss_join")
         .orderBy(col("p_id"), col("c_id"))
     },
@@ -477,17 +383,7 @@ object Streams {
     // sides watermark-evicted — plus the unmatched-left bookkeeping;
     // no unbounded growth.
     "stream_stream_join_outer" -> { (s, d) =>
-      val p = eventsStream(s, d).filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val c = eventsStream(s, d).filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = p.join(c,
-        col("p_user") === col("c_user")
-          && col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES")
-          && col("c_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
+      val joined = purchaseClickJoin(s, d, "left_outer")
       // c_id is NULL only on unmatched rows, whose p_id carries no
       // matched sibling — the sort never tie-breaks through a NULL,
       // so Spark NULLS FIRST vs DuckDB NULLS LAST cannot diverge
@@ -508,17 +404,7 @@ object Streams {
     // 100 TB is identical to the inner form — both sides
     // watermark-evicted, plus one unmatched flag per buffered row.
     "stream_stream_join_full_outer" -> { (s, d) =>
-      val p = eventsStream(s, d).filter(col("event_type") === "purchase")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-      val c = eventsStream(s, d).filter(col("event_type") === "click")
-        .select(col("event_id").as("c_id"), col("user_id").as("c_user"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-      val joined = p.join(c,
-        col("p_user") === col("c_user")
-          && col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES")
-          && col("c_ts") <= col("p_ts") + expr("INTERVAL 10 MINUTES"),
-        "full_outer")
+      val joined = purchaseClickJoin(s, d, "full_outer")
       drain(joined.select(col("p_id"), col("c_id"), col("p_user"), col("c_user")),
         "append", "g_ss_join_full")
         .orderBy(col("p_id"), col("c_id"))

@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * stream's hardcoded nanos-as-long schema happily projected the µs
   * int64, and a later ÷1000 compressed a year-long timeline into ~9
   * hours — plausible row counts, wrong content. These tests make any
-  * recurrence (either encoding direction, or a stale staged copy) a
-  * loud unit-test failure instead.
+  * recurrence (either encoding direction, in the batch read or in the
+  * stream, which reads the table file in place through the same
+  * normalization) a loud unit-test failure instead.
   */
 class AdaptiveReadSpec extends SparkSpec {
 
@@ -132,6 +133,47 @@ class AdaptiveReadSpec extends SparkSpec {
         .select(unix_micros(col("ts").cast("timestamp"))).as[Long].collect()
       assert(got.sameElements(Array(baseUs + 1500000L, baseUs + 3600000000L)),
         s"ns→µs truncation drifted: ${got.mkString(",")}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
+  test("a nanos-as-long events file streams to the batch read's µs timeline") {
+    // the same synthetic legacy file as above, drained through the
+    // stream: its LongType ts takes Tables' one ns→µs truncation
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ns_stream_sf").toFile
+    try {
+      val baseUs = 1704103200000000L // 2024-01-01 10:00:00 UTC in µs
+      writeSingleFile(
+        Seq((1L, (baseUs + 1500000L) * 1000L + 123L, 7L, "click", 1.0, "{}"),
+            (2L, (baseUs + 3600000000L) * 1000L + 999L, 8L, "view", 2.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
+        new java.io.File(tmp, "events.parquet"))
+      val dir = tmp.getAbsolutePath
+      val streamed = graft.streaming.Streams.drain(
+        graft.streaming.Streams.eventsStream(spark, dir), "append", "ns_events")
+        .orderBy("event_id").select(unix_micros(col("ts"))).as[Long].collect()
+      val batch = Tables.raw(spark, dir, "events")
+        .orderBy("event_id").select(unix_micros(col("ts").cast("timestamp"))).as[Long].collect()
+      assert(batch.sameElements(Array(baseUs + 1500000L, baseUs + 3600000000L)))
+      assert(streamed.sameElements(batch),
+        s"stream timeline ${streamed.mkString(",")} != batch ${batch.mkString(",")}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+  }
+
+  test("a base table's batch and stream reads plan from the footer probe alone") {
+    // a fresh file version: the probe misses its cache and reads the
+    // footer on the driver; neither read then runs a schema-inference job
+    val tmp = java.nio.file.Files.createTempDirectory("graft_probe_sf").toFile
+    try {
+      java.nio.file.Files.copy(new java.io.File(s"$sf/events.parquet").toPath,
+        new java.io.File(tmp, "events.parquet").toPath)
+      val dir = tmp.getAbsolutePath
+      val (schemas, jobs) = org.apache.spark.SparkJobs.count(spark.sparkContext)(
+        (Tables.raw(spark, dir, "events").schema,
+          graft.streaming.Streams.eventsStream(spark, dir).schema))
+      assert(jobs == 0, s"planning the reads started $jobs job(s)")
+      assert(schemas._1("value").dataType == org.apache.spark.sql.types.DoubleType)
+      assert(schemas._2("ts").dataType == org.apache.spark.sql.types.TimestampType)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -122,6 +123,46 @@ class DriftSpec extends SparkSpec {
       Tables.views(spark, "/nonexistent/graft_dir")
     }
     assert(e.getMessage.contains("no base table readable"), e.getMessage)
+  }
+
+  test("drifted events and documents stream in place with the batch read's normalization") {
+    val tmp = stage { tmp =>
+      replace(tmp, "events") { path =>
+        writeSingleFile(Tables.t(spark, sf, "events")
+          .withColumn("value", col("value").cast(DecimalType(12, 2)))
+          .withColumn("user_id", col("user_id").cast(IntegerType)), new java.io.File(path))
+      }
+      // documents as Spark writes a table, a directory of part files:
+      // the stream must list inside it, not filter it out of `dir`
+      replace(tmp, "documents") { path =>
+        Tables.t(spark, sf, "documents")
+          .withColumn("n_chars", col("n_chars").cast(IntegerType)).write.parquet(path)
+      }
+    }
+    val dir = tmp.getAbsolutePath
+    try {
+      val footer = spark.read.parquet(s"$dir/events.parquet").schema
+      assert(footer("value").dataType == DecimalType(12, 2), footer.simpleString)
+      def fields(df: DataFrame) = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      def rows(df: DataFrame, key: String) = df.orderBy(key).collect().toSeq
+      val events = streaming.Streams.drain(
+        streaming.Streams.eventsStream(spark, dir), "append", "drift_events")
+      val eventsBatch = Tables.raw(spark, dir, "events")
+        .withColumn("ts", col("ts").cast(TimestampType))
+      assert(fields(events) == Tables.canonical("events").map {
+        case ("ts", _) => ("ts", TimestampType)
+        case ct => ct
+      })
+      assert(rows(events, "event_id") == rows(eventsBatch, "event_id"))
+      val docs = streaming.Streams.drain(
+        streaming.Streams.documentsStream(spark, dir), "append", "drift_documents")
+      assert(fields(docs) == Tables.canonical("documents"))
+      assert(rows(docs, "doc_id") == rows(Tables.raw(spark, dir, "documents"), "doc_id"))
+      // the stream read the files where they live: no staging copy
+      val staged = new java.io.File(
+        s"${sys.props("java.io.tmpdir")}/graft_stream/${Q.pathKey(dir)}")
+      assert(!staged.exists(), s"stream input was copied to $staged")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 
   test("healthy tables load cast-free (canonical schema matches footer)") {

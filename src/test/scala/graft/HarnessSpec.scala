@@ -17,6 +17,24 @@ class HarnessSpec extends SparkSpec {
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
 
+  test("withConf restores a set key's value and leaves an unset key unset") {
+    // a key no suite sets: the spark fixture is shared across suites
+    val unset = "spark.graft.test.withConfUnset"
+    assert(!spark.sessionState.conf.contains(unset))
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    val got = Q.withConf(spark, "spark.sql.shuffle.partitions" -> "7", unset -> "on") {
+      (spark.conf.get("spark.sql.shuffle.partitions"), spark.conf.get(unset))
+    }
+    assert(got === ("7", "on"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === parts)
+    assert(!spark.sessionState.conf.contains(unset),
+      "a key unset before the body must be unset after it, not pinned to a value")
+    intercept[IllegalStateException] {
+      Q.withConf(spark, unset -> "on") { throw new IllegalStateException("body") }
+    }
+    assert(!spark.sessionState.conf.contains(unset), "restore must run when the body throws")
+  }
+
   test("guarded records and swallows a NonFatal failure") {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val r = Harness.guarded("k1", errors) {
